@@ -11,11 +11,20 @@ import graft.functions.text
   *
   * Spark-first mapping:
   *   - tokenize+normalize  -> explode over codegen'd built-ins (#3,#4,#5)
-  *   - per-mapper dedup    -> Catalyst partial aggregation, free (#9)
-  *   - barrier + shuffle   -> stage boundary at groupBy, free (#10,#11)
-  *   - set-union merge     -> collect_set + array_sort (#11)
+  *   - per-mapper dedup    -> [[documentWords]]: `array_distinct` per file,
+  *                            the reference mapper's per-file `set` (#9)
+  *   - barrier + shuffle   -> the one `repartition(26, letter)` exchange
+  *                            of [[LetterSink.writePostings]] (#8,#10)
+  *   - set-union merge     -> a streaming fold over (word, file_id)-
+  *                            sorted rows, no per-word hash set (#11)
   *   - composite sort      -> per-letter sortWithinPartitions (#12, see
   *                            LetterSink for why the order is per-letter)
+  *
+  * That is the reference job's route ([[ReferenceJob]]): one map stage,
+  * one exchange, each input file one row (so under ~2 GB, checked by
+  * [[graft.sources.ManifestSource.read]]). [[index]]/[[fromLines]] build
+  * the same ranking as a DataFrame (`collect_set` by word) for queries
+  * that consume the index itself rather than the letter files.
   *
   * Scale notes: the per-word posting list (`collect_set(file_id)`) is the
   * reference's own data model; at 100 TB a single word's posting list can
@@ -32,6 +41,16 @@ object InvertedIndex {
     lines.select(
       col(idCol).as("file_id"),
       explode(text.normalizedTokens(col(textCol))).as("word"),
+    )
+
+  /** (id, whole-document text) -> (file_id, word), one row per DISTINCT
+    * normalized word of each document: the reference mapper's per-file
+    * `set` (tema1a/src/main.cpp:97-103), applied before any shuffle.
+    */
+  def documentWords(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    docs.select(
+      col(idCol).as("file_id"),
+      explode(array_distinct(text.normalizedTokens(col(textCol)))).as("word"),
     )
 
   /** Distinct (word, file_id) pairs — the shuffle-friendly, unbounded-scale
