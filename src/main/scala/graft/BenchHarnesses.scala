@@ -1,14 +1,11 @@
 package graft
 
-/** Measurement harnesses (not part of the query/library surface, but
-  * product-adjacent tooling: their outputs are the committed,
-  * build-gated artifacts SLOPES.json and BENCH_AB_r{N}.md). Each
-  * `object ... { def main }` below is one instrument: [[ScaleSlope]]
-  * and the per-store *Slope mains feed SlopesSpec's asserted bounds;
-  * [[BenchAB]] is the interleaved single-JVM re-measurement that
-  * adjudicates bench drift vs machine load. The round-5 ad-hoc
-  * cold/warm profiler (`graft.Scratch`) is retired — `BenchAB <dir>
-  * <query...>` with SPARK_GRAFT_AB_ROUNDS=1 covers its use.
+/** Slope harnesses (not part of the query/library surface, but
+  * product-adjacent tooling: their output is the committed, build-gated
+  * SLOPES.json). Each `object ... { def main }` below is one instrument:
+  * [[ScaleSlope]] and the per-store *Slope mains feed SlopesSpec's
+  * asserted bounds. They time `count()`, as SLOPES.json was measured.
+  * A/B comparisons and per-layer breakdowns live in `perfbench/`.
   *
   * CLOSED (round 5): q79 (bucketed as-of) under VERIFY's exact
   * conditions — local[4], shufflePartitions=4, coalesce(1) parquet
@@ -720,282 +717,6 @@ object PipelineSlope {
       results((1, "erase")), results((copies, "erase")), copies.toDouble)
     Slopes.record("pipeline", "restore",
       results((1, "restore")), results((copies, "restore")), copies.toDouble)
-    spark.stop()
-  }
-}
-
-/** Interleaved single-JVM re-measurement of a bench block whose numbers
-  * are suspected stale (machine-load window, not plan change): each
-  * round times every named query once in round-robin order — so a load
-  * spike taxes all of them equally instead of whichever queries it
-  * overlapped — with the q01 calibration probe re-timed at every round
-  * boundary. Reports per-query min/median plus all samples; the MIN is
-  * the evidence number (load only ever adds time).
-  * Run: SPARK_GRAFT_CPUS=32 runMain graft.BenchAB <sfDir> [query...]
-  * (no query args = the round-8 suspect block).
-  *
-  * MEASURED (round 9, sf0.1, local[32], 5 rounds, 2026-08-14 — full
-  * table in BENCH_AB_r09.md): every round-8-flagged entry
-  * re-established at or below its round-7 value (q72 0.69 s min vs the
-  * stale 6.9, q101 4.18 vs 12.6, q115 2.85 vs 11.9, q121 1.22 vs 7.5,
-  * q161 0.29 vs 2.3); calibration 0.29-0.70 s across rounds. The r8
-  * block was a machine-load window, not a plan regression — no finding.
-  */
-object BenchAB {
-  val r8SuspectBlock: Seq[String] = Seq(
-    "q17_inverted_index", "q50_sql_api", "q52_unpivot", "q53_lead_lag",
-    "q54_stat_aggregates", "q59_grouping_sets", "q61_quantile_binning",
-    "q65_full_outer", "q66_correlated_subquery", "q72_set_ops_all",
-    "q101_prefix_filter_join", "q115_bm25_topk", "q121_vocab_growth",
-    "q146_incremental_index", "q161_index_time_travel",
-  )
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val rounds = sys.env.getOrElse("SPARK_GRAFT_AB_ROUNDS", "5").toInt
-    val names = { val qs = args.drop(1).toSeq; if (qs.nonEmpty) qs else r8SuspectBlock }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession
-      .builder(appName = "graft-bench-ab", master = Some(s"local[$cpus]"),
-        shufflePartitions = cpus.toInt)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-      "lineitem", "events", "documents", "embeddings")
-      .foreach(t => Tables(spark, sfDir, t).count())
-    def timed(body: => Unit): Double = {
-      val t0 = System.nanoTime(); body
-      val sec = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache(); System.gc()
-      sec
-    }
-    val probe = SparkEntry.allDefs.find(_.name == "q01_pricing_summary").get
-    // Cold pass (codegen/JIT + any layout/index write a steady-state
-    // query amortizes) — discarded, same as Bench's warmup.
-    names.foreach(q => timed(SparkEntry.queries(q)(spark, sfDir).count()))
-    timed(probe.fn(spark, sfDir).count())
-    val samples = scala.collection.mutable.Map.empty[String, Vector[Double]].withDefaultValue(Vector.empty)
-    val cals = scala.collection.mutable.ArrayBuffer.empty[Double]
-    (1 to rounds).foreach { r =>
-      cals += timed(probe.fn(spark, sfDir).count())
-      names.foreach { q =>
-        samples(q) = samples(q) :+ timed(SparkEntry.queries(q)(spark, sfDir).count())
-      }
-    }
-    cals += timed(probe.fn(spark, sfDir).count())
-    println("CAL " + cals.map(c => f"$c%.2f").mkString(" "))
-    names.foreach { q =>
-      val xs = samples(q).sorted
-      val med = xs(xs.size / 2)
-      println(f"AB $q%-28s min=${xs.head}%.2f med=$med%.2f samples=[" +
-        samples(q).map(x => f"$x%.2f").mkString(" ") + "]")
-    }
-    spark.stop()
-  }
-}
-
-/** One-JVM A/B of the deletion-mask read tax: the same aggregate over
-  * the range layout read RAW vs through the tombstone mask (broadcast
-  * anti-join) vs after compaction — quantifying what "reads pay one
-  * bounded anti-join" costs until the maintenance pass runs.
-  * Run: SPARK_GRAFT_CPUS=32 runMain graft.MaskOverhead <sfDir>
-  *
-  * MEASURED (sf0.1, local[32], warm, 2026-08-13): raw 0.45 s,
-  * masked 0.66 s (1.47x), post-compact masked-with-stale-tombstones
-  * 0.53 s (1.19x) — the pre-compact mask costs ~47% on this sub-second
-  * scan-bound aggregate, dominated by the fixed broadcast-build floor
-  * of the tombstone side; compaction claws most of it back even with
-  * the stale mask still applied. The absolute tax is the broadcast of
-  * the bounded tombstone set plus a streamed hash probe, which at
-  * 100 TB amortizes to noise against the scan itself.
-  */
-object MaskOverhead {
-  def main(args: Array[String]): Unit = {
-    import org.apache.spark.sql.functions._
-    import graft.operators.DeletableRangeLayout
-    import graft.queries.ScalePatterns
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession
-      .builder(appName = "graft-mask-overhead", master = Some(s"local[$cpus]"),
-        shufflePartitions = cpus.toInt)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val uppers = ScalePatterns.rangeUppers(spark, sfDir)
-    val dir = new java.io.File(
-      sys.props("java.io.tmpdir"),
-      s"graft_mask_overhead_p${graft.JvmId.token}").getAbsolutePath + "/layout"
-    DeletableRangeLayout.ensure(spark, sfDir, dir, uppers)
-    DeletableRangeLayout.applyDelete(spark, dir,
-      col("v").between(ScalePatterns.deleteBandLoCenti, ScalePatterns.deleteBandHiCenti))
-    def timeWarm(name: String)(df: => org.apache.spark.sql.DataFrame): Unit = {
-      df.agg(count(lit(1)), sum(col("v"))).collect() // warm
-      val t0 = System.nanoTime()
-      df.agg(count(lit(1)), sum(col("v"))).collect()
-      println(f"MASK $name ${(System.nanoTime() - t0) / 1e9}%.3f s")
-    }
-    timeWarm("raw")(spark.read.parquet(dir))
-    timeWarm("masked")(DeletableRangeLayout.maskedRead(spark, dir))
-    DeletableRangeLayout.compact(spark, dir, 0.0)
-    timeWarm("compacted_masked")(DeletableRangeLayout.maskedRead(spark, dir))
-    spark.stop()
-  }
-}
-
-/** One-JVM streaming-throughput measurement: the sf0.1 events table
-  * (100k rows) replayed through a real file-stream source into three
-  * stateful sinks — tumbling windowed aggregate, watermarked dedup, and
-  * sessionization — end-to-end wall time per pipeline, reported as
-  * rows/sec. Run: SPARK_GRAFT_CPUS=32 runMain graft.StreamThroughput <sfDir>
-  *
-  * MEASURED (sf0.1, local[32], single 100k-row batch, 2026-08-13):
-  * windowed 4.51 s (22k rows/s — carries the streaming engine's
-  * first-query init for the JVM), dedup 1.85 s (54k rows/s), sessions
-  * 2.13 s (47k rows/s). Single-batch numbers bound the per-micro-batch
-  * overhead (state-store open + commit dominates at this size);
-  * sustained throughput at scale is governed by state-store
-  * partitioning, which follows the shuffle partitioning like every
-  * other keyed operator.
-  */
-object StreamThroughput {
-  def main(args: Array[String]): Unit = {
-    import org.apache.spark.sql.functions._
-    import graft.streaming.EventStreams
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession
-      .builder(appName = "graft-stream-throughput", master = Some(s"local[$cpus]"),
-        shufflePartitions = cpus.toInt)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val batch = Tables.events(spark, sfDir)
-    val n = batch.count()
-    val streamDir = java.nio.file.Files.createTempDirectory("graft-throughput").toString
-    batch.write.mode("overwrite").parquet(streamDir)
-    def run(name: String, transform: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
-        mode: String): Unit = {
-      val t0 = System.nanoTime()
-      val q = transform(spark.readStream.schema(batch.schema).parquet(streamDir))
-        .writeStream.format("noop").outputMode(mode).start()
-      try q.processAllAvailable() finally q.stop()
-      val sec = (System.nanoTime() - t0) / 1e9
-      println(f"STREAM $name $sec%.2f s ${n / sec}%.0f rows/s")
-    }
-    run("windowed", EventStreams.windowedAggregates, "update")
-    run("dedup", EventStreams.dedupedEvents(_), "append")
-    run("sessions", EventStreams.sessionWindows(_), "complete")
-    spark.stop()
-  }
-}
-
-/** Generic one-JVM kill-switch A/B (round 18): alternates an arbitrary
-  * system-property toggle around interleaved runs of named registry
-  * queries, so machine load cancels and the printed min/median delta is
-  * the toggled mechanism's true cost. The property is CLEARED for the
-  * "on" arm (optimized path) and set to "1" for the "off" arm
-  * (pre-optimization fallback). Diagnostic-only main.
-  * Run: SPARK_GRAFT_CPUS=32 runMain graft.ToggleAB <prop> <sfDir> <query...>
-  */
-object ToggleAB {
-  def main(args: Array[String]): Unit = {
-    val prop = args(0)
-    val sfDir = args(1)
-    val names = args.drop(2).toSeq
-    val rounds = sys.env.getOrElse("SPARK_GRAFT_AB_ROUNDS", "5").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession
-      .builder(appName = "graft-toggle-ab", master = Some(s"local[$cpus]"),
-        shufflePartitions = cpus.toInt)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def timed(q: String): Double = {
-      val t0 = System.nanoTime(); SparkEntry.queries(q)(spark, sfDir).count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache(); System.gc(); sec
-    }
-    // Cold pass per arm (codegen/JIT for BOTH plan shapes), discarded.
-    names.foreach { q =>
-      System.clearProperty(prop); timed(q)
-      System.setProperty(prop, "1"); timed(q)
-    }
-    val on = scala.collection.mutable.Map.empty[String, Vector[Double]].withDefaultValue(Vector.empty)
-    val off = scala.collection.mutable.Map.empty[String, Vector[Double]].withDefaultValue(Vector.empty)
-    // Arm order ALTERNATES per round: a fixed ON-then-OFF order hands the
-    // second arm systematically warmer page/JIT state (measured ~0.4 s on a
-    // query whose two plans are literally identical), which would masquerade
-    // as a win for whichever arm runs second.
-    (1 to rounds).foreach { r =>
-      names.foreach { q =>
-        if (r % 2 == 1) {
-          System.clearProperty(prop); on(q) = on(q) :+ timed(q)
-          System.setProperty(prop, "1"); off(q) = off(q) :+ timed(q)
-        } else {
-          System.setProperty(prop, "1"); off(q) = off(q) :+ timed(q)
-          System.clearProperty(prop); on(q) = on(q) :+ timed(q)
-        }
-      }
-    }
-    System.clearProperty(prop)
-    def fmt(xs: Seq[Double]) =
-      f"min=${xs.min}%.2f med=${xs.sorted.apply(xs.size / 2)}%.2f " +
-        xs.map(x => f"$x%.2f").mkString("[", " ", "]")
-    names.foreach { q =>
-      println(s"TOGGLE $prop $q ON(opt)  ${fmt(on(q))}")
-      println(s"TOGGLE $prop $q OFF(old) ${fmt(off(q))}")
-    }
-    spark.stop()
-  }
-}
-
-/** One-JVM toggle A/B of the round-15 resolution rules' analyzer tax:
-  * alternates the `graft.r15rules.off` kill-switch around interleaved
-  * runs of one plan-heavy query, so machine load cancels and the
-  * printed delta is the rules' true cost. Diagnostic-only main.
-  */
-object RulesToggleAB {
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val qname = args.drop(1).headOption.getOrElse("q162_incremental_view")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession
-      .builder(appName = "graft-rules-ab", master = Some(s"local[$cpus]"),
-        shufflePartitions = cpus.toInt)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val fn = SparkEntry.queries(qname)
-    // Arm the batch-read rule's everCreated gate (round 16): in a real
-    // session that has touched any graft-layout table, EVERY analysis
-    // pays the rule body (write-target collection + traversal) — the
-    // toggle must measure THAT state, not the O(1)-gated one a
-    // layout-free JVM gets for free.
-    locally {
-      import org.apache.spark.sql.functions._
-      val dir = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_rulesab_arm_p${graft.JvmId.token}").getAbsolutePath
-      graft.operators.VersionedLayout.writeBaseTable(spark,
-        spark.range(0, 10).select(lit(0).cast("int").as("pid"), col("id").as("k")),
-        dir, Seq("k"))
-      spark.read.format("graft-layout").load(dir).count()
-      require(graft.streaming.GraftLayoutTable.everCreated.get() > 0L)
-    }
-    def timed(): Double = {
-      val t0 = System.nanoTime(); fn(spark, sfDir).count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache(); System.gc(); sec
-    }
-    timed(); timed() // cold passes discarded
-    val on = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val off = scala.collection.mutable.ArrayBuffer.empty[Double]
-    (1 to 5).foreach { _ =>
-      System.clearProperty("graft.r15rules.off"); on += timed()
-      System.setProperty("graft.r15rules.off", "1"); off += timed()
-    }
-    System.clearProperty("graft.r15rules.off")
-    def fmt(xs: Seq[Double]) =
-      f"min=${xs.min}%.2f med=${xs.sorted.apply(xs.size / 2)}%.2f " +
-        xs.map(x => f"$x%.2f").mkString("[", " ", "]")
-    println(s"RULESAB $qname rules-ON  ${fmt(on.toSeq)}")
-    println(s"RULESAB $qname rules-OFF ${fmt(off.toSeq)}")
     spark.stop()
   }
 }

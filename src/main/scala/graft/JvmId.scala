@@ -48,20 +48,22 @@ object JvmId {
 
   private val diagLock = new Object
 
-  /** Repo-root DIAG.jsonl, when the working directory IS a repo root
-    * (the driver and the judge both run Verify/Bench from it); None in
-    * ad-hoc contexts (tests under sbt fork, notebooks) so scenario
-    * builds never scribble outside a checkout.
+  /** `target/diag/DIAG.jsonl` under the working directory when it is a
+    * checkout root (Verify, Bench and the sbt-forked tests all run from
+    * it); None elsewhere (notebooks, other cwds) so scenario builds never
+    * scribble outside a checkout. `target/` is build output, so the
+    * ledger never dirties the tracked tree.
     */
   private lazy val diagFile: Option[java.io.File] = {
     val cwd = new java.io.File(sys.props.getOrElse("user.dir", "."))
-    if (new java.io.File(cwd, "build.sbt").isFile) Some(new java.io.File(cwd, "DIAG.jsonl"))
+    if (new java.io.File(cwd, "build.sbt").isFile)
+      Some(new java.io.File(cwd, "target/diag/DIAG.jsonl"))
     else None
   }
 
   /** Append one JSON diagnostic line (event name + flat string/number
-    * fields, jvm token and epoch-millis stamped automatically) to the
-    * committed DIAG.jsonl. Build forensics must survive the tmpdir:
+    * fields, jvm token and epoch-millis stamped automatically) to
+    * [[diagFile]]. Build forensics must survive the tmpdir:
     * round-10/11 shipped a gate-red scenario whose `_build_info.json`
     * sidecar lived (and died) in `/tmp`, leaving nothing for the judge
     * to read. Failures to write are swallowed — diagnostics must never
@@ -70,8 +72,9 @@ object JvmId {
   def diag(event: String, fields: (String, Any)*): Unit = diagLock.synchronized {
     diagFile.foreach { f =>
       try {
-        // Rotation: the ledger is append-forever across rounds; past
-        // ~1 MB RENAME it aside (committed alongside) and start fresh.
+        f.getParentFile.mkdirs()
+        // Rotation: the ledger is append-forever across runs; past
+        // ~1 MB RENAME it aside and start fresh.
         // Rename is O(1) — no per-append rewrite of the newest N lines
         // once past the threshold — and it is the rotation that cannot
         // LOSE a line across processes: a racing JVM's already-open

@@ -10,8 +10,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Tables {
   /** Round 17: resolved through the engine's snapshot-metadata cache —
     * one `spark.read.parquet` call costs ~300 ms of driver time (path
-    * resolution + listing + footer schema inference, measured in
-    * PlanCost) and every query build re-resolved its base tables from
+    * resolution + listing + footer schema inference, measured warm on
+    * the driver) and every query build re-resolved its base tables from
     * scratch. The testdata files are immutable; the mtime stamp
     * invalidates if a file is ever swapped. Data is still scanned from
     * parquet on every execution.

@@ -44,7 +44,7 @@ object Verify {
     // GATE SELF-CHECK (round 13): for the watched queries, replay the
     // driver's DuckDB compare LOCALLY against the gate parquet just
     // written, and append the verdict + both sides' full row digests
-    // to DIAG.jsonl. This closes the q186 forensics gap: a later
+    // to the JvmId.diag ledger. This closes the q186 forensics gap: a later
     // driver-red row beside a same-timestamp local-green line proves
     // the divergence is in the driver's harness; a local-red names the
     // exact cells. Best-effort — duckdb is a driver-side tool, so ad

@@ -33,17 +33,15 @@ object text {
     * values for all input; the declarative spelling below is kept (as
     * [[normalizedTokensDeclarative]]) as the property-test oracle.
     */
-  def normalizedTokens(c: Column): Column =
-    if (System.getProperty("graft.fusedtok.off") != null) normalizedTokensDeclarative(c)
-    else {
-      import org.apache.spark.sql.graftbridge.ColumnBridge
-      ColumnBridge.column(
-        graft.expressions.NormalizedTokens(ColumnBridge.expression(c)))
-    }
+  def normalizedTokens(c: Column): Column = {
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    ColumnBridge.column(
+      graft.expressions.NormalizedTokens(ColumnBridge.expression(c)))
+  }
 
-  /** The pre-round-18 declarative spelling of [[normalizedTokens]] —
-    * retained ONLY as the equivalence oracle for the fused expression
-    * (ExpressionsSpec); never on a query path.
+  /** Test oracle only: the declarative spelling of [[normalizedTokens]]
+    * (regex split plus two higher-order functions), which ExpressionsSpec
+    * checks the fused expression against. No query path calls it.
     */
   def normalizedTokensDeclarative(c: Column): Column =
     filter(transform(whitespaceTokens(c), t => normalizeWord(t)), t => length(t) > lit(0))

@@ -5,10 +5,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Session-scoped SNAPSHOT-METADATA cache shared by the engine's
   * stores (round 17, optimization guide §5/§6).
   *
-  * Measured on this box (PlanCost, warm): one `spark.read.parquet`
-  * call against an already-written source costs 314-427 ms of pure
-  * driver time (path resolution + file listing + footer schema
-  * inference) before a single row is read — and the engine's
+  * Measured warm, driver side: one `spark.read.parquet` call against
+  * an already-written source costs 314-427 ms of pure driver time
+  * (path resolution + file listing + footer schema inference) before
+  * a single row is read — and the engine's
   * multi-version readers rebuild the same relations dozens of times
   * per query, so plan construction dominated the layout family's
   * bench time (q220: 6.6 s of 7.5 s was DataFrame building).

@@ -97,8 +97,8 @@ object VersionedLayout {
   // ------------------------------------------------------------------
   // SNAPSHOT-METADATA CACHES (round 17, optimization guide §5/§6).
   //
-  // Measured on this box (PlanCost, warm): ONE `spark.read.parquet`
-  // call against an already-written layout source costs 314-427 ms of
+  // Measured warm, driver side: ONE `spark.read.parquet` call against
+  // an already-written layout source costs 314-427 ms of
   // pure driver time (path resolution + file listing + footer schema
   // inference) before a single row is read, and a full readAsOf(head)
   // PLAN BUILD costs ~880 ms vs ~160 ms to actually EXECUTE it.

@@ -39,8 +39,7 @@ final class GraftBatchReadRule(spark: SparkSession) extends Rule[LogicalPlan] {
     * plan-heavy queries without it).
     */
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (sys.props.contains("graft.r15rules.off")
-        || graft.streaming.GraftLayoutTable.everCreated.get() == 0L) return plan
+    if (graft.streaming.GraftLayoutTable.everCreated.get() == 0L) return plan
     // WRITE/DML TARGET relations must keep their relation identity —
     // AppendData/OverwriteByExpression resolve their V1 fallback write
     // against the table, and the DML rule reads the target's dir off

@@ -57,22 +57,6 @@ object ScalePatterns {
           .as("supps_within_10pct"))
       .orderBy(col("l_returnflag"))
 
-  /** Bench-only twin of q34 WITHOUT the exact countDistinct columns.
-    * The oracled q34 deliberately computes exact counts alongside the
-    * sketches (that's what makes the envelope booleans checkable), which
-    * means its bench timing is dominated by the exact-distinct cost the
-    * sketch exists to avoid. Bench times this twin separately (reported
-    * under "aux") so the artifact records what the sketch alone costs at
-    * scale; the correctness gate keeps the exact+envelope variant.
-    */
-  private[graft] def q34SketchOnly(s: SparkSession, d: String): DataFrame =
-    Tables.lineitem(s, d)
-      .groupBy(col("l_returnflag"))
-      .agg(
-        approx_count_distinct(col("l_partkey")).as("approx_parts"),
-        approx_count_distinct(col("l_suppkey")).as("approx_supps"))
-      .orderBy(col("l_returnflag"))
-
   private def asofInputs(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     val orders = Tables.orders(s, d)
       // o_orderdate reads as TIMESTAMP_NTZ; with the session pinned to UTC

@@ -4,7 +4,7 @@ compare against the gate parquet graft.Verify just wrote, and print a
 single JSON line with the verdict plus BOTH sides' full row digests.
 
 graft.Verify shells out to this right after writing the gate artifacts
-and appends the line to DIAG.jsonl — so a later driver-red /
+and appends the line to target/diag/DIAG.jsonl — so a later driver-red /
 local-green pair at the same timestamp proves the divergence sits in
 the driver's harness, and a local-red names the exact divergent cells.
 (Round-13 follow-through on the q186 forensics: rounds 10-12 could
