@@ -26,6 +26,23 @@ object JvmId {
   val token: String =
     java.util.UUID.randomUUID().toString.replace("-", "")
 
+  /** Delete this JVM's scenario roots: entries directly under `tmpDir`
+    * whose name starts with `graft_` and contains [[token]]. No other JVM
+    * can compute such a name, so none can adopt the root; other JVMs'
+    * roots and the code-nonce-named cross-JVM roots ([[classNonce]]) are
+    * never touched. Failures are swallowed — cleanup must not fail an exit.
+    */
+  private[graft] def sweepOwnRoots(tmpDir: java.io.File): Unit =
+    Option(tmpDir.listFiles()).getOrElse(Array.empty[java.io.File])
+      .filter(f => f.getName.startsWith("graft_") && f.getName.contains(token))
+      .foreach { f =>
+        try org.apache.commons.io.FileUtils.forceDelete(f) catch { case _: Throwable => () }
+      }
+
+  try Runtime.getRuntime.addShutdownHook(new Thread(
+    () => sweepOwnRoots(new java.io.File(sys.props("java.io.tmpdir")))))
+  catch { case _: IllegalStateException => () } // already shutting down
+
   /** CRC of the given classes' bytecode — the CODE-STATE nonce baked
     * into the name of every STABLE (cross-JVM, cross-round) scenario
     * root. The q186 lesson generalized: a scratch root that outlives

@@ -6,13 +6,14 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** The generation-chain commit protocol shared by the maintained index
-  * stores ([[LshIndexStore]], [[IvfIndexStore]]): numbered generation
-  * directories `v<N>/`, each built COMPLETE under a dot-prefixed tmp —
-  * its manifest JSON written LAST inside — then atomically renamed, so
-  * readers only ever see complete generations, a crashed mutation
-  * leaves a tmp the next one overwrites, and a lost single-writer race
-  * fails loudly on the rename instead of clobbering committed state.
+/** The generation-chain commit protocol shared by the three maintained
+  * index stores ([[IndexStore]], [[LshIndexStore]], [[IvfIndexStore]]):
+  * numbered generation directories `v<N>/`, each built COMPLETE under a
+  * dot-prefixed tmp — its manifest JSON written LAST inside — then
+  * atomically renamed, so readers only ever see complete generations, a
+  * crashed mutation leaves a tmp that [[vacuumGenerations]] sweeps, and
+  * a lost race fails loudly on the rename instead of clobbering
+  * committed state.
   * Manifests carry a `txn` stamp for exactly-once streaming ingest
   * (the [[VersionedLayout.appendInsertOnce]] contract).
   */
@@ -30,6 +31,14 @@ private[graft] object GenChain {
       .map(_.getName.stripPrefix("v").toInt)
       .filter(g => manifest(dir, g).isFile)
       .maxOption.getOrElse(-1)
+
+  /** Latest full-snapshot generation at or below `gen` — the one whose
+    * directory holds `snapshotSubdir` (v0 or a compaction): the segment
+    * chain's base.
+    */
+  def baseGenOf(dir: String, gen: Int, snapshotSubdir: String): Int =
+    (gen to 0 by -1).find(g => new java.io.File(genDir(dir, g), snapshotSubdir).isDirectory)
+      .getOrElse(throw new IllegalStateException(s"$dir has no full-snapshot generation <= $gen"))
 
   def txnOf(dir: String, gen: Int): Long = {
     val body = new String(
@@ -251,6 +260,14 @@ private[graft] object GenChain {
         && newestMtime(f) <= cutoff)
       .foreach(org.apache.commons.io.FileUtils.deleteDirectory)
   }
+
+  /** The policy's default thresholds, shared by every maintained chain:
+    * fold when the chain read scans >= 1.5x the rows a folded base would,
+    * or when segment count alone reaches 8 (each segment adds scheduling
+    * + open cost even when small). The q169 audit reports both inputs.
+    */
+  val recommendOverheadMilli: Long = 1500L
+  val recommendMaxSegments: Int = 8
 
   /** ONE compaction policy for every maintained chain: fire at
     * `maxSegments` chain length, or when the merged read's row mass

@@ -1,35 +1,24 @@
 package graft.operators
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
-
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Persisted base+delta inverted-index chain with COMPACTION — the
   * maintenance step q146's algebraic merge implies but never
   * materializes: under continuous ingest each batch appends a small
-  * `delta-N` index (only the batch is tokenized), readers pay an N-way
-  * posting-list union, and an explicit `compact()` rewrites the chain
-  * back to a single base so steady-state reads return to one table
-  * scan. Complements [[InvertedIndex.retract]] (q149) on the additive
-  * side: together the persisted index supports append, delete, and
-  * physical reorganization without ever re-reading the corpus.
+  * delta index (only the batch is tokenized), readers pay an N-way
+  * posting-list union, and [[compact]] folds the chain into a new full
+  * base so steady-state reads return to one table scan. Complements
+  * [[InvertedIndex.retract]] (q149) on the additive side.
   *
-  * Crash-safety is by MERGE IDEMPOTENCE: posting-list union is
-  * idempotent and associative, so if compact() dies between publishing
-  * the merged base and dropping the deltas, a reader merges
-  * already-merged lists and gets the identical index — never a wrong
-  * answer, only a redundant union until the cleanup is retried (the
-  * same argument, in the index algebra, as DeletableRangeLayout's
-  * stale-tombstone masking). Mutators assume a single writer, like a
-  * table format whose commit log serializes them; readers are safe at
-  * every intermediate state.
-  *
-  * At 100 TB: deltas are bounded by batch size (tokenizing a batch
-  * never touches the base), the read-side union is one groupBy at index
-  * grain (words), and compaction cost is proportional to the INDEX, not
-  * the corpus — the corpus is never re-tokenized.
+  * Commit protocol: [[GenChain]] generations. Each `v<N>/` holds one
+  * segment named by its delta ordinal — `base/<j>/` (a full base
+  * holding batches 1..j; `init` writes `base/0`) or `delta/<i>/`
+  * (batch i). Ordinals stay monotone across compactions and survive a
+  * vacuum, so [[readAsOf]] addresses a chain state by its batch count.
+  * A crashed mutation leaves only an unpublished `.gen-tmp-*` dir that
+  * readers never see.
   *
   * Stored row shape: (word, file_ids sorted distinct array) — exactly
   * [[InvertedIndex.index]]'s first two columns; doc_freq/letter are
@@ -37,74 +26,57 @@ import org.apache.spark.sql.types._
   */
 object IndexStore {
 
-  private val lock = new Object
-
   private val indexSchema = StructType(Seq(
     StructField("word", StringType),
     StructField("file_ids", ArrayType(LongType))))
 
-  private def baseDir(store: String) = s"$store/base"
+  private def write(df: DataFrame, dest: String): Unit =
+    df.select(col("word"), col("file_ids")).write.parquet(dest)
 
-  /** Existing delta dirs, ascending by sequence number. */
-  private def deltaDirs(store: String): Seq[String] = {
-    val fs = Option(new java.io.File(store).listFiles()).getOrElse(Array.empty)
-    fs.filter(f => f.isDirectory && f.getName.startsWith("delta-"))
-      .sortBy(_.getName.stripPrefix("delta-").toInt).map(_.getPath).toSeq
+  private def head(store: String): Int = {
+    val g = GenChain.currentGeneration(store)
+    require(g >= 0, s"$store has no generation 0 — call init first")
+    g
   }
 
-  private def writeAtomic(df: DataFrame, dest: String): Unit = {
-    val tmp = dest + s".tmp-p${graft.JvmId.token}"
-    df.select(col("word"), col("file_ids")).write.mode("overwrite").parquet(tmp)
-    val live = Paths.get(dest)
-    val old = Paths.get(dest + s".old-p${graft.JvmId.token}")
-    if (Files.exists(live)) Files.move(live, old, StandardCopyOption.ATOMIC_MOVE)
-    Files.move(Paths.get(tmp), live, StandardCopyOption.ATOMIC_MOVE)
-    if (Files.exists(old))
-      org.apache.commons.io.FileUtils.deleteDirectory(old.toFile)
+  private def baseGen(store: String, gen: Int): Int = GenChain.baseGenOf(store, gen, "base")
+
+  /** Generation `gen`'s segment dir, `base/<j>` or `delta/<i>`. */
+  private def segment(store: String, gen: Int): java.io.File = {
+    val g = new java.io.File(GenChain.genDir(store, gen))
+    val kind = Seq("base", "delta").map(new java.io.File(g, _)).find(_.isDirectory)
+      .getOrElse(throw new IllegalStateException(s"generation $gen of $store holds no segment"))
+    kind.listFiles().filter(_.isDirectory).head
   }
 
-  /** Create the store with `df` as its base (no-op if it exists). */
-  def init(df: DataFrame, store: String): Unit = lock.synchronized {
-    if (!new java.io.File(baseDir(store)).isDirectory) {
-      Files.createDirectories(Paths.get(store))
-      writeAtomic(df, baseDir(store))
+  private def ordinal(store: String, gen: Int): Int = segment(store, gen).getName.toInt
+
+  /** Create the store with `df` as its base `v0` (no-op if it exists). */
+  def init(df: DataFrame, store: String): Unit =
+    if (GenChain.currentGeneration(store) < 0) {
+      val tmp = GenChain.freshTmp(store, 0)
+      write(df, s"$tmp/base/0")
+      try GenChain.publish(store, 0, -1L, tmp)
+      catch { case _: GenChain.ChainCasLostException => () } // another writer's v0
     }
-  }
 
-  private def archiveRoot(store: String) = s"$store/_archive"
-
-  /** Archive dirs `c<N>`, ascending by compaction sequence. */
-  private def archiveDirs(store: String): Seq[String] = {
-    val fs = Option(new java.io.File(archiveRoot(store)).listFiles()).getOrElse(Array.empty)
-    fs.filter(f => f.isDirectory && f.getName.startsWith("c"))
-      .sortBy(_.getName.stripPrefix("c").toInt).map(_.getPath).toSeq
-  }
-
-  /** Highest delta sequence ever appended (live OR archived) — delta
-    * numbering is monotone across compactions so `delta-i` names a
-    * unique ingest batch for the store's whole history.
+  /** Append one ingest batch's index as the next generation; a lost
+    * publish race rebases onto the winner's head.
     */
-  private def totalDeltaSeq(store: String): Int = {
-    def seqs(dirs: Seq[String]) = dirs.map(d => new java.io.File(d).getName.stripPrefix("delta-").toInt)
-    val archived = archiveDirs(store).flatMap(a =>
-      Option(new java.io.File(a).listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isDirectory && f.getName.startsWith("delta-")).map(_.getPath))
-    (seqs(deltaDirs(store)) ++ seqs(archived)).maxOption.getOrElse(0)
-  }
-
-  /** Append one ingest batch's index as the next delta in the chain. */
-  def appendDelta(df: DataFrame, store: String): String = lock.synchronized {
-    val next = totalDeltaSeq(store) + 1
-    val dest = s"$store/delta-$next"
-    writeAtomic(df, dest)
-    dest
+  def appendDelta(df: DataFrame, store: String): String = GenChain.withChainRetry() {
+    val gen = head(store)
+    val tmp = GenChain.freshTmp(store, gen + 1)
+    val seg = s"delta/${ordinal(store, gen) + 1}"
+    write(df, s"$tmp/$seg")
+    GenChain.publish(store, gen + 1, -1L, tmp)
+    s"${GenChain.genDir(store, gen + 1)}/$seg"
   }
 
   /** N-way index merge at index grain: posting lists unioned (inputs
     * already sorted+distinct), nothing re-tokenized. One groupBy over
     * index rows; a single input passes through untouched.
     */
-  def mergeAll(sides: Seq[DataFrame]): DataFrame = sides match {
+  private def mergeAll(sides: Seq[DataFrame]): DataFrame = sides match {
     case Seq(one) => one.select(col("word"), col("file_ids"))
     case many => many.map(_.select(col("word"), col("file_ids")))
       .reduce(_ unionByName _)
@@ -113,113 +85,50 @@ object IndexStore {
         .as("file_ids"))
   }
 
-  /** The reader contract: base ∪ deltas, merged. Readable at every
-    * intermediate mutation state (see object scaladoc).
-    */
-  /** Chain-state stamp for the snapshot cache: base mtime + chain
-    * shape. Every mutation replaces a dir by rename (fresh mtime) or
-    * changes the delta/archive set, so any change — including a
-    * same-path rebuild — invalidates; within one state all source dirs
-    * are immutable.
-    */
-  private def chainStamp(store: String): String =
-    s"b${new java.io.File(baseDir(store)).lastModified()}" +
-      s"d${deltaDirs(store).size}a${archiveDirs(store).size}"
+  /** The index generation `gen` serves: its base merged with the deltas after it. */
+  private def readGen(s: SparkSession, store: String, gen: Int): DataFrame =
+    mergeAll((baseGen(store, gen) to gen).map(g => SnapshotCache.parquet(s,
+      SnapshotCache.genStamp(store, g), None, Seq(segment(store, g).getPath), Some(indexSchema))))
 
-  def read(s: SparkSession, store: String): DataFrame = {
-    val dirs = baseDir(store) +: deltaDirs(store)
-    val st = chainStamp(store)
-    mergeAll(dirs.map(d =>
-      SnapshotCache.parquet(s, st, None, Seq(d), Some(indexSchema))))
-  }
+  /** The head index — the reader contract. */
+  def read(s: SparkSession, store: String): DataFrame = readGen(s, store, head(store))
 
-  /** Rewrite base := merge(base, deltas), then ARCHIVE the folded base
-    * and deltas under `_archive/c<N>/` (rename-cost, not copies) so the
-    * chain's history stays addressable for [[readAsOf]]. Returns the
-    * number of deltas folded in (0 = chain already compact, no-op — the
-    * base is NOT rewritten in that case). The live layout after compact
-    * is identical to before this archive existed: one base, no deltas —
-    * readers and a retried compact see exactly the old contract.
+  /** Fold the head's deltas into a new full-base generation. Returns the
+    * number of deltas folded; 0 (nothing written) when the head is a base.
     */
-  def compact(s: SparkSession, store: String): Int = lock.synchronized {
-    // Recovery preamble: a crashed attempt may have archived the base
-    // without landing its merged replacement — finish that move (the
-    // tmp holds the complete merged index, written before any rename).
-    // With a live base present, any leftover tmp is stale garbage.
-    val baseTmps = Option(new java.io.File(store).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("base.tmp-p")).toSeq
-    if (!new java.io.File(baseDir(store)).isDirectory) {
-      val t = baseTmps.headOption.getOrElse(throw new IllegalStateException(
-        s"$store has no base and no recovery tmp — unrecoverable"))
-      Files.move(t.toPath, Paths.get(baseDir(store)), StandardCopyOption.ATOMIC_MOVE)
-    } else baseTmps.foreach(t => org.apache.commons.io.FileUtils.deleteDirectory(t))
-    val deltas = deltaDirs(store)
-    if (deltas.isEmpty) return 0
-    // Materialize off the input files so the swap below can't race the
-    // merge's own (lazy) reads of the old base.
-    val merged = read(s, store).localCheckpoint()
-    val seq = archiveDirs(store).size + 1
-    val arch = Paths.get(archiveRoot(store), s"c$seq")
-    Files.createDirectories(arch)
-    val tmp = baseDir(store) + s".tmp-p${graft.JvmId.token}"
-    merged.select(col("word"), col("file_ids")).write.mode("overwrite").parquet(tmp)
-    // Same two-rename publish window as before; a crash between the
-    // moves leaves the old base in the archive — recoverable metadata,
-    // never a silently wrong read.
-    Files.move(Paths.get(baseDir(store)), arch.resolve("base"), StandardCopyOption.ATOMIC_MOVE)
-    Files.move(Paths.get(tmp), Paths.get(baseDir(store)), StandardCopyOption.ATOMIC_MOVE)
-    deltas.foreach { d =>
-      val name = new java.io.File(d).getName
-      Files.move(Paths.get(d), arch.resolve(name), StandardCopyOption.ATOMIC_MOVE)
+  def compact(s: SparkSession, store: String): Int = {
+    val gen = head(store)
+    val folded = gen - baseGen(store, gen)
+    if (folded > 0) {
+      val tmp = GenChain.freshTmp(store, gen + 1)
+      write(readGen(s, store, gen), s"$tmp/base/${ordinal(store, gen)}")
+      GenChain.publish(store, gen + 1, -1L, tmp)
     }
-    deltas.size
+    folded
   }
 
-  /** The index AS OF delta `upToDelta` (0 = the original base alone) —
-    * TIME TRAVEL for the chain: reconstructs merge(base0, delta-1 ..
-    * delta-upToDelta) from wherever those artifacts now live (the live
-    * chain, or the archives compaction moved them into). The original
-    * base is the first compaction's archived base (each compaction
-    * archives the base it replaces, so c1 holds the init-time base);
-    * with no compactions yet, history is simply the live chain.
-    * Vacuumed history fails EXPLICITLY.
+  /** The index AS OF batch `upToDelta` (0 = the original base alone) —
+    * TIME TRAVEL for the chain: the newest generation whose ordinal is at
+    * most `upToDelta`, read through its own base. Vacuumed history fails
+    * EXPLICITLY.
     */
   def readAsOf(s: SparkSession, store: String, upToDelta: Int): DataFrame = {
-    val archives = archiveDirs(store)
-    val base0 =
-      if (archives.isEmpty) baseDir(store)
-      else s"${archives.head}/base"
-    def locate(i: Int): String = {
-      val name = s"delta-$i"
-      (s"$store/$name" +: archives.map(a => s"$a/$name"))
-        .find(p => new java.io.File(p).isDirectory)
-        .getOrElse(throw new IllegalArgumentException(
-          s"delta $i of $store is not addressable (never appended, or vacuumed)"))
-    }
-    require(new java.io.File(base0).isDirectory,
-      s"original base of $store is not addressable (vacuumed)")
-    val dirs = base0 +: (1 to upToDelta).map(locate)
-    val st = chainStamp(store)
-    mergeAll(dirs.map(d =>
-      SnapshotCache.parquet(s, st, None, Seq(d), Some(indexSchema))))
+    val gen = head(store)
+    require(upToDelta <= ordinal(store, gen),
+      s"delta $upToDelta of $store is not addressable (never appended)")
+    val at = (gen to 0 by -1).iterator
+      .takeWhile(g => new java.io.File(GenChain.genDir(store, g)).isDirectory)
+      .find(g => ordinal(store, g) <= upToDelta)
+      .getOrElse(throw new IllegalArgumentException(
+        s"delta $upToDelta of $store is not addressable (vacuumed)"))
+    readGen(s, store, at)
   }
 
-  /** Drop ALL archived history (the head remains the only addressable
-    * state) — the index chain's vacuum.
+  /** Drop every generation below the head's base — the index chain's
+    * vacuum: states older than that base stop being addressable.
     */
-  def vacuumArchives(store: String): Unit = lock.synchronized {
-    val a = new java.io.File(archiveRoot(store))
-    if (a.isDirectory) org.apache.commons.io.FileUtils.deleteDirectory(a)
-  }
-
-  /** Default compaction-policy thresholds (shared by the LSH index
-    * store so the two chains ride one policy): fold when the chain
-    * read scans >= 1.5x the rows a folded base would, or when segment
-    * count alone reaches 8 (each segment adds scheduling + open cost
-    * even when small). The q169 audit reports both inputs per chain.
-    */
-  val recommendOverheadMilli: Long = 1500L
-  val recommendMaxSegments: Int = 8
+  def vacuumArchives(store: String): Unit =
+    GenChain.vacuumGenerations(store, baseGen(store, head(store)))
 
   /** Chain-health audit: (segment count, rows a chain read scans =
     * base + all deltas, rows the folded base would hold). The
@@ -228,11 +137,11 @@ object IndexStore {
     * counts only, never the corpus.
     */
   def chainAudit(s: SparkSession, store: String): (Int, Long, Long) = {
-    val deltas = deltaDirs(store)
-    val readRows = (baseDir(store) +: deltas)
-      .map(dd => s.read.schema(indexSchema).parquet(dd).count()).sum
-    val foldedRows = read(s, store).count()
-    (deltas.size, readRows, foldedRows)
+    val gen = head(store)
+    val b = baseGen(store, gen)
+    val readRows = (b to gen)
+      .map(g => s.read.schema(indexSchema).parquet(segment(store, g).getPath).count()).sum
+    (gen - b, readRows, readGen(s, store, gen).count())
   }
 
   /** The maintenance trigger the audit recommends: compact when the
@@ -241,8 +150,8 @@ object IndexStore {
     * Integer-exact crossing test (no float boundary).
     */
   def compactIfNeeded(s: SparkSession, store: String,
-      maxOverheadMilli: Long = recommendOverheadMilli,
-      maxSegments: Int = recommendMaxSegments): Boolean =
+      maxOverheadMilli: Long = GenChain.recommendOverheadMilli,
+      maxSegments: Int = GenChain.recommendMaxSegments): Boolean =
     GenChain.compactWhenNeeded(chainAudit(s, store),
-      { compact(s, store); 0 }, maxOverheadMilli, maxSegments)
+      compact(s, store), maxOverheadMilli, maxSegments)
 }

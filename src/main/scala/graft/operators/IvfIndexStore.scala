@@ -56,16 +56,9 @@ object IvfIndexStore {
   /** Highest COMPLETE generation (manifest present), -1 when none. */
   def currentGeneration(dir: String): Int = GenChain.currentGeneration(dir)
 
-  /** Latest full-snapshot generation at or below `gen` (v0 or a
-    * compaction) — the segment chain's base.
-    */
-  private def baseGenOf(dir: String, gen: Int): Int =
-    (gen to 0 by -1).find(g => new java.io.File(genDir(dir, g), "asg").isDirectory)
-      .getOrElse(throw new IllegalStateException(s"$dir has no full-snapshot generation <= $gen"))
-
   /** The frozen centroid table (cid, ce, cn) serving generation `gen`. */
   def centroidsOf(s: SparkSession, dir: String, gen: Int): DataFrame = {
-    val b = baseGenOf(dir, gen)
+    val b = GenChain.baseGenOf(dir, gen, "asg")
     SnapshotCache.parquet(s, SnapshotCache.genStamp(dir, b), None,
       Seq(s"${genDir(dir, b)}/centroids"))
   }
@@ -74,7 +67,8 @@ object IvfIndexStore {
     * base) — exposed for audits that iterate the chain from its
     * serving base (e.g. the scheduled drift audit).
     */
-  private[graft] def baseGeneration(dir: String, gen: Int): Int = baseGenOf(dir, gen)
+  private[graft] def baseGeneration(dir: String, gen: Int): Int =
+    GenChain.baseGenOf(dir, gen, "asg")
 
   /** Argmax-cosine assignment of `df`'s vectors against a centroid
     * table `(cid, ce, cn)` — THE single spelling of the IVF coarse
@@ -104,7 +98,7 @@ object IvfIndexStore {
     */
   def assignmentsOf(s: SparkSession, dir: String, gen: Int,
       cids: Option[Seq[Long]] = None): DataFrame = {
-    val b = baseGenOf(dir, gen)
+    val b = GenChain.baseGenOf(dir, gen, "asg")
     val basePath = s"${genDir(dir, b)}/asg"
     // The base's cid partition column is re-inferred (as int) from the
     // directory names — normalize every source to the long it was
@@ -157,7 +151,7 @@ object IvfIndexStore {
       else if (delta.isDirectory)
         SnapshotCache.parquet(s, stamp, None, Seq(delta.getAbsolutePath))
       else {
-        val b = baseGenOf(dir, gen)
+        val b = GenChain.baseGenOf(dir, gen, "asg")
         SnapshotCache.parquet(s, SnapshotCache.genStamp(dir, b), None,
           Seq(s"${genDir(dir, b)}/asg")).where(lit(false))
       }
@@ -254,7 +248,7 @@ object IvfIndexStore {
     * reproduces exactly what each past pipeline run saw.
     */
   def epochOf(dir: String, gen: Int): Int = {
-    val f = new java.io.File(genDir(dir, baseGenOf(dir, gen)), "_epoch.txt")
+    val f = new java.io.File(genDir(dir, GenChain.baseGenOf(dir, gen, "asg")), "_epoch.txt")
     if (f.isFile)
       new String(Files.readAllBytes(f.toPath), StandardCharsets.UTF_8).trim.toInt
     else 0
@@ -277,7 +271,8 @@ object IvfIndexStore {
     *
     *  - generations BELOW the retrain keep serving under their own
     *    epoch's centroids ([[centroidsOf]]/[[assignmentsOf]] route
-    *    through [[baseGenOf]], which the retrain generation now caps);
+    *    through [[GenChain.baseGenOf]], which the retrain generation
+    *    now caps);
     *  - txn stamps survive (nothing is deleted — and the flip doubles
     *    as a txn-checkpoint moment like [[compact]]);
     *  - subsequent admits assign against [[centroidsOf]] at the NEW
@@ -346,7 +341,7 @@ object IvfIndexStore {
   def chainAudit(s: SparkSession, dir: String): (Int, Long, Long) = {
     val gen = currentGeneration(dir)
     require(gen >= 0, s"$dir has no generation 0 — call init first")
-    val b = baseGenOf(dir, gen)
+    val b = GenChain.baseGenOf(dir, gen, "asg")
     val segGens = ((b + 1) to gen).filter(g =>
       new java.io.File(genDir(dir, g), "asg-delta").isDirectory ||
         new java.io.File(genDir(dir, g), "retract-ids").isDirectory)
@@ -363,8 +358,8 @@ object IvfIndexStore {
     * crosses the shared policy threshold. Returns whether it fired.
     */
   def compactIfNeeded(s: SparkSession, dir: String,
-      maxOverheadMilli: Long = IndexStore.recommendOverheadMilli,
-      maxSegments: Int = IndexStore.recommendMaxSegments): Boolean =
+      maxOverheadMilli: Long = GenChain.recommendOverheadMilli,
+      maxSegments: Int = GenChain.recommendMaxSegments): Boolean =
     GenChain.compactWhenNeeded(chainAudit(s, dir),
       compact(s, dir), maxOverheadMilli, maxSegments)
 

@@ -70,13 +70,6 @@ object LshIndexStore {
   /** Highest COMPLETE generation (manifest present), -1 when none. */
   def currentGeneration(dir: String): Int = GenChain.currentGeneration(dir)
 
-  /** Latest full-snapshot generation at or below `gen` (v0 or a
-    * compaction) — the segment chain's base.
-    */
-  private def baseGenOf(dir: String, gen: Int): Int =
-    (gen to 0 by -1).find(g => new java.io.File(genDir(dir, g), "bands").isDirectory)
-      .getOrElse(throw new IllegalStateException(s"$dir has no full-snapshot generation <= $gen"))
-
   /** Band rows as of generation `gen`: base snapshot + delta segments,
     * minus every doc a retract segment tombstoned (q149's semantics).
     *
@@ -118,7 +111,7 @@ object LshIndexStore {
     */
   private[graft] def prunedBands(
       s: SparkSession, dir: String, gen: Int, bkts: Option[Seq[Int]]): DataFrame = {
-    val b = baseGenOf(dir, gen)
+    val b = GenChain.baseGenOf(dir, gen, "bands")
     val parts =
       readPruned(s, s"${genDir(dir, b)}/bands", SnapshotCache.genStamp(dir, b), bkts)
         .map(_.drop("bkt").withColumn("_row_gen", lit(b))).toSeq ++
@@ -206,7 +199,7 @@ object LshIndexStore {
     */
   def countsOf(s: SparkSession, dir: String, gen: Int,
       bkts: Option[Seq[Int]] = None): DataFrame = {
-    val b = baseGenOf(dir, gen)
+    val b = GenChain.baseGenOf(dir, gen, "bands")
     val parts =
       readPruned(s, s"${genDir(dir, b)}/counts", SnapshotCache.genStamp(dir, b), bkts)
         .map(_.drop("bkt")).toSeq ++
@@ -231,7 +224,7 @@ object LshIndexStore {
     * drop out), so a mutation never rewrites the candidate-sized table.
     */
   private def pairBandsOf(s: SparkSession, dir: String, gen: Int): DataFrame = {
-    val b = baseGenOf(dir, gen)
+    val b = GenChain.baseGenOf(dir, gen, "bands")
     val segGens = ((b + 1) to gen).filter(g =>
       new java.io.File(genDir(dir, g), "touched-buckets").isDirectory)
     val base = SnapshotCache.parquet(s, SnapshotCache.genStamp(dir, b), None,
@@ -520,7 +513,7 @@ object LshIndexStore {
   def chainAudit(s: SparkSession, dir: String): (Int, Long, Long) = {
     val gen = currentGeneration(dir)
     require(gen >= 0, s"$dir has no generation 0 — call init first")
-    val b = baseGenOf(dir, gen)
+    val b = GenChain.baseGenOf(dir, gen, "bands")
     val segGens = ((b + 1) to gen).filter(g =>
       new java.io.File(genDir(dir, g), "touched-buckets").isDirectory)
     val base = SnapshotCache.parquet(s, SnapshotCache.genStamp(dir, b), None,
@@ -532,13 +525,13 @@ object LshIndexStore {
   }
 
   /** Compact when the chain's measured merge-read overhead or segment
-    * count crosses the policy threshold (defaults shared with
-    * [[IndexStore]] — one policy for both maintained chains). Returns
+    * count crosses the policy threshold (the [[GenChain]] defaults — one
+    * policy for every maintained chain). Returns
     * whether it fired. Integer-exact crossing test.
     */
   def compactIfNeeded(s: SparkSession, dir: String,
-      maxOverheadMilli: Long = IndexStore.recommendOverheadMilli,
-      maxSegments: Int = IndexStore.recommendMaxSegments): Boolean =
+      maxOverheadMilli: Long = GenChain.recommendOverheadMilli,
+      maxSegments: Int = GenChain.recommendMaxSegments): Boolean =
     GenChain.compactWhenNeeded(chainAudit(s, dir),
       compact(s, dir), maxOverheadMilli, maxSegments)
 

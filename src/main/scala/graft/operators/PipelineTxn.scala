@@ -619,8 +619,8 @@ object PipelineTxn {
     */
   def maintain(s: SparkSession, p: PipelineStores, keepLast: Int,
       minReclaimRows: Long, reclaimIntentsBelowTxn: Long,
-      maxOverheadMilli: Long = IndexStore.recommendOverheadMilli,
-      maxSegments: Int = IndexStore.recommendMaxSegments,
+      maxOverheadMilli: Long = GenChain.recommendOverheadMilli,
+      maxSegments: Int = GenChain.recommendMaxSegments,
       deepCounts: Boolean = true,
       ivfRetrain: Option[IvfRetrainPolicy] = None,
       retainWindow: Option[(Long, Long)] = None): DataFrame = {

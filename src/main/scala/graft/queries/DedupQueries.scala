@@ -486,7 +486,7 @@ object DedupQueries {
     * segment — the merge-read mass every consumer pays per query), the
     * rows a folded base would hold, their ratio (`overhead_milli`,
     * integer-exact), and whether the shared policy
-    * ([[graft.operators.IndexStore.recommendOverheadMilli]] /
+    * ([[graft.operators.GenChain.recommendOverheadMilli]] /
     * `recommendMaxSegments`) recommends compacting. Chains are built
     * deterministically (retrieval: q152's base + 2 deltas; LSH: q168's
     * init/admit/retract CRUD sequence) in their own pid-scoped stores,
@@ -501,7 +501,7 @@ object DedupQueries {
     * equal the declarative prediction.
     */
   private def q169(s: SparkSession, d: String): DataFrame = {
-    import graft.operators.{IndexStore, InvertedIndex, LshIndexStore}
+    import graft.operators.{GenChain, IndexStore, LshIndexStore}
     val sfx = d.replaceAll("[^A-Za-z0-9]", "_")
     val pid = graft.JvmId.token
     val lshDir = new java.io.File(sys.props("java.io.tmpdir"),
@@ -518,12 +518,7 @@ object DedupQueries {
         LshIndexStore.retractOnce(s, lshDir,
           Tables.documents(s, d).where(col("doc_id") % 10 === 0).select(col("doc_id")),
           txn = 2L)
-        val docs = Tables.documents(s, d)
-        def side(pred: org.apache.spark.sql.Column) = InvertedIndex
-          .index(InvertedIndex.words(docs.where(pred), "doc_id", "text"))
-        IndexStore.init(side(col("doc_id") % 10 =!= 0 && col("doc_id") % 10 =!= 7), idxDir)
-        IndexStore.appendDelta(side(col("doc_id") % 10 === 0), idxDir)
-        IndexStore.appendDelta(side(col("doc_id") % 10 === 7), idxDir)
+        TextCorpus.buildRetrievalChain(s, d, idxDir)
       }
     }
     val (ln, lr, lf) = LshIndexStore.chainAudit(s, lshDir)
@@ -534,8 +529,8 @@ object DedupQueries {
       .toDF("chain", "n_segments", "read_rows", "folded_rows")
       .withColumn("overhead_milli", expr("(1000 * read_rows) div folded_rows"))
       .withColumn("compact_recommended",
-        (col("overhead_milli") >= IndexStore.recommendOverheadMilli
-          || col("n_segments") >= IndexStore.recommendMaxSegments).cast("long"))
+        (col("overhead_milli") >= GenChain.recommendOverheadMilli
+          || col("n_segments") >= GenChain.recommendMaxSegments).cast("long"))
       .orderBy(col("chain"))
   }
 
@@ -1049,8 +1044,8 @@ object DedupQueries {
          |  FROM rb, r1, r2, rf)
          |SELECT chain, n_segments, read_rows, folded_rows,
          |  (1000 * read_rows) // folded_rows AS overhead_milli,
-         |  CAST(CASE WHEN (1000 * read_rows) // folded_rows >= ${graft.operators.IndexStore.recommendOverheadMilli}
-         |    OR n_segments >= ${graft.operators.IndexStore.recommendMaxSegments}
+         |  CAST(CASE WHEN (1000 * read_rows) // folded_rows >= ${graft.operators.GenChain.recommendOverheadMilli}
+         |    OR n_segments >= ${graft.operators.GenChain.recommendMaxSegments}
          |    THEN 1 ELSE 0 END AS BIGINT) AS compact_recommended
          |FROM u ORDER BY chain""".stripMargin
     }),

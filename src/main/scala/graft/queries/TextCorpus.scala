@@ -105,66 +105,70 @@ object TextCorpus {
       .orderBy(col("doc_freq").desc, col("word"))
   }
 
-  /** Stable location of q152's persisted base+delta index store —
-    * code-nonce-suffixed like every cross-JVM scenario root (see
-    * [[graft.JvmId.classNonce]]), so a builder change never adopts a
-    * previous spelling's on-disk state.
+  /** The retrieval chain q152, q161 and q169 build: a persisted base
+    * index over doc_id % 10 ∉ {0, 7}, then two delta batches (== 0, then
+    * == 7) — two synthetic ingest batches, only each batch tokenized.
     */
-  private[graft] def indexStoreDir(d: String): String = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_")
-    val nonce = graft.JvmId.classNonce(TextCorpus.getClass,
-      graft.operators.IndexStore.getClass, graft.operators.InvertedIndex.getClass,
-      graft.functions.text.getClass)
-    new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_index_store_${sfx}_n$nonce").getAbsolutePath
+  private[queries] def buildRetrievalChain(s: SparkSession, d: String, store: String): Unit = {
+    import graft.operators.IndexStore
+    val docs = Tables.documents(s, d)
+    def side(pred: Column) = InvertedIndex
+      .index(InvertedIndex.words(docs.where(pred), "doc_id", "text"))
+    IndexStore.init(side(col("doc_id") % 10 =!= 0 && col("doc_id") % 10 =!= 7), store)
+    IndexStore.appendDelta(side(col("doc_id") % 10 === 0), store)
+    IndexStore.appendDelta(side(col("doc_id") % 10 === 7), store)
   }
 
-  /** Index-chain COMPACTION — the maintenance step q146 (merge) and
-    * q149 (retract) imply but never materialize: the corpus lands as a
-    * PERSISTED base index plus two delta indexes (doc_id % 10 == 0 and
-    * == 7, two synthetic ingest batches — only each batch is
-    * tokenized), `compact()` folds the chain back into a single base,
-    * and the answer is read from the compacted store. Oracle = q17's
-    * full-corpus rebuild, so the gate proves
-    * compact(base ∪ δ1 ∪ δ2) == rebuild(all) — and on every LATER
-    * session, which finds the already-compacted store on disk, the same
-    * gate proves the compacted artifact itself (a no-op compact + one
-    * table scan, no merge in the plan). Chain/crash invariants in
-    * RetrievalSpec; protocol in [[graft.operators.IndexStore]].
+  /** q152/q161's shared store: the retrieval chain, compacted, at a
+    * stable location — code-nonce-suffixed like every cross-JVM scenario
+    * root (see [[graft.JvmId.classNonce]]), so a builder change never
+    * adopts a previous spelling's on-disk state. The chain is built AND
+    * compacted in a writer-private tmp, then published with one atomic
+    * rename: no session ever mutates the published store, and a killed
+    * first session can never leave a partial chain for later ones.
     */
-  private def q152(s: SparkSession, d: String): DataFrame = {
-    import graft.operators.IndexStore
-    val store = indexStoreDir(d)
+  private def compactedIndexStore(s: SparkSession, d: String): String = {
+    val sfx = d.replaceAll("[^A-Za-z0-9]", "_")
+    val nonce = graft.JvmId.classNonce(TextCorpus.getClass,
+      graft.operators.IndexStore.getClass, graft.operators.GenChain.getClass,
+      InvertedIndex.getClass, graft.functions.text.getClass)
+    val store = new java.io.File(
+      sys.props("java.io.tmpdir"), s"graft_index_store_${sfx}_n$nonce").getAbsolutePath
     if (!new java.io.File(store).isDirectory) {
-      // Build the 2-delta chain under a tmp dir and publish it with one
-      // atomic rename: a killed first session can never leave a
-      // partial chain (missing delta) for later sessions to read.
-      val tmp = store + s".tmp-p${graft.JvmId.token}"
-      val docs = Tables.documents(s, d)
-      def side(pred: Column) = InvertedIndex
-        .index(InvertedIndex.words(docs.where(pred), "doc_id", "text"))
-      IndexStore.init(side(col("doc_id") % 10 =!= 0 && col("doc_id") % 10 =!= 7), tmp)
-      IndexStore.appendDelta(side(col("doc_id") % 10 === 0), tmp)
-      IndexStore.appendDelta(side(col("doc_id") % 10 === 7), tmp)
-      try java.nio.file.Files.move(
-        java.nio.file.Paths.get(tmp), java.nio.file.Paths.get(store),
+      val tmp = new java.io.File(
+        s"$store.tmp-p${graft.JvmId.token}t${Thread.currentThread().getId}")
+      org.apache.commons.io.FileUtils.deleteDirectory(tmp)
+      buildRetrievalChain(s, d, tmp.getPath)
+      graft.operators.IndexStore.compact(s, tmp.getPath)
+      try java.nio.file.Files.move(tmp.toPath, java.nio.file.Paths.get(store),
         java.nio.file.StandardCopyOption.ATOMIC_MOVE)
       catch {
         case _: java.nio.file.FileSystemException =>
-          // Another JVM published first; the chain is deterministic.
+          // Another session published first; the chain is deterministic.
           if (!new java.io.File(store).isDirectory) throw new IllegalStateException(
             s"index store rename to $store failed and no complete store exists")
-          org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
+          org.apache.commons.io.FileUtils.deleteDirectory(tmp)
       }
     }
-    IndexStore.compact(s, store)
-    IndexStore.read(s, store)
+    store
+  }
+
+  /** Index-chain COMPACTION — the maintenance step q146 (merge) and
+    * q149 (retract) imply but never materialize: the corpus lands as
+    * the persisted retrieval chain (base + two delta indexes),
+    * `compact()` folds it into a single base, and the answer is read
+    * from the compacted store. Oracle = q17's full-corpus rebuild, so
+    * the gate proves compact(base ∪ δ1 ∪ δ2) == rebuild(all), read as
+    * one table scan with no merge in the plan. Chain/crash invariants in
+    * RetrievalSpec; protocol in [[graft.operators.IndexStore]].
+    */
+  private def q152(s: SparkSession, d: String): DataFrame =
+    graft.operators.IndexStore.read(s, compactedIndexStore(s, d))
       .select(
         col("word"),
         concat_ws(" ", col("file_ids")).as("doc_ids"),
         size(col("file_ids")).cast("long").as("doc_freq"))
       .orderBy(col("doc_freq").desc, col("word"))
-  }
 
   /** Document-frequency ranking with the reference's letter partition key
     * (main.cpp:41-46): scalable count-distinct form, no posting list.
@@ -552,43 +556,18 @@ object TextCorpus {
   }
 
   /** TIME TRAVEL for the index chain — the AS-OF story q159/q160 built
-    * for the row layouts, applied to the q152 base+delta artifact:
-    * compaction now ARCHIVES the base and deltas it folds (rename-cost),
+    * for the row layouts, applied to q152's compacted store: compaction
+    * publishes a new base generation and keeps the generations it folds,
     * so the index any PAST training run read — base alone, base+δ1,
     * base+δ1+δ2 — stays reconstructible after the chain has been folded
-    * to a single base. This query builds its own chain (same batches as
-    * q152: base = doc_id%10 ∉ {0,7}, δ1 = %10==0, δ2 = %10==7),
-    * compacts it, then reports per-version index statistics AS OF each
-    * delta count — all three reconstructed THROUGH the archive. Oracle
-    * derives each version's vocabulary/posting mass from the documents
-    * table with the same batch predicates. Idempotent across sessions:
-    * later sessions find the compacted store and its archive and
-    * reconstruct the same three versions.
+    * to a single base. Reports per-version index statistics AS OF each
+    * delta count. Oracle derives each version's vocabulary/posting mass
+    * from the documents table with the same batch predicates.
     */
   private def q161(s: SparkSession, d: String): DataFrame = {
-    import graft.operators.IndexStore
-    val store = indexStoreDir(d) + "_tt"
-    if (!new java.io.File(store).isDirectory) {
-      val tmp = store + s".tmp-p${graft.JvmId.token}"
-      val docs = Tables.documents(s, d)
-      def side(pred: Column) = InvertedIndex
-        .index(InvertedIndex.words(docs.where(pred), "doc_id", "text"))
-      IndexStore.init(side(col("doc_id") % 10 =!= 0 && col("doc_id") % 10 =!= 7), tmp)
-      IndexStore.appendDelta(side(col("doc_id") % 10 === 0), tmp)
-      IndexStore.appendDelta(side(col("doc_id") % 10 === 7), tmp)
-      try java.nio.file.Files.move(
-        java.nio.file.Paths.get(tmp), java.nio.file.Paths.get(store),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      catch {
-        case _: java.nio.file.FileSystemException =>
-          if (!new java.io.File(store).isDirectory) throw new IllegalStateException(
-            s"index store rename to $store failed and no complete store exists")
-          org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
-      }
-    }
-    IndexStore.compact(s, store) // no-op when a later session finds it compacted
+    val store = compactedIndexStore(s, d)
     (0 to 2).map { ver =>
-      IndexStore.readAsOf(s, store, ver)
+      graft.operators.IndexStore.readAsOf(s, store, ver)
         .select(size(col("file_ids")).cast("long").as("df"))
         .agg(count(lit(1)).as("n_words"), sum(col("df")).as("n_postings"),
           max(col("df")).as("max_df"))

@@ -7,7 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** `JvmId.diag` writes its forensic ledger under the checkout's build
   * output (`target/diag/`), never into the tracked tree: the forked test
   * JVM runs with the checkout root as its working directory, so a
-  * repo-root ledger was appended to by every test run.
+  * repo-root ledger was appended to by every test run. The exit sweep
+  * deletes only this JVM's own scenario roots.
   */
 class JvmIdSpec extends AnyFunSuite {
 
@@ -33,5 +34,17 @@ class JvmIdSpec extends AnyFunSuite {
       .filter(f => f.getName.startsWith("DIAG") && f.getName.endsWith(".jsonl"))
     assert(ledgers.exists(f => Files.readString(f.toPath).contains(nonce)),
       s"no line with nonce $nonce under $diagDir (files: ${ledgers.map(_.getName)})")
+  }
+
+  test("the exit sweep deletes this JVM's graft_ roots and nothing else") {
+    val tmp = Files.createTempDirectory("graft-jvmid-sweep")
+    val own = Files.createDirectories(tmp.resolve(s"graft_scenario_p${JvmId.token}/v0"))
+    val foreign = Files.createDirectories(tmp.resolve("graft_scenario_p" + "0" * 32))
+    val nonce = Files.createDirectories(tmp.resolve("graft_index_store_sf_n1a2b3c4d"))
+    JvmId.sweepOwnRoots(tmp.toFile)
+    assert(!Files.exists(own.getParent), "own-token root survived")
+    assert(Files.isDirectory(foreign), "another JVM's root was deleted")
+    assert(Files.isDirectory(nonce), "a nonce-named root was deleted")
+    org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
   }
 }

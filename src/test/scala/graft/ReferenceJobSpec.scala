@@ -7,6 +7,9 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import scala.util.Random
 
+import org.scalacheck.{Gen, Prop, Test}
+import org.scalacheck.Prop.propBoolean
+import org.scalacheck.rng.Seed
 import org.scalatest.BeforeAndAfterAll
 
 import graft.functions.text
@@ -200,5 +203,43 @@ class ReferenceJobSpec extends SparkSpec with BeforeAndAfterAll {
     ReferenceJob.run(spark, manifest.toString, out.toString)
     assert(('a' to 'z').map(c => Files.readAllBytes(out.resolve(s"$c.txt")).toSeq) == first)
     assert(read(out) == Model.letterFiles(docs))
+  }
+
+  /** One generated file: empty, whitespace-only, or words from a small
+    * vocabulary (so doc-frequency ties and absent letters are common)
+    * mixed with every separator, non-ASCII words and invalid UTF-8 bytes.
+    */
+  private val genFile: Gen[Array[Byte]] = {
+    val word = Gen.oneOf("apple", "Apple", "apricot", "banana", "BANANA", "bravo", "x1y2", "it's",
+      "zoo", "zebra,", "\"quoted\"", "café", "naïve", "über", "ñandú", "—", "?!").map(utf8)
+    val sep = Gen.oneOf(" ", "  ", "\t", "\n", "\r\n", "\r", "\f", "\u000b").map(utf8)
+    val invalid = Gen.oneOf(Seq(0xff), Seq(0xc3), Seq(0x80), Seq(0xc0, 0xaf), Seq(0xe2, 0x80))
+      .map(_.map(_.toByte).toArray)
+    def concat(parts: List[Array[Byte]]) = parts.flatMap(_.toSeq).toArray
+    Gen.frequency(
+      1 -> Gen.const(Array.emptyByteArray),
+      1 -> Gen.listOf(sep).map(concat),
+      6 -> Gen.listOf(Gen.frequency(6 -> word, 5 -> sep, 1 -> invalid)).map(concat))
+  }
+
+  /** Up to five files and a manifest of one to eight entries over them,
+    * so paths repeat and some files go unlisted.
+    */
+  private val genManifest: Gen[(Map[String, Array[Byte]], Seq[String])] = for {
+    n <- Gen.choose(1, 5)
+    bodies <- Gen.listOfN(n, genFile)
+    names = bodies.indices.map(i => s"f$i.txt")
+    k <- Gen.choose(1, 8)
+    order <- Gen.listOfN(k, Gen.oneOf(names))
+  } yield (names.zip(bodies).toMap, order)
+
+  test("generated manifests match the model byte for byte (ScalaCheck, fixed seed)") {
+    val params = Test.Parameters.default
+      .withMinSuccessfulTests(12).withWorkers(1).withInitialSeed(Seed(20261018L))
+    val result = Test.check(params, Prop.forAllNoShrink(genManifest) { case (files, order) =>
+      val (manifest, docs) = corpus(files, order)
+      (run(manifest) == Model.letterFiles(docs)) :| s"manifest $manifest, order $order"
+    })
+    assert(result.passed, result.status)
   }
 }

@@ -67,9 +67,7 @@ class RetrievalSpec extends SparkSpec {
     assert(chain == full, "chain read diverged from full rebuild")
     assert(IndexStore.compact(spark, store) == 2)
     assert(snap() == full, "compacted read diverged from chain read")
-    def deltasLeft() = new java.io.File(store).listFiles()
-      .count(f => f.isDirectory && f.getName.startsWith("delta-"))
-    assert(deltasLeft() == 0, "compact left delta dirs behind")
+    assert(IndexStore.chainAudit(spark, store)._1 == 0, "compact left deltas in the head chain")
     // Compact on an already-compact chain is a no-op...
     assert(IndexStore.compact(spark, store) == 0)
     // ...and the post-compact read plan is a single scan: no merge
@@ -146,15 +144,15 @@ class RetrievalSpec extends SparkSpec {
     val pre = (0 to 2).map(v => toSet(IndexStore.readAsOf(spark, store, v)))
     assert(pre(0) != pre(1) && pre(1) != pre(2), "fixture batches are not distinguishable")
     assert(IndexStore.compact(spark, store) == 2)
-    // The SAME versions AFTER compaction: reconstructed from the archive.
+    // The SAME versions AFTER compaction: read through the folded generations.
     (0 to 2).foreach { v =>
       assert(toSet(IndexStore.readAsOf(spark, store, v)) == pre(v),
         s"AS-OF $v diverged across compaction")
     }
     // The head read and the full AS-OF agree (union associativity).
     assert(toSet(IndexStore.read(spark, store)) == pre(2))
-    // Post-compact appends continue the monotone numbering: a delta-3
-    // extends history without colliding with the archived delta-1/2.
+    // Post-compact appends continue the monotone numbering: delta 3
+    // extends history without colliding with the folded deltas 1/2.
     IndexStore.appendDelta(side(col("doc_id") % 10 === 7), store)
     assert(toSet(IndexStore.readAsOf(spark, store, 3)) == pre(2), "idempotent re-append changed v3")
     assert(toSet(IndexStore.readAsOf(spark, store, 2)) == pre(2))
@@ -165,37 +163,72 @@ class RetrievalSpec extends SparkSpec {
     assert(toSet(IndexStore.read(spark, store)) == pre(2))
   }
 
-  test("index compact crash-replay: a dead base-swap window is repaired on retry; history stays reconstructible") {
-    import graft.operators.{IndexStore, InvertedIndex}
+  test("index compact crash window: a dead writer's unpublished generation is invisible; a retried compact folds and keeps history") {
+    import graft.operators.{GenChain, IndexStore, InvertedIndex}
     val docs = Tables.documents(spark, sf0001)
     def side(pred: org.apache.spark.sql.Column) = InvertedIndex
       .index(InvertedIndex.words(docs.where(pred), "doc_id", "text"))
     val store = java.nio.file.Files
       .createTempDirectory("graft-index-crash").toString + "/store"
-    IndexStore.init(side(col("doc_id") % 10 =!= 0), store)
+    IndexStore.init(side(col("doc_id") % 10 =!= 0 && col("doc_id") % 10 =!= 7), store)
     IndexStore.appendDelta(side(col("doc_id") % 10 === 0), store)
+    IndexStore.appendDelta(side(col("doc_id") % 10 === 7), store)
     def toSet(df: org.apache.spark.sql.DataFrame): Set[(String, String)] = df
       .select(col("word"), concat_ws(",", col("file_ids")).as("ids"))
       .collect().map(r => (r.getString(0), r.getString(1))).toSet
-    val v0 = toSet(IndexStore.readAsOf(spark, store, 0))
-    val full = toSet(IndexStore.read(spark, store))
+    val pre = (0 to 2).map(v => toSet(IndexStore.readAsOf(spark, store, v)))
 
-    // Simulate the worst crash window by hand: merged result in tmp,
-    // base archived, replacement never landed, delta still live.
-    IndexStore.read(spark, store).localCheckpoint()
-      .select(col("word"), col("file_ids"))
-      .write.mode("overwrite").parquet(s"$store/base.tmp-p0")
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$store/_archive/c1"))
-    java.nio.file.Files.move(
-      java.nio.file.Paths.get(s"$store/base"),
-      java.nio.file.Paths.get(s"$store/_archive/c1/base"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    // A compact that died after writing its complete generation tmp,
+    // manifest included, but before the publishing rename.
+    val dead = new java.io.File(store, ".gen-tmp-v3-pdeadt1")
+    IndexStore.read(spark, store).write.parquet(s"$dead/base/2")
+    java.nio.file.Files.write(new java.io.File(dead, "_graft_manifest.json").toPath,
+      """{"generation":3,"txn":-1}""".getBytes("UTF-8"))
+    assert(GenChain.currentGeneration(store) == 2, "an unpublished tmp became the head")
+    assert(IndexStore.chainAudit(spark, store)._1 == 2)
+    (0 to 2).foreach { v =>
+      assert(toSet(IndexStore.readAsOf(spark, store, v)) == pre(v),
+        s"AS-OF $v changed by the dead tmp")
+    }
 
-    // Retry: repairs the window, folds the delta, keeps history intact.
-    assert(IndexStore.compact(spark, store) == 1)
-    assert(toSet(IndexStore.read(spark, store)) == full, "retry changed the head index")
-    assert(toSet(IndexStore.readAsOf(spark, store, 0)) == v0, "retry lost the original base")
-    assert(toSet(IndexStore.readAsOf(spark, store, 1)) == full)
+    // Retry: folds both deltas into v3; every state stays addressable.
+    assert(IndexStore.compact(spark, store) == 2)
+    assert(GenChain.currentGeneration(store) == 3)
+    assert(IndexStore.chainAudit(spark, store)._1 == 0)
+    assert(toSet(IndexStore.read(spark, store)) == pre(2), "retry changed the head index")
+    (0 to 2).foreach { v =>
+      assert(toSet(IndexStore.readAsOf(spark, store, v)) == pre(v), s"retry lost AS-OF $v")
+    }
+  }
+
+  test("index store: two threads appending to one store land as distinct generations; the read is their union") {
+    import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
+    import graft.operators.{GenChain, IndexStore, InvertedIndex}
+    val docs = Tables.documents(spark, sf0001)
+    def side(pred: org.apache.spark.sql.Column) = InvertedIndex
+      .index(InvertedIndex.words(docs.where(pred), "doc_id", "text"))
+    val store = java.nio.file.Files
+      .createTempDirectory("graft-index-race").toString + "/store"
+    IndexStore.init(side(col("doc_id") % 10 =!= 0 && col("doc_id") % 10 =!= 7), store)
+    val pool = Executors.newFixedThreadPool(2)
+    val gate = new CountDownLatch(1)
+    val appends = Seq(col("doc_id") % 10 === 0, col("doc_id") % 10 === 7).map { pred =>
+      pool.submit(new Callable[String] {
+        def call(): String = { gate.await(); IndexStore.appendDelta(side(pred), store) }
+      })
+    }
+    gate.countDown()
+    pool.shutdown()
+    assert(pool.awaitTermination(300, TimeUnit.SECONDS))
+    val published = appends.map(_.get())
+    assert(published.distinct.size == 2, s"both appends claimed one generation: $published")
+    assert(GenChain.currentGeneration(store) == 2)
+    assert(IndexStore.chainAudit(spark, store)._1 == 2)
+    def toSet(df: org.apache.spark.sql.DataFrame): Set[(String, String)] = df
+      .select(col("word"), concat_ws(",", col("file_ids")).as("ids"))
+      .collect().map(r => (r.getString(0), r.getString(1))).toSet
+    assert(toSet(IndexStore.read(spark, store)) == toSet(side(lit(true))),
+      "the head read is not the union of the base and both batches")
   }
 
   test("q149 index-grain retract is row-identical to a rebuild over the surviving corpus") {

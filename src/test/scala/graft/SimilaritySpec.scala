@@ -175,7 +175,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("IvfIndexStore.compactIfNeeded fires exactly at the shared chain policy") {
-    import graft.operators.{IndexStore, IvfIndexStore}
+    import graft.operators.{GenChain, IvfIndexStore}
     import graft.functions.vectors
     import org.apache.spark.sql.functions._
     val dir = java.nio.file.Files.createTempDirectory("graft-ivfpolicy").toString + "/store"
@@ -198,7 +198,7 @@ class SimilaritySpec extends SparkSpec {
     assert(!IvfIndexStore.compactIfNeeded(spark, dir), "fired below both thresholds")
     assert(IvfIndexStore.currentGeneration(dir) == 1)
     // Drive the chain to the segment-count threshold: must fire ONCE.
-    (2 until IndexStore.recommendMaxSegments + 1).foreach { k =>
+    (2 until GenChain.recommendMaxSegments + 1).foreach { k =>
       IvfIndexStore.admit(spark, dir, asg(col("vec_id") % 16 === k))
     }
     val before = IvfIndexStore
