@@ -1,9 +1,12 @@
 package graft
 
+import java.nio.file.Files
 import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 
 import graft.operators.VersionedLayout
 
@@ -18,10 +21,14 @@ import graft.operators.VersionedLayout
   * exercises exactly the file-system race two processes would hit (the
   * JVM lock is gone; nothing below the CAS is synchronized).
   */
-class CatalogCasSpec extends SparkSpec {
+class CatalogCasSpec extends SparkSpec with BeforeAndAfterAll {
+
+  private val root = Files.createTempDirectory("graft_cas_")
+
+  override def afterAll(): Unit = FileUtils.deleteDirectory(root.toFile)
 
   private def freshDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_cas_$tag").toString
+    Files.createTempDirectory(root, tag).toString
 
   private def newLayout(tag: String): String = {
     val dir = freshDir(tag) + "/layout"

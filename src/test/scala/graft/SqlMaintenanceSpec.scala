@@ -1,7 +1,11 @@
 package graft
 
+import java.nio.file.Files
+
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 
 import graft.operators.VersionedLayout
 
@@ -11,10 +15,14 @@ import graft.operators.VersionedLayout
   * q219/q224 discipline: a table maintained from SQL text must be
   * indistinguishable from one maintained through the API.
   */
-class SqlMaintenanceSpec extends SparkSpec {
+class SqlMaintenanceSpec extends SparkSpec with BeforeAndAfterAll {
+
+  private val root = Files.createTempDirectory("graft_sqlmaint_")
+
+  override def afterAll(): Unit = FileUtils.deleteDirectory(root.toFile)
 
   private def freshDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_sqlmaint_$tag").toString + "/layout"
+    Files.createTempDirectory(root, tag).toString + "/layout"
 
   /** Identical 3-version history on a fresh layout: base, insert,
     * delete — enough outstanding state for a fold to matter.

@@ -9,6 +9,8 @@ committed file's row set equals SparkEntry.allDefs at test time, so the
 table cannot drift from the registry.
 
 Run from the repo root:  python3 tools/gen_queries_md.py
+With --check it writes nothing: it exits 1 and names the rows that differ
+from the committed file when that file is stale.
 """
 import re
 import sys
@@ -126,7 +128,8 @@ header = f"""# QUERIES.md — generated per-query index
 Generated by `tools/gen_queries_md.py` from the `QueryDef` registrations
 under `src/main/scala/graft`; QueriesSmokeSpec asserts this file's row
 set equals `SparkEntry.allDefs` (name-for-name), so the table cannot
-drift from the registry. Re-run the script after adding a query.
+drift from the registry. Re-run the script after adding a query;
+`python3 tools/gen_queries_md.py --check` names stale rows and writes nothing.
 
 {len(rows)} queries registered. "Oracle" = a DuckDB SQL oracle on the
 driver's rows+schema+hash gate; "Specs" = test suites that reference the
@@ -137,8 +140,28 @@ and timed by Bench).
 |---|---|---|---|---|
 """
 
-out = header + "\n".join(rows) + "\n"
-(ROOT / "QUERIES.md").write_text(out)
-print(f"wrote QUERIES.md with {len(rows)} rows")
 if len(rows) != len(defs):
     sys.exit("row/def count mismatch")
+out = header + "\n".join(rows) + "\n"
+target = ROOT / "QUERIES.md"
+if "--check" not in sys.argv[1:]:
+    target.write_text(out)
+    print(f"wrote QUERIES.md with {len(rows)} rows")
+    sys.exit(0)
+old = target.read_text() if target.exists() else ""
+if old == out:
+    print(f"QUERIES.md is current ({len(rows)} rows)")
+    sys.exit(0)
+
+
+def by_name(text):
+    return {l.split("|")[1].strip(): l for l in text.splitlines() if l.startswith("| q")}
+
+
+have, want = by_name(old), by_name(out)
+stale = sorted((n for n in have.keys() | want.keys() if have.get(n) != want.get(n)), key=qnum)
+for n in stale:
+    print(f"{n}:\n  have {have.get(n, '(no row)')}\n  want {want.get(n, '(no row)')}")
+if not stale:
+    print("the header differs")
+sys.exit("QUERIES.md is stale: run python3 tools/gen_queries_md.py")
