@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.text
@@ -15,10 +15,13 @@ import graft.functions.text
   *                            the reference mapper's per-file `set` (#9)
   *   - barrier + shuffle   -> the one `repartition(26, letter)` exchange
   *                            of [[LetterSink.writePostings]] (#8,#10)
-  *   - set-union merge     -> a streaming fold over (word, file_id)-
-  *                            sorted rows, no per-word hash set (#11)
-  *   - composite sort      -> per-letter sortWithinPartitions (#12, see
-  *                            LetterSink for why the order is per-letter)
+  *   - set-union merge     -> per letter, a word -> ids hash map whose
+  *                            lists are sorted and deduped, after one
+  *                            radix sort on the first byte makes each
+  *                            letter's rows contiguous (#11)
+  *   - composite sort      -> each letter's words ranked in memory (#12,
+  *                            see LetterSink for why the order is
+  *                            per-letter)
   *
   * That is the reference job's route ([[ReferenceJob]]): one map stage,
   * one exchange, each input file one row (so under ~2 GB, checked by
@@ -73,11 +76,6 @@ object InvertedIndex {
         size(col("file_ids")).as("doc_freq"),
         text.firstLetter(col("word")).as("letter"),
       )
-
-  /** The reference's ranking order (tema1a/src/main.cpp:137-148):
-    * doc-frequency descending, then word ascending.
-    */
-  def rankingOrder: Seq[Column] = Seq(col("doc_freq").desc, col("word").asc)
 
   /** Index-grain retraction — the DELETION path of incremental index
     * maintenance (the additive path is the q146 merge): remove a

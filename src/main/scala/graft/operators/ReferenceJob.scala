@@ -13,9 +13,12 @@ import graft.sources.ManifestSource
   * The plan has the reference's shape: one map stage in which each task
   * reads whole files ([[ManifestSource.files]]) and emits each file's
   * distinct words ([[InvertedIndex.documentWords]]), then ONE exchange on
-  * the first letter, after which every letter's task merges, ranks and
-  * writes its file ([[LetterSink.writePostings]]). A file is one row, so
-  * each input file must be under ~2 GB ([[ManifestSource.read]] checks).
+  * the first letter, after which every letter's task merges its words'
+  * ids in a hash map, ranks the letter in memory and writes its file
+  * ([[LetterSink.writePostings]]), as the reference reducer does
+  * (main.cpp:121-174). A file is one row, so each input file must be under
+  * ~2 GB ([[ManifestSource.read]] checks), and a reduce task holds one
+  * letter's postings at a time.
   */
 object ReferenceJob {
   def run(spark: SparkSession, manifestPath: String, outDir: String): Unit = {

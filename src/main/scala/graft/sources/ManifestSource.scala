@@ -3,9 +3,10 @@ package graft.sources
 import java.nio.file.{Files, InvalidPathException, Path, Paths}
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.TaskMetricsBridge
+import org.apache.spark.sql.types.{BinaryType, IntegerType, StructField, StructType}
 import org.apache.spark.unsafe.array.ByteArrayMethods
 
 /** The reference engine's input source: a manifest file whose first line is a
@@ -57,17 +58,20 @@ object ManifestSource {
     * scan would pass them.
     */
   def files(spark: SparkSession, manifest: Seq[(Int, String)]): DataFrame = {
-    import spark.implicits._
-    spark.sparkContext
+    val rows = spark.sparkContext
       .parallelize(manifest, spark.sparkContext.defaultParallelism)
       .map { case (id, path) =>
         val bytes = Files.readAllBytes(Paths.get(path))
         TaskMetricsBridge.recordRead(bytes.length, 1)
-        (id, bytes)
+        Row(id, bytes)
       }
-      .toDF("file_id", "bytes")
+    spark.createDataFrame(rows, fileSchema)
       .select(col("file_id"), col("bytes").cast("string").as("text"))
   }
+
+  private val fileSchema = StructType(Seq(
+    StructField("file_id", IntegerType, nullable = false),
+    StructField("bytes", BinaryType, nullable = false)))
 
   /** DataFrame of (file_id: Int, line: String): each file of [[files]] split
     * into lines on `\r\n`, `\r` or `\n` as a Spark text scan splits them (no

@@ -7,13 +7,18 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import scala.util.Random
 
+import org.apache.spark.sql.execution.{QueryExecution, SortExec, SortPrefixUtils, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalacheck.{Gen, Prop, Test}
 import org.scalacheck.Prop.propBoolean
 import org.scalacheck.rng.Seed
 import org.scalatest.BeforeAndAfterAll
 
 import graft.functions.text
-import graft.operators.ReferenceJob
+import graft.operators.{InvertedIndex, LetterSink, ReferenceJob}
+import graft.sources.ManifestSource
 
 /** `ReferenceJob` against a plain-Scala model of the reference program
   * (tema1a/src/main.cpp), on hand-made corpora, so reference parity is
@@ -30,7 +35,7 @@ import graft.operators.ReferenceJob
   *   - each letter file lists its words by doc_freq desc, then word asc,
   *     one `word:[id id ...]` line each; absent letters give empty files.
   */
-class ReferenceJobSpec extends SparkSpec with BeforeAndAfterAll {
+class ReferenceJobSpec extends SparkSpec with BeforeAndAfterAll with AdaptiveSparkPlanHelper {
 
   private val root = Files.createTempDirectory("graft-refjob")
 
@@ -45,11 +50,14 @@ class ReferenceJobSpec extends SparkSpec with BeforeAndAfterAll {
         .split("[ \t\n\u000b\f\r]+").iterator
         .map(text.normalizeWordScala).filter(_.nonEmpty)
 
-    def letterFiles(docs: Seq[Array[Byte]]): IndexedSeq[String] = {
-      val postings = mutable.TreeMap.empty[String, mutable.TreeSet[Int]]
-      docs.zipWithIndex.foreach { case (bytes, i) =>
-        words(bytes).foreach(w => postings.getOrElseUpdate(w, mutable.TreeSet.empty[Int]) += i + 1)
-      }
+    /** Each (file_id, word) pair's word -> the set of its ids. */
+    def postings(pairs: Iterator[(Int, String)]): collection.Map[String, collection.BitSet] = {
+      val byWord = mutable.HashMap.empty[String, mutable.BitSet]
+      pairs.foreach { case (id, w) => byWord.getOrElseUpdate(w, mutable.BitSet.empty) += id }
+      byWord
+    }
+
+    def render(postings: collection.Map[String, collection.BitSet]): IndexedSeq[String] = {
       val byLetter = postings.toSeq.groupBy(_._1.charAt(0))
       ('a' to 'z').map { c =>
         byLetter.getOrElse(c, Nil)
@@ -58,6 +66,9 @@ class ReferenceJobSpec extends SparkSpec with BeforeAndAfterAll {
           .mkString
       }
     }
+
+    def letterFiles(docs: Seq[Array[Byte]]): IndexedSeq[String] =
+      render(postings(docs.iterator.zipWithIndex.flatMap { case (bytes, i) => words(bytes).map((i + 1, _)) }))
   }
 
   private var dirs = 0
@@ -203,6 +214,123 @@ class ReferenceJobSpec extends SparkSpec with BeforeAndAfterAll {
     ReferenceJob.run(spark, manifest.toString, out.toString)
     assert(('a' to 'z').map(c => Files.readAllBytes(out.resolve(s"$c.txt")).toSeq) == first)
     assert(read(out) == Model.letterFiles(docs))
+  }
+
+  test("writePostings folds unordered, repeated pairs of every letter into the model's files") {
+    val rnd = new Random(3L)
+    // Every letter; 'q' holds one word. Each word's ids arrive in
+    // descending order with some repeated, over several map slices.
+    val words = ('a' to 'z').flatMap { c =>
+      if (c == 'q') Seq("quay")
+      else Seq.fill(1 + rnd.nextInt(6))(c.toString + Seq.fill(rnd.nextInt(5))(('a' + rnd.nextInt(26)).toChar).mkString)
+    }.distinct
+    val pairs = words.flatMap { w =>
+      val ids = Seq.fill(1 + rnd.nextInt(8))(1 + rnd.nextInt(40))
+      (ids ++ ids.take(2)).map((_, w))
+    }.sortBy(-_._1)
+    val out = root.resolve("postings-direct")
+    LetterSink.writePostings(spark.createDataFrame(pairs).toDF("file_id", "word"), out.toString)
+    val want = Model.render(Model.postings(pairs.iterator))
+    assert(want(16) == "quay:[" + pairs.filter(_._2 == "quay").map(_._1).distinct.sorted.mkString(" ") + "]\n")
+    assert(read(out) == want)
+  }
+
+  test("write(index) and writePostings give identical files") {
+    val (manifest, docs) = corpus(randomCorpus(13L), (1 to 24).map(i => s"f$i.txt"))
+    val words = InvertedIndex.words(
+      ManifestSource.lines(spark, ManifestSource.read(manifest.toString)), "file_id", "line")
+    val viaIndex = root.resolve("via-index")
+    val viaPairs = root.resolve("via-pairs")
+    LetterSink.write(InvertedIndex.index(words), viaIndex.toString)
+    LetterSink.writePostings(words, viaPairs.toString)
+    assert(('a' to 'z').forall { c =>
+      java.util.Arrays.equals(Files.readAllBytes(viaIndex.resolve(s"$c.txt")), Files.readAllBytes(viaPairs.resolve(s"$c.txt")))
+    })
+    assert(read(viaPairs) == Model.letterFiles(docs))
+  }
+
+  test("the sink plans one exchange and one sort, on a single key Spark radix-sorts") {
+    val plans = new java.util.concurrent.LinkedBlockingQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val plan =
+      try {
+        LetterSink.writePostings(spark.createDataFrame(Seq((2, "beta"), (1, "alpha"))).toDF("file_id", "word"),
+          root.resolve("plan").toString)
+        plans.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      } finally spark.listenerManager.unregister(listener)
+    assert(plan != null, "no plan reported")
+    assert(collect(plan) { case e: ShuffleExchangeLike => e }.size == 1, plan)
+    val sorts = collect(plan) { case s: SortExec => s }
+    assert(sorts.size == 1, plan)
+    assert(sorts.head.sortOrder.size == 1 && SortPrefixUtils.canSortFullyWithPrefix(sorts.head.sortOrder.head), plan)
+  }
+
+  /** A corpus shaped like the paper's input: 355 files of log-normal
+    * size, 1,040,000 tokens drawn Zipf(1.05) from a 33,000-word vocabulary
+    * whose first letters follow English, and noise in the bytes the
+    * normalizer must strip or split on (capitals, punctuation, `'s`, UTF-8
+    * letters, invalid bytes, every separator). Same seed, same bytes.
+    */
+  private def paperCorpus(seed: Long): IndexedSeq[Array[Byte]] = {
+    val rnd = new Random(seed)
+    def cdf(w: Array[Double]): Array[Double] = { val c = w.scanLeft(0.0)(_ + _).tail; c.map(_ / c.last) }
+    def pick(cdf: Array[Double]): Int = {
+      val i = java.util.Arrays.binarySearch(cdf, rnd.nextDouble())
+      math.min(if (i >= 0) i else -i - 1, cdf.length - 1)
+    }
+    val firstLetters = cdf(Array(11.7, 4.4, 5.2, 3.2, 2.8, 4.0, 1.6, 4.2, 7.3, 0.51, 0.86, 2.4, 3.8,
+      2.3, 7.6, 4.3, 0.22, 2.8, 6.7, 16.0, 1.2, 0.82, 5.5, 0.045, 0.76, 0.045))
+    val letters = cdf(Array(8.2, 1.5, 2.8, 4.3, 12.7, 2.2, 2.0, 6.1, 7.0, 0.15, 0.77, 4.0, 2.4,
+      6.7, 7.5, 1.9, 0.095, 6.0, 6.3, 9.1, 2.8, 0.98, 2.4, 0.15, 2.0, 0.074))
+    val vocab = mutable.LinkedHashSet.empty[String]
+    while (vocab.size < 33000) {
+      val len = 1 + math.min(13, rnd.nextInt(4) + rnd.nextInt(4) + (if (vocab.size > 10000) rnd.nextInt(5) else 0))
+      vocab += (('a' + pick(firstLetters)).toChar +: Seq.fill(len - 1)(('a' + pick(letters)).toChar)).mkString
+    }
+    val lexicon = vocab.toIndexedSeq
+    val zipf = cdf(Array.tabulate(lexicon.length)(r => math.pow(r + 1, -1.05)))
+    val weights = Array.fill(355)(math.exp(0.9 * rnd.nextGaussian()))
+    val sizes = weights.map(w => math.max(1, (1040000 * w / weights.sum).toInt))
+    sizes(sizes.indexOf(sizes.max)) += 1040000 - sizes.sum
+    val noise = IndexedSeq("é", "ü", "—", "’").map(utf8) ++
+      IndexedSeq(Array(0xff.toByte), Array(0x80.toByte), Array(0xc3.toByte))
+    val seps = IndexedSeq(" ", " ", " ", " ", " ", " ", " ", " ", "  ", "\t", "\n", "\r\n", "\f", "\u000b").map(utf8)
+    sizes.toIndexedSeq.map { n =>
+      val out = new java.io.ByteArrayOutputStream(n * 8)
+      (1 to n).foreach { _ =>
+        var w = lexicon(pick(zipf))
+        val u = rnd.nextDouble()
+        if (u < 0.08) w = w.capitalize else if (u < 0.10) w = w.toUpperCase
+        if (rnd.nextDouble() < 0.006) w += "'s"
+        if (rnd.nextDouble() < 0.07) w += ",.;:!?" (rnd.nextInt(6))
+        val bytes = utf8(w)
+        val at = if (rnd.nextDouble() < 0.012) rnd.nextInt(bytes.length + 1) else -1
+        out.write(bytes, 0, math.max(at, 0))
+        if (at >= 0) out.write(noise(rnd.nextInt(noise.length)))
+        out.write(bytes, math.max(at, 0), bytes.length - math.max(at, 0))
+        out.write(seps(rnd.nextInt(seps.length)))
+      }
+      out.toByteArray
+    }
+  }
+
+  test("a paper-size corpus (355 files, 1.04 M tokens) matches the model byte for byte") {
+    val docs = paperCorpus(11L)
+    val names = docs.indices.map(i => f"f$i%03d.txt")
+    val (manifest, _) = corpus(names.zip(docs).toMap, names)
+    val out = root.resolve("paper")
+    val t0 = System.nanoTime()
+    ReferenceJob.run(spark, manifest.toString, out.toString)
+    val ms = (System.nanoTime() - t0) / 1e6
+    val want = Model.letterFiles(docs)
+    assert(read(out) == want)
+    info(f"${docs.length} files, ${docs.map(_.length.toLong).sum} bytes, " +
+      f"${want.map(_.count(_ == '\n')).sum} words: ReferenceJob.run took $ms%.0f ms")
   }
 
   /** One generated file: empty, whitespace-only, or words from a small
