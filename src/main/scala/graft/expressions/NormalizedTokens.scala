@@ -62,11 +62,18 @@ case class NormalizedTokens(child: Expression) extends UnaryExpression {
 }
 
 object NormalizedTokens {
-  /** Static kernel shared by eval and generated code. */
-  def tokens(s: UTF8String): ArrayData = {
-    val bytes = s.getBytes
+  /** Receives each token of a [[scan]]: its lowercased ASCII letters are
+    * `buf(0 until len)`. The buffer belongs to the scan and the next token
+    * overwrites it, so a receiver that keeps a token copies it.
+    */
+  trait Receiver { def token(buf: Array[Byte], len: Int): Unit }
+
+  /** The byte kernel (see the class doc): one walk over `bytes`, each
+    * token handed to `out` as it closes. The Catalyst expression and the
+    * reference job's map-side combiner both tokenize through it.
+    */
+  def scan(bytes: Array[Byte], out: Receiver): Unit = {
     val n = bytes.length
-    val out = new java.util.ArrayList[UTF8String]()
     var buf = new Array[Byte](32)
     var len = 0
     var i = 0
@@ -74,7 +81,7 @@ object NormalizedTokens {
       val b = bytes(i)
       if (b == ' ' || (b >= '\t' && b <= '\r')) { // \t \n \x0B \f \r
         if (len > 0) {
-          out.add(UTF8String.fromBytes(java.util.Arrays.copyOf(buf, len)))
+          out.token(buf, len)
           len = 0
         }
       } else {
@@ -90,7 +97,13 @@ object NormalizedTokens {
       }
       i += 1
     }
-    if (len > 0) out.add(UTF8String.fromBytes(java.util.Arrays.copyOf(buf, len)))
+    if (len > 0) out.token(buf, len)
+  }
+
+  /** Static entry point shared by eval and generated code. */
+  def tokens(s: UTF8String): ArrayData = {
+    val out = new java.util.ArrayList[UTF8String]()
+    scan(s.getBytes, (buf, len) => out.add(UTF8String.fromBytes(java.util.Arrays.copyOf(buf, len))))
     new GenericArrayData(out.toArray(new Array[AnyRef](out.size())))
   }
 }

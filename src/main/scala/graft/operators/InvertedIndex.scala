@@ -9,25 +9,29 @@ import graft.functions.text
   * document-frequency ranking (reference: tema1a/src/main.cpp, pipeline
   * documented in SURVEY.md §2).
   *
-  * Spark-first mapping:
-  *   - tokenize+normalize  -> explode over codegen'd built-ins (#3,#4,#5)
-  *   - per-mapper dedup    -> [[documentWords]]: `array_distinct` per file,
-  *                            the reference mapper's per-file `set` (#9)
-  *   - barrier + shuffle   -> the one `repartition(26, letter)` exchange
-  *                            of [[LetterSink.writePostings]] (#8,#10)
+  * Spark-first mapping, as the reference job ([[ReferenceJob]]) runs it:
+  *   - tokenize+normalize  -> the one byte kernel behind
+  *                            `text.normalizedTokens` (#3,#4,#5)
+  *   - per-mapper dedup    -> the map-side combiner of
+  *                            [[ReferenceJob.mapper]]: each map task folds
+  *                            its files into one word -> ids table, the
+  *                            reference mapper's per-reducer
+  *                            `map<word, set<fileId>>` (#9)
+  *   - barrier + shuffle   -> one `repartitionById(26, letter)` exchange in
+  *                            [[LetterSink.write]], one reduce partition
+  *                            per letter (#8,#10)
   *   - set-union merge     -> per letter, a word -> ids hash map whose
-  *                            lists are sorted and deduped, after one
-  *                            radix sort on the first byte makes each
-  *                            letter's rows contiguous (#11)
+  *                            lists are sorted and deduped (#11)
   *   - composite sort      -> each letter's words ranked in memory (#12,
   *                            see LetterSink for why the order is
   *                            per-letter)
   *
-  * That is the reference job's route ([[ReferenceJob]]): one map stage,
-  * one exchange, each input file one row (so under ~2 GB, checked by
-  * [[graft.sources.ManifestSource.read]]). [[index]]/[[fromLines]] build
-  * the same ranking as a DataFrame (`collect_set` by word) for queries
-  * that consume the index itself rather than the letter files.
+  * A map task holds its slice's postings and a reduce task one letter's,
+  * as in the reference; each input file is one row (so under ~2 GB,
+  * checked by [[graft.sources.ManifestSource.read]]). [[index]] and
+  * [[fromLines]] build the same ranking as a DataFrame (`collect_set` by
+  * word) for queries that consume the index itself rather than the letter
+  * files; [[LetterSink.write]] also writes that frame.
   *
   * Scale notes: the per-word posting list (`collect_set(file_id)`) is the
   * reference's own data model; at 100 TB a single word's posting list can
@@ -44,16 +48,6 @@ object InvertedIndex {
     lines.select(
       col(idCol).as("file_id"),
       explode(text.normalizedTokens(col(textCol))).as("word"),
-    )
-
-  /** (id, whole-document text) -> (file_id, word), one row per DISTINCT
-    * normalized word of each document: the reference mapper's per-file
-    * `set` (tema1a/src/main.cpp:97-103), applied before any shuffle.
-    */
-  def documentWords(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    docs.select(
-      col(idCol).as("file_id"),
-      explode(array_distinct(text.normalizedTokens(col(textCol)))).as("word"),
     )
 
   /** Distinct (word, file_id) pairs — the shuffle-friendly, unbounded-scale

@@ -5,10 +5,8 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
 import org.apache.spark.sql.functions._
-
-import graft.functions.text
 
 /** The reference engine's sink: 26 per-letter text files `a.txt`..`z.txt`,
   * each line `word:[id1 id2 ... idn]`, ids ascending, lines ordered by
@@ -17,22 +15,19 @@ import graft.functions.text
   * produce an EMPTY file (golden fixture test_out_small/d.txt is 0 bytes).
   *
   * Implementation, in the shape of the reference reducer
-  * (main.cpp:121-174): [[writePostings]] takes (file_id, word) pairs and
-  * hash-repartitions them on the letter, the plan's ONLY exchange (each
-  * letter lands wholly in exactly one task; a task may own several
-  * letters). The explicit `repartition(26, letter)` pins the partitioning
-  * so AQE coalescing cannot split a letter across tasks (AQE only merges
-  * whole partitions). Each task then sorts its rows on one integer key,
-  * the word's first byte, which Spark radix-sorts without a record
-  * comparator and which may spill; its only job is to make each letter
-  * contiguous. One pass folds a letter's rows into a word -> ids hash map,
-  * sorts and dedups each id list (pairs may arrive in any order and
-  * repeat), ranks the letter's words by (doc_freq desc, word asc) in
-  * memory, writes the file and clears the map. Memory therefore holds one
-  * letter's postings, about the size of that letter's output file: the
-  * reference reducer's own model. (In [[ReferenceJob]] the pairs come from
-  * one row per input file, so each file must be under ~2 GB; see
-  * [[graft.sources.ManifestSource]].)
+  * (main.cpp:121-174): [[write]] takes (word, file_ids) rows and routes
+  * each row by its word's letter with `repartitionById(26, letter index)`,
+  * the plan's ONLY exchange. Each letter owns exactly one reduce partition
+  * ('a' is 0, 'z' is 25), a pass-through id that AQE does not coalesce, so
+  * a reduce task holds one whole letter and nothing else, with no sort. A
+  * word whose first character is not `a`-`z` fails the job on the map side
+  * with an error that names it (see [[letterIndex]]). The task folds its
+  * rows into a word -> ids hash map, sorts and dedups each id list (a word
+  * may come in several rows, one per map task, its ids in any order),
+  * ranks the letter's words by (doc_freq desc, word asc) in memory and
+  * writes the file. Memory therefore holds one letter's postings, about
+  * the size of that letter's output file: the reference reducer's own
+  * model.
   *
   * Commit protocol: each task writes a letter to a task-attempt-private
   * temp file (`.tmp-<letter>-<taskAttemptId>`) in UTF-8 and ATOMICALLY
@@ -47,39 +42,52 @@ import graft.functions.text
   */
 object LetterSink {
 
-  private val pairEncoder: Encoder[(String, Int)] = Encoders.tuple(Encoders.STRING, Encoders.scalaInt)
+  /** (word, file_ids) rows, as the reference job's mapper emits them. */
+  private[operators] val listEncoder: Encoder[(String, Array[Int])] = Encoders.product[(String, Array[Int])]
 
-  /** Write a ranked index (columns: word, file_ids, ...) as the reference's
-    * 26 per-letter files under `outDir`, through [[writePostings]].
+  /** Write (word, file_ids, ...) rows as the reference's 26 per-letter
+    * files under `outDir`, with one exchange (see the object doc). A ranked
+    * index has one row per word; the reference job's mapper sends one row
+    * per word and map task. Either way a word's line lists the distinct
+    * union of its rows' ids.
     */
-  def write(index: DataFrame, outDir: String): Unit =
-    writePostings(index.select(explode(col("file_ids")).as("file_id"), col("word")), outDir)
-
-  /** Write (file_id, word) pairs as the 26 per-letter files under `outDir`,
-    * with one exchange (see the object doc). Pairs may come in any order
-    * and repeat; a word's ids are the distinct file_ids it occurs with.
-    */
-  def writePostings(pairs: DataFrame, outDir: String): Unit = {
+  def write(index: DataFrame, outDir: String): Unit = {
     Files.createDirectories(Paths.get(outDir))
     ('a' to 'z').foreach { c =>
       Files.write(Paths.get(outDir, s"$c.txt"), Array.emptyByteArray)
     }
-    pairs
-      .select(col("word"), col("file_id").cast("int"))
-      .repartition(26, text.firstLetter(col("word")))
-      .sortWithinPartitions(ascii(col("word")))
-      .as(pairEncoder)
-      .foreachPartition((it: Iterator[(String, Int)]) => writeLetters(it, outDir))
+    index
+      .select(col("word"), col("file_ids").cast("array<int>"))
+      .repartitionById(26, letterIndex(col("word")))
+      .as(listEncoder)
+      .foreachPartition((it: Iterator[(String, Array[Int])]) => writeLetter(it, outDir))
+  }
+
+  /** The word's reduce partition: 0 for `a` .. 25 for `z`. Spark reduces a
+    * pass-through id modulo the partition count (`DirectShufflePartitionID`
+    * plans as `pmod(id, 26)`), so an id out of range would silently send a
+    * word such as `Apple` to `u`'s task. Any other first character, an
+    * empty word or a null fails instead, naming the word.
+    */
+  private def letterIndex(word: Column): Column = {
+    val i = ascii(word) - 'a'.toInt
+    when(i.between(0, 25), i).otherwise(raise_error(
+      format_string("LetterSink: word '%s' does not start with a letter a-z", word)))
   }
 
   /** One word's ids as they arrive: unsorted, possibly repeated. */
-  private final class Ids {
+  private[operators] final class Ids {
     var buf = new Array[Int](4)
     var n = 0
     def add(id: Int): Unit = {
       if (n == buf.length) buf = java.util.Arrays.copyOf(buf, n * 2)
       buf(n) = id
       n += 1
+    }
+    def addAll(ids: Array[Int]): Unit = {
+      if (n + ids.length > buf.length) buf = java.util.Arrays.copyOf(buf, math.max(n * 2, n + ids.length))
+      System.arraycopy(ids, 0, buf, n, ids.length)
+      n += ids.length
     }
     /** Sorts and dedups in place; `n` becomes the doc_freq. */
     def settle(): Unit = {
@@ -99,44 +107,39 @@ object LetterSink {
     if (byFreq != 0) byFreq else a.getKey.compareTo(b.getKey)
   }
 
-  /** A task's (word, file_id) rows, each letter contiguous -> that task's
-    * letter files, one letter in memory at a time.
-    */
-  private def writeLetters(rows: Iterator[(String, Int)], outDir: String): Unit = {
+  /** One letter's (word, file_ids) rows -> that letter's file. */
+  private def writeLetter(rows: Iterator[(String, Array[Int])], outDir: String): Unit = if (rows.hasNext) {
     val attempt = Option(TaskContext.get()).map(_.taskAttemptId()).getOrElse(0L)
     val words = new java.util.HashMap[String, Ids]()
-    var letter = '\u0000'
-    def flush(): Unit = if (!words.isEmpty) {
-      val ranked = words.entrySet().toArray(new Array[java.util.Map.Entry[String, Ids]](0))
-      ranked.foreach(_.getValue.settle())
-      java.util.Arrays.sort(ranked, ranking)
-      val tmp = Paths.get(outDir, s".tmp-$letter-$attempt")
-      var out: BufferedWriter = Files.newBufferedWriter(tmp, StandardCharsets.UTF_8)
-      try {
-        ranked.foreach { e =>
-          val ids = e.getValue
-          out.write(e.getKey)
-          out.write(":[")
-          var i = 0
-          while (i < ids.n) {
-            if (i > 0) out.write(' ')
-            out.write(Integer.toString(ids.buf(i)))
-            i += 1
-          }
-          out.write("]\n")
-        }
-        out.close(); out = null
-        Files.move(tmp, Paths.get(outDir, s"$letter.txt"),
-          StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-      } finally if (out != null) { out.close(); Files.deleteIfExists(tmp) }
-      words.clear()
-    }
-    rows.foreach { case (word, id) =>
-      if (word.charAt(0) != letter) { flush(); letter = word.charAt(0) }
+    val buffered = rows.buffered
+    val letter = buffered.head._1.charAt(0)
+    buffered.foreach { case (word, fileIds) =>
+      require(word.charAt(0) == letter, s"letter task '$letter' got the word '$word'")
       var ids = words.get(word)
       if (ids == null) { ids = new Ids; words.put(word, ids) }
-      ids.add(id)
+      ids.addAll(fileIds)
     }
-    flush()
+    val ranked = words.entrySet().toArray(new Array[java.util.Map.Entry[String, Ids]](0))
+    ranked.foreach(_.getValue.settle())
+    java.util.Arrays.sort(ranked, ranking)
+    val tmp = Paths.get(outDir, s".tmp-$letter-$attempt")
+    var out: BufferedWriter = Files.newBufferedWriter(tmp, StandardCharsets.UTF_8)
+    try {
+      ranked.foreach { e =>
+        val ids = e.getValue
+        out.write(e.getKey)
+        out.write(":[")
+        var i = 0
+        while (i < ids.n) {
+          if (i > 0) out.write(' ')
+          out.write(Integer.toString(ids.buf(i)))
+          i += 1
+        }
+        out.write("]\n")
+      }
+      out.close(); out = null
+      Files.move(tmp, Paths.get(outDir, s"$letter.txt"),
+        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    } finally if (out != null) { out.close(); Files.deleteIfExists(tmp) }
   }
 }

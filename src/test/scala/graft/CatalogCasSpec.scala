@@ -3,10 +3,8 @@ package graft
 import java.nio.file.Files
 import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 
-import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 
 import graft.operators.VersionedLayout
 
@@ -21,11 +19,9 @@ import graft.operators.VersionedLayout
   * exercises exactly the file-system race two processes would hit (the
   * JVM lock is gone; nothing below the CAS is synchronized).
   */
-class CatalogCasSpec extends SparkSpec with BeforeAndAfterAll {
+class CatalogCasSpec extends SparkSpec {
 
-  private val root = Files.createTempDirectory("graft_cas_")
-
-  override def afterAll(): Unit = FileUtils.deleteDirectory(root.toFile)
+  private val root = tempDir("graft_cas_")
 
   private def freshDir(tag: String): String =
     Files.createTempDirectory(root, tag).toString

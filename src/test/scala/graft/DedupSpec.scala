@@ -228,7 +228,7 @@ class DedupSpec extends SparkSpec {
     val b2 = Seq(100L -> textA, 121L -> textC)
     def bands(rows: Seq[(Long, String)]) = Dedup.bandRows(
       Dedup.minhashSignatures(docsDF(rows), "doc_id", "text"), 1)
-    val dir = java.nio.file.Files.createTempDirectory("graft-lshstore").toString + "/index"
+    val dir = tempDir("graft-lshstore").toString + "/index"
 
     assert(LshIndexStore.init(spark, dir, bands(b0), cap, txn = 100L) == 0)
     val afterB0 = candidatePairs(LshIndexStore.pairs(spark, dir).select(col("doc_a"), col("doc_b")))
@@ -311,7 +311,7 @@ class DedupSpec extends SparkSpec {
     def rebuild(rows: Seq[(Long, String)]) = candidatePairs(Dedup.lshCandidates(
       Dedup.minhashSignatures(docsDF(rows), "doc_id", "text").localCheckpoint(), cap)
       .select(col("doc_a"), col("doc_b")))
-    val dir = java.nio.file.Files.createTempDirectory("graft-lshretract").toString + "/index"
+    val dir = tempDir("graft-lshretract").toString + "/index"
     LshIndexStore.init(spark, dir, bands(corpus), cap)
     def pairSet = candidatePairs(
       LshIndexStore.pairs(spark, dir).select(col("doc_a"), col("doc_b")))
@@ -387,7 +387,7 @@ class DedupSpec extends SparkSpec {
     def rebuild(rows: Seq[(Long, String)]) = candidatePairs(Dedup.lshCandidates(
       Dedup.minhashSignatures(docsDF(rows), "doc_id", "text").localCheckpoint(), cap)
       .select(col("doc_a"), col("doc_b")))
-    val dir = java.nio.file.Files.createTempDirectory("graft-lshreadmit").toString + "/index"
+    val dir = tempDir("graft-lshreadmit").toString + "/index"
     val spark0 = spark
     import spark0.implicits._
     def pairSet = candidatePairs(
@@ -439,7 +439,7 @@ class DedupSpec extends SparkSpec {
     val textB = "winter summer autumn spring morning evening midnight noon dusk dawn"
     def bands(rows: Seq[(Long, String)]) = Dedup.bandRows(
       Dedup.minhashSignatures(docsDF(rows), "doc_id", "text"), 1)
-    val dir = java.nio.file.Files.createTempDirectory("graft-lshaudit").toString + "/index"
+    val dir = tempDir("graft-lshaudit").toString + "/index"
     LshIndexStore.init(spark, dir, bands((1L to 3L).map(_ -> textA)), cap)
     LshIndexStore.admit(spark, dir, bands(Seq(11L -> textB, 12L -> textB)), cap)
     LshIndexStore.admit(spark, dir, bands(Seq(13L -> textB)), cap)
@@ -552,7 +552,7 @@ class DedupSpec extends SparkSpec {
     val corpus = (1L to 5L).map(_ -> textA) ++ (11L to 13L).map(_ -> textB)
     def bands(rows: Seq[(Long, String)]) = Dedup.bandRows(
       Dedup.minhashSignatures(docsDF(rows), "doc_id", "text"), 1)
-    val root = java.nio.file.Files.createTempDirectory("graft-retractbands").toString
+    val root = tempDir("graft-retractbands").toString
     val (byIds, byBands) = (s"$root/a", s"$root/b")
     LshIndexStore.init(spark, byIds, bands(corpus), cap)
     LshIndexStore.init(spark, byBands, bands(corpus), cap)
@@ -583,7 +583,7 @@ class DedupSpec extends SparkSpec {
     val textB = "winter summer autumn spring morning evening midnight noon dusk dawn"
     def bands(rows: Seq[(Long, String)]) = Dedup.bandRows(
       Dedup.minhashSignatures(docsDF(rows), "doc_id", "text"), 1)
-    val dir = java.nio.file.Files.createTempDirectory("graft-lshempty").toString + "/index"
+    val dir = tempDir("graft-lshempty").toString + "/index"
     LshIndexStore.init(spark, dir, bands((11L to 13L).map(_ -> textB)), cap)
     val spark0 = spark
     import spark0.implicits._

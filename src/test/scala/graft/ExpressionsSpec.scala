@@ -84,16 +84,23 @@ class ExpressionsSpec extends SparkSpec {
     got.foreach(r => assert(r.getDouble(0) == r.getDouble(1), r.toString))
   }
 
-  test("NormalizedTokens == declarative split/normalize pipeline and the reference Scala port") {
-    val spark0 = spark
-    import spark0.implicits._
+  /** Tokenizer inputs: letters, digits, every separator, punctuation and
+    * non-ASCII characters, plus hand-picked edge cases.
+    */
+  private def tokenizerInputs(): Seq[String] = {
     val gen = Gen.listOf(Gen.frequency(
       6 -> Gen.alphaChar, 2 -> Gen.numChar,
       3 -> Gen.oneOf(' ', '\t', '\n', '\u000B', '\f', '\r'),
       2 -> Gen.oneOf('\'', '.', '-', '\u00FC', '\u00E9', '\u00A0'))).map(_.mkString)
-    val inputs = Gen.listOfN(300, gen).sample.get ++ Seq(
+    Gen.listOfN(300, gen).sample.get ++ Seq(
       "", " ", "  a  B  ", "don't STOP", "a-b c", "123", "..", "𝄞x𝄞 y",
-      "tab\tsep", "nl\nsep", "\u000B\f\r mixed\u00A0nbsp")
+      "tab\tsep", "nl\nsep", "\u000B\f\r mixed\u00A0nbsp", "Ab" * 40)
+  }
+
+  test("NormalizedTokens == declarative split/normalize pipeline and the reference Scala port") {
+    val spark0 = spark
+    import spark0.implicits._
+    val inputs = tokenizerInputs()
     val df = inputs.toDF("s")
     val got = df.select(
       graft.functions.text.normalizedTokens(col("s")).as("fast"),
@@ -119,5 +126,18 @@ class ExpressionsSpec extends SparkSpec {
       .collect()
     assert(got(0).getSeq[String](0) == Seq("ab" * 100, "ab" * 100))
     assert(got(1).isNullAt(0))
+  }
+
+  test("NormalizedTokens.scan hands out the tokens of the normalized_tokens array") {
+    val spark0 = spark
+    import spark0.implicits._
+    val inputs = tokenizerInputs()
+    val arrays = inputs.toDF("s").select(graft.functions.text.normalizedTokens(col("s"))).as[Seq[String]].collect()
+    inputs.zip(arrays).foreach { case (in, array) =>
+      val scanned = Seq.newBuilder[String]
+      graft.expressions.NormalizedTokens.scan(in.getBytes(java.nio.charset.StandardCharsets.UTF_8),
+        (buf, len) => scanned += new String(buf, 0, len, java.nio.charset.StandardCharsets.US_ASCII))
+      assert(scanned.result() == array, s"input ${in.map(_.toInt.toHexString)}")
+    }
   }
 }

@@ -17,7 +17,7 @@ class GenChainSpec extends SparkSpec {
     * plain (vec_id, cid) rows.
     */
   private def freshStore(tag: String): String = {
-    val dir = java.nio.file.Files.createTempDirectory(s"graft-genchain-$tag")
+    val dir = tempDir(s"graft-genchain-$tag")
       .toString + "/store"
     val s0 = spark
     import s0.implicits._

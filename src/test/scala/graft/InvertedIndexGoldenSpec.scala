@@ -7,10 +7,16 @@ import graft.operators.ReferenceJob
 
 /** Golden-output parity with the reference checker
   * (reference: tema1a/checker/checker.sh:22-41 — per-letter `diff -w`).
+  * The tests need the reference tree; where it is absent they are
+  * canceled, and ReferenceJobSpec's model checks, among them a paper-size
+  * corpus, carry reference parity.
   */
 class InvertedIndexGoldenSpec extends SparkSpec {
 
   private val checker = Paths.get("/root/reference/tema1a/checker")
+
+  private def assumeReference(): Unit =
+    assume(Files.isDirectory(checker), s"reference checker tree $checker is absent")
 
   private def writeManifest(dir: Path, files: Seq[Path]): Path = {
     val manifest = dir.resolve("manifest.txt")
@@ -32,7 +38,8 @@ class InvertedIndexGoldenSpec extends SparkSpec {
     content.linesIterator.map(_.trim.replaceAll("\\s+", " ")).filter(_.nonEmpty).toSeq
 
   test("test_in_small matches golden output byte-for-byte, empty letters included") {
-    val out = Files.createTempDirectory("graft-golden-small")
+    assumeReference()
+    val out = tempDir("graft-golden-small")
     val manifest = writeManifest(
       out,
       (1 to 3).map(i => checker.resolve(s"test_in_small/file$i.txt")))
@@ -47,7 +54,8 @@ class InvertedIndexGoldenSpec extends SparkSpec {
   }
 
   test("full 355-file corpus matches golden output (diff -w equivalence)") {
-    val out = Files.createTempDirectory("graft-golden-full")
+    assumeReference()
+    val out = tempDir("graft-golden-full")
     // The checked-in manifest uses paths relative to the checker dir, which
     // ManifestSource resolves against the manifest's own directory — but the
     // reference tree is read-only, so rebuild the manifest with absolute
@@ -69,10 +77,11 @@ class InvertedIndexGoldenSpec extends SparkSpec {
   }
 
   test("re-running the sink over existing output leaves byte-identical files and no temp litter") {
+    assumeReference()
     // The atomic-rename commit must make retries idempotent: a second
     // complete write (a retried/speculative task in miniature) swaps in
     // an identical file rather than interleaving with the first.
-    val out = Files.createTempDirectory("graft-rewrite")
+    val out = tempDir("graft-rewrite")
     val manifest = writeManifest(
       out,
       (1 to 3).map(i => checker.resolve(s"test_in_small/file$i.txt")))
@@ -86,13 +95,14 @@ class InvertedIndexGoldenSpec extends SparkSpec {
   }
 
   test("output is invariant under shuffle-partition count (reference M/R invariance)") {
+    assumeReference()
     // Mirrors checker.sh:141-246: all parallelism configs must agree.
-    val manifestDir = Files.createTempDirectory("graft-invariance")
+    val manifestDir = tempDir("graft-invariance")
     val manifest = writeManifest(
       manifestDir,
       (1 to 3).map(i => checker.resolve(s"test_in_small/file$i.txt")))
     val results = Seq(1, 2, 7).map { parts =>
-      val out = Files.createTempDirectory(s"graft-inv-$parts")
+      val out = tempDir(s"graft-inv-$parts")
       val prev = spark.conf.get("spark.sql.shuffle.partitions")
       try {
         spark.conf.set("spark.sql.shuffle.partitions", parts.toString)

@@ -6,26 +6,19 @@ import java.nio.file.{Files, Path}
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicLong
 
-import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.array.ByteArrayMethods
-import org.scalatest.BeforeAndAfterAll
 
 import graft.sources.ManifestSource
 
 /** `ManifestSource`: driver-side checks of manifest entries, the line split
   * against Spark's text scan, and task input metrics for the files it reads.
   */
-class ManifestSourceSpec extends SparkSpec with BeforeAndAfterAll {
+class ManifestSourceSpec extends SparkSpec {
 
-  private val root = Files.createTempDirectory("graft-manifest")
-
-  override def afterAll(): Unit = {
-    val walk = Files.walk(root)
-    try walk.iterator().asScala.toSeq.reverse.foreach(Files.delete) finally walk.close()
-  }
+  private val root = tempDir("graft-manifest")
 
   private def manifest(name: String, entries: Seq[String]): Path =
     Files.write(root.resolve(name),

@@ -43,7 +43,7 @@ class PipelineTxnSpec extends SparkSpec {
     * layout v0, LSH index g0, embeddings layout v0, IVF index g0.
     */
   private def freshPipeline(tag: String): PipelineStores = {
-    val root = java.nio.file.Files.createTempDirectory(s"graft-pipetxn-$tag").toString
+    val root = tempDir(s"graft-pipetxn-$tag").toString
     val p = PipelineStores(s"$root/docs", s"$root/lsh", s"$root/emb", s"$root/ivf",
       s"$root/meta")
     val s0 = spark
@@ -177,8 +177,8 @@ class PipelineTxnSpec extends SparkSpec {
         (((i % 2) + 1).toInt, i, docText(i), e)
       }.toDF("pid", "id", "text", "embedding")
 
-    val in = java.nio.file.Files.createTempDirectory("graft-pipe-in")
-    val chk = java.nio.file.Files.createTempDirectory("graft-pipe-chk")
+    val in = tempDir("graft-pipe-in")
+    val chk = tempDir("graft-pipe-chk")
     val sink: (DataFrame, Long) => Unit = (b, id) => {
       // The micro-batch id IS the pipeline transaction id — ONE
       // coordinated exactly-once commit across all four stores per
@@ -198,7 +198,7 @@ class PipelineTxnSpec extends SparkSpec {
       try q.processAllAvailable() finally q.stop()
     }
     def stage(name: String, ids: Seq[Long]): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-pipe-stage")
+      val tmp = tempDir("graft-pipe-stage")
       jointRows(ids).repartition(1).write.mode("overwrite").parquet(tmp.toString)
       val part = java.nio.file.Files.list(tmp).filter(_.toString.endsWith(".parquet"))
         .findFirst().get()
@@ -587,15 +587,15 @@ class PipelineTxnSpec extends SparkSpec {
     val erased = ops.filter(_._1 == "erase").flatMap(_._2).toSet
     val survivors = ((1L to 48L).toSet -- erased).toSeq.sorted
 
-    val in = java.nio.file.Files.createTempDirectory("graft-soak-in")
-    val chk = java.nio.file.Files.createTempDirectory("graft-soak-chk")
+    val in = tempDir("graft-soak-in")
+    val chk = tempDir("graft-soak-chk")
     def rows(op: String, ids: Seq[Long]): DataFrame = ids.map { i =>
       val e = if (i % 2 == 0) Array(1.0, 0.001 * i) else Array(0.001 * i, 1.0)
       (((i % 2) + 1).toInt, i, docText(i), e, op)
     }.toDF("pid", "id", "text", "embedding", "op")
     def stage(k: Int): Unit = {
       val (op, ids) = ops(k)
-      val tmp = java.nio.file.Files.createTempDirectory("graft-soak-stage")
+      val tmp = tempDir("graft-soak-stage")
       rows(op, ids).repartition(1).write.mode("overwrite").parquet(tmp.toString)
       val part = java.nio.file.Files.list(tmp).filter(_.toString.endsWith(".parquet"))
         .findFirst().get()

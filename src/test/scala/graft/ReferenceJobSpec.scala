@@ -7,14 +7,17 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import scala.util.Random
 
-import org.apache.spark.sql.execution.{QueryExecution, SortExec, SortPrefixUtils, SparkPlan}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.Encoders
+import org.apache.spark.sql.catalyst.plans.physical.ShufflePartitionIdPassThrough
+import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.functions.{col, lit, spark_partition_id}
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalacheck.{Gen, Prop, Test}
 import org.scalacheck.Prop.propBoolean
 import org.scalacheck.rng.Seed
-import org.scalatest.BeforeAndAfterAll
 
 import graft.functions.text
 import graft.operators.{InvertedIndex, LetterSink, ReferenceJob}
@@ -35,14 +38,9 @@ import graft.sources.ManifestSource
   *   - each letter file lists its words by doc_freq desc, then word asc,
   *     one `word:[id id ...]` line each; absent letters give empty files.
   */
-class ReferenceJobSpec extends SparkSpec with BeforeAndAfterAll with AdaptiveSparkPlanHelper {
+class ReferenceJobSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
-  private val root = Files.createTempDirectory("graft-refjob")
-
-  override def afterAll(): Unit = {
-    val walk = Files.walk(root)
-    try walk.iterator().asScala.toSeq.reverse.foreach(Files.delete) finally walk.close()
-  }
+  private val root = tempDir("graft-refjob")
 
   private object Model {
     def words(bytes: Array[Byte]): Iterator[String] =
@@ -88,12 +86,23 @@ class ReferenceJobSpec extends SparkSpec with BeforeAndAfterAll with AdaptiveSpa
   private def utf8(s: String): Array[Byte] = s.getBytes(StandardCharsets.UTF_8)
 
   /** Runs the job into a fresh directory and returns its files, all 26
-    * letter files present and nothing else.
+    * letter files present and nothing else. `mapTasks` 0 runs
+    * `ReferenceJob.run`; otherwise the files of [[ManifestSource.files]],
+    * in manifest order, are cut into `mapTasks` contiguous slices (some
+    * empty when there are more slices than files) and fed to the job's
+    * mapper, one map task per slice.
     */
-  private def run(manifest: Path): IndexedSeq[String] = {
+  private def run(manifest: Path, mapTasks: Int = 0): IndexedSeq[String] = {
     dirs += 1
     val out = root.resolve(s"out-$dirs")
-    ReferenceJob.run(spark, manifest.toString, out.toString)
+    if (mapTasks > 0) {
+      val files = ManifestSource.files(spark, ManifestSource.read(manifest.toString))
+        .select(col("file_id"), col("text").cast("binary"))
+        .collect().map(r => (r.getInt(0), r.getAs[Array[Byte]](1)))
+      val slices = spark.createDataset(spark.sparkContext.parallelize(files.toSeq, mapTasks))(
+        Encoders.tuple(Encoders.scalaInt, Encoders.BINARY)).toDF("file_id", "text")
+      LetterSink.write(ReferenceJob.mapper(slices), out.toString)
+    } else ReferenceJob.run(spark, manifest.toString, out.toString)
     read(out)
   }
 
@@ -104,9 +113,10 @@ class ReferenceJobSpec extends SparkSpec with BeforeAndAfterAll with AdaptiveSpa
     ('a' to 'z').map(c => new String(Files.readAllBytes(out.resolve(s"$c.txt")), StandardCharsets.UTF_8))
   }
 
-  private def assertMatchesModel(files: Map[String, Array[Byte]], order: Seq[String]): IndexedSeq[String] = {
+  private def assertMatchesModel(files: Map[String, Array[Byte]], order: Seq[String],
+      mapTasks: Int = 0): IndexedSeq[String] = {
     val (manifest, docs) = corpus(files, order)
-    val got = run(manifest)
+    val got = run(manifest, mapTasks)
     val want = Model.letterFiles(docs)
     ('a' to 'z').zipWithIndex.foreach { case (c, i) => assert(got(i) == want(i), s"$c.txt") }
     got
@@ -216,10 +226,49 @@ class ReferenceJobSpec extends SparkSpec with BeforeAndAfterAll with AdaptiveSpa
     assert(read(out) == Model.letterFiles(docs))
   }
 
-  test("writePostings folds unordered, repeated pairs of every letter into the model's files") {
+  test("the combiner keeps both ids of a path listed twice in one map slice") {
+    val got = assertMatchesModel(
+      Map("x.txt" -> utf8("apple apple banana Apple"), "y.txt" -> utf8("apple cherry apple")),
+      Seq("x.txt", "y.txt", "x.txt"), mapTasks = 1)
+    assert(got(0) == "apple:[1 2 3]\n")
+    assert(got(1) == "banana:[1 3]\n")
+    assert(got(2) == "cherry:[2]\n")
+  }
+
+  test("a word spread over several map slices merges its ids; surplus slices stay empty") {
+    val files = (1 to 5).map(i => s"f$i.txt" -> utf8(s"shared only$i ${"zz " * i}shared")).toMap
+    val order = files.keys.toSeq.sorted
+    Seq(2, 5, 7, 12).foreach { mapTasks =>
+      val got = assertMatchesModel(files, order, mapTasks)
+      assert(got(18) == "shared:[1 2 3 4 5]\n", s"$mapTasks map tasks")
+      assert(got(25) == "zz:[1 2 3 4 5]\n", s"$mapTasks map tasks")
+    }
+  }
+
+  test("the combiner drops non-ASCII and invalid UTF-8 bytes glued to letters") {
+    val glued = Array[Byte]('a', 0xff.toByte, 'b', ' ', 0xc3.toByte, 'a', 'b', '\n', 'a', 'b', 0xc3.toByte,
+      ' ', 0xe2.toByte, 0x80.toByte, 0x99.toByte, 'Z', 'o', 0x80.toByte, 'o', ' ', 0xc0.toByte)
+    val files = Map("1.txt" -> glued, "2.txt" -> utf8("ab zoo café cafe"), "3.txt" -> utf8("é—ab ’zoo’ caf"))
+    val order = Seq("1.txt", "2.txt", "3.txt")
+    Seq(1, 2, 3).foreach { mapTasks =>
+      val got = assertMatchesModel(files, order, mapTasks)
+      assert(got(0) == "ab:[1 2 3]\n")
+      assert(got(2) == "caf:[2 3]\ncafe:[2]\n")
+      assert(got(25) == "zoo:[1 2 3]\n")
+    }
+  }
+
+  test("output is invariant under the number of map slices (1, 2, 7)") {
+    val files = randomCorpus(17L)
+    val order = files.keys.toSeq.sorted ++ Seq("f5.txt", "f9.txt", "f5.txt")
+    val results = Seq(1, 2, 7).map(mapTasks => assertMatchesModel(files, order, mapTasks))
+    assert(results.distinct.size == 1)
+  }
+
+  test("write merges unordered, repeated id lists of every letter as the model") {
     val rnd = new Random(3L)
     // Every letter; 'q' holds one word. Each word's ids arrive in
-    // descending order with some repeated, over several map slices.
+    // descending order with some repeated, split over several rows.
     val words = ('a' to 'z').flatMap { c =>
       if (c == 'q') Seq("quay")
       else Seq.fill(1 + rnd.nextInt(6))(c.toString + Seq.fill(rnd.nextInt(5))(('a' + rnd.nextInt(26)).toChar).mkString)
@@ -228,46 +277,70 @@ class ReferenceJobSpec extends SparkSpec with BeforeAndAfterAll with AdaptiveSpa
       val ids = Seq.fill(1 + rnd.nextInt(8))(1 + rnd.nextInt(40))
       (ids ++ ids.take(2)).map((_, w))
     }.sortBy(-_._1)
-    val out = root.resolve("postings-direct")
-    LetterSink.writePostings(spark.createDataFrame(pairs).toDF("file_id", "word"), out.toString)
+    val rows = pairs.groupBy(_._2).toSeq.flatMap { case (w, ps) =>
+      ps.map(_._1).grouped(3).map(ids => (w, ids.toArray))
+    }
+    val out = root.resolve("lists-direct")
+    LetterSink.write(spark.createDataFrame(rows).toDF("word", "file_ids"), out.toString)
     val want = Model.render(Model.postings(pairs.iterator))
     assert(want(16) == "quay:[" + pairs.filter(_._2 == "quay").map(_._1).distinct.sorted.mkString(" ") + "]\n")
     assert(read(out) == want)
   }
 
-  test("write(index) and writePostings give identical files") {
+  test("write(index) and ReferenceJob.run give identical files") {
     val (manifest, docs) = corpus(randomCorpus(13L), (1 to 24).map(i => s"f$i.txt"))
     val words = InvertedIndex.words(
       ManifestSource.lines(spark, ManifestSource.read(manifest.toString)), "file_id", "line")
     val viaIndex = root.resolve("via-index")
-    val viaPairs = root.resolve("via-pairs")
+    val viaJob = root.resolve("via-job")
     LetterSink.write(InvertedIndex.index(words), viaIndex.toString)
-    LetterSink.writePostings(words, viaPairs.toString)
+    ReferenceJob.run(spark, manifest.toString, viaJob.toString)
     assert(('a' to 'z').forall { c =>
-      java.util.Arrays.equals(Files.readAllBytes(viaIndex.resolve(s"$c.txt")), Files.readAllBytes(viaPairs.resolve(s"$c.txt")))
+      java.util.Arrays.equals(Files.readAllBytes(viaIndex.resolve(s"$c.txt")), Files.readAllBytes(viaJob.resolve(s"$c.txt")))
     })
-    assert(read(viaPairs) == Model.letterFiles(docs))
+    assert(read(viaJob) == Model.letterFiles(docs))
   }
 
-  test("the sink plans one exchange and one sort, on a single key Spark radix-sorts") {
+  test("a word not starting with a-z fails the sink by name and reaches no file") {
+    // Why the guard: Spark takes a pass-through partition id modulo the
+    // partition count, so an unguarded id -32 ('A' - 'a') would land in
+    // partition 20, u's task.
+    val wrapped = spark.range(1).select(lit(-32).as("p")).repartitionById(26, col("p"))
+      .select(spark_partition_id()).head().getInt(0)
+    assert(wrapped == 20)
+    Seq("Apple", "ébène", "1st", "", "-x").zipWithIndex.foreach { case (bad, i) =>
+      val out = root.resolve(s"bad-$i")
+      val rows = Seq(("apple", Array(1)), (bad, Array(2)), ("umbra", Array(3)))
+      val e = intercept[Exception](
+        LetterSink.write(spark.createDataFrame(rows).toDF("word", "file_ids"), out.toString))
+      val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString("\n")
+      assert(messages.contains(s"word '$bad' does not start with a letter a-z"), messages)
+      assert(('a' to 'z').forall(c => Files.size(out.resolve(s"$c.txt")) == 0), s"'$bad' wrote a letter file")
+    }
+  }
+
+  test("the sink plans one exchange of 26 pass-through partitions and no sort") {
     val plans = new java.util.concurrent.LinkedBlockingQueue[SparkPlan]()
     val listener = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
         plans.add(qe.executedPlan)
       override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
     }
+    val (manifest, _) = corpus(randomCorpus(19L), (1 to 24).map(i => s"f$i.txt"))
     spark.listenerManager.register(listener)
     val plan =
       try {
-        LetterSink.writePostings(spark.createDataFrame(Seq((2, "beta"), (1, "alpha"))).toDF("file_id", "word"),
-          root.resolve("plan").toString)
+        ReferenceJob.run(spark, manifest.toString, root.resolve("plan").toString)
         plans.poll(60, java.util.concurrent.TimeUnit.SECONDS)
       } finally spark.listenerManager.unregister(listener)
     assert(plan != null, "no plan reported")
-    assert(collect(plan) { case e: ShuffleExchangeLike => e }.size == 1, plan)
-    val sorts = collect(plan) { case s: SortExec => s }
-    assert(sorts.size == 1, plan)
-    assert(sorts.head.sortOrder.size == 1 && SortPrefixUtils.canSortFullyWithPrefix(sorts.head.sortOrder.head), plan)
+    val exchanges = collect(plan) { case e: ShuffleExchangeLike => e }
+    assert(exchanges.size == 1, plan)
+    assert(exchanges.head.outputPartitioning match {
+      case p: ShufflePartitionIdPassThrough => p.numPartitions == 26
+      case _ => false
+    }, plan)
+    assert(collect(plan) { case s: SortExec => s }.isEmpty, plan)
   }
 
   /** A corpus shaped like the paper's input: 355 files of log-normal
@@ -319,16 +392,42 @@ class ReferenceJobSpec extends SparkSpec with BeforeAndAfterAll with AdaptiveSpa
     }
   }
 
+  /** Runs `body` and returns, with its result, the shuffle records each of
+    * its reduce tasks read, by task index.
+    */
+  private def reduceTaskRecords[T](body: => T): (T, Seq[Long]) = {
+    val reduceStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val records = new java.util.concurrent.ConcurrentSkipListMap[Int, Long]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        e.stageInfos.filter(_.parentIds.nonEmpty).foreach(s => reduceStages.add(s.stageId))
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (reduceStages.contains(e.stageId) && e.taskMetrics != null)
+          records.put(e.taskInfo.index, e.taskMetrics.shuffleReadMetrics.recordsRead)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val result = body
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (records.size < 26 && System.nanoTime() < deadline) Thread.sleep(20)
+      (result, records.values.asScala.toSeq)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("a paper-size corpus (355 files, 1.04 M tokens) matches the model byte for byte") {
     val docs = paperCorpus(11L)
     val names = docs.indices.map(i => f"f$i%03d.txt")
     val (manifest, _) = corpus(names.zip(docs).toMap, names)
     val out = root.resolve("paper")
-    val t0 = System.nanoTime()
-    ReferenceJob.run(spark, manifest.toString, out.toString)
-    val ms = (System.nanoTime() - t0) / 1e6
+    val (ms, reduceRecords) = reduceTaskRecords {
+      val t0 = System.nanoTime()
+      ReferenceJob.run(spark, manifest.toString, out.toString)
+      (System.nanoTime() - t0) / 1e6
+    }
     val want = Model.letterFiles(docs)
     assert(read(out) == want)
+    assert(reduceRecords.size == 26 && reduceRecords.forall(_ > 0),
+      s"shuffle records read per reduce task: $reduceRecords")
     info(f"${docs.length} files, ${docs.map(_.length.toLong).sum} bytes, " +
       f"${want.map(_.count(_ == '\n')).sum} words: ReferenceJob.run took $ms%.0f ms")
   }

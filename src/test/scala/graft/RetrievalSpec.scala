@@ -52,8 +52,7 @@ class RetrievalSpec extends SparkSpec {
     val docs = Tables.documents(spark, sf0001)
     def side(pred: org.apache.spark.sql.Column) = InvertedIndex
       .index(InvertedIndex.words(docs.where(pred), "doc_id", "text"))
-    val store = java.nio.file.Files
-      .createTempDirectory("graft-index-store").toString + "/store"
+    val store = tempDir("graft-index-store").toString + "/store"
     IndexStore.init(side(col("doc_id") % 10 =!= 0 && col("doc_id") % 10 =!= 7), store)
     IndexStore.appendDelta(side(col("doc_id") % 10 === 0), store)
     IndexStore.appendDelta(side(col("doc_id") % 10 === 7), store)
@@ -90,8 +89,7 @@ class RetrievalSpec extends SparkSpec {
     val docs = Tables.documents(spark, sf0001)
     def side(pred: org.apache.spark.sql.Column) = InvertedIndex
       .index(InvertedIndex.words(docs.where(pred), "doc_id", "text"))
-    val store = java.nio.file.Files
-      .createTempDirectory("graft-index-audit").toString + "/store"
+    val store = tempDir("graft-index-audit").toString + "/store"
     IndexStore.init(side(col("doc_id") % 10 =!= 0 && col("doc_id") % 10 =!= 7), store)
     IndexStore.appendDelta(side(col("doc_id") % 10 === 0), store)
     IndexStore.appendDelta(side(col("doc_id") % 10 === 7), store)
@@ -132,8 +130,7 @@ class RetrievalSpec extends SparkSpec {
     val docs = Tables.documents(spark, sf0001)
     def side(pred: org.apache.spark.sql.Column) = InvertedIndex
       .index(InvertedIndex.words(docs.where(pred), "doc_id", "text"))
-    val store = java.nio.file.Files
-      .createTempDirectory("graft-index-tt").toString + "/store"
+    val store = tempDir("graft-index-tt").toString + "/store"
     IndexStore.init(side(col("doc_id") % 10 =!= 0 && col("doc_id") % 10 =!= 7), store)
     IndexStore.appendDelta(side(col("doc_id") % 10 === 0), store)
     IndexStore.appendDelta(side(col("doc_id") % 10 === 7), store)
@@ -168,8 +165,7 @@ class RetrievalSpec extends SparkSpec {
     val docs = Tables.documents(spark, sf0001)
     def side(pred: org.apache.spark.sql.Column) = InvertedIndex
       .index(InvertedIndex.words(docs.where(pred), "doc_id", "text"))
-    val store = java.nio.file.Files
-      .createTempDirectory("graft-index-crash").toString + "/store"
+    val store = tempDir("graft-index-crash").toString + "/store"
     IndexStore.init(side(col("doc_id") % 10 =!= 0 && col("doc_id") % 10 =!= 7), store)
     IndexStore.appendDelta(side(col("doc_id") % 10 === 0), store)
     IndexStore.appendDelta(side(col("doc_id") % 10 === 7), store)
@@ -207,8 +203,7 @@ class RetrievalSpec extends SparkSpec {
     val docs = Tables.documents(spark, sf0001)
     def side(pred: org.apache.spark.sql.Column) = InvertedIndex
       .index(InvertedIndex.words(docs.where(pred), "doc_id", "text"))
-    val store = java.nio.file.Files
-      .createTempDirectory("graft-index-race").toString + "/store"
+    val store = tempDir("graft-index-race").toString + "/store"
     IndexStore.init(side(col("doc_id") % 10 =!= 0 && col("doc_id") % 10 =!= 7), store)
     val pool = Executors.newFixedThreadPool(2)
     val gate = new CountDownLatch(1)

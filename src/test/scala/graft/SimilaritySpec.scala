@@ -178,7 +178,7 @@ class SimilaritySpec extends SparkSpec {
     import graft.operators.{GenChain, IvfIndexStore}
     import graft.functions.vectors
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfpolicy").toString + "/store"
+    val dir = tempDir("graft-ivfpolicy").toString + "/store"
     val e = Tables.embeddings(spark, sf0001)
       .select(col("vec_id"), col("embedding"), vectors.norm(col("embedding")).as("nrm"))
       .localCheckpoint()
@@ -219,7 +219,7 @@ class SimilaritySpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     val spark0 = spark
     import spark0.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfempty").toString + "/store"
+    val dir = tempDir("graft-ivfempty").toString + "/store"
     def vecs(rows: Seq[(Long, Seq[Double])]) = rows.toDF("vec_id", "embedding")
       .select(col("vec_id"), col("embedding"), vectors.norm(col("embedding")).as("nrm"))
     val cent = vecs(Seq(0L -> Seq(1.0, 0.0), 1L -> Seq(0.0, 1.0)))
@@ -292,7 +292,7 @@ class SimilaritySpec extends SparkSpec {
     import graft.functions.vectors
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.DataFrame
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfstore").toString + "/store"
+    val dir = tempDir("graft-ivfstore").toString + "/store"
     val e = Tables.embeddings(spark, sf0001)
       .select(col("vec_id"), col("embedding"), vectors.norm(col("embedding")).as("nrm"))
       .localCheckpoint()

@@ -43,7 +43,7 @@ class SnapshotCacheSpec extends SparkSpec {
 
   test("layout: every mutation verb invalidates the cached as-of/feed plans") {
     val s = spark
-    val dir = java.nio.file.Files.createTempDirectory("graft-cachespec").toString + "/t"
+    val dir = tempDir("graft-cachespec").toString + "/t"
     def rows(ids: Seq[Long]) = {
       val s0 = s; import s0.implicits._
       ids.map(i => (((i % 4) + 1).toInt, i, i * 10)).toDF("pid", "k", "v")
@@ -82,7 +82,7 @@ class SnapshotCacheSpec extends SparkSpec {
 
   test("LSH chain: admit, retract, compact each invalidate the cached chain read") {
     val s = spark
-    val dir = java.nio.file.Files.createTempDirectory("graft-cachespec-lsh").toString + "/idx"
+    val dir = tempDir("graft-cachespec-lsh").toString + "/idx"
     val s0 = s; import s0.implicits._
     def docs(rows: Seq[(Long, String)]) = rows.toDF("doc_id", "text")
     def bands(rows: Seq[(Long, String)]) =
@@ -105,7 +105,7 @@ class SnapshotCacheSpec extends SparkSpec {
 
   test("IVF chain: admit, retract, compact each invalidate the cached postings read") {
     val s = spark
-    val dir = java.nio.file.Files.createTempDirectory("graft-cachespec-ivf").toString + "/idx"
+    val dir = tempDir("graft-cachespec-ivf").toString + "/idx"
     val s0 = s; import s0.implicits._
     def proj(rows: Seq[Long]) = rows.map(i => (i, Seq(i.toDouble, 1.0)))
       .toDF("vec_id", "embedding")

@@ -13,7 +13,7 @@ class SourcesSinksSpec extends SparkSpec {
   private def nation = Tables.nation(spark, sf0001)
 
   test("CSV round-trip preserves rows (header + explicit schema)") {
-    val dir = Files.createTempDirectory("graft-csv").toString
+    val dir = tempDir("graft-csv").toString
     nation.write.mode("overwrite").option("header", "true").csv(dir)
     val back = spark.read.option("header", "true").schema(nation.schema).csv(dir)
     assert(back.collect().map(_.toString).sorted.toSeq ==
@@ -21,7 +21,7 @@ class SourcesSinksSpec extends SparkSpec {
   }
 
   test("JSON round-trip preserves rows") {
-    val dir = Files.createTempDirectory("graft-json").toString
+    val dir = tempDir("graft-json").toString
     nation.write.mode("overwrite").json(dir)
     val back = spark.read.schema(nation.schema).json(dir)
     assert(back.collect().map(_.toString).sorted.toSeq ==
@@ -29,7 +29,7 @@ class SourcesSinksSpec extends SparkSpec {
   }
 
   test("ORC round-trip preserves rows") {
-    val dir = Files.createTempDirectory("graft-orc").toString
+    val dir = tempDir("graft-orc").toString
     nation.write.mode("overwrite").orc(dir)
     val back = spark.read.orc(dir)
     assert(back.collect().map(_.toString).sorted.toSeq ==
@@ -37,7 +37,7 @@ class SourcesSinksSpec extends SparkSpec {
   }
 
   test("partitioned parquet write lays out one directory per key (letter-sink generalization)") {
-    val dir = Files.createTempDirectory("graft-partwrite")
+    val dir = tempDir("graft-partwrite")
     val idx = graft.operators.InvertedIndex.fromLines(
       Tables.documents(spark, sf0001), "doc_id", "text")
     idx.write.mode("overwrite").partitionBy("letter").parquet(dir.toString)

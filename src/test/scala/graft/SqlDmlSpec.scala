@@ -15,7 +15,7 @@ import graft.operators.VersionedLayout
 class SqlDmlSpec extends SparkSpec {
 
   private def freshDir(tag: String): String =
-    Files.createTempDirectory(s"graft-sqldml-$tag").resolve("t").toString
+    tempDir(s"graft-sqldml-$tag").resolve("t").toString
 
   private def baseDf: DataFrame =
     spark.range(0, 100).select(col("id").as("k"), (col("id") % 10).as("v"),

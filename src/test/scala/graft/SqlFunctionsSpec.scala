@@ -23,7 +23,7 @@ class SqlFunctionsSpec extends SparkSpec {
     import graft.operators.VersionedLayout
     val spark0 = spark
     import spark0.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-sql-tvf").toString + "/t"
+    val dir = tempDir("graft-sql-tvf").toString + "/t"
     def shaped(ids: Seq[Long]) = ids.map(i => (i, i)).toDF("event_id", "value_centi")
       .select((col("value_centi") / 10).cast("int").as("pid"),
         col("event_id"), col("value_centi"))

@@ -2,10 +2,8 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 
 import graft.operators.VersionedLayout
 
@@ -15,11 +13,9 @@ import graft.operators.VersionedLayout
   * q219/q224 discipline: a table maintained from SQL text must be
   * indistinguishable from one maintained through the API.
   */
-class SqlMaintenanceSpec extends SparkSpec with BeforeAndAfterAll {
+class SqlMaintenanceSpec extends SparkSpec {
 
-  private val root = Files.createTempDirectory("graft_sqlmaint_")
-
-  override def afterAll(): Unit = FileUtils.deleteDirectory(root.toFile)
+  private val root = tempDir("graft_sqlmaint_")
 
   private def freshDir(tag: String): String =
     Files.createTempDirectory(root, tag).toString + "/layout"

@@ -43,7 +43,7 @@ class StorageSpec extends SparkSpec {
       .withColumn("tq", expr(s"((ts - $t0) * 255) div ${math.max(t1 - t0, 1L)}"))
     // Per-file normalized [0,1] spread of each quantized dimension.
     def spreads(df: org.apache.spark.sql.DataFrame): Seq[(Double, Double)] = {
-      val dir = Files.createTempDirectory("graft-zorder").toString
+      val dir = tempDir("graft-zorder").toString
       df.write.mode("overwrite").parquet(dir)
       spark.read.parquet(dir)
         .groupBy(input_file_name())
@@ -69,7 +69,7 @@ class StorageSpec extends SparkSpec {
   }
 
   test("partitioned layout prunes partitions at the scan") {
-    val dir = Files.createTempDirectory("graft-partitioned").toString
+    val dir = tempDir("graft-partitioned").toString
     Tables.events(spark, sf0001)
       .write.mode("overwrite").partitionBy("event_type").parquet(dir)
     val df = spark.read.parquet(dir).where(col("event_type") === "click")
@@ -106,7 +106,7 @@ class StorageSpec extends SparkSpec {
     val pidHi = ScalePatterns.rangePid(uppers, hi)
     val scannedRange = perPid.filter { case (p, _) => p >= pidLo && p <= pidHi }.values.sum
     val total = perPid.values.sum
-    val ingestDir = Files.createTempDirectory("graft-ingest-order").toString
+    val ingestDir = tempDir("graft-ingest-order").toString
     Tables.lineitem(spark, sf0001)
       .select(expr("CAST(round(l_extendedprice * 100) AS BIGINT)").as("v"))
       .repartition(32).write.mode("overwrite").parquet(ingestDir)
@@ -152,7 +152,7 @@ class StorageSpec extends SparkSpec {
     import graft.operators.{DeletableRangeLayout, VersionedLayout}
     import graft.queries.ScalePatterns
     val uppers = ScalePatterns.rangeUppers(spark, sf0001)
-    val dir = Files.createTempDirectory("graft-deletable").toString + "/layout"
+    val dir = tempDir("graft-deletable").toString + "/layout"
     DeletableRangeLayout.ensure(spark, sf0001, dir, uppers)
     val (lo, hi) = (ScalePatterns.deleteBandLoCenti, ScalePatterns.deleteBandHiCenti)
     val total = spark.read.parquet(dir).count()
@@ -249,7 +249,7 @@ class StorageSpec extends SparkSpec {
     import graft.operators.VersionedLayout
     import graft.queries.ScalePatterns
     val uppers = ScalePatterns.rangeUppers(spark, sf0001)
-    val dir = Files.createTempDirectory("graft-versioned").toString + "/layout"
+    val dir = tempDir("graft-versioned").toString + "/layout"
     VersionedLayout.writeBase(spark, sf0001, dir, uppers)
     val (aLo, aHi) = (ScalePatterns.deleteBandLoCenti, ScalePatterns.deleteBandHiCenti)
     val (bLo, bHi) = (ScalePatterns.ttBandLoCenti, ScalePatterns.ttBandHiCenti)
@@ -317,7 +317,7 @@ class StorageSpec extends SparkSpec {
     import graft.operators.{IncrementalView, VersionedLayout}
     import graft.queries.ScalePatterns
     val uppers = ScalePatterns.rangeUppers(spark, sf0001)
-    val dir = Files.createTempDirectory("graft-ivm").toString + "/layout"
+    val dir = tempDir("graft-ivm").toString + "/layout"
     VersionedLayout.writeBase(spark, sf0001, dir, uppers)
     // A history DIFFERENT from q160's canned scenario, interleaving
     // every action type (and a second delete AFTER the compaction).
@@ -350,7 +350,7 @@ class StorageSpec extends SparkSpec {
     import graft.operators.VersionedLayout
     import graft.queries.ScalePatterns
     val uppers = ScalePatterns.rangeUppers(spark, sf0001)
-    val dir = Files.createTempDirectory("graft-major").toString + "/layout"
+    val dir = tempDir("graft-major").toString + "/layout"
     VersionedLayout.writeBase(spark, sf0001, dir, uppers)
     val two = spark.read.parquet(dir).limit(2)
       .select((col("v") + 1).as("v"), (col("l_orderkey") + 910000000L).as("l_orderkey"),
@@ -401,7 +401,7 @@ class StorageSpec extends SparkSpec {
     import graft.operators.VersionedLayout
     import graft.queries.ScalePatterns
     val uppers = ScalePatterns.rangeUppers(spark, sf0001)
-    val dir = Files.createTempDirectory("graft-cdf").toString + "/layout"
+    val dir = tempDir("graft-cdf").toString + "/layout"
     VersionedLayout.writeBase(spark, sf0001, dir, uppers)
     VersionedLayout.appendDelete(spark, dir, col("v").between(300000L, 400000L))
     VersionedLayout.appendUpsert(spark, dir, col("v").between(600000L, 650000L),
@@ -445,7 +445,7 @@ class StorageSpec extends SparkSpec {
     import graft.operators.VersionedLayout
     import graft.queries.ScalePatterns
     val uppers = ScalePatterns.rangeUppers(spark, sf0001)
-    val dir = Files.createTempDirectory("graft-crash").toString + "/layout"
+    val dir = tempDir("graft-crash").toString + "/layout"
     VersionedLayout.writeBase(spark, sf0001, dir, uppers)
     val (lo, hi) = (ScalePatterns.deleteBandLoCenti, ScalePatterns.deleteBandHiCenti)
     val total = spark.read.parquet(dir).count()
@@ -489,7 +489,7 @@ class StorageSpec extends SparkSpec {
     import graft.operators.VersionedLayout
     import graft.queries.ScalePatterns
     val uppers = ScalePatterns.rangeUppers(spark, sf0001)
-    val dir = Files.createTempDirectory("graft-trash").toString + "/layout"
+    val dir = tempDir("graft-trash").toString + "/layout"
     VersionedLayout.writeBase(spark, sf0001, dir, uppers)
     val (lo, hi) = (ScalePatterns.deleteBandLoCenti, ScalePatterns.deleteBandHiCenti)
     val total = spark.read.parquet(dir).count()
@@ -534,7 +534,7 @@ class StorageSpec extends SparkSpec {
     import graft.operators.VersionedLayout
     import graft.queries.ScalePatterns
     val uppers = ScalePatterns.rangeUppers(spark, sf0001)
-    val dir = Files.createTempDirectory("graft-gcfold").toString + "/layout"
+    val dir = tempDir("graft-gcfold").toString + "/layout"
     VersionedLayout.writeBase(spark, sf0001, dir, uppers)
     val total = spark.read.parquet(dir).count()
     // v1: insert a small segment (in-domain pids, fresh orderkeys).
@@ -580,7 +580,7 @@ class StorageSpec extends SparkSpec {
     import graft.operators.VersionedLayout
     import graft.queries.ScalePatterns
     val uppers = ScalePatterns.rangeUppers(spark, sf0001)
-    val root = Files.createTempDirectory("graft-clone").toString
+    val root = tempDir("graft-clone").toString
     val src = s"$root/src"
     VersionedLayout.writeBase(spark, sf0001, src, uppers)
     VersionedLayout.appendDelete(spark, src,
@@ -656,7 +656,7 @@ class StorageSpec extends SparkSpec {
     import graft.operators.VersionedLayout
     import graft.queries.ScalePatterns
     val uppers = ScalePatterns.rangeUppers(spark, sf0001)
-    val root = Files.createTempDirectory("graft-ckpt").toString
+    val root = tempDir("graft-ckpt").toString
     val dir = s"$root/table"
     VersionedLayout.writeBase(spark, sf0001, dir, uppers)
     VersionedLayout.appendDelete(spark, dir,
@@ -724,7 +724,7 @@ class StorageSpec extends SparkSpec {
     import graft.operators.VersionedLayout
     import graft.queries.ScalePatterns
     val uppers = ScalePatterns.rangeUppers(spark, sf0001)
-    val root = Files.createTempDirectory("graft-occ").toString
+    val root = tempDir("graft-occ").toString
     val dir = s"$root/table"
     VersionedLayout.writeBase(spark, sf0001, dir, uppers)
     val base = VersionedLayout.readAsOf(spark, dir, 0)
@@ -818,7 +818,7 @@ class StorageSpec extends SparkSpec {
     import ScalePatterns.{crudInsertLoCenti, crudInsertHiCenti, crudUpsertLoCenti,
       crudUpsertHiCenti, deleteBandLoCenti, deleteBandHiCenti}
     val uppers = ScalePatterns.rangeUppers(spark, sf0001)
-    val root = Files.createTempDirectory("graft-torture").toString
+    val root = tempDir("graft-torture").toString
     val dir = s"$root/src"
     VersionedLayout.writeBase(spark, sf0001, dir, uppers)
     val base = spark.read.parquet(dir)
@@ -888,7 +888,7 @@ class StorageSpec extends SparkSpec {
     import graft.operators.VersionedLayout
     val spark0 = spark
     import spark0.implicits._
-    val dir = Files.createTempDirectory("graft-erase-all").toString + "/t"
+    val dir = tempDir("graft-erase-all").toString + "/t"
     def shaped(rows: Seq[(Long, Long)]) = rows.toDF("event_id", "value_centi")
       .select(pmod(col("event_id"), lit(4)).cast("int").as("pid"),
         col("event_id"), col("value_centi"))
@@ -916,7 +916,7 @@ class StorageSpec extends SparkSpec {
     import graft.queries.ScalePatterns
     val spark0 = spark
     import spark0.implicits._
-    val dir = Files.createTempDirectory("graft-zfold").toString + "/t"
+    val dir = tempDir("graft-zfold").toString + "/t"
     // 4096 rows on a 64x64 (a, t) grid, base order interleaving both
     // dims (row-major by t), one pid: the worst case for any file-level
     // min/max skipping.
@@ -971,7 +971,7 @@ class StorageSpec extends SparkSpec {
     import graft.operators.VersionedLayout
     val spark0 = spark
     import spark0.implicits._
-    val dir = Files.createTempDirectory("graft-retention").toString + "/t"
+    val dir = tempDir("graft-retention").toString + "/t"
     def shaped(rows: Seq[(Long, Long)]) = rows.toDF("event_id", "value_centi")
       .select(pmod(col("event_id"), lit(4)).cast("int").as("pid"),
         col("event_id"), col("value_centi"))
@@ -1034,7 +1034,7 @@ class StorageSpec extends SparkSpec {
     import graft.operators.VersionedLayout
     val spark0 = spark
     import spark0.implicits._
-    val dir = Files.createTempDirectory("graft-retain-time").toString + "/t"
+    val dir = tempDir("graft-retain-time").toString + "/t"
     def shaped(rows: Seq[(Long, Long)]) = rows.toDF("event_id", "value_centi")
       .select(pmod(col("event_id"), lit(4)).cast("int").as("pid"),
         col("event_id"), col("value_centi"))
@@ -1093,7 +1093,7 @@ class StorageSpec extends SparkSpec {
     import graft.operators.VersionedLayout
     val spark0 = spark
     import spark0.implicits._
-    val dir = Files.createTempDirectory("graft-skip").toString + "/t"
+    val dir = tempDir("graft-skip").toString + "/t"
     // pid = value/10, so per-pid bounds are TIGHT decades of the value
     // axis — the shape a range layout gives the stats for free.
     def shaped(ids: Seq[Long]) = ids.map(i => (i, i)).toDF("event_id", "value_centi")
@@ -1185,7 +1185,7 @@ class StorageSpec extends SparkSpec {
     import graft.operators.VersionedLayout
     val spark0 = spark
     import spark0.implicits._
-    val dir = Files.createTempDirectory("graft-skip-multi").toString + "/t"
+    val dir = tempDir("graft-skip-multi").toString + "/t"
     // Two independent numeric axes: value decades drive pid (tight v
     // bounds per pid); weight = 1000 - value (anti-correlated, so a
     // weight band selects DIFFERENT pids than the value band).
@@ -1229,7 +1229,7 @@ class StorageSpec extends SparkSpec {
     import graft.operators.VersionedLayout
     val spark0 = spark
     import spark0.implicits._
-    val dir = Files.createTempDirectory("graft-typed-readd").toString + "/t"
+    val dir = tempDir("graft-typed-readd").toString + "/t"
     def shaped(ids: Seq[Long]) = ids.map(i => (i, i * 10)).toDF("event_id", "value_centi")
       .select(pmod(col("event_id"), lit(4)).cast("int").as("pid"),
         col("event_id"), col("value_centi"))
@@ -1315,7 +1315,7 @@ class StorageSpec extends SparkSpec {
     import graft.operators.VersionedLayout
     val spark0 = spark
     import spark0.implicits._
-    val dir = Files.createTempDirectory("graft-evolve").toString + "/t"
+    val dir = tempDir("graft-evolve").toString + "/t"
     def shaped(rows: Seq[(Long, Long)]) = rows.toDF("event_id", "value_centi")
       .select(pmod(col("event_id"), lit(4)).cast("int").as("pid"),
         col("event_id"), col("value_centi"))
@@ -1378,7 +1378,7 @@ class StorageSpec extends SparkSpec {
     import graft.operators.VersionedLayout
     val spark0 = spark
     import spark0.implicits._
-    val dir = Files.createTempDirectory("graft-restore").toString + "/t"
+    val dir = tempDir("graft-restore").toString + "/t"
     def shaped(rows: Seq[(Long, Long)]) = rows.toDF("event_id", "value_centi")
       .select(pmod(col("event_id"), lit(4)).cast("int").as("pid"),
         col("event_id"), col("value_centi"))
@@ -1445,7 +1445,7 @@ class StorageSpec extends SparkSpec {
     import org.apache.spark.sql.types.{IntegerType, LongType}
     val spark0 = spark
     import spark0.implicits._
-    val dir = Files.createTempDirectory("graft-widencol").toString + "/t"
+    val dir = tempDir("graft-widencol").toString + "/t"
     def shaped(rows: Seq[(Long, Long)]) = rows.toDF("event_id", "value_centi")
       .select(pmod(col("event_id"), lit(4)).cast("int").as("pid"),
         col("event_id"), col("value_centi").cast("int").as("value_centi"))
@@ -1524,7 +1524,7 @@ class StorageSpec extends SparkSpec {
     import graft.operators.VersionedLayout
     val spark0 = spark
     import spark0.implicits._
-    val dir = Files.createTempDirectory("graft-decimalcol").toString + "/t"
+    val dir = tempDir("graft-decimalcol").toString + "/t"
     def shaped(rows: Seq[(Long, Long)]) = rows.toDF("event_id", "value_centi")
       .select(pmod(col("event_id"), lit(4)).cast("int").as("pid"),
         col("event_id"), col("value_centi"))
@@ -1564,7 +1564,7 @@ class StorageSpec extends SparkSpec {
     import graft.operators.VersionedLayout
     val spark0 = spark
     import spark0.implicits._
-    val dir = Files.createTempDirectory("graft-dropcol").toString + "/t"
+    val dir = tempDir("graft-dropcol").toString + "/t"
     def shaped(rows: Seq[(Long, Long)]) = rows.toDF("event_id", "value_centi")
       .select(pmod(col("event_id"), lit(4)).cast("int").as("pid"),
         col("event_id"), col("value_centi"))
@@ -1627,7 +1627,7 @@ class StorageSpec extends SparkSpec {
     import graft.operators.VersionedLayout
     val spark0 = spark
     import spark0.implicits._
-    val dir = Files.createTempDirectory("graft-renamecol").toString + "/t"
+    val dir = tempDir("graft-renamecol").toString + "/t"
     def shaped(rows: Seq[(Long, Long)]) = rows.toDF("event_id", "value_centi")
       .select(pmod(col("event_id"), lit(4)).cast("int").as("pid"),
         col("event_id"), col("value_centi"))
@@ -1713,7 +1713,7 @@ class StorageSpec extends SparkSpec {
     import graft.operators.VersionedLayout
     val spark0 = spark
     import spark0.implicits._
-    val dir = Files.createTempDirectory("graft-readd").toString + "/t"
+    val dir = tempDir("graft-readd").toString + "/t"
     def shaped(rows: Seq[(Long, Long)]) = rows.toDF("event_id", "price")
       .select(pmod(col("event_id"), lit(4)).cast("int").as("pid"),
         col("event_id"), col("price"))
@@ -1778,7 +1778,7 @@ class StorageSpec extends SparkSpec {
     import graft.operators.VersionedLayout
     import graft.queries.ScalePatterns
     val uppers = ScalePatterns.rangeUppers(spark, sf0001)
-    val dir = Files.createTempDirectory("graft-crud").toString + "/layout"
+    val dir = tempDir("graft-crud").toString + "/layout"
     VersionedLayout.writeBase(spark, sf0001, dir, uppers)
     val total = spark.read.parquet(dir).count()
 
@@ -1817,7 +1817,7 @@ class StorageSpec extends SparkSpec {
     import graft.operators.VersionedLayout
     import graft.queries.ScalePatterns
     val uppers = ScalePatterns.rangeUppers(spark, sf0001)
-    val dir = Files.createTempDirectory("graft-merge").toString + "/layout"
+    val dir = tempDir("graft-merge").toString + "/layout"
     VersionedLayout.writeBase(spark, sf0001, dir, uppers)
     val base = VersionedLayout.readAsOf(spark, dir, 0)
       .orderBy(col("l_orderkey"), col("l_linenumber"), col("v")).limit(4)
@@ -1907,7 +1907,7 @@ class StorageSpec extends SparkSpec {
     import graft.queries.ScalePatterns
     val uppers = ScalePatterns.rangeUppers(spark, sf0001)
     val upLit = array(uppers.map(lit).toSeq: _*)
-    val dir = Files.createTempDirectory("graft-bloom").toString + "/layout"
+    val dir = tempDir("graft-bloom").toString + "/layout"
     VersionedLayout.writeBaseTable(spark,
       Tables.lineitem(spark, sf0001)
         .select(expr("CAST(round(l_extendedprice * 100) AS BIGINT)").as("v"),
@@ -1985,7 +1985,7 @@ class StorageSpec extends SparkSpec {
     import graft.operators.DeletableRangeLayout
     import graft.queries.ScalePatterns
     val uppers = ScalePatterns.rangeUppers(spark, sf0001)
-    val dir = Files.createTempDirectory("graft-compaudit").toString + "/layout"
+    val dir = tempDir("graft-compaudit").toString + "/layout"
     DeletableRangeLayout.ensure(spark, sf0001, dir, uppers)
     val (lo, hi) = (ScalePatterns.deleteBandLoCenti, ScalePatterns.deleteBandHiCenti)
     val pidLo = ScalePatterns.rangePid(uppers, lo)
@@ -2202,7 +2202,7 @@ class StorageSpec extends SparkSpec {
     import graft.operators.VersionedLayout
     import graft.queries.ScalePatterns
     val uppers = ScalePatterns.rangeUppers(spark, sf0001)
-    val dir = Files.createTempDirectory("graft-race").toString + "/layout"
+    val dir = tempDir("graft-race").toString + "/layout"
     VersionedLayout.writeBase(spark, sf0001, dir, uppers)
     val next = VersionedLayout.currentVersion(dir) + 1
     // Two writers race version `next`; the first link wins …
@@ -2218,7 +2218,7 @@ class StorageSpec extends SparkSpec {
   }
 
   test("mergeSchema union: evolved batches surface as one schema with NULLs for absent columns") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-evo").toString
+    val dir = tempDir("graft-evo").toString
     val c = Tables.customer(spark, sf0001)
     c.select(col("c_custkey"), col("c_name")).limit(3)
       .write.mode("overwrite").parquet(s"$dir/v1")
@@ -2235,7 +2235,7 @@ class StorageSpec extends SparkSpec {
     import graft.operators.VersionedLayout
     val spark0 = spark
     import spark0.implicits._
-    val dir = Files.createTempDirectory("graft-ts-travel").toString + "/t"
+    val dir = tempDir("graft-ts-travel").toString + "/t"
     def shaped(rows: Seq[(Long, Long)]) = rows.toDF("event_id", "value_centi")
       .select(pmod(col("event_id"), lit(4)).cast("int").as("pid"),
         col("event_id"), col("value_centi"))
@@ -2286,7 +2286,7 @@ class StorageSpec extends SparkSpec {
       s"same-millisecond commits must not alias: $eff2")
     // Clone by timestamp: the v1-era snapshot exports zero-copy and
     // reads back standalone.
-    val dst = Files.createTempDirectory("graft-ts-clone").toString + "/c"
+    val dst = tempDir("graft-ts-clone").toString + "/c"
     VersionedLayout.cloneAsOfTimestamp(spark, dir, dst, eff2(1))
     assert(VersionedLayout.readAsOf(spark, dst,
       VersionedLayout.currentVersion(dst)).count() == 5)
@@ -2296,7 +2296,7 @@ class StorageSpec extends SparkSpec {
     import graft.operators.VersionedLayout
     val spark0 = spark
     import spark0.implicits._
-    val dir = Files.createTempDirectory("graft-restore-revive").toString + "/t"
+    val dir = tempDir("graft-restore-revive").toString + "/t"
     def shaped(rows: Seq[(Long, Long)]) = rows.toDF("event_id", "value_centi")
       .select(pmod(col("event_id"), lit(4)).cast("int").as("pid"),
         col("event_id"), col("value_centi"))
@@ -2336,7 +2336,7 @@ class StorageSpec extends SparkSpec {
     import graft.operators.VersionedLayout
     val spark0 = spark
     import spark0.implicits._
-    val dir = Files.createTempDirectory("graft-array-col").toString + "/t"
+    val dir = tempDir("graft-array-col").toString + "/t"
     def shaped(ids: Seq[Long]) = ids.map(i => (i, Seq(i.toFloat, (i * 2).toFloat), i * 10))
       .toDF("vec_id", "emb", "w")
       .select(pmod(col("vec_id"), lit(4)).cast("int").as("pid"),
@@ -2370,7 +2370,7 @@ class StorageSpec extends SparkSpec {
     import graft.operators.VersionedLayout
     val spark0 = spark
     import spark0.implicits._
-    val dir = Files.createTempDirectory("graft-bloom-str").toString + "/t"
+    val dir = tempDir("graft-bloom-str").toString + "/t"
     // Distinct string keys spread over 4 pids; values echo the key.
     def shaped(ids: Seq[Long]) = ids.map(i => (i, f"doc-$i%09d", i * 3))
       .toDF("row_id", "doc_key", "w")
@@ -2405,7 +2405,7 @@ class StorageSpec extends SparkSpec {
     import graft.operators.VersionedLayout
     val spark0 = spark
     import spark0.implicits._
-    val dir = Files.createTempDirectory("graft-struct-col").toString + "/t"
+    val dir = tempDir("graft-struct-col").toString + "/t"
     def shaped(ids: Seq[Long]) = ids.map(i => (i, s"lang$i", s"src$i", i * 7))
       .toDF("doc_id", "lang", "source", "n_chars")
       .select(pmod(col("doc_id"), lit(4)).cast("int").as("pid"),
@@ -2461,7 +2461,7 @@ class StorageSpec extends SparkSpec {
     final case class FIdent(fid: Int, var name: String, var tpe: String)
     for (seed <- Seq(11, 23, 47, 61, 83, 97)) {
       val rnd = new scala.util.Random(seed)
-      val dir = Files.createTempDirectory(s"graft-evomodel-$seed").toString + "/t"
+      val dir = tempDir(s"graft-evomodel-$seed").toString + "/t"
       var nextKey = 9L
       var nextId = 1
       var freshCounter = 0
@@ -2728,7 +2728,7 @@ class StorageSpec extends SparkSpec {
     import graft.operators.VersionedLayout
     val spark0 = spark
     import spark0.implicits._
-    val dir = Files.createTempDirectory("graft-restore-flip").toString + "/t"
+    val dir = tempDir("graft-restore-flip").toString + "/t"
     def base(ids: Seq[Long]) = ids.map(i => (i, i * 100, i * 10)).toDF("event_id", "score", "w")
       .select(pmod(col("event_id"), lit(4)).cast("int").as("pid"),
         col("event_id"), col("score"), col("w"))
@@ -2776,7 +2776,7 @@ class StorageSpec extends SparkSpec {
     import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
     val spark0 = spark
     import spark0.implicits._
-    val dir = Files.createTempDirectory("graft-field-evo").toString + "/t"
+    val dir = tempDir("graft-field-evo").toString + "/t"
     def shapedBase(ids: Seq[Long]) = ids.map(i => (i, s"l$i", i.toInt)).toDF("doc_id", "lang", "n")
       .select(pmod(col("doc_id"), lit(4)).cast("int").as("pid"),
         col("doc_id"), struct(col("lang"), col("n")).as("meta"))
@@ -2856,7 +2856,7 @@ class StorageSpec extends SparkSpec {
     import graft.operators.VersionedLayout
     val spark0 = spark
     import spark0.implicits._
-    val dir = Files.createTempDirectory("graft-bloom-ckpt").toString + "/t"
+    val dir = tempDir("graft-bloom-ckpt").toString + "/t"
     def shaped(ids: Seq[Long]) = ids.map(i => (i, i * 3)).toDF("row_id", "n")
       .select(pmod(col("row_id"), lit(4)).cast("int").as("pid"),
         col("row_id"), col("n"))
@@ -2917,7 +2917,7 @@ class StorageSpec extends SparkSpec {
     import graft.operators.VersionedLayout
     val spark0 = spark
     import spark0.implicits._
-    val dir = Files.createTempDirectory("graft-bloom-field").toString + "/t"
+    val dir = tempDir("graft-bloom-field").toString + "/t"
     def shaped(ids: Seq[Long]) = ids.map(i => (i, i * 3, f"k-$i%07d"))
       .toDF("row_id", "ref", "key")
       .select(pmod(col("row_id"), lit(4)).cast("int").as("pid"),
@@ -2995,7 +2995,7 @@ class StorageSpec extends SparkSpec {
     import graft.operators.VersionedLayout
     val spark0 = spark
     import spark0.implicits._
-    val dir = Files.createTempDirectory("graft-bloom-deep").toString + "/t"
+    val dir = tempDir("graft-bloom-deep").toString + "/t"
     def shaped(ids: Seq[Long]) = ids.map(i => (i, i * 3, f"d-$i%07d"))
       .toDF("row_id", "ref", "key")
       .select(pmod(col("row_id"), lit(4)).cast("int").as("pid"),
@@ -3036,7 +3036,7 @@ class StorageSpec extends SparkSpec {
     import graft.operators.VersionedLayout
     val spark0 = spark
     import spark0.implicits._
-    val dir = Files.createTempDirectory("graft-repart").toString + "/t"
+    val dir = tempDir("graft-repart").toString + "/t"
     // Old scheme: 4 range-ish pids keyed by id band; stats column w.
     def shaped(ids: Seq[Long]) =
       ids.map(i => (i, i * 10)).toDF("row_id", "w")
@@ -3096,7 +3096,7 @@ class StorageSpec extends SparkSpec {
     import graft.operators.VersionedLayout
     val spark0 = spark
     import spark0.implicits._
-    val dir = Files.createTempDirectory("graft-replace").toString + "/t"
+    val dir = tempDir("graft-replace").toString + "/t"
     def shaped(ids: Seq[Long], w: Long => Long) =
       ids.map(i => (i, w(i))).toDF("row_id", "w")
         .select(pmod(col("row_id"), lit(4)).cast("int").as("pid"), col("row_id"), col("w"))

@@ -17,7 +17,7 @@ class StreamingSpec extends SparkSpec {
     * normalized nanos-as-long `ts` the batch schema declares.
     */
   private lazy val streamDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream-events")
+    val dir = tempDir("graft-stream-events")
     batchEvents.write.mode("overwrite").parquet(dir.toString)
     dir.toString
   }
@@ -69,7 +69,7 @@ class StreamingSpec extends SparkSpec {
     // separate micro-batches: all docs as arrivals (op=+1), then the
     // q149 tombstone slice (doc_id % 10 == 3) as erasures carrying
     // their before-image text (op=-1).
-    val dir = java.nio.file.Files.createTempDirectory("graft-index-cdc").toString
+    val dir = tempDir("graft-index-cdc").toString
     val arrivals = docs.select(col("doc_id"), col("text"), lit(1L).as("op"))
     arrivals.coalesce(1).write.mode("append").parquet(dir)
     docs.where(col("doc_id") % 10 === 3)
@@ -96,10 +96,10 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     val spark0 = spark
     import spark0.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-late-events")
+    val dir = tempDir("graft-late-events")
     val t0 = 1700000000L * 1000000000L // nanos, aligned far from corpus times
     def stageEvents(rows: Seq[(Long, Long)], name: String): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-late-stage")
+      val tmp = tempDir("graft-late-stage")
       rows.map { case (id, tsNs) => (id, tsNs, 1L, "click", 1.0, "{}") }
         .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
         .repartition(1).write.mode("overwrite").parquet(tmp.toString)
@@ -134,7 +134,7 @@ class StreamingSpec extends SparkSpec {
       rows: Seq[(Long, Long, Long, Double)]): Unit = {
     val spark0 = spark
     import spark0.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-stage")
+    val tmp = tempDir("graft-stage")
     rows.map { case (id, tsNs, uid, v) => (id, tsNs, uid, "click", v, "{}") }
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .repartition(1).write.mode("overwrite").parquet(tmp.toString)
@@ -149,7 +149,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     val spark0 = spark
     import spark0.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-dedup-events")
+    val dir = tempDir("graft-dedup-events")
     val t0 = 1800000000L * 1000000000L
     val stream = spark.readStream.schema(batchEvents.schema).parquet(dir.toString)
     val q = EventStreams.dedupedEvents(stream).writeStream
@@ -178,7 +178,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     val spark0 = spark
     import spark0.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-session-events")
+    val dir = tempDir("graft-session-events")
     val t0 = 1900000000L * 1000000000L
     val stream = spark.readStream.schema(batchEvents.schema).parquet(dir.toString)
     val q = EventStreams.closedSessions(stream).toDF().writeStream
@@ -233,7 +233,7 @@ class StreamingSpec extends SparkSpec {
     import graft.operators.VersionedLayout
     import graft.queries.ScalePatterns
     val uppers = ScalePatterns.rangeUppers(spark, sf0001)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ingest-layout").toString + "/layout"
+    val dir = tempDir("graft-ingest-layout").toString + "/layout"
     VersionedLayout.writeBase(spark, sf0001, dir, uppers)
     val base = spark.read.parquet(dir).count()
     val upLit = array(uppers.map(lit).toSeq: _*)
@@ -244,8 +244,8 @@ class StreamingSpec extends SparkSpec {
       .select(col("v"), (col("l_orderkey") + offset).as("l_orderkey"),
         col("l_linenumber"), col("l_quantity"))
       .localCheckpoint()
-    val in = java.nio.file.Files.createTempDirectory("graft-ingest-in")
-    val chk = java.nio.file.Files.createTempDirectory("graft-ingest-chk")
+    val in = tempDir("graft-ingest-in")
+    val chk = tempDir("graft-ingest-chk")
     def withPid(b: org.apache.spark.sql.DataFrame) =
       b.withColumn("pid", (size(filter(upLit, u => u < col("v"))) + 1).cast("int"))
     val sink: (org.apache.spark.sql.DataFrame, Long) => Unit =
@@ -258,7 +258,7 @@ class StreamingSpec extends SparkSpec {
     }
 
     def stageDf(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-ingest-stage")
+      val tmp = tempDir("graft-ingest-stage")
       df.repartition(1).write.mode("overwrite").parquet(tmp.toString)
       val part = java.nio.file.Files.list(tmp).filter(_.toString.endsWith(".parquet"))
         .findFirst().get()
@@ -301,11 +301,11 @@ class StreamingSpec extends SparkSpec {
     import graft.operators.VersionedLayout
     val spark0 = spark
     import spark0.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-sink").toString + "/layout"
-    val in = java.nio.file.Files.createTempDirectory("graft-sink-in")
-    val chk = java.nio.file.Files.createTempDirectory("graft-sink-chk")
+    val dir = tempDir("graft-sink").toString + "/layout"
+    val in = tempDir("graft-sink-in")
+    val chk = tempDir("graft-sink-chk")
     def stage(name: String, rows: Seq[(Long, Long)]): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-sink-stage")
+      val tmp = tempDir("graft-sink-stage")
       rows.toDF("k", "w").repartition(1)
         .write.mode("overwrite").parquet(tmp.toString)
       val part = java.nio.file.Files.list(tmp).filter(_.toString.endsWith(".parquet"))
@@ -341,7 +341,7 @@ class StreamingSpec extends SparkSpec {
     assert(rows() == (1L to 15L).map(i => (i, i * 2)).toSet)
     // Checkpoint RESET (fresh dir, same txnAppId): every batch replays,
     // every commit's stamp matches, nothing doubles.
-    val chk2 = java.nio.file.Files.createTempDirectory("graft-sink-chk2")
+    val chk2 = tempDir("graft-sink-chk2")
     run(chk2.toString)
     assert(VersionedLayout.currentVersion(dir) == 2, "checkpoint reset double-committed")
     assert(rows() == (1L to 15L).map(i => (i, i * 2)).toSet)
@@ -356,12 +356,12 @@ class StreamingSpec extends SparkSpec {
     import graft.operators.VersionedLayout
     val spark0 = spark
     import spark0.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-upsink").toString + "/layout"
-    val twin = java.nio.file.Files.createTempDirectory("graft-upsink-twin").toString + "/layout"
-    val in = java.nio.file.Files.createTempDirectory("graft-upsink-in")
-    val chk = java.nio.file.Files.createTempDirectory("graft-upsink-chk")
+    val dir = tempDir("graft-upsink").toString + "/layout"
+    val twin = tempDir("graft-upsink-twin").toString + "/layout"
+    val in = tempDir("graft-upsink-in")
+    val chk = tempDir("graft-upsink-chk")
     def stage(name: String, rows: Seq[(Long, Long)]): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-upsink-stage")
+      val tmp = tempDir("graft-upsink-stage")
       rows.toDF("k", "w").repartition(1)
         .write.mode("overwrite").parquet(tmp.toString)
       val part = java.nio.file.Files.list(tmp).filter(_.toString.endsWith(".parquet"))
@@ -403,7 +403,7 @@ class StreamingSpec extends SparkSpec {
     assert(rows(dir) == expect)
     // Checkpoint RESET with the same txnAppId: replayed batchIds skip
     // on their stamps (the documented contract), nothing doubles.
-    val chk2 = java.nio.file.Files.createTempDirectory("graft-upsink-chk2")
+    val chk2 = tempDir("graft-upsink-chk2")
     run(chk2.toString)
     assert(VersionedLayout.currentVersion(dir) == 2, "checkpoint reset double-committed")
     assert(rows(dir) == expect)
@@ -431,7 +431,7 @@ class StreamingSpec extends SparkSpec {
     import graft.operators.VersionedLayout
     val spark0 = spark
     import spark0.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-gen-ingest").toString + "/layout"
+    val dir = tempDir("graft-gen-ingest").toString + "/layout"
     // A second-table layout: single-column identity, user-hash pids —
     // nothing lineitem-shaped (the q176 construction, now under a
     // stream).
@@ -442,8 +442,8 @@ class StreamingSpec extends SparkSpec {
     VersionedLayout.writeBaseTable(spark,
       shaped((1L to 20L).map(i => (i, i % 7, i * 100))), dir, Seq("event_id"))
 
-    val in = java.nio.file.Files.createTempDirectory("graft-gen-in")
-    val chk = java.nio.file.Files.createTempDirectory("graft-gen-chk")
+    val in = tempDir("graft-gen-in")
+    val chk = tempDir("graft-gen-chk")
     val sink: (org.apache.spark.sql.DataFrame, Long) => Unit = (b, id) => {
       VersionedLayout.appendInsertOnce(spark, dir,
         b.select(pmod(col("user_id"), lit(4)).cast("int").as("pid"),
@@ -459,7 +459,7 @@ class StreamingSpec extends SparkSpec {
       try q.processAllAvailable() finally q.stop()
     }
     def stage(name: String, rows: Seq[(Long, Long, Long)]): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-gen-stage")
+      val tmp = tempDir("graft-gen-stage")
       rows.toDF("event_id", "user_id", "value_centi").repartition(1)
         .write.mode("overwrite").parquet(tmp.toString)
       val part = java.nio.file.Files.list(tmp).filter(_.toString.endsWith(".parquet"))
@@ -493,7 +493,7 @@ class StreamingSpec extends SparkSpec {
     import graft.operators.VersionedLayout
     val spark0 = spark
     import spark0.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream-src").toString + "/t"
+    val dir = tempDir("graft-stream-src").toString + "/t"
     def shaped(rows: Seq[(Long, Long)]) = rows.toDF("event_id", "value_centi")
       .select(pmod(col("event_id"), lit(4)).cast("int").as("pid"),
         col("event_id"), col("value_centi"))
@@ -503,7 +503,7 @@ class StreamingSpec extends SparkSpec {
       shaped(Seq((101L, 1010L), (102L, 1020L))))                 // v1
     VersionedLayout.appendDelete(spark, dir, col("event_id") <= 5L) // v2
 
-    val chk = java.nio.file.Files.createTempDirectory("graft-stream-chk").toString
+    val chk = tempDir("graft-stream-chk").toString
     val buf = scala.collection.mutable.ArrayBuffer.empty[(Int, String, Long)]
     val sink: (org.apache.spark.sql.DataFrame, Long) => Unit = (b, _) => {
       b.groupBy(col("change_version"), col("change_type"))
@@ -536,7 +536,7 @@ class StreamingSpec extends SparkSpec {
       .collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2))).toSet
     assert(first ++ second == batch, s"stream != batch: ${first ++ second} vs $batch")
     // A fresh subscriber with its own checkpoint replays everything.
-    val chk2 = java.nio.file.Files.createTempDirectory("graft-stream-chk2").toString
+    val chk2 = tempDir("graft-stream-chk2").toString
     buf.clear()
     val q2 = spark.readStream.format("graft-layout").option("path", dir).load()
       .writeStream.foreachBatch(sink)
@@ -550,7 +550,7 @@ class StreamingSpec extends SparkSpec {
     import graft.operators.VersionedLayout
     val spark0 = spark
     import spark0.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-ratelim-src").toString + "/t"
+    val dir = tempDir("graft-ratelim-src").toString + "/t"
     def shaped(rows: Seq[(Long, Long)]) = rows.toDF("event_id", "value_centi")
       .select(pmod(col("event_id"), lit(4)).cast("int").as("pid"),
         col("event_id"), col("value_centi"))
@@ -562,7 +562,7 @@ class StreamingSpec extends SparkSpec {
     VersionedLayout.appendUpsert(spark, dir, col("event_id") === 10L,
       m => m.withColumn("value_centi", col("value_centi") + 1))     // v3
 
-    val chk = java.nio.file.Files.createTempDirectory("graft-ratelim-chk").toString
+    val chk = tempDir("graft-ratelim-chk").toString
     // Per micro-batch: the distinct change versions it carried.
     val batches = scala.collection.mutable.ArrayBuffer.empty[Set[Int]]
     val rows = scala.collection.mutable.ArrayBuffer.empty[(Int, String, Long)]
@@ -624,13 +624,13 @@ class StreamingSpec extends SparkSpec {
         df.select(col("doc_id"), col("text")).localCheckpoint(), "doc_id", "text"), 1)
     // The CURATED TABLE: a documents layout the index subscribes to —
     // the downstream never re-reads it after the v0 bootstrap.
-    val dir = java.nio.file.Files.createTempDirectory("graft-lsh-sub").toString + "/docs"
+    val dir = tempDir("graft-lsh-sub").toString + "/docs"
     // Base covers all four pids (doc 8 -> pid 0), so later segment
     // rows stay inside the v0 pid domain.
     VersionedLayout.writeBaseTable(spark,
       shaped(Seq(1L -> textA, 2L -> textA, 3L -> textA, 8L -> textA, 11L -> textB)),
       dir, Seq("doc_id"))
-    val idx = java.nio.file.Files.createTempDirectory("graft-lsh-sub-idx").toString + "/index"
+    val idx = tempDir("graft-lsh-sub-idx").toString + "/index"
     LshIndexStore.init(spark, idx, bands(VersionedLayout.readAsOf(spark, dir, 0)), cap)
     // Subscription: inserts ADMIT, deletes RETRACT — the feed's
     // before-image rows mean retraction never re-reads the corpus.
@@ -644,7 +644,7 @@ class StreamingSpec extends SparkSpec {
       if (del.count() > 0) LshIndexStore.retractOnce(spark, idx, del, id * 2 + 1)
       ()
     }
-    val chk = java.nio.file.Files.createTempDirectory("graft-lsh-sub-chk").toString
+    val chk = tempDir("graft-lsh-sub-chk").toString
     def run(): Unit = {
       val q = spark.readStream.format("graft-layout").option("path", dir).load()
         .writeStream.foreachBatch(sink)
@@ -672,7 +672,7 @@ class StreamingSpec extends SparkSpec {
     import graft.operators.VersionedLayout
     val spark0 = spark
     import spark0.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream-flip").toString + "/t"
+    val dir = tempDir("graft-stream-flip").toString + "/t"
     def shaped(ids: Seq[Long]) = ids.map(i => (i, i * 10)).toDF("event_id", "value_centi")
       .select(pmod(col("event_id"), lit(4)).cast("int").as("pid"),
         col("event_id"), col("value_centi"))
@@ -699,7 +699,7 @@ class StreamingSpec extends SparkSpec {
         }
       ()
     }
-    val chk = java.nio.file.Files.createTempDirectory("graft-stream-flip-chk").toString
+    val chk = tempDir("graft-stream-flip-chk").toString
     val q = spark.readStream.format("graft-layout").option("path", dir).load()
       .writeStream.foreachBatch(sink)
       .option("checkpointLocation", chk).start()
@@ -734,11 +734,11 @@ class StreamingSpec extends SparkSpec {
     def bands(rows: Seq[(Long, String)]) = Dedup.bandRows(
       Dedup.minhashSignatures(
         rows.toDF("doc_id", "text").localCheckpoint(), "doc_id", "text"), 1)
-    val dir = java.nio.file.Files.createTempDirectory("graft-lsh-ingest").toString + "/index"
+    val dir = tempDir("graft-lsh-ingest").toString + "/index"
     LshIndexStore.init(spark, dir, bands((1L to 3L).map(_ -> textA)), cap)
 
-    val in = java.nio.file.Files.createTempDirectory("graft-lsh-in")
-    val chk = java.nio.file.Files.createTempDirectory("graft-lsh-chk")
+    val in = tempDir("graft-lsh-in")
+    val chk = tempDir("graft-lsh-chk")
     val sink: (org.apache.spark.sql.DataFrame, Long) => Unit = (b, id) => {
       // The micro-batch id IS the txn stamp — the same contract as the
       // versioned-layout ingest; signatures are computed on the batch
@@ -755,7 +755,7 @@ class StreamingSpec extends SparkSpec {
       try q.processAllAvailable() finally q.stop()
     }
     def stage(name: String, rows: Seq[(Long, String)]): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-lsh-stage")
+      val tmp = tempDir("graft-lsh-stage")
       rows.toDF("doc_id", "text").repartition(1)
         .write.mode("overwrite").parquet(tmp.toString)
       val part = java.nio.file.Files.list(tmp).filter(_.toString.endsWith(".parquet"))
@@ -793,7 +793,7 @@ class StreamingSpec extends SparkSpec {
     import graft.functions.vectors
     val spark0 = spark
     import spark0.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-ingest").toString + "/index"
+    val dir = tempDir("graft-ivf-ingest").toString + "/index"
     def vecs(rows: Seq[(Long, Seq[Double])]) = rows.toDF("vec_id", "embedding")
       .select(col("vec_id"), col("embedding"), vectors.norm(col("embedding")).as("nrm"))
     val cent = vecs(Seq(0L -> Seq(1.0, 0.0), 1L -> Seq(0.0, 1.0)))
@@ -810,8 +810,8 @@ class StreamingSpec extends SparkSpec {
     IvfIndexStore.init(spark, dir, cent,
       assign(vecs(Seq(10L -> Seq(0.9, 0.1), 11L -> Seq(0.2, 0.8)))))
 
-    val in = java.nio.file.Files.createTempDirectory("graft-ivf-in")
-    val chk = java.nio.file.Files.createTempDirectory("graft-ivf-chk")
+    val in = tempDir("graft-ivf-in")
+    val chk = tempDir("graft-ivf-chk")
     val sink: (org.apache.spark.sql.DataFrame, Long) => Unit = (b, id) => {
       // The micro-batch id IS the txn stamp; the batch is assigned
       // against the store's FROZEN centroids and lands as one O(delta)
@@ -830,7 +830,7 @@ class StreamingSpec extends SparkSpec {
       try q.processAllAvailable() finally q.stop()
     }
     def stage(name: String, rows: Seq[(Long, Seq[Double])]): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-ivf-stage")
+      val tmp = tempDir("graft-ivf-stage")
       rows.toDF("vec_id", "embedding").repartition(1)
         .write.mode("overwrite").parquet(tmp.toString)
       val part = java.nio.file.Files.list(tmp).filter(_.toString.endsWith(".parquet"))
@@ -928,13 +928,13 @@ class StreamingSpec extends SparkSpec {
     def bands(rows: Seq[(Long, String)]) = Dedup.bandRows(
       Dedup.minhashSignatures(
         rows.toDF("doc_id", "text").localCheckpoint(), "doc_id", "text"), 1)
-    val dir = java.nio.file.Files.createTempDirectory("graft-lsh-rstream").toString + "/index"
-    val twin = java.nio.file.Files.createTempDirectory("graft-lsh-rtwin").toString + "/index"
+    val dir = tempDir("graft-lsh-rstream").toString + "/index"
+    val twin = tempDir("graft-lsh-rtwin").toString + "/index"
     LshIndexStore.init(spark, dir, bands(corpus), cap)
     LshIndexStore.init(spark, twin, bands(corpus), cap)
 
-    val in = java.nio.file.Files.createTempDirectory("graft-lsh-rin")
-    val chk = java.nio.file.Files.createTempDirectory("graft-lsh-rchk")
+    val in = tempDir("graft-lsh-rin")
+    val chk = tempDir("graft-lsh-rchk")
     val sink: (org.apache.spark.sql.DataFrame, Long) => Unit = (b, id) => {
       // The micro-batch id IS the txn stamp (the admit-ingest contract,
       // now for the tombstone side).
@@ -949,7 +949,7 @@ class StreamingSpec extends SparkSpec {
       try q.processAllAvailable() finally q.stop()
     }
     def stage(name: String, ids: Seq[Long]): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-lsh-rstage")
+      val tmp = tempDir("graft-lsh-rstage")
       ids.toDF("doc_id").repartition(1).write.mode("overwrite").parquet(tmp.toString)
       val part = java.nio.file.Files.list(tmp).filter(_.toString.endsWith(".parquet"))
         .findFirst().get()
@@ -989,7 +989,7 @@ class StreamingSpec extends SparkSpec {
     // applied through retractBandsOnce (tombstones carrying the docs'
     // recomputed band rows + txn stamps) converge to the same state,
     // and a replayed stamp commits nothing.
-    val twinB = java.nio.file.Files.createTempDirectory("graft-lsh-rtwinb").toString + "/index"
+    val twinB = tempDir("graft-lsh-rtwinb").toString + "/index"
     LshIndexStore.init(spark, twinB, bands(corpus), cap)
     LshIndexStore.retractBandsOnce(spark, twinB, bands(Seq(5L -> textA)), 10L, cap)
     LshIndexStore.retractBandsOnce(spark, twinB, bands(Seq(12L -> textB)), 11L, cap)
@@ -1002,9 +1002,9 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     val spark0 = spark
     import spark0.implicits._
-    val in = java.nio.file.Files.createTempDirectory("graft-restart-in")
-    val out = java.nio.file.Files.createTempDirectory("graft-restart-out")
-    val chk = java.nio.file.Files.createTempDirectory("graft-restart-chk")
+    val in = tempDir("graft-restart-in")
+    val out = tempDir("graft-restart-out")
+    val chk = tempDir("graft-restart-chk")
     val t0 = 2000000000L * 1000000000L
     def run(): Unit = {
       val q = spark.readStream.schema(batchEvents.schema).parquet(in.toString)
@@ -1038,10 +1038,10 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     val spark0 = spark
     import spark0.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-outer-events")
+    val dir = tempDir("graft-outer-events")
     val t0 = 1900000000L * 1000000000L
     def stage(name: String, rows: Seq[(Long, Long, Long, String)]): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-outer-stage")
+      val tmp = tempDir("graft-outer-stage")
       rows.map { case (id, tsNs, uid, typ) => (id, tsNs, uid, typ, 1.0, "{}") }
         .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
         .repartition(1).write.mode("overwrite").parquet(tmp.toString)
@@ -1139,7 +1139,7 @@ class StreamingSpec extends SparkSpec {
     import graft.operators.VersionedLayout
     val spark0 = spark
     import spark0.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-evo-ingest").toString + "/layout"
+    val dir = tempDir("graft-evo-ingest").toString + "/layout"
     def shapedOld(rows: Seq[(Long, Long, Long)]) = rows
       .toDF("event_id", "user_id", "value_centi")
       .select(pmod(col("user_id"), lit(4)).cast("int").as("pid"),
@@ -1148,7 +1148,7 @@ class StreamingSpec extends SparkSpec {
       shapedOld(Seq((1L, 0L, 10L), (2L, 1L, 20L), (3L, 2L, 30L), (4L, 3L, 40L))),
       dir, Seq("event_id"))
     def stage(df: org.apache.spark.sql.DataFrame, in: java.nio.file.Path, name: String): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-evo-stage")
+      val tmp = tempDir("graft-evo-stage")
       df.repartition(1).write.mode("overwrite").parquet(tmp.toString)
       val part = java.nio.file.Files.list(tmp).filter(_.toString.endsWith(".parquet"))
         .findFirst().get()
@@ -1164,8 +1164,8 @@ class StreamingSpec extends SparkSpec {
       try q.processAllAvailable() finally q.stop()
     }
     // Phase 1: a micro-batch under the ORIGINAL schema -> v1.
-    val in1 = java.nio.file.Files.createTempDirectory("graft-evo-in1")
-    val chk1 = java.nio.file.Files.createTempDirectory("graft-evo-chk1")
+    val in1 = tempDir("graft-evo-in1")
+    val chk1 = tempDir("graft-evo-chk1")
     val b0 = shapedOld(Seq((101L, 0L, 7L), (102L, 1L, 9L))).localCheckpoint()
     stage(b0, in1, "b0.parquet")
     run(in1, chk1, b0.schema, txnBase = 0L)
@@ -1177,8 +1177,8 @@ class StreamingSpec extends SparkSpec {
     // Phase 2: a NEW stream (new source schema, disjoint txn range —
     // a schema change is a new ingest epoch) carrying the HEAD era's
     // columns -> v4.
-    val in2 = java.nio.file.Files.createTempDirectory("graft-evo-in2")
-    val chk2 = java.nio.file.Files.createTempDirectory("graft-evo-chk2")
+    val in2 = tempDir("graft-evo-in2")
+    val chk2 = tempDir("graft-evo-chk2")
     val b1 = Seq((201L, 2L, 11L, 5L), (202L, 3L, 13L, 6L))
       .toDF("event_id", "user_id", "amount_centi", "score_centi")
       .select(pmod(col("user_id"), lit(4)).cast("int").as("pid"),
@@ -1215,7 +1215,7 @@ class StreamingSpec extends SparkSpec {
     import graft.operators.VersionedLayout
     val spark0 = spark
     import spark0.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream-ts").toString + "/t"
+    val dir = tempDir("graft-stream-ts").toString + "/t"
     def shaped(rows: Seq[(Long, Long)]) = rows.toDF("event_id", "value_centi")
       .select(pmod(col("event_id"), lit(4)).cast("int").as("pid"),
         col("event_id"), col("value_centi"))
@@ -1227,7 +1227,7 @@ class StreamingSpec extends SparkSpec {
     val times = VersionedLayout.commitTimes(dir).toMap
     // Subscribe "as of v1's effective time": serves exactly (v1, head].
     val buf = scala.collection.mutable.ArrayBuffer.empty[(Int, String, Long)]
-    val chk = java.nio.file.Files.createTempDirectory("graft-stream-ts-chk").toString
+    val chk = tempDir("graft-stream-ts-chk").toString
     val q = spark.readStream.format("graft-layout").option("path", dir)
       .option("startingTimestamp", times(1)).load()
       .writeStream.foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
