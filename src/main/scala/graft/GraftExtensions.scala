@@ -75,7 +75,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // The builder returns the as-of read's LOGICAL PLAN — Catalyst
     // analyzes and optimizes it like any subquery (filters still push
     // into the underlying parquet scans), and every layout guarantee
-    // (archive routing, tombstone masking, era-gated identity
+    // (log-resolved sources, tombstone masking, era-gated identity
     // resolution, below-horizon refusal) rides along because it IS the
     // same plan the Scala API builds.
     e.injectTableFunction((

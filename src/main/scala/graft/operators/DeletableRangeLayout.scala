@@ -25,9 +25,10 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   *  - `maskedRead` == the head `readAsOf` — the version-stamped mask
   *    the versioned layout's whole test surface already covers.
   *  - `compact(threshold)` == [[VersionedLayout.appendCompact]]: the
-  *    same per-pid crossing rule, with the pre-state ARCHIVED for
-  *    AS-OF instead of deleted (vacuum reclaims it), and one shared
-  *    crash-replay preamble instead of a private one.
+  *    same per-pid crossing rule, written copy-on-write — the survivors
+  *    land in new files the compaction's log entry names, the pre-state
+  *    files stay readable AS-OF until a vacuum drops them, and one
+  *    commit protocol covers every crash and race.
   *  - `tombstones` reports the OUTSTANDING mask — tombstone rows not
   *    yet physically reclaimed by a compaction at-or-after their
   *    version (the same liveness rule vacuum's tombstone GC applies) —
@@ -123,12 +124,13 @@ object DeletableRangeLayout {
     }
   }
 
-  /** The raw layout base (pid as the inferred partition column) — the
-    * UNMASKED read, correct only when no tombstones are outstanding;
-    * ordinary readers use [[maskedRead]]. Underscore-prefixed commit
-    * metadata (`_log`, `_tombs`, `_archive`) is invisible to the scan.
+  /** The raw layout base at the head (pid as the partition column) —
+    * the UNMASKED read, correct only when no tombstones are outstanding;
+    * ordinary readers use [[maskedRead]]. The base files come from the
+    * log ([[VersionedLayout.baseFiles]]), never a listing of the root:
+    * after a compaction the root's v0 `pid=` dirs are history.
     */
-  def data(s: SparkSession, dir: String): DataFrame = s.read.parquet(dir)
+  def data(s: SparkSession, dir: String): DataFrame = VersionedLayout.baseFiles(s, dir)
 
   /** The OUTSTANDING tombstone set: every committed delete's keys,
     * minus rows a compaction at-or-after their version physically
@@ -175,10 +177,10 @@ object DeletableRangeLayout {
     // session; a real delete pays this probe's cost inside its own
     // tombstone materialization anyway.
     if (maskedRead(s, dir).where(cond).isEmpty) return 0L
-    // The JVM lock serializes this process; withWriteRetry rebases a
+    // The JVM lock serializes this process; Cas.withRetry rebases a
     // lost race against a writer in ANOTHER process (appends are
     // multi-writer-safe — see VersionedLayout's concurrency scope).
-    val ver = VersionedLayout.withWriteRetry()(VersionedLayout.appendDelete(s, dir, cond))
+    val ver = Cas.withRetry()(VersionedLayout.appendDelete(s, dir, cond))
     VersionedLayout.tombstonesAt(s, dir, ver).count()
   }
 
@@ -199,10 +201,10 @@ object DeletableRangeLayout {
 
   /** Threshold-crossing compaction as one numbered commit
     * ([[VersionedLayout.appendCompact]]): rewrites exactly the pids
-    * whose outstanding deleted fraction reaches `threshold`, archiving
-    * the pre-state for AS-OF (vacuum reclaims it later) under the
-    * versioned layout's single crash-replay discipline. Returns the
-    * rewritten pids, ascending.
+    * whose outstanding deleted fraction reaches `threshold` into new
+    * files, leaving the pre-state readable AS-OF (vacuum reclaims it
+    * later) under the versioned layout's one commit protocol. Returns
+    * the rewritten pids, ascending.
     */
   def compact(s: SparkSession, dir: String, threshold: Double): Seq[Int] = lock.synchronized {
     // Replay hygiene (bounded pre-check, <= 32 rows): when no pid's

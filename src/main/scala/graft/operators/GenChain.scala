@@ -169,17 +169,10 @@ private[graft] object GenChain {
     head
   }
 
-  /** A lost generation compare-and-swap: the atomic-rename publish found
-    * the target already committed by a concurrent writer. Marker type so
-    * [[withChainRetry]] can rebase exactly these (still an
-    * IllegalStateException for callers that match the loud-failure
-    * contract).
-    */
-  final class ChainCasLostException(msg: String, cause: Throwable)
-    extends IllegalStateException(msg, cause)
-
   /** Publish generation `gen` from a complete tmp: manifest last, then
-    * one atomic rename.
+    * one atomic rename. A generation another writer already published
+    * fails the rename: [[Cas.LostException]], which [[Cas.withRetry]]
+    * rebases.
     */
   def publish(dir: String, gen: Int, txn: Long, tmp: String): Unit = {
     Files.write(new java.io.File(tmp, "_graft_manifest.json").toPath,
@@ -189,7 +182,7 @@ private[graft] object GenChain {
     catch {
       case e: java.nio.file.FileSystemException =>
         org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
-        throw new ChainCasLostException(
+        throw new Cas.LostException(
           s"generation $gen of $dir was committed by another writer", e)
     }
   }
@@ -206,30 +199,6 @@ private[graft] object GenChain {
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
     Files.createDirectories(Paths.get(tmp))
     tmp
-  }
-
-  /** OPTIMISTIC multi-writer mutation for the chain stores: run
-    * `action`; if it loses the generation CAS to a concurrent writer,
-    * re-run it against the new head. The rebase is correct for the
-    * admit/retract family because each derives its artifacts
-    * deterministically from (head at entry, the input batch) — the
-    * re-run IS the same logical mutation serialized after the winner —
-    * and writer-unique tmp dirs keep the loser's bytes out of every
-    * read path. The exactly-once `*Once` entry points re-check their
-    * txn stamp inside each attempt, so a batch the WINNER committed is
-    * skipped, not duplicated. NOT for compact/vacuum: maintenance keeps
-    * the single-writer contract (as [[VersionedLayout.withWriteRetry]]
-    * documents for the layout's OPTIMIZE family).
-    */
-  def withChainRetry[T](attempts: Int = 5)(action: => T): T = {
-    var last: Throwable = null
-    (1 to attempts).foreach { _ =>
-      try return action
-      catch { case e: ChainCasLostException => last = e }
-    }
-    throw new IllegalStateException(
-      s"lost the generation race $attempts times — livelocked against concurrent writers",
-      last)
   }
 
   /** Drop generations BELOW `keepFrom` (caller asserts `keepFrom` is a

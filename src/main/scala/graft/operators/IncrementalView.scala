@@ -36,7 +36,7 @@ object IncrementalView {
     * instead of one as-of subtree per version (the round-13 profile:
     * the union-of-readAsOf spelling scanned the base five times and
     * re-ran a tombstone anti-join per version). Every logical row is
-    * read ONCE (the v0 base through normal archive routing, plus each
+    * read ONCE (the v0 base through normal source resolution, plus each
     * insert/upsert segment) and tagged with its BIRTH version; its
     * DEATH is the first tombstone version above its birth (the
     * version-stamp rule), resolved by one broadcast join against the

@@ -57,13 +57,13 @@ object IndexStore {
       val tmp = GenChain.freshTmp(store, 0)
       write(df, s"$tmp/base/0")
       try GenChain.publish(store, 0, -1L, tmp)
-      catch { case _: GenChain.ChainCasLostException => () } // another writer's v0
+      catch { case _: Cas.LostException => () } // another writer's v0
     }
 
   /** Append one ingest batch's index as the next generation; a lost
     * publish race rebases onto the winner's head.
     */
-  def appendDelta(df: DataFrame, store: String): String = GenChain.withChainRetry() {
+  def appendDelta(df: DataFrame, store: String): String = Cas.withRetry() {
     val gen = head(store)
     val tmp = GenChain.freshTmp(store, gen + 1)
     val seg = s"delta/${ordinal(store, gen) + 1}"

@@ -227,16 +227,16 @@ object IvfIndexStore {
   /** Exactly-once admit/retract for streaming ingest (txn-stamp replay
     * dedupe, the [[LshIndexStore.admitOnce]] contract). Multi-writer
     * safe: a lost generation CAS rebases via
-    * [[GenChain.withChainRetry]]; the txn re-check inside each attempt
+    * [[Cas.withRetry]]; the txn re-check inside each attempt
     * keeps a batch the winner committed from duplicating.
     */
   def admitOnce(s: SparkSession, dir: String, deltaAsg: DataFrame, txn: Long): Int =
-    GenChain.withChainRetry() {
+    Cas.withRetry() {
       GenChain.committedGen(dir, txn).getOrElse(admit(s, dir, deltaAsg, txn))
     }
 
   def retractOnce(s: SparkSession, dir: String, vecIds: DataFrame, txn: Long): Int =
-    GenChain.withChainRetry() {
+    Cas.withRetry() {
       GenChain.committedGen(dir, txn).getOrElse(retract(s, dir, vecIds, txn))
     }
 

@@ -31,7 +31,10 @@ import org.apache.spark.sql.functions._
   *
   * Commit protocol: each task writes a letter to a task-attempt-private
   * temp file (`.tmp-<letter>-<taskAttemptId>`) in UTF-8 and ATOMICALLY
-  * renames it over `<letter>.txt` once the letter is written.
+  * renames it over `<letter>.txt` once the letter is written — a letter
+  * with no words too, whose task writes its empty file the same way.
+  * Nothing touches a letter file before its task commits, so a failed
+  * job leaves an earlier complete output as it was.
   * Readers therefore never observe a partial file, a retried task simply
   * re-renames a complete file over the previous one, and two concurrent
   * speculative attempts cannot interleave — each renames its own complete
@@ -53,9 +56,6 @@ object LetterSink {
     */
   def write(index: DataFrame, outDir: String): Unit = {
     Files.createDirectories(Paths.get(outDir))
-    ('a' to 'z').foreach { c =>
-      Files.write(Paths.get(outDir, s"$c.txt"), Array.emptyByteArray)
-    }
     index
       .select(col("word"), col("file_ids").cast("array<int>"))
       .repartitionById(26, letterIndex(col("word")))
@@ -107,13 +107,15 @@ object LetterSink {
     if (byFreq != 0) byFreq else a.getKey.compareTo(b.getKey)
   }
 
-  /** One letter's (word, file_ids) rows -> that letter's file. */
-  private def writeLetter(rows: Iterator[(String, Array[Int])], outDir: String): Unit = if (rows.hasNext) {
-    val attempt = Option(TaskContext.get()).map(_.taskAttemptId()).getOrElse(0L)
+  /** One letter's (word, file_ids) rows -> that letter's file. Reduce
+    * partition i holds exactly the letter `'a' + i`, possibly no rows.
+    */
+  private def writeLetter(rows: Iterator[(String, Array[Int])], outDir: String): Unit = {
+    val ctx = TaskContext.get()
+    val attempt = ctx.taskAttemptId()
+    val letter = ('a' + ctx.partitionId()).toChar
     val words = new java.util.HashMap[String, Ids]()
-    val buffered = rows.buffered
-    val letter = buffered.head._1.charAt(0)
-    buffered.foreach { case (word, fileIds) =>
+    rows.foreach { case (word, fileIds) =>
       require(word.charAt(0) == letter, s"letter task '$letter' got the word '$word'")
       var ids = words.get(word)
       if (ids == null) { ids = new Ids; words.put(word, ids) }

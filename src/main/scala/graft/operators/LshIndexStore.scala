@@ -36,7 +36,7 @@ import java.nio.charset.StandardCharsets
   * q152 discipline for the retrieval index), after which reads are
   * single-source again. Admits chain from wherever the head is.
   *
-  * Commit protocol (single writer, the [[VersionedLayout]] discipline):
+  * Commit protocol (the [[GenChain]] one):
   * a generation is built complete under a dot-prefixed tmp dir — the
   * manifest JSON written LAST inside it — then atomically renamed to
   * `v<N>`, so readers only ever see complete generations and a crashed
@@ -254,7 +254,7 @@ object LshIndexStore {
   }
 
   /** Publish generation `gen` from a complete tmp: manifest last, then
-    * one atomic rename — a lost single-writer race fails loudly rather
+    * one atomic rename — a lost publish race fails loudly rather
     * than clobbering the committed generation (protocol in [[GenChain]]).
     */
   private[graft] def publish(dir: String, gen: Int, txn: Long, tmp: String): Unit =
@@ -313,19 +313,19 @@ object LshIndexStore {
     * generation's manifest already records `txn` (the replayed
     * micro-batch of a restarted stream), else admit it. Multi-writer
     * safe: a lost generation CAS rebases via
-    * [[GenChain.withChainRetry]], and the txn re-check inside each
+    * [[Cas.withRetry]], and the txn re-check inside each
     * attempt keeps a batch the winner committed from duplicating.
     */
   def admitOnce(s: SparkSession, dir: String, deltaBands: DataFrame, txn: Long,
       maxBucket: Int = Dedup.defaultMaxBucket): Int =
-    GenChain.withChainRetry() {
+    Cas.withRetry() {
       committedGen(dir, txn).getOrElse(admit(s, dir, deltaBands, maxBucket, txn))
     }
 
   /** Exactly-once retract (same txn-stamp contract as [[admitOnce]]). */
   def retractOnce(s: SparkSession, dir: String, docIds: DataFrame, txn: Long,
       maxBucket: Int = Dedup.defaultMaxBucket): Int =
-    GenChain.withChainRetry() {
+    Cas.withRetry() {
       committedGen(dir, txn).getOrElse(retract(s, dir, docIds, maxBucket, txn))
     }
 
@@ -335,7 +335,7 @@ object LshIndexStore {
     */
   def retractBandsOnce(s: SparkSession, dir: String, removedBands: DataFrame, txn: Long,
       maxBucket: Int = Dedup.defaultMaxBucket): Int =
-    GenChain.withChainRetry() {
+    Cas.withRetry() {
       committedGen(dir, txn).getOrElse(retractBands(s, dir, removedBands, maxBucket, txn))
     }
 

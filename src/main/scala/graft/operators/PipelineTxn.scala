@@ -153,7 +153,7 @@ object PipelineTxn {
     val stamp = ingestStamp(txn)
     val crash = crasher(failAfter)
     val dv = crash {
-      VersionedLayout.withWriteRetry() {
+      Cas.withRetry() {
         VersionedLayout.appendInsertOnce(s, p.docs, docRows, stamp)
       }
     }
@@ -164,7 +164,7 @@ object PipelineTxn {
         bandRowsOf(VersionedLayout.insertsAt(s, p.docs, dv)), stamp)
     }
     val ev = crash {
-      VersionedLayout.withWriteRetry() {
+      Cas.withRetry() {
         VersionedLayout.appendInsertOnce(s, p.emb, embRows, stamp)
       }
     }
@@ -225,7 +225,7 @@ object PipelineTxn {
     val docKeys = keys("docids", "doc_id")
     val vecKeys = keys("vecids", "vec_id")
     val dv = crash {
-      VersionedLayout.withWriteRetry() {
+      Cas.withRetry() {
         VersionedLayout.appendDeleteKeysOnce(s, p.docs, docKeys, stamp)
       }
     }
@@ -287,7 +287,7 @@ object PipelineTxn {
       }
     }
     val ev = crash {
-      VersionedLayout.withWriteRetry() {
+      Cas.withRetry() {
         VersionedLayout.appendDeleteKeysOnce(s, p.emb, vecKeys, stamp)
       }
     }
@@ -326,11 +326,13 @@ object PipelineTxn {
     * restore stamps, so a crash anywhere is recovered by re-running the
     * transaction, exactly like ingest and erase.
     *
-    * SINGLE-WRITER CONTRACT (the maintenance family's): quiesce the
-    * pipeline's writers while restoring. A concurrent ingest between a
-    * crash and its resume is the erase-conflict class of hazard; the
-    * restore makes no attempt to repair it — it is an operator-invoked
-    * rollback, not a steady-state mutation.
+    * Each step commits through [[Cas.withRetry]], so a racing commit on
+    * one store rebases that step. The transaction as a whole is NOT
+    * isolated from concurrent ingest: quiesce the pipeline's writers
+    * while restoring. A concurrent ingest between a crash and its resume
+    * is the erase-conflict class of hazard; the restore makes no attempt
+    * to repair it — it is an operator-invoked rollback, not a
+    * steady-state mutation.
     */
   def restore(s: SparkSession, p: PipelineStores, docVersion: Int,
       embVersion: Int, txn: Long): Map[String, Int] =
@@ -341,7 +343,7 @@ object PipelineTxn {
     val (sA, sB) = restoreStamps(txn)
     val crash = crasher(failAfter)
     val dv = crash {
-      VersionedLayout.withWriteRetry() {
+      Cas.withRetry() {
         VersionedLayout.restoreOnce(s, p.docs, docVersion, sA)
       }
     }
@@ -371,7 +373,7 @@ object PipelineTxn {
         bandRowsOf(VersionedLayout.insertsAt(s, p.docs, dv)), sB)
     }
     val ev = crash {
-      VersionedLayout.withWriteRetry() {
+      Cas.withRetry() {
         VersionedLayout.restoreOnce(s, p.emb, embVersion, sA)
       }
     }

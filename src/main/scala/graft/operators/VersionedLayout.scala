@@ -12,28 +12,34 @@ import java.nio.charset.StandardCharsets
   * reader can ask for the table AS OF any retained version, INCLUDING
   * versions older than a compaction that has since rewritten the files.
   *
-  * Model (a table-format commit log, re-expressed on plain parquet):
+  * Model (a table-format commit log, re-expressed on plain parquet).
+  * Every data directory is written once, under a name no reader
+  * resolves until the log entry that names it commits, and is never
+  * renamed or rewritten afterwards — only a [[vacuum]] deletes it, once
+  * no retained version names it:
   *
   *  - `_log/v<N>.json` — one tiny JSON file per committed version;
   *    `N = 0` is the base write. The log entry is written LAST, after
   *    every artifact of its action is durable, so `max(log)` defines
   *    the committed state and a crash mid-action leaves artifacts
-  *    without a log entry — invisible to readers, re-done idempotently
-  *    by the retried action (the delete recomputes the same tombstone
-  *    set; the compact re-archives and re-writes the same survivors).
-  *  - `_tombs/v<N>/` — the tombstone keys added by delete-version N.
-  *    The AS-OF mask is the UNION of all tombstone versions <= v: stale
-  *    tombstones over already-compacted files anti-join nothing
+  *    without a log entry — invisible to readers, swept after a lease.
+  *  - `pid=P/` — the v0 base write, one dir per range partition.
+  *  - `_inserts/v<N>-<tag>/` — the rows insert/upsert version N added.
+  *  - `_tombs/v<N>-<tag>/` — the tombstone keys added by delete-version
+  *    N. The AS-OF mask is the UNION of all tombstone versions <= v:
+  *    stale tombstones over already-compacted files anti-join nothing
   *    (masking idempotence, the q151/q157 argument), so the mask needs
   *    no per-version reconciliation with compaction.
-  *  - `_archive/v<N>/pid=P/` — compact-version N parks each pid
-  *    directory it rewrites BEFORE swapping in the survivors, so the
-  *    bytes backing every older version remain addressable. AS OF v
-  *    reads pid P from the archive of the SMALLEST compact version
-  *    c > v that rewrote P (the files as they stood before that
-  *    rewrite), else from the live directory.
-  *  - `vacuum(keepFrom)` — deletes archives of compact versions
-  *    <= keepFrom and logs the new horizon; AS-OF below the horizon
+  *  - `_seg/c<N>-<tag>/pid=P/` — compaction N's output: the survivors
+  *    of the pids a minor compact rewrote, or a major fold's whole new
+  *    base. The `_` prefix hides `_seg`, like `_log`/`_tombs`, from
+  *    root scans. AS OF v, pid P reads from the newest compaction <= v
+  *    that rewrote or folded it, else from the v0 `pid=P` dir — pure log
+  *    resolution ([[baseSources]]), so old versions keep reading the
+  *    files they always read, the way Delta Lake's OPTIMIZE commits
+  *    add/remove actions instead of moving files.
+  *  - `vacuum(keepFrom)` — deletes the data dirs that no version >=
+  *    keepFrom names and logs the new horizon; AS-OF below the horizon
   *    fails EXPLICITLY (never silently serves post-compact bytes for a
   *    pre-compact version). It also sweeps lost-race orphan artifact
   *    dirs past an mtime lease.
@@ -60,28 +66,24 @@ import java.nio.charset.StandardCharsets
   *
   * At 100 TB the points are: the log is O(versions) metadata, AS-OF
   * planning touches only the bounded pid/version maps (no data pass),
-  * old versions cost only the archived bytes of pids that compaction
+  * old versions cost only the superseded bytes of pids that compaction
   * actually rewrote (not table copies), and vacuum reclaims exactly
   * those.
   *
-  * Concurrency scope: the APPEND family (insert/delete/upsert) is
-  * multi-writer under optimistic concurrency — artifacts land in
+  * Concurrency: ONE protocol for every mutation. Artifacts land in
   * WRITER-TAGGED directories (the tag rides the committed entry, so
   * readers only ever resolve the winner's artifacts), the atomic
   * hard-link publish of the numbered log entry is the compare-and-swap,
-  * and [[withWriteRetry]] rebases a lost race by re-running the action
+  * and [[Cas.withRetry]] rebases a lost race by re-running the action
   * against the new head (deterministic from the as-of state, so the
-  * rebase IS the mutation serialized after the winner). The MAINTENANCE
-  * family (compact/majorCompact/vacuum/checkpoint) keeps a single-writer
-  * contract: it mutates live base directories before its commit, the
-  * same reason table formats serialize OPTIMIZE. A lost race always
-  * surfaces loudly (`FileAlreadyExistsException`-caused
-  * `IllegalStateException`, proven in StorageSpec), never as silent
-  * corruption of committed state. Readers are safe at every COMMITTED
-  * state (commit-last protocol); an in-flight compact swap is repaired
-  * by the retrying writer. Registry-surfaced by q159_layout_time_travel (one aggregate
-  * per version, all against one DuckDB oracle); archive/vacuum/replay
-  * invariants proven in StorageSpec.
+  * rebase IS the mutation serialized after the winner). Appends are
+  * retried by their callers; [[appendCompact]], [[majorCompact]],
+  * [[repartitionScheme]] and [[vacuum]] retry themselves. Readers are
+  * safe at every COMMITTED state (commit-last protocol), and a reader
+  * of version v is unaffected by any later commit short of a vacuum
+  * past v. Registry-surfaced by q159_layout_time_travel (one aggregate
+  * per version, all against one DuckDB oracle); resolution, vacuum and
+  * race invariants proven in StorageSpec.
   *
   * Reference scope note: the reference engine (tema1a) has no storage
   * layer at all — this extends the training-data-pipeline story
@@ -665,24 +667,99 @@ object VersionedLayout {
       if (legacyPrimary.contains(phys)) e.stats else Nil)
 
   private def logDir(dir: String) = new java.io.File(dir, "_log")
-  private def tombDir(dir: String, ver: Int, tag: String = "") =
-    s"$dir/_tombs/v$ver" + (if (tag.isEmpty) "" else s"-$tag")
-  private def archiveDir(dir: String, ver: Int) = s"$dir/_archive/v$ver"
+  private def tagged(path: String, tag: String) = path + (if (tag.isEmpty) "" else s"-$tag")
+  private def tombDir(dir: String, ver: Int, tag: String) = tagged(s"$dir/_tombs/v$ver", tag)
 
-  /** The tombstone dir version `ver` COMMITTED — resolved through the
-    * entry's writer tag, so a lost-race competitor's same-version
-    * leftovers are never read.
+  /** The tombstone dir version `ver` COMMITTED, as readers see it now:
+    * the newest vacuum whose tombstone GC republished it names the copy
+    * (`_tombs/v<ver>-g<vacuum>-<tag>`, see [[vacuum]]), else the
+    * entry's own writer-tagged dir — a lost-race competitor's
+    * same-version leftovers are never read.
     */
   private def tombDirOf(dir: String, entries: Seq[LogEntry], ver: Int): String =
-    tombDir(dir, ver, entries.find(_.version == ver).map(_.tag).getOrElse(""))
+    entries.findLast(e => e.action == "vacuum" && e.tpids.contains(ver)) match {
+      case Some(g) => tagged(s"$dir/_tombs/v$ver-g${g.version}", g.tag)
+      case None => tombDir(dir, ver, entries.find(_.version == ver).map(_.tag).getOrElse(""))
+    }
+
+  private def isCompaction(e: LogEntry) = e.action == "compact" || e.action == "majorcompact"
+  private def isSegment(e: LogEntry) = e.action == "insert" || e.action == "upsert"
+
+  /** The root whose `pid=P/` dirs hold the base files entry `e` wrote:
+    * the table dir for the v0 write, else the compaction's own
+    * writer-tagged `_seg/c<N>-<tag>/`.
+    */
+  private def rootOf(dir: String, e: LogEntry): String =
+    if (e.action == "write") dir else tagged(s"$dir/_seg/c${e.version}", e.tag)
+
+  private def pidDirsUnder(root: String): Seq[Int] =
+    Option(new java.io.File(root).listFiles()).getOrElse(Array.empty)
+      .filter(f => f.isDirectory && f.getName.startsWith("pid="))
+      .map(_.getName.stripPrefix("pid=").toInt).sorted.toSeq
+
+  /** The base pids entry `e` wrote: v0's recorded domain, the pids a
+    * minor compact rewrote, or a fold's whole output — listed, because a
+    * scheme change lands pids the pre-fold set lacks (a committed root
+    * is immutable; only a vacuum thins it).
+    */
+  private def pidsWritten(dir: String, e: LogEntry): Seq[Int] = e.action match {
+    case "write" | "compact" => e.pids
+    case "majorcompact" => pidDirsUnder(rootOf(dir, e))
+    case _ => Nil
+  }
+
+  /** Every data dir entry `e` wrote: its base pid dirs or its segment. */
+  private def dirsWritten(dir: String, e: LogEntry): Seq[String] =
+    if (isSegment(e)) Seq(insertDir(dir, e.version, e.tag))
+    else pidsWritten(dir, e).map(p => s"${rootOf(dir, e)}/pid=$p")
+
+  /** pid -> the entry whose files serve it AS OF `v`: the newest
+    * compaction <= v that rewrote or folded it, else the v0 write. Pure
+    * log resolution — no directory is consulted beyond a fold's
+    * committed output.
+    */
+  private def baseSources(dir: String, entries: Seq[LogEntry], v: Int): Map[Int, LogEntry] = {
+    val m = scala.collection.mutable.Map.empty[Int, LogEntry]
+    entries.iterator.filter(_.version <= v).foreach { e =>
+      if (e.action == "majorcompact") m.clear()
+      pidsWritten(dir, e).foreach(p => m(p) = e)
+    }
+    m.toMap
+  }
+
+  /** The insert segments version `v` reads: those after its last fold. */
+  private def segmentsAt(entries: Seq[LogEntry], v: Int): Seq[LogEntry] = {
+    val m = majorAtOrBefore(entries, v)
+    entries.filter(e => isSegment(e) && e.version > m && e.version <= v)
+  }
+
+  /** The data dirs (base pid dirs and segments) version `v` reads. */
+  private def dirsAt(dir: String, entries: Seq[LogEntry], v: Int): Set[String] =
+    (baseSources(dir, entries, v).map { case (p, e) => s"${rootOf(dir, e)}/pid=$p" } ++
+      segmentsAt(entries, v).map(e => insertDir(dir, e.version, e.tag))).toSet
+
+  /** The data dirs some version in [lo, hi] reads: those version `lo`
+    * reads plus everything the entries in (lo, hi] wrote (a dir is read
+    * from the version that writes it until one supersedes it).
+    */
+  private def dirsIn(dir: String, entries: Seq[LogEntry], lo: Int, hi: Int): Set[String] =
+    dirsAt(dir, entries, lo) ++
+      entries.filter(e => e.version > lo && e.version <= hi).flatMap(dirsWritten(dir, _))
+
+  /** The schema version of the bytes entry `e` wrote: its own for a
+    * write or fold; a minor compact copies rows raw, so its bytes carry
+    * the last write or fold before it.
+    */
+  private def schemaVersionOf(entries: Seq[LogEntry], e: LogEntry): Int =
+    if (e.action == "compact") lastSchemaWriterBefore(entries, e.version) else e.version
 
   /** Parsed commit-log entry. `pids` is non-empty only for compactions
     * (the rewritten set); `horizon` only for vacuums (first retained
     * compact version); `txn` is an idempotence stamp for streaming
     * ingest (-1 when the commit is not transactional); `tag` is the
     * WRITER-UNIQUE suffix of this version's artifact directories (see
-    * [[withWriteRetry]] — empty for maintenance commits and layouts
-    * written before tagging); `colName`/`colType` carry a schema
+    * [[Cas.withRetry]] — empty for commits that write no artifact and
+    * layouts written before tagging); `colName`/`colType` carry a schema
     * evolution commit — [[addColumn]] (name/type), [[dropColumn]]
     * (name), or [[renameColumn]] (old name / NEW NAME — `colType` is
     * overloaded as the rename target, not a type); empty otherwise.
@@ -725,7 +802,9 @@ object VersionedLayout {
       // touched partitions instead of scanning the whole table per
       // delete version. A separate field, NOT `pids`: `pids` sizes are
       // a query OUTPUT (describeHistory n_pids) pinned by the oracle.
-      // Nil = unknown (pre-r18 entry) = unpruned, always sound.
+      // Nil = unknown (pre-r18 entry) = unpruned, always sound. On a
+      // vacuum entry: the tombstone versions its GC republished (see
+      // [[tombDirOf]]).
       tpids: Seq[Int] = Nil)
 
   /** Artifact-directory suffix unique to this writer (process+thread):
@@ -828,7 +907,8 @@ object VersionedLayout {
     * overwrite the winner's committed entry. Hard-link creation is the
     * atomic primitive that refuses an existing target
     * (`FileAlreadyExistsException`), which is exactly the
-    * compare-and-swap a table-format commit service performs.
+    * compare-and-swap a table-format commit service performs. A lost
+    * race throws [[Cas.LostException]], which [[Cas.withRetry]] rebases.
     */
   private[graft] def commit(dir: String, e: LogEntry): Unit = {
     logDir(dir).mkdirs()
@@ -836,10 +916,9 @@ object VersionedLayout {
     // the existence CAS below can no longer catch a writer re-using a
     // covered version number — keep that failure LOUD here.
     val ckpt = checkpointedVersion(dir)
-    if (e.version <= ckpt) throw new IllegalStateException(
+    if (e.version <= ckpt) throw new Cas.LostException(
       s"version ${e.version} of $dir is already inside checkpoint v$ckpt — " +
         "this mutation raced a checkpointed head and published nothing",
-      // cause marks this as a version-CAS loss so withWriteRetry rebases it
       new java.nio.file.FileAlreadyExistsException(entryFile(dir, e.version).toString))
     // Stamp the commit time unless the caller carries its own (tests
     // inject explicit stamps; re-rendered entries — checkpoint
@@ -858,7 +937,7 @@ object VersionedLayout {
     try Files.createLink(entryFile(dir, e.version).toPath, tmp.toPath)
     catch {
       case ex: java.nio.file.FileAlreadyExistsException =>
-        throw new IllegalStateException(
+        throw new Cas.LostException(
           s"version ${e.version} of $dir was committed by another writer — " +
             "this mutation lost the race and published nothing", ex)
     } finally Files.deleteIfExists(tmp.toPath)
@@ -873,10 +952,9 @@ object VersionedLayout {
     if (e.version <= ckptAfter &&
         !log(dir).find(_.version == e.version).exists(se => renderEntry(se) == body)) {
       Files.deleteIfExists(entryFile(dir, e.version).toPath)
-      throw new IllegalStateException(
+      throw new Cas.LostException(
         s"version ${e.version} of $dir was committed by another writer and " +
           "checkpointed before this link landed — lost the race, published nothing",
-        // cause marks this as a version-CAS loss so withWriteRetry rebases it
         new java.nio.file.FileAlreadyExistsException(entryFile(dir, e.version).toString))
     }
   }
@@ -1056,7 +1134,7 @@ object VersionedLayout {
     * [[versionAtTimestamp]]'s resolution. The reproducibility story for
     * consumers that pin a TIME, not a version ("train on the corpus as
     * of last midnight"): resolution is pure log metadata, and the read
-    * itself is the ordinary as-of read with all its archive routing.
+    * itself is the ordinary as-of read with all its source resolution.
     */
   def readAsOfTimestamp(s: SparkSession, dir: String, tsMs: Long): DataFrame =
     readAsOf(s, dir, versionAtTimestamp(dir, tsMs))
@@ -1106,10 +1184,10 @@ object VersionedLayout {
   /** DESCRIBE DETAIL — the table-level one-row summary beside
     * [[describeHistory]]'s per-commit frame: head version, vacuum
     * horizon, checkpoint coverage, commit counts, the declared key /
-    * stats / Bloom columns, live-source shape (base pid dirs, live
-    * insert segments above the last major fold, archive generations),
-    * and cumulative row masses. METADATA-ONLY like describeHistory —
-    * parsed log + the meta file + directory listings; the frame is a
+    * stats / Bloom columns, head-source shape (base pids, insert
+    * segments above the last major fold, compactions), and cumulative
+    * row masses. METADATA-ONLY like describeHistory — parsed log + the
+    * meta file + the head fold's pid listing; the frame is a
     * local Seq (zero Spark jobs), what a catalog or dashboard polls
     * per table without costing the fleet a data pass.
     */
@@ -1123,17 +1201,15 @@ object VersionedLayout {
       "addcolumn", "dropcolumn", "renamecolumn", "widencolumn",
       "addfield", "dropfield", "renamefield", "widenfield")
     val dataMass = entries.filterNot(e => zeroRowActions(e.action))
-    val m = majorAtOrBefore(entries, head)
     Seq((
       head.toLong, horizon(dir).toLong, checkpointedVersion(dir).toLong,
       entries.size.toLong,
       keyColsOf(dir).mkString(","),
       statsColsOf(dir).mkString(","),
       bloomColsOf(dir).mkString(","),
-      basePidDirs(dir).size.toLong,
-      entries.count(e => (e.action == "insert" || e.action == "upsert")
-        && e.version > m).toLong,
-      entries.count(e => e.action == "compact" || e.action == "majorcompact").toLong,
+      baseSources(dir, entries, head).size.toLong,
+      segmentsAt(entries, head).size.toLong,
+      entries.count(isCompaction).toLong,
       dataMass.map(e => math.max(e.rowsW, 0L)).sum,
       dataMass.map(e => math.max(e.rowsD, 0L)).sum))
       .toDF("head_version", "vacuum_horizon", "checkpointed_version",
@@ -1213,31 +1289,26 @@ object VersionedLayout {
            else "")
         + s""","types":{$types}""" + "}")
         .getBytes(StandardCharsets.UTF_8))
-    // Stats come from reading BACK the written bytes (a pruned scan —
-    // cheaper than recomputing or caching the input), which also makes
-    // them bounds over exactly what landed.
+    // The v0 writer lists the pid dirs it just wrote: the one moment a
+    // root listing is the committed state. Stats come from reading BACK
+    // the written bytes (a pruned scan — cheaper than recomputing or
+    // caching the input), which also makes them bounds over exactly
+    // what landed.
+    val pids = pidDirsUnder(dir)
+    lazy val written = s.read.option("basePath", dir).parquet(pids.map(p => s"$dir/pid=$p"): _*)
     val (stats, statsM) =
-      if ((allStats.isEmpty && bloomCols.isEmpty) || basePidDirs(dir).isEmpty)
+      if ((allStats.isEmpty && bloomCols.isEmpty) || pids.isEmpty)
         (Nil, Map.empty[String, Seq[(Int, Long, Long)]])
-      else recordStats(dir, 0, "", s.read.option("basePath", dir)
-        .parquet(basePidDirs(dir).map(p => s"$dir/pid=$p"): _*))
+      else recordStats(dir, 0, "", written)
     // Commit-metadata row count (parquet footer metadata, no column
     // bytes read) — what DESCRIBE HISTORY serves without a data pass.
-    val nBase =
-      if (basePidDirs(dir).isEmpty) 0L
-      else s.read.option("basePath", dir)
-        .parquet(basePidDirs(dir).map(p => s"$dir/pid=$p"): _*).count()
+    val nBase = if (pids.isEmpty) 0L else written.count()
     // The v0 entry records the base pid DOMAIN — the closed set of
     // partitions every later segment must stay inside (see
-    // [[appendInsert]]); AS-OF correctness below a fold depends on it.
-    commit(dir, LogEntry(0, "write", basePidDirs(dir), 0, stats = stats,
+    // [[requireInDomain]]) — and the pid dirs AS-OF reads resolve.
+    commit(dir, LogEntry(0, "write", pids, 0, stats = stats,
       rowsW = nBase, rowsD = 0L, statsM = statsM))
   }
-
-  private def basePidDirs(dir: String): Seq[Int] =
-    Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("pid="))
-      .map(_.getName.stripPrefix("pid=").toInt).sorted.toSeq
 
   /** The closed pid domain committed at v0 (empty set = legacy layout
     * written before the domain was recorded; validation is skipped).
@@ -1250,14 +1321,6 @@ object VersionedLayout {
       .map(_.colType.split(",").map(_.trim.toInt).toSet)
       .getOrElse(entries.find(_.version == 0).map(_.pids.toSet).getOrElse(Set.empty))
 
-  /** Reject segment rows whose pid falls outside the base domain. A
-    * pid that exists ONLY because segments introduced it has no
-    * pre-fold base state, so after a major fold lands it live there is
-    * no archive distinguishing "pid did not exist at v" from "pid was
-    * never rewritten" — AS-OF below the fold would serve post-fold
-    * bytes. Closing the domain at v0 makes that state unreachable.
-    * Cost: one distinct over the (bounded) segment pid column.
-    */
   /** The version at which `name` LAST VACATED the schema (dropped, or
     * renamed away), or None when the name is live or evolution never
     * touched it: the last liveness-affecting event wins — add and
@@ -1273,6 +1336,11 @@ object VersionedLayout {
     evs.sortBy(_._1).lastOption.collect { case (ver, false) => ver }
   }
 
+  /** Reject segment rows whose pid falls outside the current scheme's
+    * closed domain ([[pidDomain]]): a segment must land where a later
+    * fold's placement and the stats/Bloom pruning keyed by pid expect
+    * it. Cost: one distinct over the (bounded) segment pid column.
+    */
   private def requireInDomain(dir: String, rows: DataFrame): Unit = {
     val entries = log(dir)
     // A name currently RENAMED AWAY cannot ride a new segment: writers
@@ -1297,6 +1365,23 @@ object VersionedLayout {
     }
   }
 
+  /** The one tombstone writer: version `ver`'s tombstone dir holds
+    * `rows`' pid and key columns, and the row count plus the touched-pid
+    * set (the entry's `rowsD`/`tpids`) are OBSERVED during that write —
+    * one job, no read-back of the written dir. `single` coalesces a
+    * bounded matched set into one file; a data-scale pre-image
+    * ([[appendReplace]]) stays sharded.
+    */
+  private def writeTombs(dir: String, ver: Int, tag: String, rows: DataFrame,
+      single: Boolean = true): (Long, Seq[Int]) = {
+    val obs = org.apache.spark.sql.Observation()
+    val t = rows.select(col("pid").cast("int").as("pid") +: keyColsOf(dir).map(col): _*)
+      .observe(obs, count(lit(1)).as("n"), collect_set(col("pid")).as("pids"))
+    (if (single) t.coalesce(1) else t).write.mode("overwrite").parquet(tombDir(dir, ver, tag))
+    val m = obs.get
+    (m("n").asInstanceOf[Long], m("pids").asInstanceOf[scala.collection.Seq[Int]].toSeq.sorted)
+  }
+
   /** DELETE as version `currentVersion + 1`: materialize the matching
     * keys of the CURRENT masked view into this version's tombstone dir,
     * then commit. Idempotent replay: if the tombstone dir survives a
@@ -1307,16 +1392,9 @@ object VersionedLayout {
       txn: Long = -1L): Int = {
     val ver = currentVersion(dir) + 1
     val tag = writerTag()
-    readAsOf(s, dir, ver - 1).where(cond)
-      .select(col("pid").cast("int").as("pid") +: keyColsOf(dir).map(col): _*)
-      .coalesce(1).write.mode("overwrite").parquet(tombDir(dir, ver, tag))
-    // One aggregate serves both the row count and the touched-pid set
-    // (same single job the count alone used to run).
-    val t = s.read.parquet(tombDir(dir, ver, tag))
-      .agg(count(lit(1)), collect_set(col("pid"))).first()
+    val (n, tpids) = writeTombs(dir, ver, tag, readAsOf(s, dir, ver - 1).where(cond))
     commit(dir, LogEntry(ver, "delete", Nil, 0, txn, tag,
-      rowsW = 0L, rowsD = t.getLong(0),
-      tpids = t.getSeq[Int](1).sorted))
+      rowsW = 0L, rowsD = n, tpids = tpids))
     ver
   }
 
@@ -1334,15 +1412,10 @@ object VersionedLayout {
     val ver = currentVersion(dir) + 1
     val tag = writerTag()
     val keyCols = keyColsOf(dir)
-    readAsOf(s, dir, ver - 1)
-      .join(keys.select(keyCols.map(col): _*), keyCols, "left_semi")
-      .select(col("pid").cast("int").as("pid") +: keyCols.map(col): _*)
-      .coalesce(1).write.mode("overwrite").parquet(tombDir(dir, ver, tag))
-    val t = s.read.parquet(tombDir(dir, ver, tag))
-      .agg(count(lit(1)), collect_set(col("pid"))).first()
+    val (n, tpids) = writeTombs(dir, ver, tag, readAsOf(s, dir, ver - 1)
+      .join(keys.select(keyCols.map(col): _*), keyCols, "left_semi"))
     commit(dir, LogEntry(ver, "delete", Nil, 0, txn, tag,
-      rowsW = 0L, rowsD = t.getLong(0),
-      tpids = t.getSeq[Int](1).sorted))
+      rowsW = 0L, rowsD = n, tpids = tpids))
     ver
   }
 
@@ -1356,11 +1429,10 @@ object VersionedLayout {
       case None => appendDeleteKeys(s, dir, keys, txn)
     }
 
-  private def insertDir(dir: String, ver: Int, tag: String = "") =
-    s"$dir/_inserts/v$ver" + (if (tag.isEmpty) "" else s"-$tag")
+  private def insertDir(dir: String, ver: Int, tag: String) = tagged(s"$dir/_inserts/v$ver", tag)
 
-  /** The insert-segment dir version `ver` committed LIVE (before any
-    * fold archived it) — resolved through the entry's writer tag.
+  /** The insert-segment dir version `ver` committed — resolved through
+    * the entry's writer tag.
     */
   private def insertDirOf(dir: String, entries: Seq[LogEntry], ver: Int): String =
     insertDir(dir, ver, entries.find(_.version == ver).map(_.tag).getOrElse(""))
@@ -1394,11 +1466,11 @@ object VersionedLayout {
     * version on, [[readAsOf]] serves the column — typed NULL for every
     * row written before the evolution, values for segments that carry
     * it — while reads BELOW this version serve the old schema exactly
-    * as committed (including from a post-fold archive). The next
+    * as committed (including from pre-fold files). The next
     * [[majorCompact]] materializes the column physically; until then
     * the pad is plan-time (`unionByName` null-fill), costing nothing.
     * Commit-only and deterministic, so it is append-family: safe under
-    * [[withWriteRetry]].
+    * [[Cas.withRetry]].
     */
   def addColumn(s: SparkSession, dir: String, name: String, sqlType: String): Int = {
     require(name.matches("[A-Za-z_][A-Za-z0-9_]*"),
@@ -1432,7 +1504,7 @@ object VersionedLayout {
   /** DROP COLUMN as version `currentVersion + 1` — the subtractive half
     * of schema evolution, METADATA-ONLY like [[addColumn]]: no data
     * file is touched. From this version on, [[readAsOf]] masks the
-    * column; reads BELOW it (including through fold archives) still
+    * column; reads BELOW it (including of pre-fold files) still
     * serve it exactly as committed, and the change feed spans the
     * evolution (each part carries its own version's schema). The next
     * [[majorCompact]] materializes the drop physically. A later
@@ -1441,7 +1513,7 @@ object VersionedLayout {
     * out by source version until a fold makes it physical. Row-identity
     * columns and `pid` cannot be dropped (tombstone keying and segment
     * routing depend on them). Commit-only and deterministic:
-    * append-family, safe under [[withWriteRetry]].
+    * append-family, safe under [[Cas.withRetry]].
     */
   def dropColumn(s: SparkSession, dir: String, name: String): Int = {
     val entries = log(dir)
@@ -1476,12 +1548,12 @@ object VersionedLayout {
     * narrow values coerce losslessly at plan time — Union's set-op
     * widening plus one explicit cast); reads BELOW this version still
     * serve the narrow type exactly as committed, including through a
-    * post-widen fold's archive. The change feed spans the widen at the
+    * post-widen fold's superseded files. The change feed spans the widen at the
     * superset (widened) type, like its null-pad across an add. The
     * next [[majorCompact]] materializes the wide type physically. Only
     * the [[widenChain]] pairs are admitted. Row-identity columns and
     * `pid` cannot widen (tombstone keying joins on them). Commit-only
-    * and deterministic: append-family, safe under [[withWriteRetry]].
+    * and deterministic: append-family, safe under [[Cas.withRetry]].
     */
   def widenColumn(s: SparkSession, dir: String, name: String, toType: String): Int = {
     require(toType.matches("[A-Za-z0-9_(), ]*"),
@@ -1507,10 +1579,10 @@ object VersionedLayout {
     * schema evolution, METADATA-ONLY like [[addColumn]]/[[dropColumn]]:
     * no data file is touched. From this version on, [[readAsOf]] serves
     * the column under `to` — values written under `from` (segments,
-    * pre-fold archives) read under the new name via a plan-time
+    * pre-fold files) read under the new name via a plan-time
     * coalesce of the two era names; reads BELOW this version still
-    * serve `from` exactly as committed, including through a post-rename
-    * fold's archive. The change feed spans the rename the same way it
+    * serve `from` exactly as committed, including the files a
+    * post-rename fold superseded. The change feed spans the rename the same way it
     * spans an add (each part carries its own version's schema,
     * null-filled to the superset). The next [[majorCompact]]
     * materializes the rename physically. COLUMN MAPPING BY SOURCE
@@ -1526,7 +1598,7 @@ object VersionedLayout {
     * per physical name.
     * Row-identity columns and `pid` cannot be renamed (tombstone keying
     * and segment routing depend on them). Commit-only and
-    * deterministic: append-family, safe under [[withWriteRetry]].
+    * deterministic: append-family, safe under [[Cas.withRetry]].
     *
     * The log entry reuses the [[LogEntry]] evolution fields: `colName`
     * is the old name, `colType` carries the NEW NAME (not a type).
@@ -1816,40 +1888,6 @@ object VersionedLayout {
       case None => appendInsert(s, dir, rows, txn)
     }
 
-  /** OPTIMISTIC multi-writer commit for the APPEND family (insert /
-    * delete / upsert / appendInsertOnce): run `action`; if it loses the
-    * version compare-and-swap to a concurrent writer, re-run it against
-    * the new head. The rebase is correct because (a) every append
-    * action derives its artifacts deterministically from the state AS
-    * OF its own commit point — re-running IS the same logical mutation
-    * serialized after the winner — and (b) concurrent writers preparing
-    * the same version number write WRITER-TAGGED artifact directories
-    * (the tag is recorded in the committed entry and used by every
-    * reader), so the loser's in-flight or leftover artifacts can never
-    * be read as, or overwrite, the winner's. This is a table format's
-    * optimistic concurrency control with blind-append semantics.
-    *
-    * NOT safe for the maintenance family (compact / majorCompact /
-    * vacuum / checkpoint): those mutate the live base directories
-    * before their commit, so a lost race leaves physical state a rebase
-    * cannot unwind — they keep the documented single-writer contract
-    * (serialize maintenance externally, as table formats serialize
-    * OPTIMIZE).
-    */
-  def withWriteRetry[T](attempts: Int = 5)(action: => T): T = {
-    var last: Throwable = null
-    (1 to attempts).foreach { _ =>
-      try return action
-      catch {
-        case e: IllegalStateException
-            if e.getCause.isInstanceOf[java.nio.file.FileAlreadyExistsException] =>
-          last = e
-      }
-    }
-    throw new IllegalStateException(
-      s"lost the commit race $attempts times — livelocked against concurrent writers", last)
-  }
-
   /** REPLACE the table's contents as ONE committed version — the
     * `INSERT OVERWRITE` / `df.write.mode("overwrite")` verb: tombstone
     * every live row of the current head AND insert `rows` as the new
@@ -1863,7 +1901,7 @@ object VersionedLayout {
     * whole pre-replace table, written SHARDED (no `coalesce(1)` — at
     * 100 TB the pre-image key set is data-scale, unlike the bounded
     * matched sets of upsert/merge). Deterministic from the as-of state
-    * + checkpointed input: append-family, safe under [[withWriteRetry]];
+    * + checkpointed input: append-family, safe under [[Cas.withRetry]];
     * `txn` stamps it for exactly-once replay ([[appendInsertOnce]]'s
     * contract, shared "upsert" namespace).
     */
@@ -1877,22 +1915,14 @@ object VersionedLayout {
     }
     val ver = currentVersion(dir) + 1
     val tag = writerTag()
-    val current = readAsOf(s, dir, ver - 1)
-    current
-      .select(col("pid").cast("int").as("pid") +: keyColsOf(dir).map(col): _*)
-      .write.mode("overwrite").parquet(tombDir(dir, ver, tag))
+    val (n, tpids) = writeTombs(dir, ver, tag, readAsOf(s, dir, ver - 1), single = false)
     val newRows = rows.localCheckpoint()
     requireInDomain(dir, newRows)
     newRows.write.mode("overwrite").parquet(insertDir(dir, ver, tag))
     val (st, stM) = recordStats(dir, ver, tag, newRows)
-    locally {
-      val t = s.read.parquet(tombDir(dir, ver, tag))
-        .agg(count(lit(1)), collect_set(col("pid"))).first()
-      commit(dir, LogEntry(ver, "upsert", Nil, 0, txn, tag,
-        stats = st, statsM = stM,
-        rowsW = newRows.count(), rowsD = t.getLong(0),
-        tpids = t.getSeq[Int](1).sorted))
-    }
+    commit(dir, LogEntry(ver, "upsert", Nil, 0, txn, tag,
+      stats = st, statsM = stM,
+      rowsW = newRows.count(), rowsD = n, tpids = tpids))
     ver
   }
 
@@ -1911,20 +1941,14 @@ object VersionedLayout {
     val ver = currentVersion(dir) + 1
     val tag = writerTag()
     val matched = readAsOf(s, dir, ver - 1).where(cond).localCheckpoint()
-    matched
-      .select(col("pid").cast("int").as("pid") +: keyColsOf(dir).map(col): _*)
-      .coalesce(1).write.mode("overwrite").parquet(tombDir(dir, ver, tag))
+    val (n, tpids) = writeTombs(dir, ver, tag, matched)
     val replacements = transform(matched).localCheckpoint()
     requireInDomain(dir, replacements)
     replacements.write.mode("overwrite").parquet(insertDir(dir, ver, tag))
     val (st, stM) = recordStats(dir, ver, tag, replacements)
-    // Count + touched-pid set in the one aggregate the count was
-    // (matched is checkpointed — this re-reads no base data).
-    val t = matched.agg(count(lit(1)), collect_set(col("pid").cast("int"))).first()
     commit(dir, LogEntry(ver, "upsert", Nil, 0, tag = tag,
       stats = st, statsM = stM,
-      rowsW = replacements.count(), rowsD = t.getLong(0),
-      tpids = t.getSeq[Int](1).sorted))
+      rowsW = replacements.count(), rowsD = n, tpids = tpids))
     ver
   }
 
@@ -1962,7 +1986,7 @@ object VersionedLayout {
     * match, anti and cardinality passes all see the same rows even if
     * the caller's frame is non-deterministic. Deterministic from the
     * as-of state + checkpointed source, so pre-commit crash replay is
-    * safe; append-family, safe under [[withWriteRetry]].
+    * safe; append-family, safe under [[Cas.withRetry]].
     *
     * At 100 TB: the join is target ⋈ source on the key columns — AQE
     * broadcasts a small source (the common CDC-apply case) and the
@@ -2058,10 +2082,9 @@ object VersionedLayout {
         !coalesce(bySourceDeleteCond.getOrElse(falseC), falseC)))
     // Tombstones: pre-images of EVERY mutating arm; untouched matches
     // (and untouched target-only rows) stay out — no event, no rewrite.
-    (Seq(delPart, updPart) ++ bsDelPart ++ bsUpdPart)
+    val (nDel, tpids) = writeTombs(dir, ver, tag, (Seq(delPart, updPart) ++ bsDelPart ++ bsUpdPart)
       .map(_.select(col("pid").cast("int").as("pid") +: keyCols.map(col): _*))
-      .reduce(_ unionByName _)
-      .coalesce(1).write.mode("overwrite").parquet(tombDir(dir, ver, tag))
+      .reduce(_ unionByName _))
     val updated = updPart.select(headCols.map(c =>
       updateSet.getOrElse(c, col(c)).as(c)): _*)
     val bsUpdated = bsUpdPart.map(_.select(headCols.map(c =>
@@ -2103,14 +2126,9 @@ object VersionedLayout {
     requireInDomain(dir, newRows)
     newRows.write.mode("overwrite").parquet(insertDir(dir, ver, tag))
     val (st, stM) = recordStats(dir, ver, tag, newRows)
-    locally {
-      val t = s.read.parquet(tombDir(dir, ver, tag))
-        .agg(count(lit(1)), collect_set(col("pid"))).first()
-      commit(dir, LogEntry(ver, "upsert", Nil, 0, txn, tag,
-        stats = st, statsM = stM,
-        rowsW = newRows.count(), rowsD = t.getLong(0),
-        tpids = t.getSeq[Int](1).sorted))
-    }
+    commit(dir, LogEntry(ver, "upsert", Nil, 0, txn, tag,
+      stats = st, statsM = stM,
+      rowsW = newRows.count(), rowsD = nDel, tpids = tpids))
     ver
   }
 
@@ -2169,7 +2187,7 @@ object VersionedLayout {
     * was born above `toVersion` restores as NULL (the state being
     * restored predates that incarnation; its retired predecessor's
     * values never resurface). Deterministic from the as-of state:
-    * append-family, safe under [[withWriteRetry]].
+    * append-family, safe under [[Cas.withRetry]].
     */
   def restore(s: SparkSession, dir: String, toVersion: Int): Int =
     restore(s, dir, toVersion, -1L)
@@ -2219,9 +2237,8 @@ object VersionedLayout {
     // would single-task this write — at that scale shard the key set
     // like the delete path instead (documented contract, not a latent
     // scale bug: the restore's whole design is O(changed keys)).
-    feed.select(col("pid").cast("int").as("pid") +: key.map(col): _*)
-      .distinct()
-      .coalesce(1).write.mode("overwrite").parquet(tombDir(dir, ver, tag))
+    val (nDel, tpids) = writeTombs(dir, ver, tag,
+      feed.select(col("pid").cast("int").as("pid") +: key.map(col): _*).distinct())
     val earliest = feed.groupBy((col("pid") +: key.map(col)): _*)
       .agg(min(col("change_version")).as("_ev"))
     // Keep each part's commit version (`_cv`) through the pre-image
@@ -2317,12 +2334,9 @@ object VersionedLayout {
     projected.write.mode("overwrite").parquet(insertDir(dir, ver, tag))
     val seg = s.read.parquet(insertDir(dir, ver, tag))
     val (rSt, rStM) = recordStats(dir, ver, tag, seg)
-    val tAgg = s.read.parquet(tombDir(dir, ver, tag))
-      .agg(count(lit(1)), collect_set(col("pid"))).first()
     commit(dir, LogEntry(ver, "upsert", Nil, horizon = toVersion, txn = txn, tag = tag,
-      stats = rSt, statsM = rStM,
-      tpids = tAgg.getSeq[Int](1).sorted,
-      rowsW = seg.count(), rowsD = tAgg.getLong(0),
+      stats = rSt, statsM = rStM, tpids = tpids,
+      rowsW = seg.count(), rowsD = nDel,
       // Unambiguous provenance: horizon = 0 made a legal restore TO
       // VERSION 0 indistinguishable from a plain upsert (round-13
       // advisor) — the dedicated field has no zero blind spot.
@@ -2330,140 +2344,75 @@ object VersionedLayout {
     ver
   }
 
-  /** COMPACT as version `currentVersion + 1`: archive then rewrite every
-    * pid whose deleted fraction (under the full mask) reaches
-    * `threshold`. Survivors are computed BEFORE the swap; the archive
-    * move is the cheap operation (rename, no copy). Commit happens
-    * after all swaps. Crash-replay discipline per pid: the survivors
-    * land in a tmp dir first, so the only unreadable window (pid moved
-    * to archive, survivors not yet landed) is repaired by the recovery
-    * preamble on retry (finish the tmp→live move); and a pid whose
-    * archive ALREADY exists is never re-archived — the first attempt's
-    * archive is the true pre-compact state, and replacing it with
-    * post-compact bytes would corrupt AS-OF history. Readers are safe
-    * at every COMMITTED state; the retrying single writer repairs any
-    * in-flight swap before its commit.
+  /** COMPACT as version `currentVersion + 1`: rewrite every pid whose
+    * deleted fraction (under the full mask) reaches `threshold` into
+    * this version's writer-tagged `_seg/c<N>-<tag>/pid=P/`, then commit
+    * an entry naming the rewritten pids. Copy-on-write: the files the
+    * pids read before stay where they are, so every older version keeps
+    * reading them until a [[vacuum]] past this version drops them. A
+    * crash before the commit leaves an unnamed dir the orphan sweep
+    * reclaims; a lost commit race rebases (retried here), and the
+    * rebased census sees the winner's state.
     */
-  def appendCompact(s: SparkSession, dir: String, threshold: Double): (Int, Seq[Int]) = {
-    val ver = currentVersion(dir) + 1
-    // Recovery preamble: a crashed attempt at THIS version may have
-    // moved a pid into the archive without landing its survivors, or
-    // crashed mid-swap on the archive-exists retry path. Every
-    // leftover is a COMPLETE directory (all transitions are atomic
-    // renames), so no branch ever reads partial bytes.
-    val leftovers = Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-    leftovers.filter(f => f.isDirectory && f.getName.startsWith(".compact-trash-"))
-      .foreach { t =>
-        val p = t.getName.stripPrefix(".compact-trash-")
-        val pdir = Paths.get(dir, s"pid=$p")
-        val tmp = Paths.get(dir, s".compact-tmp-$p")
-        if (!Files.exists(pdir)) {
-          // Crash between the two swap renames: land the complete tmp,
-          // else (defensively) un-swap the trashed live dir.
-          if (Files.exists(tmp)) Files.move(tmp, pdir, StandardCopyOption.ATOMIC_MOVE)
-          else Files.move(t.toPath, pdir, StandardCopyOption.ATOMIC_MOVE)
-        }
-        if (Files.exists(pdir) && Files.exists(t.toPath))
-          org.apache.commons.io.FileUtils.deleteDirectory(t)
+  def appendCompact(s: SparkSession, dir: String, threshold: Double): (Int, Seq[Int]) =
+    Cas.withRetry() {
+      val entries = log(dir)
+      val ver = entries.last.version + 1
+      val tag = writerTag()
+      // Only tombstones since the last major fold: older ones were
+      // applied physically by the fold, and re-applying one could kill a
+      // folded same-key replacement.
+      val tombsOpt = tombstonesIn(s, dir, majorAtOrBefore(entries, ver - 1), ver - 1)
+        .map(_.localCheckpoint())
+      val sources = baseSources(dir, entries, ver - 1)
+      // n_deleted counts LIVE base rows a tombstone still kills — not raw
+      // tombstone keys: a key an earlier minor compact already reclaimed
+      // matches nothing, so an already-compacted pid never re-crosses the
+      // threshold (compaction is idempotent across replayed sessions;
+      // counting keys would re-rewrite such pids forever).
+      val keys = keyColsOf(dir)
+      val pids = tombsOpt match {
+        case Some(tombs) if sources.nonEmpty =>
+          baseFrames(s, dir, entries, sources)
+            .map(_._2.select(("pid" +: keys).map(col): _*)).reduce(_ unionByName _)
+            .join(tombs.select(("pid" +: keys).map(col): _*)
+              .distinct().withColumn("_dead", lit(1)),
+              "pid" +: keys, "left")
+            .groupBy(col("pid"))
+            .agg(count(lit(1)).as("n_rows"), count(col("_dead")).as("n_deleted"))
+            .where(col("n_deleted") > 0 && col("n_deleted") >= col("n_rows") * threshold)
+            .select(col("pid")).collect().map(_.getInt(0)).sorted.toSeq // bounded: <= 32 pids
+        case _ => Nil // nothing to reclaim, or a fully-erased fold left no base
       }
-    leftovers.filter(f => f.isDirectory && f.getName.startsWith(".compact-tmp-"))
-      .foreach { t =>
-        val p = t.getName.stripPrefix(".compact-tmp-")
-        val pdir = Paths.get(dir, s"pid=$p")
-        if (!Files.exists(pdir)) Files.move(t.toPath, pdir, StandardCopyOption.ATOMIC_MOVE)
+      val out = LogEntry(ver, "compact", pids, 0, tag = tag)
+      val root = rootOf(dir, out)
+      // A same-tag leftover is this writer's own crashed attempt at ver.
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
+      pids.foreach { p =>
+        val src = sources(p)
+        s.read.parquet(s"${rootOf(dir, src)}/pid=$p")
+          .join(tombsOpt.get.where(col("pid") === p).drop("pid"), keys, "left_anti")
+          .write.mode("overwrite").parquet(s"$root/pid=$p")
       }
-    // Only tombstones since the last major fold: older ones were
-    // applied physically by the fold, and re-applying one could kill a
-    // folded same-key replacement.
-    val tombsOpt = tombstonesIn(s, dir, majorAtOrBefore(log(dir), ver - 1), ver - 1)
-      .map(_.localCheckpoint())
-    // n_deleted counts LIVE base rows a tombstone still kills — not raw
-    // tombstone keys: a key an earlier minor compact already reclaimed
-    // matches nothing, so an already-compacted pid never re-crosses the
-    // threshold (compaction is idempotent across replayed sessions;
-    // counting keys would re-rewrite and re-archive such pids forever).
-    val keys = keyColsOf(dir)
-    val statsPids = tombsOpt match {
-      case None => Array.empty[Int] // nothing to reclaim anywhere
-      case Some(_) if basePidDirs(dir).isEmpty =>
-        Array.empty[Int] // fully-erased fold left no base dirs to rewrite
-      case Some(tombs) =>
-        s.read.parquet(dir)
-          .join(tombs.select(("pid" +: keys).map(col): _*)
-            .distinct().withColumn("_dead", lit(1)),
-            "pid" +: keys, "left")
-          .groupBy(col("pid"))
-          .agg(count(lit(1)).as("n_rows"), count(col("_dead")).as("n_deleted"))
-          .where(col("n_deleted") > 0 && col("n_deleted") >= col("n_rows") * threshold)
-          .select(col("pid")).collect().map(_.getInt(0)) // bounded: <= 32 pids
+      // Stats over the written survivors, read back per the
+      // writeBaseTable recipe. A pid whose rows all died writes an empty
+      // file and emits no triple (unknown — never skipped on).
+      commit(dir, withOutputStats(s, dir, out))
+      (ver, pids)
     }
-    // A crashed attempt at THIS version may have already archived a pid
-    // and landed its survivors — the live dir is then clean, so the
-    // stats can no longer detect it. The archive IS the durable record
-    // of the crashed attempt's decision: adopt those pids so the retry
-    // commits the same set (without this, the orphaned archive would
-    // shadow nothing and AS-OF below this version would read the
-    // already-compacted live bytes).
-    val crashed = Option(new java.io.File(archiveDir(dir, ver)).listFiles())
-      .getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("pid="))
-      .map(_.getName.stripPrefix("pid=").toInt).toSeq
-    val pids = (statsPids ++ crashed).distinct.sorted.toSeq
-    pids.foreach { p =>
-      val pdir = s"$dir/pid=$p"
-      val survivors = tombsOpt match {
-        case None => s.read.parquet(pdir) // crashed-adoption pid, no mask
-        case Some(tombs) => s.read.parquet(pdir)
-          .join(tombs.where(col("pid") === p).drop("pid"), keys, "left_anti")
-      }
-      val tmp = s"$dir/.compact-tmp-$p"
-      survivors.write.mode("overwrite").parquet(tmp) // evaluated before the swap
-      val arch = Paths.get(archiveDir(dir, ver), s"pid=$p")
-      Files.createDirectories(arch.getParent)
-      if (Files.exists(arch)) {
-        // A crashed attempt already archived the TRUE pre-state; keep
-        // it and swap the (idempotently recomputed) survivors in via
-        // atomic renames — the live dir leaves whole (to a trash name
-        // the preamble reconciles), never via an in-place delete whose
-        // mid-crash remnant would feed the next survivor recompute.
-        val trash = Paths.get(dir, s".compact-trash-$p")
-        Files.move(Paths.get(pdir), trash, StandardCopyOption.ATOMIC_MOVE)
-        Files.move(Paths.get(tmp), Paths.get(pdir), StandardCopyOption.ATOMIC_MOVE)
-        org.apache.commons.io.FileUtils.deleteDirectory(trash.toFile)
-      } else {
-        Files.move(Paths.get(pdir), arch, StandardCopyOption.ATOMIC_MOVE)
-        Files.move(Paths.get(tmp), Paths.get(pdir), StandardCopyOption.ATOMIC_MOVE)
-      }
-    }
-    // Stats over the LANDED survivors (the new live bytes of every
-    // rewritten pid) — read back per the writeBaseTable recipe. A pid
-    // whose rows all died lands an empty dir and emits no triple
-    // (unknown — never skipped on, and the source listing is empty
-    // anyway).
-    val landed = pids.filter(p => new java.io.File(s"$dir/pid=$p").isDirectory)
-    val (postStats, postStatsM) =
-      if ((statsColsOf(dir).isEmpty && bloomColsOf(dir).isEmpty) || landed.isEmpty)
-        (Nil, Map.empty[String, Seq[(Int, Long, Long)]])
-      else recordStats(dir, ver, "", s.read.option("basePath", dir)
-        .parquet(landed.map(p => s"$dir/pid=$p"): _*))
-    commit(dir, LogEntry(ver, "compact", pids, 0,
-      stats = postStats, statsM = postStatsM))
-    (ver, pids)
-  }
 
   /** MAJOR compaction as version `currentVersion + 1`: fold the insert
     * segments and every outstanding tombstone into a fresh single base,
     * so head reads return to one-source scans (no segment union, no
     * anti-join) — the maintenance step that bounds what continuous
-    * ingest otherwise grows without limit. The pre-fold base pid dirs
-    * AND the folded segments are archived (rename-cost), so AS-OF reads
-    * below the fold keep working; the fold version becomes the base's
-    * source version, which is what lets a folded same-key upsert
-    * replacement survive its own (older) tombstone. Crash-replay: the
-    * folded base lands in `.major-tmp` FIRST (complete before any
-    * move), archive moves keep the first copy (pre-fold truth), and the
-    * strict order archive-all-then-land-all makes the retry preamble
-    * unambiguous. Returns (version, pre-fold pid set).
+    * ingest otherwise grows without limit. The fold writes the head
+    * snapshot into its own `_seg/c<N>-<tag>/` and its entry replaces
+    * every base source from this version on; the pre-fold files and
+    * segments stay put, so AS-OF reads below the fold keep reading them.
+    * The fold version becomes the base's source version, which is what
+    * lets a folded same-key upsert replacement survive its own (older)
+    * tombstone. Returns (version, pre-fold pid set). Retried on a lost
+    * commit race like [[appendCompact]].
     *
     * `clusterBy` (optional) makes the fold a RE-CLUSTERING one — the
     * OPTIMIZE-ZORDER move: the snapshot is range-partitioned and sorted
@@ -2473,9 +2422,7 @@ object VersionedLayout {
     * (q96's layout property, now available as MAINTENANCE on a
     * long-lived mutable table instead of only at initial write; the
     * skip-fraction improvement is measured in StorageSpec). Logical
-    * answers are untouched — clustering is physical. Replay note: a
-    * crashed attempt's COMPLETE tmp is reused as-is, under whatever
-    * clustering that attempt used.
+    * answers are untouched — clustering is physical.
     */
   def majorCompact(s: SparkSession, dir: String,
       clusterBy: Seq[org.apache.spark.sql.Column] = Nil,
@@ -2492,8 +2439,7 @@ object VersionedLayout {
     * still admit later inserts).
     *
     * Mechanically a [[majorCompact]] whose snapshot carries recomputed
-    * pids: the pre-fold dirs (old scheme) archive under the fold
-    * version, so every AS-OF below the change reads the OLD placement
+    * pids: every AS-OF below the change reads the OLD placement's files
     * exactly as committed; the fold's output lands under the NEW pids;
     * skipping stats and Bloom sidecars are re-recorded per the new
     * scheme by the fold's own stats pass; and from this version on
@@ -2516,196 +2462,147 @@ object VersionedLayout {
       clusterBy: Seq[org.apache.spark.sql.Column],
       clusterParts: Int,
       newPid: Option[org.apache.spark.sql.Column],
-      newDomain: Seq[Int]): (Int, Seq[Int]) = {
+      newDomain: Seq[Int]): (Int, Seq[Int]) = Cas.withRetry() {
     val entries = log(dir)
     val ver = entries.last.version + 1
-    val tmpBase = s"$dir/.major-tmp"
-    val arch = archiveDir(dir, ver)
-    // 1. The folded head snapshot, written completely before any move
-    //    (a crashed attempt's complete tmp is reused as-is).
-    if (!new java.io.File(s"$tmpBase/_SUCCESS").isFile) {
-      val snapshot0 = readAsOf(s, dir, ver - 1)
-      // Scheme change: recompute placement BEFORE the fold write; the
-      // new pid must land inside the declared domain — validated on the
-      // snapshot so a bad boundary expression fails BEFORE any move,
-      // with the tmp discarded (a replay must not reuse it).
-      val snapshot = newPid match {
-        case None => snapshot0.localCheckpoint()
-        case Some(p) =>
-          val re = snapshot0.withColumn("pid", p.cast("int")).localCheckpoint()
-          // Bounded offender sample (a wrong expression could emit
-          // data-scale distinct pids — never collect them all).
-          val novel = re.select(col("pid"))
-            .where(!col("pid").isin(newDomain.map(Integer.valueOf): _*)
-              || col("pid").isNull)
-            .distinct().limit(20).collect()
-            .map(r => if (r.isNullAt(0)) "null" else r.getInt(0).toString)
-          if (novel.nonEmpty) {
-            org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmpBase))
-            throw new IllegalArgumentException(
-              s"repartitionScheme: newPid lands pid(s) ${novel.mkString(",")} " +
-                s"outside the declared domain ${newDomain.mkString(",")} of $dir")
-          }
-          re
-      }
-      // The EXPLICIT partition count is deliberate: file count is a
-      // layout decision here (each range partition becomes one
-      // zone-mapped file), so AQE's small-shuffle coalescing must not
-      // fold the blocks back together.
-      val parts =
-        if (clusterParts > 0) clusterParts
-        else s.sessionState.conf.numShufflePartitions
-      val shaped =
-        if (clusterBy.isEmpty) snapshot
-        else snapshot
-          .repartitionByRange(parts, (col("pid") +: clusterBy): _*)
-          .sortWithinPartitions((col("pid") +: clusterBy): _*)
-      shaped.write.mode("overwrite").partitionBy("pid").parquet(tmpBase)
-    }
-    def pidDirs(root: String): Seq[String] =
-      Option(new java.io.File(root).listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isDirectory && f.getName.startsWith("pid=")).map(_.getName).toSeq
-    // 2. Archive every pre-fold pid dir. Replay rule: if the archive
-    //    already holds a pid, the live copy (if any) is a post-fold dir
-    //    landed by the crashed attempt — never re-archive it.
-    Files.createDirectories(Paths.get(arch))
-    val preFold = (pidDirs(dir) ++ pidDirs(arch)).distinct
-    pidDirs(dir).foreach { name =>
-      val target = Paths.get(arch, name)
-      if (!Files.exists(target))
-        Files.move(Paths.get(dir, name), target, StandardCopyOption.ATOMIC_MOVE)
-    }
-    // 3. Archive the folded segments (same keep-first rule).
-    Files.createDirectories(Paths.get(s"$arch/inserts"))
-    entries.filter(e => e.action == "insert" || e.action == "upsert").foreach { e =>
-      val live = Paths.get(insertDirOf(dir, entries, e.version))
-      val target = Paths.get(s"$arch/inserts/v${e.version}")
-      if (Files.exists(live) && !Files.exists(target))
-        Files.move(live, target, StandardCopyOption.ATOMIC_MOVE)
-    }
-    // 4. Land the fold and commit.
-    pidDirs(tmpBase).foreach { name =>
-      val target = Paths.get(dir, name)
-      if (!Files.exists(target))
-        Files.move(Paths.get(tmpBase, name), target, StandardCopyOption.ATOMIC_MOVE)
-    }
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmpBase))
-    val pids = preFold.map(_.stripPrefix("pid=").toInt).sorted
-    // Stats over the folded output's live pid dirs (the fold's entry
-    // covers every pre-fold pid for archive routing; a pid the fold
-    // left no live dir for emits no triple).
-    val landed = pids.filter(p => new java.io.File(s"$dir/pid=$p").isDirectory)
-    val (postStats, postStatsM) =
-      if ((statsColsOf(dir).isEmpty && bloomColsOf(dir).isEmpty) || landed.isEmpty)
-        (Nil, Map.empty[String, Seq[(Int, Long, Long)]])
-      else recordStats(dir, ver, "", s.read.option("basePath", dir)
-        .parquet(landed.map(p => s"$dir/pid=$p"): _*))
     // A scheme-changing fold records its marker and the DECLARED new
     // domain on the entry itself (colName/colType are free on
     // maintenance commits — evolution scans key on action), so the
     // domain switch commits atomically with the fold: [[pidDomain]]
-    // serves the new set from this version on.
-    commit(dir, LogEntry(ver, "majorcompact", pids, 0,
+    // serves the new set from this version on. `pids` is the pre-fold
+    // pid set.
+    val out = LogEntry(ver, "majorcompact", baseSources(dir, entries, ver - 1).keys.toSeq.sorted, 0,
+      tag = writerTag(),
       colName = if (newPid.isDefined) "repartition" else "",
-      colType = if (newPid.isDefined) newDomain.mkString(",") else "",
-      stats = postStats, statsM = postStatsM))
-    (ver, pids)
+      colType = if (newPid.isDefined) newDomain.mkString(",") else "")
+    val root = rootOf(dir, out)
+    val snapshot0 = readAsOf(s, dir, ver - 1)
+    // Scheme change: recompute placement BEFORE the fold write; the new
+    // pid must land inside the declared domain — validated on the
+    // snapshot so a bad boundary expression fails before anything is
+    // written.
+    val snapshot = newPid match {
+      case None => snapshot0.localCheckpoint()
+      case Some(p) =>
+        val re = snapshot0.withColumn("pid", p.cast("int")).localCheckpoint()
+        // Bounded offender sample (a wrong expression could emit
+        // data-scale distinct pids — never collect them all).
+        val novel = re.select(col("pid"))
+          .where(!col("pid").isin(newDomain.map(Integer.valueOf): _*)
+            || col("pid").isNull)
+          .distinct().limit(20).collect()
+          .map(r => if (r.isNullAt(0)) "null" else r.getInt(0).toString)
+        if (novel.nonEmpty) throw new IllegalArgumentException(
+          s"repartitionScheme: newPid lands pid(s) ${novel.mkString(",")} " +
+            s"outside the declared domain ${newDomain.mkString(",")} of $dir")
+        re
+    }
+    // The EXPLICIT partition count is deliberate: file count is a
+    // layout decision here (each range partition becomes one
+    // zone-mapped file), so AQE's small-shuffle coalescing must not
+    // fold the blocks back together.
+    val parts =
+      if (clusterParts > 0) clusterParts
+      else s.sessionState.conf.numShufflePartitions
+    val shaped =
+      if (clusterBy.isEmpty) snapshot
+      else snapshot
+        .repartitionByRange(parts, (col("pid") +: clusterBy): _*)
+        .sortWithinPartitions((col("pid") +: clusterBy): _*)
+    shaped.write.mode("overwrite").partitionBy("pid").parquet(root)
+    // A fold of a fully-erased table writes no pid dir and records no
+    // stats.
+    commit(dir, withOutputStats(s, dir, out))
+    (ver, out.pids)
   }
 
-  /** Drop the archives backing versions BELOW `keepFrom`, GC the
-    * tombstone metadata those compactions made dead, and raise the
-    * horizon. Time travel below the new horizon fails explicitly.
+  /** Compaction entry `out` with the stats (and Bloom sidecar) of the
+    * files it wrote under its root, read back after the write.
+    */
+  private def withOutputStats(s: SparkSession, dir: String, out: LogEntry): LogEntry = {
+    val root = rootOf(dir, out)
+    if ((statsColsOf(dir).isEmpty && bloomColsOf(dir).isEmpty) || pidDirsUnder(root).isEmpty) out
+    else {
+      val (st, stM) = recordStats(dir, out.version, out.tag, s.read.parquet(root))
+      out.copy(stats = st, statsM = stM)
+    }
+  }
+
+  /** Drop the data dirs that only versions BELOW `keepFrom` read, GC the
+    * tombstone metadata compactions made dead, and raise the horizon.
+    * Time travel below the new horizon fails explicitly.
     *
     * Tombstone GC rule: a tombstone row of version vt is dead — safe to
     * drop — when its pid was rewritten by a compaction c with
     * vt <= c <= keepFrom (every base row it targeted is physically
-    * gone; base never gains rows) AND no insert segment predates vt (a
-    * segment older than the tombstone may still hold rows the stamp
-    * rule lets it kill; segments are never compacted, so those
-    * tombstones must outlive vacuum). Dropping dead rows cannot change
-    * any read at-or-above the horizon: they anti-joined nothing there.
-    * Without GC the mask metadata grows with delete history; with it,
-    * steady state carries only tombstones that still shadow live bytes.
+    * gone; base never gains rows) AND no insert segment predates vt that
+    * some version >= keepFrom still reads (such a segment may still hold
+    * rows the stamp rule lets it kill, so those tombstones must outlive
+    * vacuum). Dropping dead rows cannot change any read at-or-above the
+    * horizon: they anti-joined nothing there. The kept rows are
+    * republished as a new dir the vacuum's entry names (see
+    * [[tombDirOf]]); nothing committed is rewritten. Without GC the mask
+    * metadata grows with delete history; with it, steady state carries
+    * only tombstones that still shadow live bytes.
+    *
+    * Order: GC copies first, then the commit, then deletes — of the
+    * base and segment dirs every entry <= keepFrom wrote that no version
+    * >= keepFrom reads ([[dirsIn]]), and of the tombstone dirs the GC
+    * superseded. A crash after the commit leaves undeleted dirs the
+    * next vacuum collects by the same rule. Retried on a lost commit
+    * race.
     */
   def vacuum(s: SparkSession, dir: String, keepFrom: Int,
-      orphanLeaseMs: Long = 15 * 60 * 1000L): Unit = {
+      orphanLeaseMs: Long = 15 * 60 * 1000L): Unit = Cas.withRetry() {
     val entries = log(dir)
     val ver = entries.last.version + 1
-    // Committed FIRST (round 18, advisor): the GC below is the one
-    // mutation that rewrites an existing artifact dir in place, so the
-    // stamp must bump BEFORE any file moves — a plan built during the
-    // vacuum then keys on the new stamp instead of caching a file index
-    // the GC is about to delete. Safe to commit early: every GC'd
-    // tombstone row is DEAD metadata (its targets were physically
-    // folded; the `_tomb_ver > _src_ver` stamp rule already ignores it
-    // against post-fold rows), so a crash between this commit and the
-    // rewrites leaves a table whose reads are byte-identical, just with
-    // unreclaimed metadata a later vacuum re-collects.
-    commit(dir, LogEntry(ver, "vacuum", Nil, keepFrom))
-    val compactsInScope = entries.filter(e =>
-      (e.action == "compact" || e.action == "majorcompact") && e.version <= keepFrom)
-    // A segment constrains GC while it stays ADDRESSABLE after this
-    // vacuum: live, OR folded into a major compaction whose archive
-    // survives (fold > keepFrom) — AS-OF v in [keepFrom, fold) still
-    // reads the segment through that archive, so a tombstone older
-    // than the segment can still kill rows there and must survive.
-    // (A fold <= keepFrom loses its archive below the new horizon, so
-    // its segments genuinely stop constraining.)
-    val segVersions = entries
-      .filter(e => e.action == "insert" || e.action == "upsert").map(_.version)
-      .filter { sv =>
-        new java.io.File(insertDirOf(dir, entries, sv)).isDirectory ||
-        entries.exists(e => e.action == "majorcompact" &&
-          e.version > keepFrom && e.version > sv &&
-          new java.io.File(s"${archiveDir(dir, e.version)}/inserts/v$sv").isDirectory)
-      }
-    entries
+    val tag = writerTag()
+    val compactsInScope = entries.filter(e => isCompaction(e) && e.version <= keepFrom)
+    val segVersions = segmentsAt(entries, keepFrom).map(_.version)
+    val gced = entries
       .filter(e => (e.action == "delete" || e.action == "upsert") && e.version <= keepFrom)
-      .foreach { te =>
+      .flatMap { te =>
         val reclaimed = compactsInScope.filter(_.version >= te.version).flatMap(_.pids).distinct
-        if (reclaimed.nonEmpty && !segVersions.exists(_ < te.version)) {
-          val td = tombDirOf(dir, entries, te.version)
-          val kept = s.read.parquet(td)
-            .where(!col("pid").isin(reclaimed: _*)).localCheckpoint()
-          val tag = graft.JvmId.token
-          val tmp = s"$td.gc-tmp-p$tag"
-          kept.coalesce(1).write.mode("overwrite").parquet(tmp)
-          val live = Paths.get(td)
-          val old = Paths.get(s"$td.gc-old-p$tag")
-          Files.move(live, old, StandardCopyOption.ATOMIC_MOVE)
-          Files.move(Paths.get(tmp), live, StandardCopyOption.ATOMIC_MOVE)
-          org.apache.commons.io.FileUtils.deleteDirectory(old.toFile)
+        if (reclaimed.isEmpty || segVersions.exists(_ < te.version)) None
+        else {
+          s.read.parquet(tombDirOf(dir, entries, te.version))
+            .where(!col("pid").isin(reclaimed: _*))
+            .coalesce(1).write.mode("overwrite")
+            .parquet(tagged(s"$dir/_tombs/v${te.version}-g$ver", tag))
+          Some(te.version)
         }
       }
-    compactsInScope.foreach { e =>
-      val a = new java.io.File(archiveDir(dir, e.version))
-      if (a.isDirectory) org.apache.commons.io.FileUtils.deleteDirectory(a)
+    val vac = LogEntry(ver, "vacuum", Nil, keepFrom,
+      tag = if (gced.isEmpty) "" else tag, tpids = gced)
+    commit(dir, vac)
+    val kept = dirsIn(dir, entries, keepFrom, ver)
+    entries.filter(_.version <= keepFrom).foreach { e =>
+      val gone = dirsWritten(dir, e).filterNot(kept)
+      gone.foreach(d => org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d)))
+      // A compaction none of whose dirs survives leaves an empty root.
+      if (isCompaction(e) && pidDirsUnder(rootOf(dir, e)).isEmpty)
+        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(rootOf(dir, e)))
     }
-    sweepOrphans(dir, entries, orphanLeaseMs)
+    gced.foreach(v => org.apache.commons.io.FileUtils.deleteDirectory(
+      new java.io.File(tombDirOf(dir, entries, v))))
+    sweepOrphans(dir, entries :+ vac, orphanLeaseMs)
   }
 
-  /** Per-version archived row masses for every compact/fold in the log
-    * — computed ONCE, in ONE Spark job (round 18, guide §1.5): the
-    * former per-archive count jobs ran SEQUENTIALLY from the driver
-    * (one scheduling round-trip per fold — the retention audits paid
-    * job-count, not data). Each archive dir becomes one branch of a
-    * union of 1-row counts, so all branches scan in parallel inside a
-    * single job. Same values: count per dir, summed per fold version.
+  /** Row masses each compaction superseded — the files version c-1 read
+    * that version c no longer does (a minor compact's rewritten pids; a
+    * fold's whole base plus its segments), which a [[vacuum]] at or
+    * above c deletes — computed ONCE, in ONE Spark job (round 18, guide
+    * §1.5): each existing superseded dir becomes one branch of a union
+    * of 1-row counts, so all branches scan in parallel inside a single
+    * job. A dir an earlier vacuum already deleted counts zero.
     */
-  private def archivedMasses(
+  private def supersededMasses(
       s: SparkSession, dir: String, entries: Seq[LogEntry]): Map[Int, Long] = {
-    val folds = entries.filter(e => e.action == "compact" || e.action == "majorcompact")
+    val folds = entries.filter(isCompaction)
     val zero = folds.map(_.version -> 0L).toMap
     val parts: Seq[(Int, String)] = folds.flatMap { e =>
-      val aDir = new java.io.File(archiveDir(dir, e.version))
-      Option(aDir.listFiles()).getOrElse(Array.empty[java.io.File])
-        .filter(_.isDirectory).toSeq.flatMap { f =>
-          if (f.getName == "inserts")
-            Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
-              .filter(_.isDirectory).toSeq
-              .map(sd => e.version -> sd.getAbsolutePath)
-          else Seq(e.version -> f.getAbsolutePath)
-        }
+      (dirsAt(dir, entries, e.version - 1) -- dirsAt(dir, entries, e.version)).toSeq.sorted
+        .filter(d => new java.io.File(d).isDirectory).map(e.version -> _)
     }
     if (parts.isEmpty) zero
     else {
@@ -2720,7 +2617,7 @@ object VersionedLayout {
 
   /** The retention recommendation: `keepFrom` for a keep-the-last-
     * `keepLast`-versions target (never below the current horizon) and
-    * the archive row mass a vacuum there would reclaim.
+    * the superseded row mass a vacuum there would reclaim.
     */
   private def retentionPlan(entries: Seq[LogEntry], masses: Map[Int, Long],
       dirHorizon: Int, keepLast: Int): (Int, Long) = {
@@ -2731,10 +2628,11 @@ object VersionedLayout {
 
   /** RETENTION AUDIT — the q169 chain-health analog for HISTORY: one
     * row per committed version with the row mass each class of
-    * retained artifact pins (archives a vacuum would free, live insert
-    * segments, tombstone metadata), whether the log checkpoint covers
+    * retained artifact pins (the files a compaction superseded, which a
+    * vacuum would free — `n_archived_rows`; insert segments the head
+    * still reads; tombstone metadata), whether the log checkpoint covers
     * it, and the recommendation for a keep-the-last-`keepLast`-versions
-    * retention target: the `keep_from` horizon and the archive mass a
+    * retention target: the `keep_from` horizon and the superseded mass a
     * [[vacuum]] there would physically reclaim (proven equal to the
     * actual reclaim in StorageSpec). Pure metadata + bounded artifact
     * counts — never a table scan of live data. This is the planning
@@ -2743,26 +2641,26 @@ object VersionedLayout {
     */
   def retentionAudit(s: SparkSession, dir: String, keepLast: Int): DataFrame = {
     val entries = log(dir)
-    val masses = archivedMasses(s, dir, entries)
+    val masses = supersededMasses(s, dir, entries)
     val (keepFrom, reclaim) = retentionPlan(entries, masses, horizon(dir), keepLast)
     val ckpt = checkpointedVersion(dir)
     def rowsIn(path: String): Long = {
       val f = new java.io.File(path)
       if (f.isDirectory) s.read.parquet(path).count() else 0L
     }
+    // A folded segment's mass moves to its fold's superseded mass.
+    val headSegs = segmentsAt(entries, entries.last.version).map(_.version).toSet
     val rows = entries.map { e =>
       val archived = masses.getOrElse(e.version, 0L)
       val segment =
-        if (e.action == "insert" || e.action == "upsert")
-          rowsIn(insertDirOf(dir, entries, e.version))
-        else 0L
+        if (headSegs(e.version)) rowsIn(insertDir(dir, e.version, e.tag)) else 0L
       val tomb =
         if (e.action == "delete" || e.action == "upsert")
           rowsIn(tombDirOf(dir, entries, e.version))
         else 0L
       (e.version.toLong, e.action, archived, segment, tomb,
         e.version <= ckpt,
-        (e.action == "compact" || e.action == "majorcompact") && e.version <= keepFrom,
+        isCompaction(e) && e.version <= keepFrom,
         keepFrom.toLong, reclaim)
     }
     val s0 = s
@@ -2782,7 +2680,7 @@ object VersionedLayout {
     val entries = log(dir)
     val h = horizon(dir)
     val (keepFrom, reclaim) =
-      retentionPlan(entries, archivedMasses(s, dir, entries), h, keepLast)
+      retentionPlan(entries, supersededMasses(s, dir, entries), h, keepLast)
     val fire = reclaim >= minReclaimRows && keepFrom > h
     if (fire) vacuum(s, dir, keepFrom)
     fire
@@ -2807,13 +2705,13 @@ object VersionedLayout {
     * days of history") instead of keep-last-N-versions. Per committed
     * version: its effective commit time, whether the window still
     * covers it, and what a [[vacuumIfNeededByTime]] at this cutoff
-    * would reclaim. Pure log metadata + the same bounded archive
+    * would reclaim. Pure log metadata + the same bounded superseded
     * masses as the count-based audit.
     */
   def retentionAuditByTime(s: SparkSession, dir: String, retainMs: Long,
       nowMs: Long = System.currentTimeMillis()): DataFrame = {
     val entries = log(dir)
-    val masses = archivedMasses(s, dir, entries)
+    val masses = supersededMasses(s, dir, entries)
     val cutoff = nowMs - retainMs
     val keepFrom = math.max(horizon(dir), versionRetainedAt(dir, cutoff))
     val reclaim = masses.collect { case (v, m) if v <= keepFrom => m }.sum
@@ -2827,7 +2725,7 @@ object VersionedLayout {
     val rows = entries.map { e =>
       (e.version.toLong, e.action, times(e.version),
         times(e.version) >= cutoff,
-        (e.action == "compact" || e.action == "majorcompact") && e.version <= keepFrom,
+        isCompaction(e) && e.version <= keepFrom,
         keepFrom.toLong, cutoff, reclaim, e.version >= h)
     }
     val s0 = s
@@ -2839,7 +2737,7 @@ object VersionedLayout {
 
   /** Vacuum to the TIME-BASED horizon — `VACUUM ... RETAIN <window>`
     * semantics riding the strictly-monotone commit-time axis: drop the
-    * archives backing only versions older than `nowMs - retainMs`,
+    * files only versions older than `nowMs - retainMs` read,
     * keeping the version that was current AT the cutoff (so every
     * [[readAsOfTimestamp]] inside the window keeps resolving). Fires
     * when the time horizon has moved past the current one and the
@@ -2854,18 +2752,19 @@ object VersionedLayout {
     val entries = log(dir)
     val h = horizon(dir)
     val keepFrom = math.max(h, versionRetainedAt(dir, nowMs - retainMs))
-    val reclaim = archivedMasses(s, dir, entries)
+    val reclaim = supersededMasses(s, dir, entries)
       .collect { case (v, m) if v <= keepFrom => m }.sum
     val fire = keepFrom > h && reclaim >= minReclaimRows
     if (fire) vacuum(s, dir, keepFrom)
     fire
   }
 
-  /** Reclaim append-race leftovers: artifact dirs at versions at or
-    * below the head whose name is NOT the committed entry's resolution
-    * — a CAS loser's writer-tagged garbage (never referenced by any
-    * reader, see [[withWriteRetry]]) or a crashed attempt a different
-    * writer re-ran under its own tag. Two guards against sweeping an
+  /** Reclaim race leftovers: artifact dirs at versions at or below the
+    * head whose name is NOT what the committed log resolves — a CAS
+    * loser's writer-tagged tombstones, segment or compaction output
+    * (never referenced by any reader, see [[Cas.withRetry]]), a crashed
+    * attempt a different writer re-ran under its own tag, or a lost
+    * vacuum's tombstone GC copy. Two guards against sweeping an
     * IN-FLIGHT writer (one whose chosen version other commits have
     * already passed, but whose artifact write is still running):
     * versions above the head are spared outright, and at-or-below it a
@@ -2876,17 +2775,18 @@ object VersionedLayout {
   private def sweepOrphans(dir: String, entries: Seq[LogEntry], leaseMs: Long): Unit = {
     val head = entries.last.version
     val cutoff = System.currentTimeMillis() - leaseMs
-    def sweep(root: String, resolve: Int => String): Unit =
+    def sweep(root: String, prefix: String, resolve: Int => Option[String]): Unit =
       Option(new java.io.File(dir, root).listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isDirectory && f.getName.matches("v\\d+(-[^.]+)?"))
+        .filter(f => f.isDirectory && f.getName.matches(s"$prefix\\d+(-[^.]+)?"))
         .foreach { f =>
-          val ver = f.getName.drop(1).takeWhile(_.isDigit).toInt
+          val ver = f.getName.drop(prefix.length).takeWhile(_.isDigit).toInt
           if (ver <= head && f.lastModified() <= cutoff
-              && new java.io.File(resolve(ver)).getName != f.getName)
+              && !resolve(ver).exists(new java.io.File(_).getName == f.getName))
             org.apache.commons.io.FileUtils.deleteDirectory(f)
         }
-    sweep("_tombs", v => tombDirOf(dir, entries, v))
-    sweep("_inserts", v => insertDirOf(dir, entries, v))
+    sweep("_tombs", "v", v => Some(tombDirOf(dir, entries, v)))
+    sweep("_inserts", "v", v => Some(insertDirOf(dir, entries, v)))
+    sweep("_seg", "c", v => entries.find(_.version == v).filter(isCompaction).map(rootOf(dir, _)))
     // Lost-race writer-tagged Bloom sidecars (round 15): a CAS loser's
     // `bloom-vN-<tag>.txt` is never read (readers resolve through the
     // committed entry's tag) — reclaim it under the same lease once the
@@ -2910,9 +2810,9 @@ object VersionedLayout {
   }
 
   /** The insert segment one version committed (incremental consumers) —
-    * resolved through the fold archives when a major compaction has
-    * since absorbed it, so change feeds and IVM audits keep working
-    * across maintenance.
+    * it stays where it was written when a major compaction absorbs it,
+    * so change feeds and IVM audits keep working across maintenance
+    * until a vacuum past the fold drops it.
     */
   def insertsAt(s: SparkSession, dir: String, ver: Int): DataFrame = {
     val entries = log(dir)
@@ -3103,9 +3003,6 @@ object VersionedLayout {
     entries.filter(e => e.action == "majorcompact" && e.version <= v)
       .map(_.version).maxOption.getOrElse(0)
 
-  /** Tombstone versions in (after, v], each row stamped with the
-    * version that committed it (`_tomb_ver`). Empty frame when none.
-    */
   /** Tombstones in (after, v] stamped with their committing version —
     * `None` when the range holds no delete/upsert, so callers skip the
     * mask join entirely (an insert-only or freshly folded history pays
@@ -3125,38 +3022,21 @@ object VersionedLayout {
     }.reduceOption(_ unionByName _)
   }
 
-  /** The table AS OF version `v`: per-pid base-source selection (live
-    * dir, or the archive of the first compaction after v that rewrote
-    * the pid) plus the insert segments committed through v, masked by
-    * the VERSION-STAMPED tombstones through v. The stamp rule — a
-    * tombstone kills only rows whose commit version PRECEDES it
-    * (`_tomb_ver > _src_ver`) — is what lets an upsert's replacement
-    * share its predecessor's key, and is exactly the file-granularity
-    * scoping of a table format's deletion vectors. Planning is pure log
-    * metadata — no data pass.
-    */
-  /** Resolve an insert segment's current location: live, or inside the
-    * archive of the major compaction that folded it.
-    */
+  /** An insert segment's dir, failing by name once a vacuum dropped it. */
   private def locateSegment(dir: String, entries: Seq[LogEntry], segVer: Int): String = {
-    val live = insertDirOf(dir, entries, segVer)
-    if (new java.io.File(live).isDirectory) return live
-    entries.filter(e => e.action == "majorcompact" && e.version > segVer)
-      .map(e => s"${archiveDir(dir, e.version)}/inserts/v$segVer")
-      .find(p => new java.io.File(p).isDirectory)
-      .getOrElse(throw new IllegalArgumentException(
-        s"insert segment v$segVer of $dir is not addressable (vacuumed)"))
+    val seg = insertDirOf(dir, entries, segVer)
+    if (new java.io.File(seg).isDirectory) seg
+    else throw new IllegalArgumentException(
+      s"insert segment v$segVer of $dir is not addressable (vacuumed)")
   }
 
   /** ZERO-COPY CLONE: export the table AS OF version `v` into `dst` as
     * an independent layout whose head is `v`, without copying a single
-    * data byte — every parquet file is HARD-LINKED from wherever the
-    * source currently keeps the AS-OF-v bytes (live dir, or the archive
-    * of the first compaction after v). The clone carries the source's
-    * log entries, tombstones, and archives through `v`, so it time
-    * travels over its inherited history exactly like the source; and
-    * because parquet files are immutable (the layout only ever replaces
-    * them by rename), later mutations, compactions, or vacuums of
+    * data byte — every parquet file a version in [horizon, v] reads is
+    * HARD-LINKED to the same relative path, and the clone's log is the
+    * source's entries through `v`, so it resolves and time travels over
+    * its inherited history exactly like the source. Because committed
+    * files are immutable, later mutations, compactions, or vacuums of
     * EITHER side cannot change what the other reads — the shared inodes
     * outlive any unlink until both sides drop them.
     *
@@ -3172,74 +3052,38 @@ object VersionedLayout {
     * The source's vacuum HORIZON travels with the clone: if the vacuum
     * entry that raised it sits above `v`, a metadata-only vacuum entry
     * is synthesized at `v+1` so the clone refuses the same below-horizon
-    * reads the source does (instead of advertising history whose
-    * archives are gone); a missing archive above the horizon fails the
-    * clone loudly rather than linking a silent gap.
+    * reads the source does (instead of advertising history whose files
+    * are gone); a dir missing above the horizon fails the clone loudly
+    * rather than linking a silent gap.
     */
   def cloneAsOf(s: SparkSession, dir: String, dst: String, v: Int): Unit = {
     val entries = log(dir)
     val srcHorizon = horizon(dir)
     require(v >= 0 && v <= entries.last.version, s"version $v outside log 0..${entries.last.version}")
     require(v >= srcHorizon,
-      s"version $v is below the vacuum horizon $srcHorizon — its archives are gone")
+      s"version $v is below the vacuum horizon $srcHorizon — its files are gone")
     if (new java.io.File(dst).exists()) return // already published (idempotent re-entry)
     val tmp = s"$dst.clone-tmp-p${graft.JvmId.token}"
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
-    def linkTree(src: java.io.File, to: java.nio.file.Path): Unit = if (src.isDirectory) {
+    def linkTree(src: java.io.File, to: java.nio.file.Path): Unit = {
+      require(src.isDirectory, s"$src of $dir is missing though a version above the " +
+        s"vacuum horizon $srcHorizon reads it — refusing a clone with a silent history gap")
       Files.createDirectories(to)
       src.listFiles().foreach { f =>
         if (f.isDirectory) linkTree(f, to.resolve(f.getName))
         else Files.createLink(to.resolve(f.getName), f.toPath)
       }
     }
-    // Base pids: the clone's LIVE dirs hold the AS-OF-v bytes (its log
-    // has no compaction after v to route around) — sourced exactly as
-    // readAsOf selects them.
-    val archived: Map[Int, Int] = entries
-      .filter(e => (e.action == "compact" || e.action == "majorcompact") && e.version > v)
-      .flatMap(e => e.pids.map(_ -> e.version))
-      .groupBy(_._1).map { case (p, vs) => p -> vs.map(_._2).min }
-    val firstMajorAfter = entries
-      .filter(e => e.action == "majorcompact" && e.version > v)
-      .sortBy(_.version).headOption
-    archived.foreach { case (p, c) =>
-      linkTree(new java.io.File(s"${archiveDir(dir, c)}/pid=$p"),
-        Paths.get(tmp, s"pid=$p"))
-    }
-    Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("pid="))
-      .map(f => f.getName.stripPrefix("pid=").toInt)
-      .filterNot(archived.contains)
-      .filter(p => firstMajorAfter.forall(_.pids.contains(p)))
-      .foreach(p => linkTree(new java.io.File(dir, s"pid=$p"), Paths.get(tmp, s"pid=$p")))
-    // History the clone keeps: archives of compactions <= v (they back
-    // its inherited time travel and already contain any segment a fold
-    // <= v absorbed), live-addressable segments after the last fold
-    // <= v (resolved through a source fold > v if one absorbed them),
-    // tombstones <= v, and the log entries <= v.
-    val m = majorAtOrBefore(entries, v)
-    entries.filter(e =>
-        (e.action == "compact" || e.action == "majorcompact") && e.version <= v)
-      .foreach { e =>
-        val a = new java.io.File(archiveDir(dir, e.version))
-        // A vacuum legitimately deletes archives at-or-below the horizon
-        // (the clone's carried horizon forbids reading there); an archive
-        // missing ABOVE it is a history gap the clone must refuse loudly
-        // rather than silently advertise and fail at read time.
-        if (a.isDirectory) linkTree(a, Paths.get(s"$tmp/_archive/v${e.version}"))
-        else require(e.version <= srcHorizon,
-          s"archive of compact v${e.version} of $dir is missing though above " +
-            s"the vacuum horizon $srcHorizon — refusing a clone with a silent history gap")
-      }
-    // Targets carry each entry's writer tag — the clone ships the same
-    // entries, so its readers resolve the same tagged names.
-    entries.filter(e => (e.action == "insert" || e.action == "upsert")
-        && e.version > m && e.version <= v)
-      .foreach(e => linkTree(new java.io.File(locateSegment(dir, entries, e.version)),
-        Paths.get(insertDirOf(tmp, entries, e.version))))
-    entries.filter(e => (e.action == "delete" || e.action == "upsert") && e.version <= v)
+    val rel = Paths.get(dir)
+    dirsIn(dir, entries, srcHorizon, v).foreach(d =>
+      linkTree(new java.io.File(d), Paths.get(tmp).resolve(rel.relativize(Paths.get(d)))))
+    // Tombstones <= v: the source's current copy (a later vacuum's GC
+    // copy serves every version >= the carried horizon) under the name
+    // the clone's own log resolves.
+    val kept = entries.filter(_.version <= v)
+    kept.filter(e => e.action == "delete" || e.action == "upsert")
       .foreach(e => linkTree(new java.io.File(tombDirOf(dir, entries, e.version)),
-        Paths.get(tombDirOf(tmp, entries, e.version))))
+        Paths.get(tombDirOf(tmp, kept, e.version))))
     // The clone's log ships as ONE checkpoint rendered from the parsed
     // entries (not per-file links): the source may have checkpointed and
     // truncated its own per-version files, and the clone starts life
@@ -3250,15 +3094,13 @@ object VersionedLayout {
     if (metaFile(dir).isFile)
       Files.copy(metaFile(dir).toPath, Paths.get(tmp, "_log", "meta.json"))
     Files.write(Paths.get(tmp, "_log", f"ckpt-v$v%05d.json"),
-      entries.filter(_.version <= v).map(renderEntry).mkString("\n")
-        .getBytes(StandardCharsets.UTF_8))
+      kept.map(renderEntry).mkString("\n").getBytes(StandardCharsets.UTF_8))
     // Carry the source's vacuum horizon: when the only vacuum that raised
     // it sits ABOVE v, dropping it would reset the clone's horizon to 0 —
-    // advertising AS-OF history whose archives the source already deleted
+    // advertising AS-OF history whose files the source already deleted
     // (reads there would fail, or worse). Synthesize a metadata-only
     // vacuum entry at v+1 recording the true horizon.
-    val carriedHorizon = entries
-      .filter(e => e.version <= v && e.action == "vacuum").map(_.horizon)
+    val carriedHorizon = kept.filter(_.action == "vacuum").map(_.horizon)
       .maxOption.getOrElse(0)
     if (srcHorizon > carriedHorizon)
       Files.write(Paths.get(tmp, "_log", f"v${v + 1}%05d.json"),
@@ -3404,14 +3246,6 @@ object VersionedLayout {
     entries.filter(e => (e.action == "write" || e.action == "majorcompact")
       && e.version < upto).map(_.version).maxOption.getOrElse(0)
 
-  /** Fold of the data-writing entries strictly BELOW `uptoExclusive`:
-    * for each pid, the recorded stats of the entry that last REWROTE
-    * its directory (None = that writer recorded no bounds — unknown,
-    * never skipped). `uptoExclusive = MaxValue` describes the live pid
-    * dirs; `uptoExclusive = c` describes archive generation c's bytes
-    * (the pre-rewrite state c parked — written by the last rewrite
-    * before c). Pure log metadata, O(entries).
-    */
   /** Plan-time source-pruning spec — the one abstraction both skip
     * flavors (zone-map RANGE bounds and BLOOM point membership) feed
     * [[readAsOfImpl]] through: `it` is the skip column's identity (era
@@ -3424,22 +3258,9 @@ object VersionedLayout {
   private final case class PruneSpec(it: ColIdentity,
       entryKeep: (LogEntry, String) => Map[Int, Boolean])
 
-  private def keepByPid(entries: Seq[LogEntry], uptoExclusive: Int,
-      keepOf: LogEntry => Map[Int, Boolean]): Map[Int, Option[Boolean]] = {
-    val m = scala.collection.mutable.Map.empty[Int, Option[Boolean]]
-    entries.iterator
-      .filter(e => e.version < uptoExclusive
-        && (e.action == "write" || e.action == "compact" || e.action == "majorcompact"))
-      .foreach { e =>
-        val st = keepOf(e)
-        e.pids.foreach(p => m(p) = st.get(p))
-      }
-    m.toMap
-  }
-
   /** The table AS OF `v` restricted to `statsCol BETWEEN lo AND hi`,
-    * with PLAN-TIME DATA SKIPPING: whole sources (live pid dirs,
-    * archived pid dirs, insert segments) whose commit-time [min,max]
+    * with PLAN-TIME DATA SKIPPING: whole sources (base pid dirs and
+    * insert segments) whose commit-time [min,max]
     * bounds ([[LogEntry.stats]]) miss the range are dropped from the
     * plan before any file is listed or opened — log metadata only, the
     * zone-map move (q129) on a MUTABLE table's whole history.
@@ -3488,8 +3309,8 @@ object VersionedLayout {
     * range axis every source's [min,max] covers every value, but the
     * per-(source, pid) Bloom filters recorded at write time
     * ([[bloomColsOf]]) answer "definitely absent" from log-side
-    * metadata alone, so whole sources (live pid dirs, archived pid
-    * dirs, insert segments) leave the plan before a single data file is
+    * metadata alone, so whole sources (base pid dirs, insert segments)
+    * leave the plan before a single data file is
     * listed. Same contracts as [[readAsOfRangeOn]]: `column` is
     * addressed by the name it carries AT `v` and resolves through the
     * column-identity era chain (a rename neither kills pruning nor
@@ -3630,6 +3451,41 @@ object VersionedLayout {
       .where(col(it.eras.last._1).between(lo, hi))
   }
 
+  /** One relation per source root over the given (pid -> entry) base
+    * sources, pid as its partition column — ONE multi-path read per
+    * root, not one per pid (per-pid relations made compaction-heavy
+    * AS-OF plans explode in codegen size).
+    */
+  private def baseFrames(s: SparkSession, dir: String, entries: Seq[LogEntry],
+      sources: Map[Int, LogEntry]): Seq[(LogEntry, DataFrame)] = {
+    val stamp = logStamp(entries)
+    sources.toSeq.groupBy(_._2).toSeq.sortBy(_._1.version).map { case (e, ps) =>
+      val root = rootOf(dir, e)
+      e -> cachedParquet(s, stamp, Some(root), ps.map(_._1).sorted.map(p => s"$root/pid=$p"))
+    }
+  }
+
+  /** The raw base files AS OF the head — pid as the partition column, no
+    * tombstone mask, no schema mapping: the unmasked read
+    * [[DeletableRangeLayout.data]] serves. Resolved through the log like
+    * every read, never by listing the table root.
+    */
+  private[graft] def baseFiles(s: SparkSession, dir: String): DataFrame = {
+    val entries = log(dir)
+    baseFrames(s, dir, entries, baseSources(dir, entries, entries.last.version))
+      .map(_._2).reduceOption(_.unionByName(_, allowMissingColumns = true))
+      .getOrElse(readAsOf(s, dir, entries.last.version).where(lit(false)))
+  }
+
+  /** The table AS OF version `v`: the base sources the log resolves for v
+    * ([[baseSources]]) plus the insert segments committed after v's last
+    * fold, masked by the VERSION-STAMPED tombstones through v. The stamp
+    * rule — a tombstone kills only rows whose commit version PRECEDES it
+    * (`_tomb_ver > _src_ver`) — is what lets an upsert's replacement
+    * share its predecessor's key, and is exactly the file-granularity
+    * scoping of a table format's deletion vectors. Planning is pure log
+    * metadata — no data pass.
+    */
   def readAsOf(s: SparkSession, dir: String, v: Int): DataFrame =
     readAsOfImpl(s, dir, v, None)
 
@@ -3650,7 +3506,7 @@ object VersionedLayout {
     val entries = log(dir)
     require(v >= 0 && v <= entries.last.version, s"version $v outside log 0..${entries.last.version}")
     require(v >= horizon(dir),
-      s"version $v is below the vacuum horizon ${horizon(dir)} — its archives are gone")
+      s"version $v is below the vacuum horizon ${horizon(dir)} — its files are gone")
     // An absent/unknown keep decision can never skip a source.
     def hits(k: Option[Boolean]): Boolean = k.getOrElse(true)
     // Per-entry keep decisions of the skip identity for the pids the
@@ -3662,9 +3518,8 @@ object VersionedLayout {
     def keepOf(e: LogEntry): Map[Int, Boolean] = skip match {
       case None => Map.empty
       case Some(sp) =>
-        val w = if (e.action == "compact") lastSchemaWriterBefore(entries, e.version)
-                else e.version
-        eraNameAt(sp.it, w).map(p => sp.entryKeep(e, p)).getOrElse(Map.empty)
+        eraNameAt(sp.it, schemaVersionOf(entries, e))
+          .map(p => sp.entryKeep(e, p)).getOrElse(Map.empty)
     }
     // TYPED RE-ADD support (round 13): physical names whose identities
     // disagree on type get aliased APART per source — keyed by the
@@ -3690,61 +3545,26 @@ object VersionedLayout {
           case None => d.drop(n)
         }
       }
-    // For each pid ever rewritten, the first compaction (minor or
-    // major) AFTER v holds its pre-rewrite files; others read live.
-    val archived: Map[Int, Int] = entries
-      .filter(e => (e.action == "compact" || e.action == "majorcompact") && e.version > v)
-      .flatMap(e => e.pids.map(_ -> e.version))
-      .groupBy(_._1).map { case (p, vs) => p -> vs.map(_._2).min }
-    // A live pid NOT in the archived map is a valid base source for v
-    // only if no major fold separates it from v: a fold archives EVERY
-    // pre-fold pid (all land in `archived`), so a live dir a later
-    // fold's entry does not cover was introduced after v and must not
-    // leak into the base read (see [[requireInDomain]] — this guard is
-    // the read-side backstop for legacy layouts without the v0 domain).
-    val firstMajorAfter = entries
-      .filter(e => e.action == "majorcompact" && e.version > v)
-      .sortBy(_.version).headOption
-    val livePidsAll = new java.io.File(dir).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("pid="))
-      .map(f => f.getName.stripPrefix("pid=").toInt)
-      .filterNot(archived.contains)
-      .filter(p => firstMajorAfter.forall(_.pids.contains(p)))
-      .toSeq
-    val liveStats =
-      if (skip.isDefined) keepByPid(entries, Int.MaxValue, keepOf)
-      else Map.empty[Int, Option[Boolean]]
-    val livePids = livePidsAll.filter(p => hits(liveStats.getOrElse(p, None)))
-    val stamp = logStamp(entries)
-    def liveRead(ps: Seq[Int]) = aliasConflicted(
-      cachedParquet(s, stamp, Some(dir), ps.map(p => s"$dir/pid=$p")),
-      lastSchemaWriterBefore(entries, Int.MaxValue))
-    val liveDf = if (livePids.isEmpty) None else Some(liveRead(livePids))
-    // ONE read per archive generation (multi-path), not one per pid —
-    // per-pid relations made archive-heavy AS-OF plans explode in
-    // codegen size (32 scans where one suffices).
-    val archGroups = archived.toSeq.groupBy(_._2).toSeq.map { case (c, ps) =>
-      val aStats =
-        if (skip.isDefined) keepByPid(entries, c, keepOf)
-        else Map.empty[Int, Option[Boolean]]
-      c -> ps.map(_._1).filter(p => hits(aStats.getOrElse(p, None)))
-    }.filter(_._2.nonEmpty)
-    def archRead(c: Int, ps: Seq[Int]) = aliasConflicted(
-      cachedParquet(s, stamp, Some(archiveDir(dir, c)),
-        ps.map(p => s"${archiveDir(dir, c)}/pid=$p")),
-      lastSchemaWriterBefore(entries, c))
-    val archDf0 = archGroups.map { case (c, ps) => archRead(c, ps) }
-    // If the prune dropped EVERY base source, keep one (rowless) for
-    // its schema — the union below still resolves, and zero rows is
-    // exactly what the bounds proved.
-    val archDf =
-      if (liveDf.nonEmpty || archDf0.nonEmpty || (livePidsAll.isEmpty && archived.isEmpty))
-        archDf0
-      else if (livePidsAll.nonEmpty) Seq(liveRead(livePidsAll.take(1)).where(lit(false)))
-      else {
-        val (c, ps) = archived.toSeq.groupBy(_._2).toSeq.head
-        Seq(archRead(c, ps.map(_._1).take(1)).where(lit(false)))
-      }
+    // Base sources AS OF v, resolved from the log ([[baseSources]]); a
+    // source whose recorded metadata rules it out is dropped before any
+    // file is listed.
+    val sources = baseSources(dir, entries, v)
+    val baseDf0 = baseFrames(s, dir, entries,
+        sources.filter { case (p, e) => skip.isEmpty || hits(keepOf(e).get(p)) })
+      .map { case (e, df) => aliasConflicted(df, schemaVersionOf(entries, e)) }
+    // If the prune dropped EVERY base source, keep one (rowless) for its
+    // schema — the union below still resolves, and zero rows is exactly
+    // what the bounds proved. With no base source at all (a fold of a
+    // FULLY-ERASED table writes no pid dir), the newest base files any
+    // entry still has on disk carry the schema.
+    val baseDf = if (baseDf0.nonEmpty) baseDf0 else {
+      val pick = if (sources.nonEmpty) sources.toSeq.sortBy(_._1).take(1)
+        else entries.reverseIterator.flatMap(e => pidsWritten(dir, e).map(_ -> e))
+          .find { case (p, e) => new java.io.File(s"${rootOf(dir, e)}/pid=$p").isDirectory }
+          .toSeq
+      baseFrames(s, dir, entries, pick.toMap)
+        .map { case (e, df) => aliasConflicted(df, schemaVersionOf(entries, e)).where(lit(false)) }
+    }
     // The base's source version is the latest major fold at or before
     // v: a fold physically applied every older tombstone and absorbed
     // every older segment, so its output rows are "committed at m" —
@@ -3752,46 +3572,24 @@ object VersionedLayout {
     // same-key upsert replacement survive its own old tombstone). Minor
     // compactions change bytes, not row identity.
     val m = majorAtOrBefore(entries, v)
-    val base = (liveDf.toSeq ++ archDf).reduceOption(_ unionByName _)
+    val base = baseDf.reduceOption(_ unionByName _)
       .getOrElse {
-        // A major fold of a FULLY-ERASED table lands no base pid dirs
-        // at all (an empty partitioned write has no files), so no live
-        // or archived source covers v: recover the table's schema from
-        // the newest surviving archive (the fold parked the pre-state
-        // there) and serve zero base rows.
-        val fromArchive = entries
-          .filter(e => e.action == "compact" || e.action == "majorcompact")
-          .sortBy(-_.version)
-          .map(e => e.version -> new java.io.File(archiveDir(dir, e.version)))
-          .flatMap { case (av, a) => Option(a.listFiles()).getOrElse(Array.empty)
-            .find(f => f.isDirectory && f.getName.startsWith("pid="))
-            .map(pd => (av, a, pd)) }
-          .headOption
-          .map { case (archVer, arch, pidDir) =>
-            aliasConflicted(
-              s.read.option("basePath", arch.getAbsolutePath)
-                .parquet(pidDir.getAbsolutePath).where(lit(false)),
-              lastSchemaWriterBefore(entries, archVer))
-          }
-        fromArchive.getOrElse {
-          // EMPTY-BASE layout (round 16: created with zero rows — a
-          // catalog CREATE TABLE over an empty location, or the
-          // streaming sink's empty v0): no bytes exist anywhere, so
-          // the schema comes from the base types the meta RECORDED at
-          // creation, in declaration order. Zero rows is the answer.
-          val typed = baseTypeSeqOf(dir)
-          if (typed.isEmpty) throw new IllegalStateException(
-            s"$dir has no base data files and no surviving archive to derive a schema from")
-          s.createDataFrame(
-            new java.util.ArrayList[Row](),
-            StructType(typed.map { case (n, t) =>
-              StructField(n, org.apache.spark.sql.types.DataType.fromDDL(t)) }))
-        }
+        // EMPTY-BASE layout (round 16: created with zero rows — a
+        // catalog CREATE TABLE over an empty location, or the streaming
+        // sink's empty v0): no bytes exist anywhere, so the schema comes
+        // from the base types the meta RECORDED at creation, in
+        // declaration order. Zero rows is the answer.
+        val typed = baseTypeSeqOf(dir)
+        if (typed.isEmpty) throw new IllegalStateException(
+          s"$dir has no base data files to derive a schema from")
+        s.createDataFrame(
+          new java.util.ArrayList[Row](),
+          StructType(typed.map { case (n, t) =>
+            StructField(n, org.apache.spark.sql.types.DataType.fromDDL(t)) }))
       }
       .withColumn("_src_ver", lit(m))
-    val segs = entries
-      .filter(e => (e.action == "insert" || e.action == "upsert")
-        && e.version > m && e.version <= v)
+    val stamp = logStamp(entries)
+    val segs = segmentsAt(entries, v)
       // Segment-level skip: a segment whose recorded per-pid metadata
       // rules out every pid contributes nothing (no metadata =
       // unknown = kept; the spelling resolves under the segment's
@@ -3860,15 +3658,15 @@ object VersionedLayout {
             || (first.action == "renamecolumn" && first.colType == n))
         } => n
       }.toSet
-    // Defensive pre-pass (unchanged semantics): an ABOVE-v rename's
-    // to-name can only reach a below-v read when a post-v fold
-    // materialized it and a pid escaped archival routing — read it back
-    // under its as-of-v name so the era expressions below can see it
-    // (normally a no-op). GUARDED by absence-at-v: with name revival, a
+    // Schema pre-pass: an ABOVE-v rename's to-name can only reach a
+    // below-v read through the rowless schema fallback above, when it
+    // reads bytes a post-v fold materialized — read it back under its
+    // as-of-v name so the era expressions below can see it (normally a
+    // no-op). GUARDED by absence-at-v: with name revival, a
     // future rename's target may be a name that legitimately exists at
     // v (an era column, or an untouched base column) — those must never
     // be renamed away. Reverse order so chains unwind. Likewise, a
-    // column ADDED above v that leaked the same way simply leaves (the
+    // column ADDED above v that arrives the same way simply leaves (the
     // `absentAtV` exclusion in the final projection).
     val futureRenames = entries
       .filter(e => e.action == "renamecolumn" && e.version > v).sortBy(-_.version)
@@ -3900,17 +3698,11 @@ object VersionedLayout {
         if (srcCols.isEmpty) None
         else {
           val src = srcCols.map(col).reduceLeft(coalesce(_, _))
+          // Every row read AS OF v carries _src_ver <= v, so the last
+          // era is open-ended.
           Some(hi match {
             case Some(h) => when(col("_src_ver") >= lo && col("_src_ver") < h, src)
-            // The LAST era closes at v, not open-ended: every legitimate
-            // source carries _src_ver <= v, so this costs nothing — but a
-            // pid that escaped archival routing (the leaked-pid corner)
-            // can surface _src_ver > v rows whose values belong to an
-            // ABOVE-v identity under this physical name (a future rename
-            // whose target revived it, which the absentAtV-gated mirror
-            // pre-pass deliberately leaves in place); the upper bound
-            // keeps those future values out of the historical read.
-            case None => when(col("_src_ver") >= lo && col("_src_ver") <= v, src)
+            case None => when(col("_src_ver") >= lo, src)
           })
         }
       }

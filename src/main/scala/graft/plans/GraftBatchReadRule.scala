@@ -14,7 +14,7 @@ import graft.streaming.GraftLayoutTable
   * engine's own AS-OF plan. The DSv2 [[GraftLayoutTable]] is a
   * metadata-only handle (path + pinned version + schema); this rule
   * swaps its relation for `VersionedLayout.readAsOf`'s LOGICAL plan —
-  * the union of parquet scans, tombstone masks, archive routing, and
+  * the union of parquet scans, tombstone masks, log-resolved sources, and
   * era-gated identity resolution the Scala API builds — so Catalyst
   * treats a format-read exactly like an API read: filters and column
   * pruning still push into the surviving parquet scans, and every

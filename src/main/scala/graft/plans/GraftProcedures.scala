@@ -37,11 +37,11 @@ import graft.operators.VersionedLayout
   * one metadata row (a [[LocalScan]]: procedure results are driver
   * values, never a data pass). SqlDmlSpec proves artifact equality:
   * a CALL-compacted table and a Scala-compacted twin serve identical
-  * history, answers, and archive shape.
+  * history, answers, and file layout.
   *
   * At 100 TB the procedures ARE the maintenance story's front door:
   * the fold/vacuum themselves are the engine's (one shuffle over the
-  * snapshot for compact, rename-cost archives, pure-metadata
+  * snapshot for compact, copy-on-write segments, pure-metadata
   * planning); the CALL layer adds name resolution and argument
   * parsing only. `new_pid` arrives as an expression STRING — parsed
   * by `expr()` into the same Column the Scala verb takes, so the SQL

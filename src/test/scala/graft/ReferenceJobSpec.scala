@@ -308,14 +308,27 @@ class ReferenceJobSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val wrapped = spark.range(1).select(lit(-32).as("p")).repartitionById(26, col("p"))
       .select(spark_partition_id()).head().getInt(0)
     assert(wrapped == 20)
+    // A previous complete output (some letters empty) the failed writes
+    // below must leave byte for byte as it was.
+    val previous = root.resolve("bad-previous")
+    LetterSink.write(spark.createDataFrame(Seq(("apple", Array(1, 2)), ("umbra", Array(3))))
+      .toDF("word", "file_ids"), previous.toString)
+    def letterBytes(dir: java.nio.file.Path) =
+      ('a' to 'z').map(c => java.util.Arrays.toString(Files.readAllBytes(dir.resolve(s"$c.txt"))))
+    val before = letterBytes(previous)
+    val written = read(previous)
+    assert(written(0) == "apple:[1 2]\n" && written(1).isEmpty && written(20) == "umbra:[3]\n")
     Seq("Apple", "ébène", "1st", "", "-x").zipWithIndex.foreach { case (bad, i) =>
-      val out = root.resolve(s"bad-$i")
-      val rows = Seq(("apple", Array(1)), (bad, Array(2)), ("umbra", Array(3)))
-      val e = intercept[Exception](
-        LetterSink.write(spark.createDataFrame(rows).toDF("word", "file_ids"), out.toString))
-      val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString("\n")
-      assert(messages.contains(s"word '$bad' does not start with a letter a-z"), messages)
-      assert(('a' to 'z').forall(c => Files.size(out.resolve(s"$c.txt")) == 0), s"'$bad' wrote a letter file")
+      val rows = spark.createDataFrame(Seq(("apple", Array(1)), (bad, Array(2)), ("umbra", Array(3))))
+        .toDF("word", "file_ids")
+      val fresh = root.resolve(s"bad-$i")
+      Seq(fresh, previous).foreach { out =>
+        val e = intercept[Exception](LetterSink.write(rows, out.toString))
+        val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString("\n")
+        assert(messages.contains(s"word '$bad' does not start with a letter a-z"), messages)
+      }
+      assert(('a' to 'z').forall(c => !Files.exists(fresh.resolve(s"$c.txt"))), s"'$bad' wrote a letter file")
+      assert(letterBytes(previous) == before, s"'$bad' changed the previous complete output")
     }
   }
 

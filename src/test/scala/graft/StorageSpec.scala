@@ -216,7 +216,7 @@ class StorageSpec extends SparkSpec {
       s"post-compact outstanding tombstones $tombPidsLeft != retained pids $expectRetain")
     // Rewritten pids hold ONLY survivors; retained pids still carry dead
     // rows physically (masking does the erasure there).
-    val rawAfter = spark.read.parquet(dir)
+    val rawAfter = DeletableRangeLayout.data(spark, dir)
     assert(rawAfter.where(col("pid").isin(rewritten: _*))
       .where(col("v").between(lo, hi)).count() == 0)
     assert(rawAfter.count() > total - bandN, "compact rewrote sub-threshold pids too")
@@ -270,13 +270,19 @@ class StorageSpec extends SparkSpec {
     assert(VersionedLayout.readAsOf(spark, dir, 2).count() == total - inA - inB)
     assert(VersionedLayout.readAsOf(spark, dir, 3).count() == total - inA - inB)
 
-    // Pre-compact versions are served from the archive (the rewritten
-    // pids' files moved, not copied); the current version never is.
+    // Copy-on-write: pre-compact versions keep reading the v0 files of
+    // the rewritten pids (nothing moved); the current version reads the
+    // compaction's own output for them and never the superseded files.
     val v0Files = VersionedLayout.readAsOf(spark, dir, 0).inputFiles
-    assert(v0Files.exists(_.contains("_archive/v3/")),
-      "v0 read did not route through the compaction archive")
-    assert(!VersionedLayout.readAsOf(spark, dir, 3).inputFiles.exists(_.contains("_archive")),
-      "current-version read touched the archive")
+    val v3Files = VersionedLayout.readAsOf(spark, dir, 3).inputFiles
+    rewritten.foreach { p =>
+      assert(v0Files.exists(_.contains(s"/layout/pid=$p/")),
+        s"v0 read did not read pid $p's original files")
+      assert(v3Files.exists(f => f.contains("/_seg/c3-") && f.contains(s"/pid=$p/")),
+        s"current-version read did not read pid $p's compaction output")
+      assert(!v3Files.exists(_.contains(s"/layout/pid=$p/")),
+        s"current-version read touched pid $p's superseded files")
+    }
 
     // The mask's at-scale shape: tombstones (bounded metadata) broadcast
     // to the data side; the data side is never shuffled for the mask.
@@ -295,7 +301,7 @@ class StorageSpec extends SparkSpec {
     assert(v4 == 4)
     assert(VersionedLayout.readAsOf(spark, dir, 4).count() == total - inA - inB)
 
-    // Vacuum to the compaction: archives die, horizon rises, old
+    // Vacuum to the compaction: superseded files die, horizon rises, old
     // versions fail EXPLICITLY, the head keeps answering — and the
     // tombstone rows the compaction made dead (rewritten pids) are
     // GC'd while the ones still masking live bytes survive.
@@ -303,7 +309,11 @@ class StorageSpec extends SparkSpec {
       .select(col("pid")).distinct().collect().map(_.getInt(0)).toSet
     VersionedLayout.vacuum(spark, dir, keepFrom = 3)
     assert(VersionedLayout.horizon(dir) == 3)
-    assert(!new java.io.File(dir, "_archive/v3").isDirectory, "vacuum left the archive")
+    rewritten.foreach(p => assert(!new java.io.File(dir, s"pid=$p").exists,
+      s"vacuum left pid $p's superseded v0 files"))
+    assert(v3Files.filterNot(_.contains("/_tombs/"))
+      .forall(f => new java.io.File(new java.net.URI(f)).isFile),
+      "vacuum deleted a data file the retained head reads")
     val tombPidsAfter = VersionedLayout.tombstonesAt(spark, dir, 1)
       .select(col("pid")).distinct().collect().map(_.getInt(0)).toSet
     assert(tombPidsAfter == tombPidsBefore -- rewritten,
@@ -369,25 +379,25 @@ class StorageSpec extends SparkSpec {
 
     val (ver, _) = VersionedLayout.majorCompact(spark, dir)
     assert(ver == 4)
-    // Head: same answer, SINGLE-source read — no segments, no archive.
+    // Head: same answer, SINGLE-source read — the fold's output only.
     val head = VersionedLayout.readAsOf(spark, dir, 4)
     assert(head.count() == pre(3))
     val headFiles = head.inputFiles
-    assert(!headFiles.exists(f => f.contains("_inserts") || f.contains("_archive")),
-      "post-fold head read still unions segments or archives")
+    assert(headFiles.nonEmpty && headFiles.forall(_.contains("/_seg/c4-")),
+      "post-fold head read still unions segments or pre-fold files")
     // The folded same-key replacement survived its own old tombstone.
     val rows = head.where(col("l_orderkey") === kOk && col("l_linenumber") === kLn)
       .select(col("l_quantity")).collect()
     assert(rows.length == 1 && rows.head.getDouble(0) == k.getDouble(3) + 7,
       "fold re-killed the upsert replacement (source-stamp regression)")
-    // Every pre-fold version still answers through the fold's archive.
+    // Every pre-fold version still answers from the files it always read.
     (0 to 3).foreach { v =>
       assert(VersionedLayout.readAsOf(spark, dir, v).count() == pre(v),
         s"AS-OF $v diverged across the major fold")
     }
     assert(VersionedLayout.readAsOf(spark, dir, 1).inputFiles
-      .exists(_.contains("_archive/v4/inserts/v1")),
-      "pre-fold read did not route through the archived segment")
+      .exists(_.contains("/_inserts/v1-")),
+      "pre-fold read did not read the folded segment where it was written")
     // Post-fold mutations keep working: a delete against the new base.
     VersionedLayout.appendDelete(spark, dir, col("l_orderkey") === kOk)
     assert(VersionedLayout.readAsOf(spark, dir, 5).count() == pre(3) - 1)
@@ -441,7 +451,7 @@ class StorageSpec extends SparkSpec {
       VersionedLayout.readAsOf(spark, dir, head).columns.toSet ++ Set("change_type", "change_version"))
   }
 
-  test("versioned compact crash-replay: a retry lands the survivors and keeps the FIRST archive (true pre-state); AS-OF history intact") {
+  test("versioned compact crash-replay: a segment written without its commit is invisible, the retry converges, the orphan is swept after its lease") {
     import graft.operators.VersionedLayout
     import graft.queries.ScalePatterns
     val uppers = ScalePatterns.rangeUppers(spark, sf0001)
@@ -452,82 +462,120 @@ class StorageSpec extends SparkSpec {
     val inBand = spark.read.parquet(dir).where(col("v").between(lo, hi)).count()
     VersionedLayout.appendDelete(spark, dir, col("v").between(lo, hi))
 
-    // Find a pid compaction would rewrite and SIMULATE the worst crash
-    // window by hand: survivors in tmp, pid dir moved to the archive,
-    // no survivors landed, no commit.
-    val tombs = VersionedLayout.tombstonesAt(spark, dir, 1)
-    val victim = tombs.groupBy(col("pid")).count().orderBy(col("count").desc)
-      .first().getInt(0)
-    val pdir = java.nio.file.Paths.get(dir, s"pid=$victim")
-    val preStateRows = spark.read.parquet(pdir.toString).count()
-    val survivors = spark.read.parquet(pdir.toString)
-      .join(tombs.where(col("pid") === victim)
-        .select(col("l_orderkey"), col("l_linenumber"), col("v")),
-        Seq("l_orderkey", "l_linenumber", "v"), "left_anti").localCheckpoint()
-    survivors.write.mode("overwrite").parquet(s"$dir/.compact-tmp-$victim")
-    val arch = java.nio.file.Paths.get(s"$dir/_archive/v2/pid=$victim")
-    java.nio.file.Files.createDirectories(arch.getParent)
-    java.nio.file.Files.move(pdir, arch,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    // A compaction attempt in another (now dead) process wrote its v2
+    // output and crashed before the commit. Its bytes here are the
+    // UNcompacted pid, so a reader resolving it would see the deleted
+    // band again.
+    val victim = VersionedLayout.tombstonesAt(spark, dir, 1).groupBy(col("pid")).count()
+      .orderBy(col("count").desc).first().getInt(0)
+    val orphan = new java.io.File(s"$dir/_seg/c2-pCRASHt1")
+    spark.read.parquet(s"$dir/pid=$victim").write.parquet(s"$orphan/pid=$victim")
+    def readsOrphan(v: Int) =
+      VersionedLayout.readAsOf(spark, dir, v).inputFiles.exists(_.contains("pCRASH"))
+    assert(VersionedLayout.readAsOf(spark, dir, 1).count() == total - inBand)
+    assert(!readsOrphan(1), "a read resolved the uncommitted segment")
 
-    // The retried compaction must repair the window, NOT re-archive the
-    // already-compacted bytes, and commit the correct state.
+    // The retry converges: it commits v2 under its own writer tag.
     val (ver, pids) = VersionedLayout.appendCompact(
       spark, dir, ScalePatterns.deleteCompactThreshold)
     assert(ver == 2 && pids.contains(victim), s"retry v$ver rewrote $pids")
-    // Head answers the post-delete table; the victim pid holds survivors.
     assert(VersionedLayout.readAsOf(spark, dir, 2).count() == total - inBand)
-    assert(spark.read.parquet(pdir.toString).count() == survivors.count())
-    // The archive kept the TRUE pre-compact bytes (dead rows included),
-    // so time travel below the compaction still serves version-0 truth.
-    assert(spark.read.parquet(arch.toString).count() == preStateRows,
-      "retry replaced the archived pre-state")
+    assert(!readsOrphan(2), "the committed compaction resolved the crashed attempt's segment")
     assert(VersionedLayout.readAsOf(spark, dir, 0).count() == total)
+
+    // Inside its lease the orphan may be an in-flight writer: kept. Past
+    // the lease it is swept; the committed segment stays.
+    VersionedLayout.vacuum(spark, dir, keepFrom = 0)
+    assert(orphan.isDirectory, "sweep reclaimed a dir inside its lease")
+    VersionedLayout.vacuum(spark, dir, keepFrom = 0, orphanLeaseMs = 0L)
+    assert(!orphan.exists, "the crashed attempt's segment survived the lease")
+    val tag = VersionedLayout.log(dir).find(_.version == 2).get.tag
+    assert(new java.io.File(s"$dir/_seg/c2-$tag/pid=$victim").isDirectory,
+      "the sweep removed the committed compaction's output")
+    assert(VersionedLayout.readAsOf(spark, dir, VersionedLayout.currentVersion(dir)).count()
+      == total - inBand)
   }
 
-  test("versioned compact retry swap is atomic: a crash between the trash/land renames loses no rows and keeps history") {
+  /** Two writers released together against a fresh 80-row, 4-pid table
+    * whose v1 deleted ids 1..40 of pids 0 and 1 (so a compaction has
+    * work); returns the table dir and the id set at v1.
+    */
+  private def raceTable(root: String, rep: Int): (String, Set[Long]) = {
     import graft.operators.VersionedLayout
-    import graft.queries.ScalePatterns
-    val uppers = ScalePatterns.rangeUppers(spark, sf0001)
-    val dir = tempDir("graft-trash").toString + "/layout"
-    VersionedLayout.writeBase(spark, sf0001, dir, uppers)
-    val (lo, hi) = (ScalePatterns.deleteBandLoCenti, ScalePatterns.deleteBandHiCenti)
-    val total = spark.read.parquet(dir).count()
-    val inBand = spark.read.parquet(dir).where(col("v").between(lo, hi)).count()
-    VersionedLayout.appendDelete(spark, dir, col("v").between(lo, hi))
+    val spark0 = spark
+    import spark0.implicits._
+    val dir = s"$root/r$rep"
+    VersionedLayout.writeBaseTable(spark, (1L to 80L).toDF("event_id")
+      .select(pmod(col("event_id"), lit(4)).cast("int").as("pid"), col("event_id"),
+        (col("event_id") * 10).as("value_centi")), dir, Seq("event_id"))
+    VersionedLayout.appendDelete(spark, dir, col("event_id") % 4 < 2 && col("event_id") <= 40L)
+    (dir, (1L to 80L).filterNot(i => i % 4 < 2 && i <= 40).toSet)
+  }
 
-    // Simulate the RETRY path's worst window: a first attempt archived
-    // the true pre-state and landed survivors, then the retry (archive
-    // already exists) crashed between its two swap renames — live pid
-    // dir gone to the trash name, recomputed survivors still in tmp.
-    val tombs = VersionedLayout.tombstonesAt(spark, dir, 1)
-    val victim = tombs.groupBy(col("pid")).count().orderBy(col("count").desc)
-      .first().getInt(0)
-    val pdir = java.nio.file.Paths.get(dir, s"pid=$victim")
-    val preStateRows = spark.read.parquet(pdir.toString).count()
-    val survivors = spark.read.parquet(pdir.toString)
-      .join(tombs.where(col("pid") === victim)
-        .select(col("l_orderkey"), col("l_linenumber"), col("v")),
-        Seq("l_orderkey", "l_linenumber", "v"), "left_anti").localCheckpoint()
-    assert(survivors.count() < preStateRows, "fixture deletes nothing in the victim pid")
-    survivors.write.mode("overwrite").parquet(s"$dir/.compact-tmp-$victim")
-    survivors.write.mode("overwrite").parquet(s"$dir/.compact-trash-$victim")
-    val arch = java.nio.file.Paths.get(s"$dir/_archive/v2/pid=$victim")
-    java.nio.file.Files.createDirectories(arch.getParent)
-    java.nio.file.Files.move(pdir, arch,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+  private def race[A, B](a: => A, b: => B): (A, B) = {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    val gate = new java.util.concurrent.CountDownLatch(2)
+    val fa = Future { gate.countDown(); gate.await(); a }
+    val fb = Future { gate.countDown(); gate.await(); b }
+    (Await.result(fa, 5.minutes), Await.result(fb, 5.minutes))
+  }
 
-    val (ver, pids) = VersionedLayout.appendCompact(
-      spark, dir, ScalePatterns.deleteCompactThreshold)
-    assert(ver == 2 && pids.contains(victim), s"retry v$ver rewrote $pids")
-    // No crash leftovers; survivors live; archive still the pre-state.
-    assert(!new java.io.File(s"$dir/.compact-trash-$victim").exists(), "trash dir leaked")
-    assert(!new java.io.File(s"$dir/.compact-tmp-$victim").exists(), "tmp dir leaked")
-    assert(spark.read.parquet(pdir.toString).count() == survivors.count())
-    assert(spark.read.parquet(arch.toString).count() == preStateRows,
-      "retry replaced the archived pre-state")
-    assert(VersionedLayout.readAsOf(spark, dir, 2).count() == total - inBand)
-    assert(VersionedLayout.readAsOf(spark, dir, 0).count() == total)
+  private def idsAsOf(dir: String, v: Int): Set[Long] =
+    graft.operators.VersionedLayout.readAsOf(spark, dir, v)
+      .select(col("event_id")).collect().map(_.getLong(0)).toSet
+
+  test("copy-on-write compact races an append: both commit, and every version reads what the serial history says (20 races)") {
+    import graft.operators.{Cas, VersionedLayout}
+    val spark0 = spark
+    import spark0.implicits._
+    val root = tempDir("graft-race-ca").toString
+    (1 to 20).foreach { rep =>
+      val (dir, atV1) = raceTable(root, rep)
+      // Odd races append an insert, even ones a delete that also hits a
+      // pid the compaction rewrites.
+      val inserted = (100L + rep to 104L + rep).toSet
+      val deleted = atV1.filter(i => i % 4 == 1 && i > 40 && i <= 60)
+      val (compacted, _) = race(
+        VersionedLayout.appendCompact(spark, dir, 0.1),
+        Cas.withRetry() {
+          if (rep % 2 == 1) VersionedLayout.appendInsert(spark, dir, inserted.toSeq.toDF("event_id")
+            .select(pmod(col("event_id"), lit(4)).cast("int").as("pid"), col("event_id"),
+              (col("event_id") * 10).as("value_centi")))
+          else VersionedLayout.appendDelete(spark, dir, col("event_id").isin(deleted.toSeq: _*))
+        })
+      val entries = VersionedLayout.log(dir)
+      assert(entries.map(_.version) == (0 to 3), s"race $rep: log ${entries.map(_.action)}")
+      assert(compacted._1 >= 2 && compacted._2 == Seq(0, 1), s"race $rep: compact $compacted")
+      // Serial model in commit order: a compaction changes no row.
+      val model = entries.drop(2).scanLeft(atV1) { (rows, e) => e.action match {
+        case "compact" => rows
+        case "insert" => rows ++ inserted
+        case "delete" => rows -- deleted
+      }}
+      (1 to 3).foreach(v => assert(idsAsOf(dir, v) == model(v - 1),
+        s"race $rep: AS-OF $v diverged from the serial history ${entries.map(_.action)}"))
+      assert(idsAsOf(dir, 0) == (1L to 80L).toSet)
+    }
+  }
+
+  test("copy-on-write compact races a compact: both commit, the rebased one rewrites nothing, every version reads the serial history (20 races)") {
+    import graft.operators.VersionedLayout
+    val root = tempDir("graft-race-cc").toString
+    (1 to 20).foreach { rep =>
+      val (dir, atV1) = raceTable(root, rep)
+      val (a, b) = race(VersionedLayout.appendCompact(spark, dir, 0.1),
+        VersionedLayout.appendCompact(spark, dir, 0.1))
+      assert(Set(a._1, b._1) == Set(2, 3), s"race $rep: versions ${a._1}/${b._1}")
+      // Whoever committed second rebased onto the first's output, where
+      // no dead row is left to reclaim.
+      val (first, second) = if (a._1 == 2) (a, b) else (b, a)
+      assert(first._2 == Seq(0, 1) && second._2.isEmpty,
+        s"race $rep: compactions rewrote ${first._2} then ${second._2}")
+      (1 to 3).foreach(v => assert(idsAsOf(dir, v) == atV1, s"race $rep: AS-OF $v diverged"))
+      assert(idsAsOf(dir, 0) == (1L to 80L).toSet)
+    }
   }
 
   test("vacuum tombstone GC respects fold-archived segments: AS-OF between the horizon and a major fold never resurrects deleted segment rows") {
@@ -557,15 +605,15 @@ class StorageSpec extends SparkSpec {
     // v3: minor compact rewrites the base-killed pids (threshold 0).
     val (c3, rewritten) = VersionedLayout.appendCompact(spark, dir, 0.0)
     assert(c3 == 3 && rewritten.nonEmpty)
-    // v4: major fold — the v1 segment is archived, not live.
+    // v4: major fold — the head no longer reads the v1 segment.
     val (m4, _) = VersionedLayout.majorCompact(spark, dir)                          // v4
     assert(m4 == 4)
     val asOf3Before = VersionedLayout.readAsOf(spark, dir, 3).count()
     assert(asOf3Before == total - inBand, "v2 delete did not net out at v3")
 
     // Vacuum keeps v3+: the v2 tombstone's pids were rewritten at c3 <=
-    // keepFrom, but the v1 segment is still ADDRESSABLE through the v4
-    // fold archive for AS-OF 3 — GC must keep those tombstone rows.
+    // keepFrom, but AS-OF 3 still reads the v1 segment (the v4 fold is
+    // above the horizon) — GC must keep those tombstone rows.
     VersionedLayout.vacuum(spark, dir, keepFrom = 3)
     assert(VersionedLayout.horizon(dir) == 3)
     val asOf3 = VersionedLayout.readAsOf(spark, dir, 3)
@@ -739,7 +787,7 @@ class StorageSpec extends SparkSpec {
     // version between the version choice and the commit; the retry must
     // rebase onto the new head and succeed.
     var attempts = 0
-    val got = VersionedLayout.withWriteRetry(3) {
+    val got = graft.operators.Cas.withRetry(3) {
       attempts += 1
       val ver = VersionedLayout.currentVersion(dir) + 1
       if (attempts == 1)
@@ -752,7 +800,7 @@ class StorageSpec extends SparkSpec {
     assert(VersionedLayout.log(dir).last.tag == "mine")
 
     // Exhausted retries fail loudly, never silently.
-    val dead = intercept[IllegalStateException](VersionedLayout.withWriteRetry(2) {
+    val dead = intercept[IllegalStateException](graft.operators.Cas.withRetry(2) {
       val ver = VersionedLayout.currentVersion(dir) + 1
       VersionedLayout.commit(dir, VersionedLayout.LogEntry(ver, "noop", Nil, 0))
       VersionedLayout.commit(dir, VersionedLayout.LogEntry(ver, "noop", Nil, 0))
@@ -770,7 +818,7 @@ class StorageSpec extends SparkSpec {
     val gate = new java.util.concurrent.CountDownLatch(2)
     def racer(lo: Long, hi: Long): Future[Int] = Future {
       gate.countDown(); gate.await()
-      VersionedLayout.withWriteRetry() {
+      graft.operators.Cas.withRetry() {
         VersionedLayout.appendDelete(spark, dir, col("v").between(lo, hi))
       }
     }
@@ -878,7 +926,7 @@ class StorageSpec extends SparkSpec {
     // Appends keep working on the vacuumed + twice-checkpointed source
     // (domain validation resolves through the checkpoint; the retry
     // wrapper passes through a no-contention commit).
-    val v7 = VersionedLayout.withWriteRetry()(VersionedLayout.appendDelete(spark, dir,
+    val v7 = graft.operators.Cas.withRetry()(VersionedLayout.appendDelete(spark, dir,
       col("v").between(crudUpsertLoCenti, crudUpsertHiCenti)))
     assert(v7 == 7)
     assert(VersionedLayout.readAsOf(spark, dir, 7).count() == c3 - inU)
@@ -898,7 +946,7 @@ class StorageSpec extends SparkSpec {
     val (m2, _) = VersionedLayout.majorCompact(spark, dir)       // v2: fold empty
     assert(m2 == 2)
     // The fold landed NO base pid dirs — the head read must still
-    // answer (zero rows, schema recovered from the fold's archive).
+    // answer (zero rows, schema recovered from the pre-fold files).
     assert(VersionedLayout.readAsOf(spark, dir, 2).count() == 0)
     assert(VersionedLayout.readAsOf(spark, dir, 0).count() == 12,
       "pre-erasure history lost")
@@ -934,9 +982,8 @@ class StorageSpec extends SparkSpec {
     // v2: PLAIN fold — the baseline file layout.
     VersionedLayout.majorCompact(spark, dir)
     def scanFraction(): (Int, Int) = {
-      val files = new java.io.File(dir).listFiles()
-        .filter(f => f.isDirectory && f.getName.startsWith("pid="))
-        .flatMap(_.listFiles()).filter(_.getName.endsWith(".parquet"))
+      val files = VersionedLayout.readAsOf(spark, dir, VersionedLayout.currentVersion(dir))
+        .inputFiles.map(f => new java.io.File(new java.net.URI(f)))
       val hits = files.count { f =>
         val mm = spark.read.parquet(f.getAbsolutePath)
           .agg(min(col("a")), max(col("a")), min(col("t")), max(col("t"))).first()
@@ -954,7 +1001,7 @@ class StorageSpec extends SparkSpec {
       clusterBy = Seq(ScalePatterns.mortonKey(col("a"), col("t"), bits = 6)))
     val (zHits, zFiles) = scanFraction()
     assert(boxCount(3) == boxBefore, "clustered fold changed the box answer")
-    assert(boxCount(1) == boxBefore, "fold archives broke pre-fold history")
+    assert(boxCount(1) == boxBefore, "the folds broke pre-fold history")
     assert(zFiles > 1, s"clustered fold produced $zFiles file(s) — nothing to skip")
     // The improvement claim: the clustered layout scans a strictly
     // smaller FRACTION of files for the 2-D box than the plain fold.
@@ -979,7 +1026,7 @@ class StorageSpec extends SparkSpec {
       dir, Seq("event_id"))
     // v1 delete erases half of pid 0 and pid 1 (ids ≡ 0,1 mod 4 with
     // id <= 20) — both cross any sensible threshold; v2 compact
-    // archives exactly those two pre-compact pid dirs (20 rows).
+    // supersedes exactly those two v0 pid dirs (20 rows).
     VersionedLayout.appendDelete(spark, dir,
       col("event_id") % 4 < 2 && col("event_id") <= 20L)
     val (_, rewritten) = VersionedLayout.appendCompact(spark, dir, 0.1)
@@ -991,37 +1038,35 @@ class StorageSpec extends SparkSpec {
     assert(audit(2L).getString(1) == "compact" && audit(2L).getBoolean(6),
       "compact version not flagged reclaimable at keepLast = 0")
     val predicted = audit(2L).getLong(8)
-    // The archive holds the two full pre-compact pid dirs: 20 rows.
+    // The superseded dirs are the two full pre-compact pid dirs: 20 rows.
     assert(predicted == 20L, s"predicted $predicted")
     assert(audit(3L).getLong(3) == 1L, "segment mass wrong")
     // Physical ground truth before the vacuum: rows and bytes of the
-    // archive directories the vacuum will delete.
+    // superseded v0 pid dirs the vacuum will delete.
     def treeBytes(f: java.io.File): Long =
       if (f.isFile) f.length()
       else Option(f.listFiles()).getOrElse(Array.empty).map(treeBytes).sum
-    val archDir = new java.io.File(s"$dir/_archive/v2")
-    val physicalRows = spark.read.parquet(
-      archDir.listFiles().filter(_.getName.startsWith("pid=")).map(_.getAbsolutePath): _*)
-      .count()
+    val superseded = Seq(0, 1).map(p => new java.io.File(s"$dir/pid=$p"))
+    val physicalRows = spark.read.parquet(superseded.map(_.getAbsolutePath): _*).count()
     assert(physicalRows == predicted,
-      s"prediction $predicted != physical archive rows $physicalRows")
-    val archBytes = treeBytes(archDir)
+      s"prediction $predicted != physical superseded rows $physicalRows")
+    val archBytes = superseded.map(treeBytes).sum
     val dirBytesBefore = treeBytes(new java.io.File(dir))
 
     // Policy crossing: a threshold above the prediction does NOT fire.
     assert(!VersionedLayout.vacuumIfNeeded(spark, dir, keepLast = 0,
       minReclaimRows = predicted + 1))
-    assert(archDir.isDirectory, "a non-firing vacuumIfNeeded deleted archives")
+    assert(superseded.forall(_.isDirectory), "a non-firing vacuumIfNeeded deleted files")
     // At the prediction it fires; the physical reclaim matches.
     assert(VersionedLayout.vacuumIfNeeded(spark, dir, keepLast = 0,
       minReclaimRows = predicted))
-    assert(!archDir.exists(), "vacuum left the reclaimable archive")
+    assert(!superseded.exists(_.exists()), "vacuum left the reclaimable files")
     val reclaimedBytes = dirBytesBefore - treeBytes(new java.io.File(dir))
     // The vacuum also GC'd v1 tombstone rows over the rewritten pids
     // and appended its own log entry, so the byte delta is AT LEAST the
-    // archive's mass; the archive accounts for the bulk.
+    // superseded mass; the superseded files account for the bulk.
     assert(reclaimedBytes >= archBytes,
-      s"reclaimed $reclaimedBytes < archive mass $archBytes")
+      s"reclaimed $reclaimedBytes < superseded mass $archBytes")
     assert(VersionedLayout.horizon(dir) == 3)
     // Idempotence: nothing left to reclaim — the policy goes quiet.
     assert(!VersionedLayout.vacuumIfNeeded(spark, dir, keepLast = 0, minReclaimRows = 1L))
@@ -1039,18 +1084,18 @@ class StorageSpec extends SparkSpec {
       .select(pmod(col("event_id"), lit(4)).cast("int").as("pid"),
         col("event_id"), col("value_centi"))
     // Same history as the count-based mirror: v0 base, v1 delete half
-    // of pids 0-1, v2 compact (archives those two pre-compact dirs).
+    // of pids 0-1, v2 compact (supersedes those two v0 pid dirs).
     VersionedLayout.writeBaseTable(spark, shaped((1L to 40L).map(i => (i, i))),
       dir, Seq("event_id"))
     VersionedLayout.appendDelete(spark, dir,
       col("event_id") % 4 < 2 && col("event_id") <= 20L)
     VersionedLayout.appendCompact(spark, dir, 0.1)
     val eff = VersionedLayout.commitTimes(dir).toMap
-    val archDir = new java.io.File(s"$dir/_archive/v2")
+    val superseded = Seq(0, 1).map(p => new java.io.File(s"$dir/pid=$p"))
     val window = 1000L
 
     // Audit arm: the predicted reclaim at a cutoff ON v2 names the
-    // compact reclaimable and predicts the archived mass (20 rows).
+    // compact reclaimable and predicts the superseded mass (20 rows).
     val audit = VersionedLayout
       .retentionAuditByTime(spark, dir, window, nowMs = eff(2) + window)
       .collect().map(r => r.getLong(0) -> r).toMap
@@ -1060,20 +1105,20 @@ class StorageSpec extends SparkSpec {
     assert(!audit(0L).getBoolean(3), "v0 must sit outside the window")
 
     // BELOW the crossing: cutoff strictly before v1's effective time
-    // retains v0 (keep_from == horizon == 0) — no fire, archives stay.
+    // retains v0 (keep_from == horizon == 0) — no fire, files stay.
     assert(!VersionedLayout.vacuumIfNeededByTime(spark, dir, window,
       nowMs = eff(1) - 1 + window))
-    assert(archDir.isDirectory, "a non-firing time vacuum deleted archives")
+    assert(superseded.forall(_.isDirectory), "a non-firing time vacuum deleted files")
     // minReclaimRows teeth: at the crossing but demanding more than the
-    // archive holds — no fire.
+    // superseded files hold — no fire.
     assert(!VersionedLayout.vacuumIfNeededByTime(spark, dir, window,
       nowMs = eff(2) + window, minReclaimRows = 21L))
-    assert(archDir.isDirectory)
+    assert(superseded.forall(_.isDirectory))
     // AT the crossing (cutoff == eff(v2), exactly q201's shape): fires,
-    // reclaims the archive, horizon rises to 2.
+    // reclaims the superseded files, horizon rises to 2.
     assert(VersionedLayout.vacuumIfNeededByTime(spark, dir, window,
       nowMs = eff(2) + window, minReclaimRows = 20L))
-    assert(!archDir.exists(), "time vacuum left the reclaimable archive")
+    assert(!superseded.exists(_.exists()), "time vacuum left the reclaimable files")
     assert(VersionedLayout.horizon(dir) == 2)
     // Version reads below the horizon refuse; the head still answers.
     intercept[IllegalArgumentException](VersionedLayout.readAsOf(spark, dir, 1))
@@ -1109,7 +1154,7 @@ class StorageSpec extends SparkSpec {
 
     // SOUNDNESS at every version x band: the pruned read returns
     // exactly what the unpruned filtered read returns — including v0/v1
-    // reads that now route pid 1 through v3's archive.
+    // reads of the pid 1 files v3 superseded.
     val bands = Seq((12L, 18L), (5L, 25L), (41L, 47L))
     for (v <- 0 to 4; (lo, hi) <- bands) {
       val got = VersionedLayout.readAsOfRange(spark, dir, v, lo, hi)
@@ -1124,17 +1169,19 @@ class StorageSpec extends SparkSpec {
     // build side) — the prune claims are about DATA sources only.
     def dataFiles(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.inputFiles.toSeq.filterNot(_.contains("_tombs"))
-    // PRUNING at the head: a one-decade band reads ONLY pid 1's live
-    // dir — no other pid, no segment.
+    // PRUNING at the head: a one-decade band reads ONLY pid 1's
+    // compacted dir — no other pid, no segment.
     val headBand = VersionedLayout.readAsOfRange(spark, dir, 4, 12L, 18L)
     assert(dataFiles(headBand).nonEmpty
       && dataFiles(headBand).forall(f => f.contains("pid=1") && !f.contains("_inserts")),
       s"head band read touched: ${dataFiles(headBand).mkString(", ")}")
-    // PRUNING across archive routing: the same band AS OF v0 (pid 1's
-    // pre-compact bytes live in v3's archive) reads only archived pid 1.
+    assert(dataFiles(headBand).forall(_.contains("/_seg/c3-")),
+      s"head band read touched pid 1's superseded files: ${dataFiles(headBand).mkString(", ")}")
+    // PRUNING across compaction: the same band AS OF v0 reads only the
+    // v0 pid 1 files v3 superseded.
     val v0Band = VersionedLayout.readAsOfRange(spark, dir, 0, 12L, 18L)
     assert(dataFiles(v0Band).nonEmpty
-      && dataFiles(v0Band).forall(f => f.contains("_archive/v3") && f.contains("pid=1")),
+      && dataFiles(v0Band).forall(f => f.contains("/t/pid=1/")),
       s"v0 band read touched: ${dataFiles(v0Band).mkString(", ")}")
     // SEGMENT pruning + base pruning the other way: a band above the
     // base domain's values reads only the two insert segments.
@@ -1352,10 +1399,10 @@ class StorageSpec extends SparkSpec {
     val (m4, _) = VersionedLayout.majorCompact(spark, dir)
     val v4 = VersionedLayout.readAsOf(spark, dir, m4)
     assert(v4.count() == 12 && v4.where(col("w").isNotNull).count() == 1)
-    assert(spark.read.parquet(s"$dir/pid=2").columns.contains("w"),
+    assert(VersionedLayout.baseFiles(spark, dir).columns.contains("w"),
       "fold did not materialize the evolved column into the base")
     // AS-OF below the evolution still serves the OLD schema — from the
-    // fold's archive now.
+    // pre-fold files.
     assert(!VersionedLayout.readAsOf(spark, dir, 0).columns.contains("w"),
       "post-fold as-of below the evolution leaked the new column")
     assert(VersionedLayout.readAsOf(spark, dir, 0).count() == 12)
@@ -2007,8 +2054,9 @@ class StorageSpec extends SparkSpec {
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
     val physCrossing = phys.filter { case (_, n, del) => del > 0 && del * 1000 >= n * 50 }
 
-    def pidBytes(p: Int): Long = new java.io.File(dir, s"pid=$p").listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.length()).sum
+    // A pid's bytes at the head: the files the log resolves for it.
+    def pidBytes(p: Int): Long = DeletableRangeLayout.data(spark, dir).inputFiles
+      .filter(_.contains(s"/pid=$p/")).map(f => new java.io.File(new java.net.URI(f)).length()).sum
     val bytesBefore = physCrossing.map(t => pidBytes(t._1)).sum
 
     val rewritten = DeletableRangeLayout.compact(spark, dir, ScalePatterns.deleteCompactThreshold)
@@ -2018,7 +2066,7 @@ class StorageSpec extends SparkSpec {
     assert(rewritten.size.toLong == predPids)
     assert(physCrossing.map { case (_, n, del) => n - del }.sum == predRewritten)
     assert(physCrossing.map(_._3).sum == predReclaimed)
-    assert(spark.read.parquet(dir)
+    assert(DeletableRangeLayout.data(spark, dir)
       .where(col("pid").isin(rewritten: _*)).count() == predRewritten)
     // residual_dead is exactly the tombstone mass the mask keeps paying.
     assert(DeletableRangeLayout.tombstones(spark, dir).count() == predResidual)
@@ -2034,16 +2082,14 @@ class StorageSpec extends SparkSpec {
 
     // Compaction is IDEMPOTENT: n_deleted counts live rows a tombstone
     // still kills, so an already-compacted pid never re-crosses — a
-    // replayed compact rewrites nothing and archives nothing (counting
+    // replayed compact rewrites nothing and writes no segment (counting
     // raw tombstone keys instead would re-rewrite the same pids in
-    // every session, growing the archive without bound).
-    val archivesBefore = Option(new java.io.File(dir, "_archive").listFiles())
-      .getOrElse(Array.empty).length
+    // every session, growing the retained history without bound).
+    def segments() = Option(new java.io.File(dir, "_seg").listFiles()).getOrElse(Array.empty).length
+    val segmentsBefore = segments()
     val again = DeletableRangeLayout.compact(spark, dir, ScalePatterns.deleteCompactThreshold)
     assert(again.isEmpty, s"replayed compact re-rewrote pids $again")
-    assert(Option(new java.io.File(dir, "_archive").listFiles())
-      .getOrElse(Array.empty).length == archivesBefore,
-      "replayed compact grew the archive")
+    assert(segments() == segmentsBefore, "replayed compact wrote a segment")
   }
 
   test("bucketed delete (q157): tombstone mask keeps the fact-x-fact join exchange-free; compaction rewrites once; stale tombstones harmless") {
@@ -2822,8 +2868,8 @@ class StorageSpec extends SparkSpec {
     assert(fieldsAt(7).map(_._1) == Seq("language", "n"))
     assert(fieldsAt(8) == fieldsAt(7))
     assert(metaOf(8, 301L).toSeq == Seq("l301", 301L))
-    val folded = spark.read.option("basePath", dir)
-      .parquet(s"$dir/pid=1").schema("meta").dataType.asInstanceOf[StructType]
+    val folded = VersionedLayout.baseFiles(spark, dir)
+      .schema("meta").dataType.asInstanceOf[StructType]
     assert(folded.fieldNames.toSeq == Seq("language", "n"),
       s"fold did not materialize the field evolution: ${folded.treeString}")
     // Below-fold history still serves every era exactly.
@@ -3057,10 +3103,9 @@ class StorageSpec extends SparkSpec {
     // OLD placement's state exactly.
     assert(rowsAt(2) == v1Rows, "scheme change altered logical answers")
     assert(rowsAt(1) == v1Rows && rowsAt(0).size == 400, "history below the change broke")
-    // Live dirs are the NEW scheme's pids.
-    val liveDirs = new java.io.File(dir).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("pid="))
-      .map(_.getName.stripPrefix("pid=").toInt).toSet
+    // The head's base files are the NEW scheme's pids.
+    val liveDirs = VersionedLayout.baseFiles(spark, dir).select(col("pid"))
+      .distinct().collect().map(_.getInt(0)).toSet
     assert(liveDirs.subsetOf((0 until 8).toSet) && liveDirs.size > 4, liveDirs.toString)
     // Domain switched: pid 6 (outside the old 0..3) is now admissible;
     // pid 9 (outside the new domain) refuses.
