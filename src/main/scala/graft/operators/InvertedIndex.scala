@@ -14,20 +14,21 @@ import graft.functions.text
   *                            `text.normalizedTokens` (#3,#4,#5)
   *   - per-mapper dedup    -> the map-side combiner of
   *                            [[ReferenceJob.mapper]]: each map task folds
-  *                            its files into one word -> ids table, the
-  *                            reference mapper's per-reducer
+  *                            its files into one byte-keyed word -> ids
+  *                            table, the reference mapper's per-reducer
   *                            `map<word, set<fileId>>` (#9)
-  *   - barrier + shuffle   -> one `repartitionById(26, letter)` exchange in
-  *                            [[LetterSink.write]], one reduce partition
-  *                            per letter (#8,#10)
+  *   - barrier + shuffle   -> one `repartitionById(R, letter % R)`
+  *                            exchange in [[LetterSink.write]], one reduce
+  *                            task per letter group, as the reference's R
+  *                            reducers (#8,#10)
   *   - set-union merge     -> per letter, a word -> ids hash map whose
   *                            lists are sorted and deduped (#11)
   *   - composite sort      -> each letter's words ranked in memory (#12,
   *                            see LetterSink for why the order is
   *                            per-letter)
   *
-  * A map task holds its slice's postings and a reduce task one letter's,
-  * as in the reference; each input file is one row (so under ~2 GB,
+  * A map task holds its slice's postings and a reduce task its letter
+  * group's, as in the reference; each input file is one row (so under ~2 GB,
   * checked by [[graft.sources.ManifestSource.read]]). [[index]] and
   * [[fromLines]] build the same ranking as a DataFrame (`collect_set` by
   * word) for queries that consume the index itself rather than the letter

@@ -1,8 +1,7 @@
 package graft.operators
 
-import java.io.BufferedWriter
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
@@ -14,34 +13,40 @@ import org.apache.spark.sql.functions._
   * (reference: tema1a/src/main.cpp:150-174). Letters with no words still
   * produce an EMPTY file (golden fixture test_out_small/d.txt is 0 bytes).
   *
-  * Implementation, in the shape of the reference reducer
+  * Implementation, in the shape of the reference's R reducer threads
   * (main.cpp:121-174): [[write]] takes (word, file_ids) rows and routes
-  * each row by its word's letter with `repartitionById(26, letter index)`,
-  * the plan's ONLY exchange. Each letter owns exactly one reduce partition
-  * ('a' is 0, 'z' is 25), a pass-through id that AQE does not coalesce, so
-  * a reduce task holds one whole letter and nothing else, with no sort. A
-  * word whose first character is not `a`-`z` fails the job on the map side
-  * with an error that names it (see [[letterIndex]]). The task folds its
-  * rows into a word -> ids hash map, sorts and dedups each id list (a word
-  * may come in several rows, one per map task, its ids in any order),
-  * ranks the letter's words by (doc_freq desc, word asc) in memory and
-  * writes the file. Memory therefore holds one letter's postings, about
-  * the size of that letter's output file: the reference reducer's own
-  * model.
+  * each row with `repartitionById(R, letter index % R)`, the plan's ONLY
+  * exchange. R is `min(26, spark.sql.shuffle.partitions)`, so reduce task
+  * p owns the letters whose index is p modulo R: a letter group, as a
+  * reference reducer owns `get_reducer_id`'s group (main.cpp:41-46). The
+  * groups are interleaved rather than contiguous ranges because English
+  * first letters are skewed: at R = 4 contiguous ranges would give the
+  * tasks 33/19/40/8 % of the vocabulary, interleaving 28/15/27/30 %. At
+  * R = 26 each letter has its own task. The id is a pass-through that AQE
+  * does not coalesce, and the plan has no sort. A word whose first
+  * character is not `a`-`z` fails the job on the map side with an error
+  * that names it (see [[letterIndex]]). The task folds its rows into one
+  * word -> ids hash map per letter it owns, sorts and dedups each id list
+  * (a word may come in several rows, one per map task, its ids in any
+  * order), ranks each letter's words by (doc_freq desc, word asc) in
+  * memory and writes every letter it owns, those with no words too.
+  * Memory therefore holds one letter group's postings, about the size of
+  * those letters' output files: the reference reducer's own model.
   *
-  * Commit protocol: each task writes a letter to a task-attempt-private
-  * temp file (`.tmp-<letter>-<taskAttemptId>`) in UTF-8 and ATOMICALLY
-  * renames it over `<letter>.txt` once the letter is written — a letter
-  * with no words too, whose task writes its empty file the same way.
-  * Nothing touches a letter file before its task commits, so a failed
-  * job leaves an earlier complete output as it was.
-  * Readers therefore never observe a partial file, a retried task simply
-  * re-renames a complete file over the previous one, and two concurrent
-  * speculative attempts cannot interleave — each renames its own complete
-  * temp, and whichever commits last wins wholesale. Failed attempts leave
-  * only `.tmp-*` litter that the next successful rename ignores. (On a
-  * multi-node cluster `outDir` must be a shared filesystem whose rename is
-  * atomic — the same contract HDFS/NFS output committers rely on.)
+  * Commit protocol: a task writes each of its letters to a
+  * task-attempt-private temp file (`.tmp-<letter>-<taskAttemptId>`) in
+  * UTF-8, and only once ALL of them are written does it ATOMICALLY rename
+  * each over `<letter>.txt`, an empty letter included. Nothing touches a
+  * letter file before its task commits, so a failed job leaves an earlier
+  * complete output as it was, and a task that fails while writing renames
+  * nothing. Readers therefore never observe a partial file, a retried task
+  * simply re-renames complete files over the previous ones, and two
+  * concurrent speculative attempts cannot interleave within a file — each
+  * renames its own complete temps, and whichever renames a letter last
+  * wins it wholesale. Failed attempts leave only `.tmp-*` litter that the
+  * next successful rename ignores. (On a multi-node cluster `outDir` must
+  * be a shared filesystem whose rename is atomic — the same contract
+  * HDFS/NFS output committers rely on.)
   */
 object LetterSink {
 
@@ -49,25 +54,26 @@ object LetterSink {
   private[operators] val listEncoder: Encoder[(String, Array[Int])] = Encoders.product[(String, Array[Int])]
 
   /** Write (word, file_ids, ...) rows as the reference's 26 per-letter
-    * files under `outDir`, with one exchange (see the object doc). A ranked
-    * index has one row per word; the reference job's mapper sends one row
-    * per word and map task. Either way a word's line lists the distinct
-    * union of its rows' ids.
+    * files under `outDir`, with one exchange of R letter groups (see the
+    * object doc). A ranked index has one row per word; the reference job's
+    * mapper sends one row per word and map task. Either way a word's line
+    * lists the distinct union of its rows' ids.
     */
   def write(index: DataFrame, outDir: String): Unit = {
     Files.createDirectories(Paths.get(outDir))
+    val groups = math.min(26, index.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
     index
       .select(col("word"), col("file_ids").cast("array<int>"))
-      .repartitionById(26, letterIndex(col("word")))
+      .repartitionById(groups, letterIndex(col("word")) % groups)
       .as(listEncoder)
-      .foreachPartition((it: Iterator[(String, Array[Int])]) => writeLetter(it, outDir))
+      .foreachPartition((it: Iterator[(String, Array[Int])]) => writeLetters(it, groups, outDir))
   }
 
-  /** The word's reduce partition: 0 for `a` .. 25 for `z`. Spark reduces a
+  /** The word's letter: 0 for `a` .. 25 for `z`. Spark reduces a
     * pass-through id modulo the partition count (`DirectShufflePartitionID`
-    * plans as `pmod(id, 26)`), so an id out of range would silently send a
-    * word such as `Apple` to `u`'s task. Any other first character, an
-    * empty word or a null fails instead, naming the word.
+    * plans as `pmod(id, R)`), so an id out of range would silently send a
+    * word such as `Apple` to another letter's task. Any other first
+    * character, an empty word or a null fails instead, naming the word.
     */
   private def letterIndex(word: Column): Column = {
     val i = ascii(word) - 'a'.toInt
@@ -107,41 +113,55 @@ object LetterSink {
     if (byFreq != 0) byFreq else a.getKey.compareTo(b.getKey)
   }
 
-  /** One letter's (word, file_ids) rows -> that letter's file. Reduce
-    * partition i holds exactly the letter `'a' + i`, possibly no rows.
+  /** One letter group's (word, file_ids) rows -> its letters' files.
+    * Reduce partition p of `groups` holds the letters `'a' + i` with
+    * `i % groups == p`, possibly no rows.
     */
-  private def writeLetter(rows: Iterator[(String, Array[Int])], outDir: String): Unit = {
+  private def writeLetters(rows: Iterator[(String, Array[Int])], groups: Int, outDir: String): Unit = {
     val ctx = TaskContext.get()
     val attempt = ctx.taskAttemptId()
-    val letter = ('a' + ctx.partitionId()).toChar
-    val words = new java.util.HashMap[String, Ids]()
+    val group = ctx.partitionId()
+    val letters = (group until 26 by groups).map(i => ('a' + i).toChar)
+    val words = letters.map(_ => new java.util.HashMap[String, Ids]())
     rows.foreach { case (word, fileIds) =>
-      require(word.charAt(0) == letter, s"letter task '$letter' got the word '$word'")
-      var ids = words.get(word)
-      if (ids == null) { ids = new Ids; words.put(word, ids) }
+      val i = word.charAt(0) - 'a'
+      require(i >= 0 && i < 26 && i % groups == group, s"letter group $group of $groups got the word '$word'")
+      val letterWords = words(i / groups)
+      var ids = letterWords.get(word)
+      if (ids == null) { ids = new Ids; letterWords.put(word, ids) }
       ids.addAll(fileIds)
     }
+    val temps = letters.map(letter => Paths.get(outDir, s".tmp-$letter-$attempt"))
+    var committed = false
+    try {
+      temps.zip(words).foreach { case (tmp, letterWords) => writeRanked(letterWords, tmp) }
+      temps.zip(letters).foreach { case (tmp, letter) =>
+        Files.move(tmp, Paths.get(outDir, s"$letter.txt"),
+          StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+      }
+      committed = true
+    } finally if (!committed) temps.foreach(Files.deleteIfExists)
+  }
+
+  /** One letter's words, ranked by (doc_freq desc, word asc), as lines of
+    * `tmp`.
+    */
+  private def writeRanked(words: java.util.HashMap[String, Ids], tmp: Path): Unit = {
     val ranked = words.entrySet().toArray(new Array[java.util.Map.Entry[String, Ids]](0))
     ranked.foreach(_.getValue.settle())
     java.util.Arrays.sort(ranked, ranking)
-    val tmp = Paths.get(outDir, s".tmp-$letter-$attempt")
-    var out: BufferedWriter = Files.newBufferedWriter(tmp, StandardCharsets.UTF_8)
-    try {
-      ranked.foreach { e =>
-        val ids = e.getValue
-        out.write(e.getKey)
-        out.write(":[")
-        var i = 0
-        while (i < ids.n) {
-          if (i > 0) out.write(' ')
-          out.write(Integer.toString(ids.buf(i)))
-          i += 1
-        }
-        out.write("]\n")
+    val out = Files.newBufferedWriter(tmp, StandardCharsets.UTF_8)
+    try ranked.foreach { e =>
+      val ids = e.getValue
+      out.write(e.getKey)
+      out.write(":[")
+      var i = 0
+      while (i < ids.n) {
+        if (i > 0) out.write(' ')
+        out.write(Integer.toString(ids.buf(i)))
+        i += 1
       }
-      out.close(); out = null
-      Files.move(tmp, Paths.get(outDir, s"$letter.txt"),
-        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    } finally if (out != null) { out.close(); Files.deleteIfExists(tmp) }
+      out.write("]\n")
+    } finally out.close()
   }
 }

@@ -1,11 +1,10 @@
 package graft.operators
 
 import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths}
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.TaskMetricsBridge
 
 import graft.expressions.NormalizedTokens
 import graft.sources.ManifestSource
@@ -15,54 +14,138 @@ import graft.sources.ManifestSource
   * scheduling hints in the reference with no semantic effect (the checker
   * requires identical output for all nine M×R combos); in Spark the
   * scheduler plays that role: the map side has one task per slice of the
-  * manifest, the reduce side one task per letter.
+  * manifest (`defaultParallelism` slices), the reduce side R tasks, one per
+  * letter group, R = `min(26, spark.sql.shuffle.partitions)`.
   *
-  * The plan has the reference's shape. One map stage: each task reads
-  * whole files ([[ManifestSource.files]]) and, like the reference mapper
-  * (main.cpp:13,97-103), folds its files' words into one word -> ids table
-  * before the barrier, then emits one (word, file_ids) row per distinct
-  * word ([[mapper]]). Then ONE exchange, one reduce partition per letter,
-  * whose task merges its words' id lists, ranks the letter in memory and
-  * writes its file ([[LetterSink.write]]), as the reference reducer does
-  * (main.cpp:121-174).
+  * The plan has the reference's shape. One map stage: each task reads its
+  * slice's files itself and, like the reference mapper (main.cpp:13,97-103),
+  * folds their words into one word -> ids table before the barrier, then
+  * emits one (word, file_ids) row per distinct word ([[mapper]]). Then ONE
+  * exchange into R letter groups, whose tasks merge their words' id lists,
+  * rank each of their letters in memory and write its file
+  * ([[LetterSink.write]]), as the reference reducers do (main.cpp:121-174).
   *
   * Memory: a map task holds its slice's postings (each distinct word once,
   * with its ids) plus one file's bytes, as a reference mapper holds its
-  * per-reducer maps; a reduce task holds one letter's postings. A file is
-  * one row, so each input file must be under ~2 GB ([[ManifestSource.read]]
-  * checks).
+  * per-reducer maps; a reduce task holds its letter group's postings. A
+  * file is read into one array, so each input file must be under ~2 GB
+  * ([[ManifestSource.read]] checks).
   */
 object ReferenceJob {
-  private val fileEncoder: Encoder[(Int, Array[Byte])] = Encoders.tuple(Encoders.scalaInt, Encoders.BINARY)
 
-  def run(spark: SparkSession, manifestPath: String, outDir: String): Unit = {
-    val manifest = ManifestSource.read(manifestPath)
-    LetterSink.write(mapper(ManifestSource.files(spark, manifest)), outDir)
+  def run(spark: SparkSession, manifestPath: String, outDir: String): Unit =
+    LetterSink.write(
+      mapper(spark, ManifestSource.read(manifestPath), spark.sparkContext.defaultParallelism), outDir)
+
+  /** The mapper and its combiner: the manifest's (file_id, path) entries,
+    * cut into `slices` contiguous map tasks -> (word, file_ids), one row
+    * per distinct word of each slice. Each task reads its files' bytes,
+    * tokenizes each with the shared kernel ([[NormalizedTokens.scan]]) and
+    * folds the tokens into one [[WordTable]].
+    */
+  private[graft] def mapper(spark: SparkSession, manifest: Seq[(Int, String)], slices: Int): DataFrame = {
+    val postings = spark.sparkContext.parallelize(manifest, slices).mapPartitions { files =>
+      val words = new WordTable
+      files.foreach { case (id, path) =>
+        val bytes = Files.readAllBytes(Paths.get(path))
+        TaskMetricsBridge.recordRead(bytes.length, 1)
+        NormalizedTokens.scan(bytes, (buf, len) => words.add(buf, len, id))
+      }
+      words.rows
+    }
+    spark.createDataset(postings)(LetterSink.listEncoder).toDF("word", "file_ids")
   }
 
-  /** The mapper and its combiner: (file_id, text) rows -> (word, file_ids),
-    * one row per distinct word of each partition. Each file goes through
-    * the shared tokenizer kernel ([[NormalizedTokens.scan]]) into one
-    * word -> ids map. Files arrive one at a time, each with its own id, so
-    * a word seen again in the same file is dropped by checking its last id.
+  /** A map task's word -> ids table, keyed by the token's bytes so that a
+    * token costs no String: one String is built per distinct word, when
+    * [[rows]] emits it. Open addressing with linear probing: `slots` holds
+    * entry index + 1 (0 is empty) and is kept at most half full; entry e's
+    * word is `arena(offsets(e) until offsets(e) + lengths(e))`.
     */
-  private[graft] def mapper(files: DataFrame): DataFrame =
-    files
-      .select(col("file_id"), col("text").cast("binary"))
-      .as(fileEncoder)
-      .mapPartitions { (it: Iterator[(Int, Array[Byte])]) =>
-        val words = new java.util.HashMap[String, LetterSink.Ids]()
-        it.foreach { case (id, bytes) =>
-          NormalizedTokens.scan(bytes, (buf, len) => {
-            val word = new String(buf, 0, len, StandardCharsets.US_ASCII)
-            var ids = words.get(word)
-            if (ids == null) { ids = new LetterSink.Ids; words.put(word, ids) }
-            if (ids.n == 0 || ids.buf(ids.n - 1) != id) ids.add(id)
-          })
-        }
-        words.entrySet().iterator().asScala.map(e => (e.getKey, java.util.Arrays.copyOf(e.getValue.buf, e.getValue.n)))
-      }(LetterSink.listEncoder)
-      .toDF("word", "file_ids")
+  private[graft] final class WordTable(initialCapacity: Int = 1024) {
+    private var offsets = new Array[Int](Integer.highestOneBit(math.max(2, initialCapacity - 1)) * 2)
+    private var lengths = new Array[Int](offsets.length)
+    private var hashes = new Array[Int](offsets.length)
+    private var ids = new Array[LetterSink.Ids](offsets.length)
+    private var slots = new Array[Int](offsets.length * 2)
+    private var arena = new Array[Byte](offsets.length * 8)
+    private var used = 0
+    private var size = 0
+
+    /** Records that the word `buf(0 until len)` occurs in file `id`. A
+      * file's tokens arrive together, so a word seen again in the same file
+      * is dropped by checking its last id.
+      */
+    def add(buf: Array[Byte], len: Int, id: Int): Unit = {
+      val h = hash(buf, len)
+      val mask = slots.length - 1
+      var s = h & mask
+      var e = slots(s) - 1
+      while (e >= 0 && !(hashes(e) == h && lengths(e) == len &&
+          java.util.Arrays.equals(arena, offsets(e), offsets(e) + len, buf, 0, len))) {
+        s = (s + 1) & mask
+        e = slots(s) - 1
+      }
+      if (e < 0) e = insert(buf, len, h, s)
+      val list = ids(e)
+      if (list.n == 0 || list.buf(list.n - 1) != id) list.add(id)
+    }
+
+    /** Each distinct word with its ids, in insertion order. */
+    def rows: Iterator[(String, Array[Int])] = Iterator.range(0, size).map { e =>
+      (new String(arena, offsets(e), lengths(e), StandardCharsets.US_ASCII),
+        java.util.Arrays.copyOf(ids(e).buf, ids(e).n))
+    }
+
+    private def insert(buf: Array[Byte], len: Int, h: Int, slot: Int): Int = {
+      if (used + len > arena.length) arena = java.util.Arrays.copyOf(arena, math.max(arena.length * 2, used + len))
+      System.arraycopy(buf, 0, arena, used, len)
+      val e = size
+      offsets(e) = used
+      lengths(e) = len
+      hashes(e) = h
+      ids(e) = new LetterSink.Ids
+      slots(slot) = e + 1
+      used += len
+      size += 1
+      if (size == offsets.length) grow()
+      e
+    }
+
+    private def grow(): Unit = {
+      val capacity = offsets.length * 2
+      offsets = java.util.Arrays.copyOf(offsets, capacity)
+      lengths = java.util.Arrays.copyOf(lengths, capacity)
+      hashes = java.util.Arrays.copyOf(hashes, capacity)
+      ids = java.util.Arrays.copyOf(ids, capacity)
+      slots = new Array[Int](capacity * 2)
+      val mask = slots.length - 1
+      var e = 0
+      while (e < size) {
+        var s = hashes(e) & mask
+        while (slots(s) != 0) s = (s + 1) & mask
+        slots(s) = e + 1
+        e += 1
+      }
+    }
+
+    /** Polynomial hash of the bytes, its bits spread by murmur3's finalizer
+      * so the low bits that pick a slot depend on every byte.
+      */
+    private def hash(buf: Array[Byte], len: Int): Int = {
+      var h = 0
+      var i = 0
+      while (i < len) {
+        h = 31 * h + buf(i)
+        i += 1
+      }
+      h ^= h >>> 16
+      h *= 0x85ebca6b
+      h ^= h >>> 13
+      h *= 0xc2b2ae35
+      h ^ (h >>> 16)
+    }
+  }
 
   def main(args: Array[String]): Unit = {
     val Array(manifestPath, outDir) = args.takeRight(2)

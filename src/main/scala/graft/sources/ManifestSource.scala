@@ -1,6 +1,8 @@
 package graft.sources
 
-import java.nio.file.{Files, InvalidPathException, Path, Paths}
+import java.io.IOException
+import java.nio.file.{Files, InvalidPathException, NoSuchFileException, Path, Paths}
+import java.nio.file.attribute.BasicFileAttributes
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -27,8 +29,9 @@ object ManifestSource {
 
   /** Parse the manifest into (fileId, absolutePath), ids 1-based in manifest
     * order. Relative paths resolve against the manifest's directory. Each
-    * entry must name an existing regular file small enough for one row;
-    * otherwise this fails with the manifest line and the path.
+    * entry must name an existing regular file small enough for one row
+    * (one attribute read per entry); otherwise this fails with the
+    * manifest line and the path.
     */
   def read(manifestPath: String): Seq[(Int, String)] = {
     val p = Paths.get(manifestPath)
@@ -42,9 +45,14 @@ object ManifestSource {
         catch {
           case e: InvalidPathException => throw new IllegalArgumentException(s"$where is not a valid path", e)
         }
-      require(Files.exists(f), s"$where does not exist")
-      require(Files.isRegularFile(f), s"$where is not a regular file")
-      val size = Files.size(f)
+      val attrs =
+        try Files.readAttributes(f, classOf[BasicFileAttributes])
+        catch {
+          case e: NoSuchFileException => throw new IllegalArgumentException(s"$where does not exist", e)
+          case e: IOException => throw new IllegalArgumentException(s"$where cannot be read: $e", e)
+        }
+      require(attrs.isRegularFile, s"$where is not a regular file")
+      val size = attrs.size
       require(size < ByteArrayMethods.MAX_ROUNDED_ARRAY_LENGTH,
         s"$where is $size bytes; a file must be under " +
           s"${ByteArrayMethods.MAX_ROUNDED_ARRAY_LENGTH} bytes to fit in one row")

@@ -8,7 +8,6 @@ import scala.jdk.CollectionConverters._
 import scala.util.Random
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
-import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.catalyst.plans.physical.ShufflePartitionIdPassThrough
 import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -87,23 +86,26 @@ class ReferenceJobSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   /** Runs the job into a fresh directory and returns its files, all 26
     * letter files present and nothing else. `mapTasks` 0 runs
-    * `ReferenceJob.run`; otherwise the files of [[ManifestSource.files]],
-    * in manifest order, are cut into `mapTasks` contiguous slices (some
-    * empty when there are more slices than files) and fed to the job's
-    * mapper, one map task per slice.
+    * `ReferenceJob.run`; otherwise the job's mapper gets the manifest cut
+    * into `mapTasks` contiguous slices (some empty when there are more
+    * slices than files), one map task per slice.
     */
   private def run(manifest: Path, mapTasks: Int = 0): IndexedSeq[String] = {
     dirs += 1
     val out = root.resolve(s"out-$dirs")
-    if (mapTasks > 0) {
-      val files = ManifestSource.files(spark, ManifestSource.read(manifest.toString))
-        .select(col("file_id"), col("text").cast("binary"))
-        .collect().map(r => (r.getInt(0), r.getAs[Array[Byte]](1)))
-      val slices = spark.createDataset(spark.sparkContext.parallelize(files.toSeq, mapTasks))(
-        Encoders.tuple(Encoders.scalaInt, Encoders.BINARY)).toDF("file_id", "text")
-      LetterSink.write(ReferenceJob.mapper(slices), out.toString)
-    } else ReferenceJob.run(spark, manifest.toString, out.toString)
+    if (mapTasks > 0)
+      LetterSink.write(ReferenceJob.mapper(spark, ManifestSource.read(manifest.toString), mapTasks), out.toString)
+    else ReferenceJob.run(spark, manifest.toString, out.toString)
     read(out)
+  }
+
+  /** Runs `body` with `spark.sql.shuffle.partitions` set to `parts`, which
+    * makes the sink's reduce side min(26, parts) letter-group tasks.
+    */
+  private def withShufflePartitions[T](parts: Int)(body: => T): T = {
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
+    try body finally spark.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
   private def read(out: Path): IndexedSeq[String] = {
@@ -206,14 +208,17 @@ class ReferenceJobSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   test("output is invariant under shuffle-partition count (reference M/R invariance)") {
     val files = randomCorpus(7L)
     val order = files.keys.toSeq.sorted ++ Seq("f3.txt", "f1.txt")
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    val results = Seq(1, 2, 7).map { parts =>
-      try {
-        spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-        assertMatchesModel(files, order)
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-    }
+    val results = Seq(1, 2, 3, 7, 26).map(r => withShufflePartitions(r)(assertMatchesModel(files, order)))
     assert(results.distinct.size == 1)
+  }
+
+  test("a one-letter corpus at R = 4 writes all 26 files, 25 of them empty") {
+    // Only 'b' words: task 1 gets every row, tasks 0, 2 and 3 none, and
+    // each must still write its letters' empty files.
+    val got = withShufflePartitions(4)(assertMatchesModel(
+      Map("1.txt" -> utf8("bee Bravo, bee"), "2.txt" -> utf8("bravo bat")), Seq("1.txt", "2.txt")))
+    assert(got(1) == "bravo:[1 2]\nbat:[2]\nbee:[1]\n")
+    assert(got.count(_.isEmpty) == 25)
   }
 
   test("re-running into the same directory leaves byte-identical files and no temp litter") {
@@ -332,7 +337,7 @@ class ReferenceJobSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     }
   }
 
-  test("the sink plans one exchange of 26 pass-through partitions and no sort") {
+  test("the sink plans one exchange of R pass-through partitions and no sort") {
     val plans = new java.util.concurrent.LinkedBlockingQueue[SparkPlan]()
     val listener = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
@@ -340,20 +345,22 @@ class ReferenceJobSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
     }
     val (manifest, _) = corpus(randomCorpus(19L), (1 to 24).map(i => s"f$i.txt"))
-    spark.listenerManager.register(listener)
-    val plan =
-      try {
-        ReferenceJob.run(spark, manifest.toString, root.resolve("plan").toString)
-        plans.poll(60, java.util.concurrent.TimeUnit.SECONDS)
-      } finally spark.listenerManager.unregister(listener)
-    assert(plan != null, "no plan reported")
-    val exchanges = collect(plan) { case e: ShuffleExchangeLike => e }
-    assert(exchanges.size == 1, plan)
-    assert(exchanges.head.outputPartitioning match {
-      case p: ShufflePartitionIdPassThrough => p.numPartitions == 26
-      case _ => false
-    }, plan)
-    assert(collect(plan) { case s: SortExec => s }.isEmpty, plan)
+    Seq(4 -> 4, 26 -> 26, 40 -> 26).foreach { case (parts, r) =>
+      spark.listenerManager.register(listener)
+      val plan =
+        try withShufflePartitions(parts) {
+          ReferenceJob.run(spark, manifest.toString, root.resolve(s"plan-$parts").toString)
+          plans.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+        } finally spark.listenerManager.unregister(listener)
+      assert(plan != null, "no plan reported")
+      val exchanges = collect(plan) { case e: ShuffleExchangeLike => e }
+      assert(exchanges.size == 1, plan)
+      assert(exchanges.head.outputPartitioning match {
+        case p: ShufflePartitionIdPassThrough => p.numPartitions == r
+        case _ => false
+      }, s"$parts shuffle partitions: $plan")
+      assert(collect(plan) { case s: SortExec => s }.isEmpty, plan)
+    }
   }
 
   /** A corpus shaped like the paper's input: 355 files of log-normal
@@ -405,10 +412,10 @@ class ReferenceJobSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     }
   }
 
-  /** Runs `body` and returns, with its result, the shuffle records each of
-    * its reduce tasks read, by task index.
+  /** Runs `body`, whose job has `tasks` reduce tasks, and returns, with its
+    * result, the shuffle records each of them read, by task index.
     */
-  private def reduceTaskRecords[T](body: => T): (T, Seq[Long]) = {
+  private def reduceTaskRecords[T](tasks: Int)(body: => T): (T, Seq[Long]) = {
     val reduceStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val records = new java.util.concurrent.ConcurrentSkipListMap[Int, Long]()
     val listener = new SparkListener {
@@ -422,7 +429,7 @@ class ReferenceJobSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     try {
       val result = body
       val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-      while (records.size < 26 && System.nanoTime() < deadline) Thread.sleep(20)
+      while (records.size < tasks && System.nanoTime() < deadline) Thread.sleep(20)
       (result, records.values.asScala.toSeq)
     } finally spark.sparkContext.removeSparkListener(listener)
   }
@@ -432,14 +439,15 @@ class ReferenceJobSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val names = docs.indices.map(i => f"f$i%03d.txt")
     val (manifest, _) = corpus(names.zip(docs).toMap, names)
     val out = root.resolve("paper")
-    val (ms, reduceRecords) = reduceTaskRecords {
+    val r = math.min(26, spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    val (ms, reduceRecords) = reduceTaskRecords(r) {
       val t0 = System.nanoTime()
       ReferenceJob.run(spark, manifest.toString, out.toString)
       (System.nanoTime() - t0) / 1e6
     }
     val want = Model.letterFiles(docs)
     assert(read(out) == want)
-    assert(reduceRecords.size == 26 && reduceRecords.forall(_ > 0),
+    assert(reduceRecords.size == r && reduceRecords.forall(_ > 0),
       s"shuffle records read per reduce task: $reduceRecords")
     info(f"${docs.length} files, ${docs.map(_.length.toLong).sum} bytes, " +
       f"${want.map(_.count(_ == '\n')).sum} words: ReferenceJob.run took $ms%.0f ms")
