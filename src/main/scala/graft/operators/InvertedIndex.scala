@@ -13,14 +13,14 @@ import graft.functions.text
   *   - tokenize+normalize  -> the one byte kernel behind
   *                            `text.normalizedTokens` (#3,#4,#5)
   *   - per-mapper dedup    -> the map-side combiner of
-  *                            [[ReferenceJob.mapper]]: each map task folds
+  *                            [[ReferenceJob.run]]: each map task folds
   *                            its files into one byte-keyed word -> ids
   *                            table, the reference mapper's per-reducer
   *                            `map<word, set<fileId>>` (#9)
-  *   - barrier + shuffle   -> one `repartitionById(R, letter % R)`
-  *                            exchange in [[LetterSink.write]], one reduce
-  *                            task per letter group, as the reference's R
-  *                            reducers (#8,#10)
+  *   - barrier + shuffle   -> one RDD shuffle, `partitionBy(letter % R)`,
+  *                            in [[LetterSink.writeRows]]: the job's only
+  *                            stage boundary, one reduce task per letter
+  *                            group, as the reference's R reducers (#8,#10)
   *   - set-union merge     -> per letter, a word -> ids hash map whose
   *                            lists are sorted and deduped (#11)
   *   - composite sort      -> each letter's words ranked in memory (#12,

@@ -3,9 +3,10 @@ package graft.operators
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
-import org.apache.spark.TaskContext
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
-import org.apache.spark.sql.functions._
+import org.apache.spark.{Partitioner, TaskContext}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** The reference engine's sink: 26 per-letter text files `a.txt`..`z.txt`,
   * each line `word:[id1 id2 ... idn]`, ids ascending, lines ordered by
@@ -14,24 +15,24 @@ import org.apache.spark.sql.functions._
   * produce an EMPTY file (golden fixture test_out_small/d.txt is 0 bytes).
   *
   * Implementation, in the shape of the reference's R reducer threads
-  * (main.cpp:121-174): [[write]] takes (word, file_ids) rows and routes
-  * each row with `repartitionById(R, letter index % R)`, the plan's ONLY
-  * exchange. R is `min(26, spark.sql.shuffle.partitions)`, so reduce task
-  * p owns the letters whose index is p modulo R: a letter group, as a
-  * reference reducer owns `get_reducer_id`'s group (main.cpp:41-46). The
-  * groups are interleaved rather than contiguous ranges because English
-  * first letters are skewed: at R = 4 contiguous ranges would give the
-  * tasks 33/19/40/8 % of the vocabulary, interleaving 28/15/27/30 %. At
-  * R = 26 each letter has its own task. The id is a pass-through that AQE
-  * does not coalesce, and the plan has no sort. A word whose first
-  * character is not `a`-`z` fails the job on the map side with an error
-  * that names it (see [[letterIndex]]). The task folds its rows into one
-  * word -> ids hash map per letter it owns, sorts and dedups each id list
-  * (a word may come in several rows, one per map task, its ids in any
-  * order), ranks each letter's words by (doc_freq desc, word asc) in
-  * memory and writes every letter it owns, those with no words too.
-  * Memory therefore holds one letter group's postings, about the size of
-  * those letters' output files: the reference reducer's own model.
+  * (main.cpp:121-174): [[writeRows]] takes an RDD of (word, file_ids) rows
+  * and shuffles it once, with `partitionBy(`[[LetterGroups]]`(R))`, into R
+  * reduce tasks that write the files; the whole write is one Spark job of
+  * a map stage and a reduce stage. Reduce task p owns the letters whose
+  * index is p modulo R: a letter group, as a reference reducer owns
+  * `get_reducer_id`'s group (main.cpp:41-46). The groups are interleaved
+  * rather than contiguous ranges because English first letters are skewed:
+  * at R = 4 contiguous ranges would give the tasks 33/19/40/8 % of the
+  * vocabulary, interleaving 28/15/27/30 %. At R = 26 each letter has its
+  * own task. A word whose first character is not `a`-`z` fails the job on
+  * the map side, before any reduce task runs, with an error that names it.
+  * The task folds its rows into one word -> ids hash map per letter it
+  * owns, sorts and dedups each id list (a word may come in several rows,
+  * one per map task, its ids in any order), ranks each letter's words by
+  * (doc_freq desc, word asc) in memory and writes every letter it owns,
+  * those with no words too. Memory therefore holds one letter group's
+  * postings, about the size of those letters' output files: the reference
+  * reducer's own model. [[write]] feeds a DataFrame through the same path.
   *
   * Commit protocol: a task writes each of its letters to a
   * task-attempt-private temp file (`.tmp-<letter>-<taskAttemptId>`) in
@@ -50,35 +51,37 @@ import org.apache.spark.sql.functions._
   */
 object LetterSink {
 
-  /** (word, file_ids) rows, as the reference job's mapper emits them. */
-  private[operators] val listEncoder: Encoder[(String, Array[Int])] = Encoders.product[(String, Array[Int])]
+  /** The default letter-group count R: `min(26, spark.sql.shuffle.partitions)`. */
+  private[operators] def groups(spark: SparkSession): Int =
+    math.min(26, spark.conf.get("spark.sql.shuffle.partitions").toInt)
 
   /** Write (word, file_ids, ...) rows as the reference's 26 per-letter
-    * files under `outDir`, with one exchange of R letter groups (see the
-    * object doc). A ranked index has one row per word; the reference job's
-    * mapper sends one row per word and map task. Either way a word's line
-    * lists the distinct union of its rows' ids.
+    * files under `outDir`, in [[groups]] letter groups (see the object
+    * doc). A ranked index has one row per word; the reference job's mapper
+    * sends one row per word and map task. Either way a word's line lists
+    * the distinct union of its rows' ids.
     */
-  def write(index: DataFrame, outDir: String): Unit = {
+  def write(index: DataFrame, outDir: String): Unit =
+    writeRows(index.select(col("word"), col("file_ids").cast("array<int>"))
+      .as(Encoders.product[(String, Array[Int])]).rdd, groups(index.sparkSession), outDir)
+
+  /** (word, file_ids) rows -> the 26 letter files, in `groups` (1 to 26) letter-group tasks. */
+  private[operators] def writeRows(rows: RDD[(String, Array[Int])], groups: Int, outDir: String): Unit = {
     Files.createDirectories(Paths.get(outDir))
-    val groups = math.min(26, index.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
-    index
-      .select(col("word"), col("file_ids").cast("array<int>"))
-      .repartitionById(groups, letterIndex(col("word")) % groups)
-      .as(listEncoder)
-      .foreachPartition((it: Iterator[(String, Array[Int])]) => writeLetters(it, groups, outDir))
+    rows.partitionBy(LetterGroups(groups)).foreachPartition(writeLetters(_, groups, outDir))
   }
 
-  /** The word's letter: 0 for `a` .. 25 for `z`. Spark reduces a
-    * pass-through id modulo the partition count (`DirectShufflePartitionID`
-    * plans as `pmod(id, R)`), so an id out of range would silently send a
-    * word such as `Apple` to another letter's task. Any other first
-    * character, an empty word or a null fails instead, naming the word.
+  /** Routes a word to letter group `letter % groups`, letter 0 for `a` ..
+    * 25 for `z`. Any other first character, an empty word or a null fails
+    * the map task with an error that names the word.
     */
-  private def letterIndex(word: Column): Column = {
-    val i = ascii(word) - 'a'.toInt
-    when(i.between(0, 25), i).otherwise(raise_error(
-      format_string("LetterSink: word '%s' does not start with a letter a-z", word)))
+  private[graft] final case class LetterGroups(groups: Int) extends Partitioner {
+    require(groups >= 1 && groups <= 26, s"letter groups must be 1 to 26, got $groups")
+    def numPartitions: Int = groups
+    def getPartition(key: Any): Int = key match {
+      case w: String if w.nonEmpty && w.charAt(0) >= 'a' && w.charAt(0) <= 'z' => (w.charAt(0) - 'a') % groups
+      case w => throw new IllegalArgumentException(s"LetterSink: word '$w' does not start with a letter a-z")
+    }
   }
 
   /** One word's ids as they arrive: unsorted, possibly repeated. */
@@ -124,9 +127,7 @@ object LetterSink {
     val letters = (group until 26 by groups).map(i => ('a' + i).toChar)
     val words = letters.map(_ => new java.util.HashMap[String, Ids]())
     rows.foreach { case (word, fileIds) =>
-      val i = word.charAt(0) - 'a'
-      require(i >= 0 && i < 26 && i % groups == group, s"letter group $group of $groups got the word '$word'")
-      val letterWords = words(i / groups)
+      val letterWords = words((word.charAt(0) - 'a') / groups)
       var ids = letterWords.get(word)
       if (ids == null) { ids = new Ids; letterWords.put(word, ids) }
       ids.addAll(fileIds)

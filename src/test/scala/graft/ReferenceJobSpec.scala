@@ -7,13 +7,8 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import scala.util.Random
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
-import org.apache.spark.sql.catalyst.plans.physical.ShufflePartitionIdPassThrough
-import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-import org.apache.spark.sql.functions.{col, lit, spark_partition_id}
-import org.apache.spark.sql.util.QueryExecutionListener
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted,
+  SparkListenerTaskEnd}
 import org.scalacheck.{Gen, Prop, Test}
 import org.scalacheck.Prop.propBoolean
 import org.scalacheck.rng.Seed
@@ -37,7 +32,7 @@ import graft.sources.ManifestSource
   *   - each letter file lists its words by doc_freq desc, then word asc,
   *     one `word:[id id ...]` line each; absent letters give empty files.
   */
-class ReferenceJobSpec extends SparkSpec with AdaptiveSparkPlanHelper {
+class ReferenceJobSpec extends SparkSpec {
 
   private val root = tempDir("graft-refjob")
 
@@ -85,17 +80,15 @@ class ReferenceJobSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   private def utf8(s: String): Array[Byte] = s.getBytes(StandardCharsets.UTF_8)
 
   /** Runs the job into a fresh directory and returns its files, all 26
-    * letter files present and nothing else. `mapTasks` 0 runs
-    * `ReferenceJob.run`; otherwise the job's mapper gets the manifest cut
-    * into `mapTasks` contiguous slices (some empty when there are more
-    * slices than files), one map task per slice.
+    * letter files present and nothing else. `mapTasks` 0 runs the job with
+    * its default M; otherwise the job's mapper gets the manifest cut into
+    * `mapTasks` contiguous slices (some empty when there are more slices
+    * than files), one map task per slice.
     */
   private def run(manifest: Path, mapTasks: Int = 0): IndexedSeq[String] = {
     dirs += 1
     val out = root.resolve(s"out-$dirs")
-    if (mapTasks > 0)
-      LetterSink.write(ReferenceJob.mapper(spark, ManifestSource.read(manifest.toString), mapTasks), out.toString)
-    else ReferenceJob.run(spark, manifest.toString, out.toString)
+    ReferenceJob.run(spark, manifest.toString, out.toString, mapSlices = Option.when(mapTasks > 0)(mapTasks))
     read(out)
   }
 
@@ -307,12 +300,13 @@ class ReferenceJobSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("a word not starting with a-z fails the sink by name and reaches no file") {
-    // Why the guard: Spark takes a pass-through partition id modulo the
-    // partition count, so an unguarded id -32 ('A' - 'a') would land in
-    // partition 20, u's task.
-    val wrapped = spark.range(1).select(lit(-32).as("p")).repartitionById(26, col("p"))
-      .select(spark_partition_id()).head().getInt(0)
-    assert(wrapped == 20)
+    // The letter-group partitioner is the guard: letter % R for a-z, and
+    // an error naming the word for anything else, thrown on the map side.
+    Seq(1, 4, 26).foreach { r =>
+      val groups = LetterSink.LetterGroups(r)
+      assert(('a' to 'z').map(c => groups.getPartition(s"${c}x")) == (0 until 26).map(_ % r))
+    }
+    intercept[IllegalArgumentException](LetterSink.LetterGroups(27))
     // A previous complete output (some letters empty) the failed writes
     // below must leave byte for byte as it was.
     val previous = root.resolve("bad-previous")
@@ -337,30 +331,63 @@ class ReferenceJobSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     }
   }
 
-  test("the sink plans one exchange of R pass-through partitions and no sort") {
-    val plans = new java.util.concurrent.LinkedBlockingQueue[SparkPlan]()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        plans.add(qe.executedPlan)
-      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+  /** Spark's work for `body`: its jobs, the stages they ran, their tasks
+    * and the task count of each job's last stage. A marker job run after
+    * `body` bounds the count: the listener bus delivers events in order, so
+    * once the marker starts, every event of `body` has been seen.
+    */
+  private def jobShape(body: => Unit): (Int, Int, Int, Seq[Int]) = {
+    val marker = "reference-job-spec-marker"
+    val jobs, stages, tasks = new java.util.concurrent.atomic.AtomicInteger
+    val lastStageTasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      @volatile private var counting = true
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.job.description") == marker) {
+          counting = false
+          done.countDown()
+        } else if (counting) {
+          jobs.incrementAndGet()
+          lastStageTasks.add(e.stageInfos.maxBy(_.stageId).numTasks)
+        }
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = if (counting) stages.incrementAndGet()
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = if (counting) tasks.incrementAndGet()
     }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      spark.sparkContext.setJobDescription(marker)
+      try spark.sparkContext.parallelize(Seq(1), 1).count() finally spark.sparkContext.setJobDescription(null)
+      assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS), "the marker job was not seen")
+      (jobs.get, stages.get, tasks.get, lastStageTasks.asScala.toSeq)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("the job runs as 1 job, 2 stages and M + R tasks") {
     val (manifest, _) = corpus(randomCorpus(19L), (1 to 24).map(i => s"f$i.txt"))
+    val m = spark.sparkContext.defaultParallelism
     Seq(4 -> 4, 26 -> 26, 40 -> 26).foreach { case (parts, r) =>
-      spark.listenerManager.register(listener)
-      val plan =
-        try withShufflePartitions(parts) {
-          ReferenceJob.run(spark, manifest.toString, root.resolve(s"plan-$parts").toString)
-          plans.poll(60, java.util.concurrent.TimeUnit.SECONDS)
-        } finally spark.listenerManager.unregister(listener)
-      assert(plan != null, "no plan reported")
-      val exchanges = collect(plan) { case e: ShuffleExchangeLike => e }
-      assert(exchanges.size == 1, plan)
-      assert(exchanges.head.outputPartitioning match {
-        case p: ShufflePartitionIdPassThrough => p.numPartitions == r
-        case _ => false
-      }, s"$parts shuffle partitions: $plan")
-      assert(collect(plan) { case s: SortExec => s }.isEmpty, plan)
+      val shape = withShufflePartitions(parts)(jobShape(
+        ReferenceJob.run(spark, manifest.toString, root.resolve(s"shape-$parts").toString)))
+      assert(shape == ((1, 2, m + r, Seq(r))), s"$parts shuffle partitions: (jobs, stages, tasks, reduce tasks)")
     }
+    Seq((3, 5, 5), (2, 40, 26)).foreach { case (m, r, tasks) =>
+      val shape = jobShape(ReferenceJob.run(spark, manifest.toString, root.resolve(s"shape-m$m-r$r").toString,
+        mapSlices = Some(m), letterGroups = Some(r)))
+      assert(shape == ((1, 2, m + tasks, Seq(tasks))), s"M $m, R $r: (jobs, stages, tasks, reduce tasks)")
+    }
+    Seq((Some(0), None, "M = 0, R = 4"), (None, Some(0), s"M = $m, R = 0"), (Some(-2), Some(4), "M = -2, R = 4"))
+      .foreach { case (mapSlices, letterGroups, got) =>
+        val e = intercept[IllegalArgumentException](ReferenceJob.run(spark, manifest.toString,
+          root.resolve("shape-bad").toString, mapSlices, letterGroups))
+        assert(e.getMessage.endsWith(s"M (map slices) and R (letter groups) must be at least 1, got $got"),
+          e.getMessage)
+      }
+    // The DataFrame adapter: the same single shuffle into R partitions.
+    val rows = spark.createDataFrame(Seq(("apple", Array(1, 2)), ("umbra", Array(3)))).toDF("word", "file_ids")
+    val viaFrame = withShufflePartitions(4)(jobShape(LetterSink.write(rows, root.resolve("shape-frame").toString)))
+    assert((viaFrame._1, viaFrame._2, viaFrame._4) == ((1, 2, Seq(4))), viaFrame)
   }
 
   /** A corpus shaped like the paper's input: 355 files of log-normal
@@ -434,10 +461,17 @@ class ReferenceJobSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
-  test("a paper-size corpus (355 files, 1.04 M tokens) matches the model byte for byte") {
+  /** `paperCorpus(11L)`'s manifest, its files in id order and the model's
+    * letter files, rendered once for the tests that run it.
+    */
+  private lazy val paper: (Path, IndexedSeq[Array[Byte]], IndexedSeq[String]) = {
     val docs = paperCorpus(11L)
     val names = docs.indices.map(i => f"f$i%03d.txt")
-    val (manifest, _) = corpus(names.zip(docs).toMap, names)
+    (corpus(names.zip(docs).toMap, names)._1, docs, Model.letterFiles(docs))
+  }
+
+  test("a paper-size corpus (355 files, 1.04 M tokens) matches the model byte for byte") {
+    val (manifest, docs, want) = paper
     val out = root.resolve("paper")
     val r = math.min(26, spark.conf.get("spark.sql.shuffle.partitions").toInt)
     val (ms, reduceRecords) = reduceTaskRecords(r) {
@@ -445,12 +479,21 @@ class ReferenceJobSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       ReferenceJob.run(spark, manifest.toString, out.toString)
       (System.nanoTime() - t0) / 1e6
     }
-    val want = Model.letterFiles(docs)
     assert(read(out) == want)
     assert(reduceRecords.size == r && reduceRecords.forall(_ > 0),
       s"shuffle records read per reduce task: $reduceRecords")
     info(f"${docs.length} files, ${docs.map(_.length.toLong).sum} bytes, " +
       f"${want.map(_.count(_ == '\n')).sum} words: ReferenceJob.run took $ms%.0f ms")
+  }
+
+  test("checker grid: every M, R in {1, 2, 4} matches the model on the paper corpus") {
+    val (manifest, _, want) = paper
+    for (m <- Seq(1, 2, 4); r <- Seq(1, 2, 4)) {
+      val out = root.resolve(s"grid-m$m-r$r")
+      ReferenceJob.run(spark, manifest.toString, out.toString, mapSlices = Some(m), letterGroups = Some(r))
+      val got = read(out)
+      ('a' to 'z').zipWithIndex.foreach { case (c, i) => assert(got(i) == want(i), s"M$m R$r: $c.txt") }
+    }
   }
 
   /** One generated file: empty, whitespace-only, or words from a small
