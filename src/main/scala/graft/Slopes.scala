@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 /** The committed scaling-slope ledger (`SLOPES.json`): every slope
   * harness ([[ScaleSlope]], [[LshAdmitSlope]], [[IvfAdmitSlope]],

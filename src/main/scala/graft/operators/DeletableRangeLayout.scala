@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, StandardCopyOption}
 
 /** Range layout with DELETE support — since round 9 a FACADE over
   * [[VersionedLayout]]'s commit log, not a protocol of its own.
@@ -106,18 +106,13 @@ object DeletableRangeLayout {
           }
           org.apache.commons.io.FileUtils.deleteDirectory(trash)
         }
-        val tmp = dir + s".tmp-p${graft.JvmId.token}"
+        val tmp = dir + s".tmp-${Cas.writerTag}"
         org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
         VersionedLayout.writeBase(s, d, tmp, uppers)
-        try Files.move(Paths.get(tmp), Paths.get(dir), StandardCopyOption.ATOMIC_MOVE)
-        catch {
-          case _: java.nio.file.FileSystemException =>
-            // Another JVM published first; its copy is byte-equivalent
-            // (the boundary array is deterministic).
-            if (VersionedLayout.currentVersion(dir) < 0) throw new IllegalStateException(
-              s"deletable layout rename to $dir failed and no complete layout exists")
-            org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
-        }
+        // A JVM that published first wrote a byte-equivalent copy (the
+        // boundary array is deterministic).
+        Cas.publishDir(new java.io.File(tmp), f)(
+          t => VersionedLayout.currentVersion(t.getPath) >= 0)
       }
       written.add(dir)
       dir

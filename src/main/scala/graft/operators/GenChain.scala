@@ -1,7 +1,7 @@
 package graft.operators
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -9,11 +9,11 @@ import org.apache.spark.sql.functions._
 /** The generation-chain commit protocol shared by the three maintained
   * index stores ([[IndexStore]], [[LshIndexStore]], [[IvfIndexStore]]):
   * numbered generation directories `v<N>/`, each built COMPLETE under a
-  * dot-prefixed tmp — its manifest JSON written LAST inside — then
-  * atomically renamed, so readers only ever see complete generations, a
+  * writer tmp `.gen-tmp-v<N>-<tag>` — its manifest JSON written LAST
+  * inside — then published by [[Cas.publishDir]] (the commit-file rules
+  * are [[Cas]]'s), so readers only ever see complete generations, a
   * crashed mutation leaves a tmp that [[vacuumGenerations]] sweeps, and
-  * a lost race fails loudly on the rename instead of clobbering
-  * committed state.
+  * a lost race fails loudly instead of clobbering committed state.
   * Manifests carry a `txn` stamp for exactly-once streaming ingest
   * (the [[VersionedLayout.appendInsertOnce]] contract).
   */
@@ -61,60 +61,39 @@ private[graft] object GenChain {
     * and a lookup that misses re-checks whether the checkpoint
     * advanced underneath it before concluding "not committed".
     */
-  def committedGen(dir: String, txn: Long): Option[Int] = {
-    if (txn < 0) return None
-    var last: Throwable = null
-    (1 to 8).foreach { _ =>
-      try {
-        val (cov, idx) = txnCheckpoint(dir)
-        idx.get(txn) match {
-          case s @ Some(_) => return s
-          case None =>
-            val tail = ((cov + 1) to currentGeneration(dir))
-              .filter(g => manifest(dir, g).isFile)
-              .find(g => txnOf(dir, g) == txn)
-            if (tail.isDefined) return tail
-            // A checkpoint landing between our read and the tail scan
-            // may have absorbed (and a vacuum deleted) the very
-            // generation we were scanning for — only a STABLE view may
-            // conclude absence.
-            if (checkpointCoverage(dir) == cov) return None
-        }
-      } catch {
-        // A manifest listed as present can vanish mid-scan under a
-        // concurrent vacuum; its stamp is then in the (newer)
-        // checkpoint — retry reads it.
-        case e: java.nio.file.NoSuchFileException => last = e
+  def committedGen(dir: String, txn: Long): Option[Int] =
+    if (txn < 0) None
+    // A manifest listed as present can vanish mid-scan under a
+    // concurrent vacuum; its stamp is then in the (newer) checkpoint,
+    // which the re-read sees.
+    else Cas.reread(s"txn index of $dir") {
+      val (cov, idx) = txnCheckpoint(dir)
+      idx.get(txn).orElse(((cov + 1) to currentGeneration(dir))
+        .filter(g => manifest(dir, g).isFile)
+        .find(g => txnOf(dir, g) == txn)) match {
+        case found @ Some(_) => Some(found)
+        // A checkpoint landing between our read and the tail scan may
+        // have absorbed (and a vacuum deleted) the very generation we
+        // were scanning for — only a STABLE view may conclude absence.
+        case None => if (checkpointCoverage(dir) == cov) Some(None) else None
       }
     }
-    throw new IllegalStateException(
-      s"txn index of $dir kept advancing across 8 lookup attempts", last)
-  }
 
   /** (coverage, txn -> generation) read from ONE checkpoint file — the
     * newest at list time; a read that loses the race with a superseding
     * checkpoint's truncation re-lists (strictly newer state, bounded).
     */
-  private def txnCheckpoint(dir: String): (Int, Map[Long, Int]) = {
-    var last: Throwable = null
-    (1 to 8).foreach { _ =>
+  private def txnCheckpoint(dir: String): (Int, Map[Long, Int]) =
+    Cas.reread(s"txn checkpoint of $dir") {
       val n = checkpointCoverage(dir)
-      if (n < 0) return (-1, Map.empty)
-      try {
-        val m = new String(Files.readAllBytes(
-          new java.io.File(dir, s"_txn-ckpt-v$n.txt").toPath), StandardCharsets.UTF_8)
-          .linesIterator.filter(_.nonEmpty).map { l =>
-            val Array(t, g) = l.split(",", 2)
-            t.toLong -> g.toInt
-          }.toMap
-        return (n, m)
-      } catch {
-        case e: java.nio.file.NoSuchFileException => last = e
-      }
+      if (n < 0) Some((-1, Map.empty[Long, Int]))
+      else Some((n, new String(Files.readAllBytes(
+        new java.io.File(dir, s"_txn-ckpt-v$n.txt").toPath), StandardCharsets.UTF_8)
+        .linesIterator.filter(_.nonEmpty).map { l =>
+          val Array(t, g) = l.split(",", 2)
+          t.toLong -> g.toInt
+        }.toMap))
     }
-    throw new IllegalStateException(
-      s"txn checkpoint of $dir kept vanishing across 8 reads", last)
-  }
 
   private def txnCkptFiles(dir: String): Array[java.io.File] =
     Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
@@ -138,10 +117,10 @@ private[graft] object GenChain {
 
   /** Consolidate every transactional (txn >= 0) stamp at or below the
     * current head into one checkpoint file named for its coverage,
-    * then drop the older checkpoints it subsumes. Publish is a
-    * write-then-hard-link CAS like the layout log's: a lost same-head
-    * race is benign (both writers render identical content — the map is
-    * deterministic from the chain). Returns the covered generation.
+    * then drop the older checkpoints it subsumes. Published by
+    * [[Cas.publishFile]]: a lost same-head race is benign (both writers
+    * render identical content — the map is deterministic from the
+    * chain). Returns the covered generation.
     */
   def checkpointTxns(dir: String): Int = {
     val head = currentGeneration(dir)
@@ -153,16 +132,9 @@ private[graft] object GenChain {
       .flatMap(g => { val t = txnOf(dir, g); if (t >= 0) Some(t -> g) else None })
     val all = prev ++ fresh
     val f = new java.io.File(dir, s"_txn-ckpt-v$head.txt")
-    if (!f.isFile) {
-      val tmp = new java.io.File(dir, s"._txn-ckpt-v$head.tmp-" +
-        s"p${graft.JvmId.token}t${Thread.currentThread().getId}")
-      Files.write(tmp.toPath, all.toSeq.sorted
-        .map { case (t, g) => s"$t,$g" }.mkString("\n")
+    if (!f.isFile)
+      Cas.publishFile(f, all.toSeq.sorted.map { case (t, g) => s"$t,$g" }.mkString("\n")
         .getBytes(StandardCharsets.UTF_8))
-      try Files.createLink(f.toPath, tmp.toPath)
-      catch { case _: java.nio.file.FileAlreadyExistsException => () }
-      finally Files.deleteIfExists(tmp.toPath)
-    }
     txnCkptFiles(dir)
       .filter(_.getName.stripPrefix("_txn-ckpt-v").stripSuffix(".txt").toInt < head)
       .foreach(old => Files.deleteIfExists(old.toPath))
@@ -170,32 +142,22 @@ private[graft] object GenChain {
   }
 
   /** Publish generation `gen` from a complete tmp: manifest last, then
-    * one atomic rename. A generation another writer already published
-    * fails the rename: [[Cas.LostException]], which [[Cas.withRetry]]
-    * rebases.
+    * [[Cas.publishDir]]. A generation another writer already published
+    * loses: [[Cas.LostException]], which [[Cas.withRetry]] rebases.
     */
   def publish(dir: String, gen: Int, txn: Long, tmp: String): Unit = {
     Files.write(new java.io.File(tmp, "_graft_manifest.json").toPath,
       s"""{"generation":$gen,"txn":$txn}""".getBytes(StandardCharsets.UTF_8))
     Files.createDirectories(Paths.get(dir))
-    try Files.move(Paths.get(tmp), Paths.get(genDir(dir, gen)), StandardCopyOption.ATOMIC_MOVE)
-    catch {
-      case e: java.nio.file.FileSystemException =>
-        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
-        throw new Cas.LostException(
-          s"generation $gen of $dir was committed by another writer", e)
-    }
+    if (!Cas.publishDir(new java.io.File(tmp), new java.io.File(genDir(dir, gen)))(
+        new java.io.File(_, "_graft_manifest.json").isFile))
+      throw new Cas.LostException(
+        s"generation $gen of $dir was committed by another writer", null)
   }
 
-  /** Writer-unique (process + thread) build dir: concurrent writers
-    * preparing the SAME next generation write disjoint paths, so the
-    * publish CAS loser's bytes are unreferenced garbage rather than a
-    * silent overwrite of the winner's in-flight tmp — the
-    * [[VersionedLayout]] writer-tag discipline applied to the chains.
-    */
+  /** This writer's build dir for generation `gen` ([[Cas.writerTag]]). */
   def freshTmp(dir: String, gen: Int): String = {
-    val tmp = s"$dir/.gen-tmp-v$gen-p${graft.JvmId.token}" +
-      s"t${Thread.currentThread().getId}"
+    val tmp = s"$dir/.gen-tmp-v$gen-${Cas.writerTag}"
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
     Files.createDirectories(Paths.get(tmp))
     tmp
@@ -206,6 +168,9 @@ private[graft] object GenChain {
     * of the generations about to vanish are consolidated into the txn
     * checkpoint FIRST — otherwise a restarted stream would re-commit a
     * vacuumed batch, breaking exactly-once across history reclamation.
+    * Abandoned writer tmps (crashed or CAS-lost `.gen-tmp-` builds, and
+    * a killed checkpoint publish's `._txn-ckpt-v<N>.tmp-` file) go once
+    * their [[Cas.reclaimExpired]] lease runs out.
     */
   def vacuumGenerations(dir: String, keepFrom: Int,
       orphanLeaseMs: Long = 15 * 60 * 1000L): Unit = {
@@ -214,20 +179,9 @@ private[graft] object GenChain {
       val d = new java.io.File(genDir(dir, g))
       if (d.isDirectory) org.apache.commons.io.FileUtils.deleteDirectory(d)
     }
-    // Sweep abandoned writer tmps (crashed or CAS-lost attempts) past an
-    // mtime lease. The lease checks the NEWEST mtime in the whole tree:
-    // task part files land in subdirectories (`asg-delta/` etc.), which
-    // updates the subdirectory's mtime, not the tmp root's — a root-only
-    // check would sweep a >lease-long in-flight write out from under its
-    // writer.
-    val cutoff = System.currentTimeMillis() - orphanLeaseMs
-    def newestMtime(f: java.io.File): Long =
-      (f.lastModified() +: Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
-        .map(newestMtime)).max
     Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith(".gen-tmp-")
-        && newestMtime(f) <= cutoff)
-      .foreach(org.apache.commons.io.FileUtils.deleteDirectory)
+      .filter(f => (f.isDirectory && f.getName.startsWith(".gen-tmp-")) || Cas.isPublishTmp(f))
+      .foreach(Cas.reclaimExpired(_, orphanLeaseMs))
   }
 
   /** The policy's default thresholds, shared by every maintained chain:

@@ -2,8 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths, StandardCopyOption}
-import java.nio.charset.StandardCharsets
 
 /** Persisted, generation-versioned state for the incrementally
   * maintainable LSH dedup index ([[Dedup.incrementalPairBands]]).

@@ -425,11 +425,9 @@ object PipelineTxn {
   }
 
   /** Commit the erase intent exactly-once: evaluate both predicates at
-    * the current heads, write the matched key sets to a writer-private
-    * tmp, and publish by atomic rename. A concurrent or replayed
-    * attempt that loses the rename discards its tmp and reuses the
-    * committed record — the same CAS discipline as the stores' own
-    * commits.
+    * the current heads, write the matched key sets to a writer tmp, and
+    * publish by [[Cas.publishDir]]. A concurrent or replayed attempt
+    * that loses discards its tmp and reuses the committed record.
     */
   private def eraseIntent(s: SparkSession, p: PipelineStores, docPred: Column,
       vecPred: Column, txn: Long): Unit = {
@@ -448,8 +446,8 @@ object PipelineTxn {
     // still converge on this ONE recorded key set either way).
     val docsHead = VersionedLayout.currentVersion(p.docs)
     val embHead = VersionedLayout.currentVersion(p.emb)
-    val tmp = new java.io.File(s"${intentDir(p, txn)}.tmp-" +
-      java.util.UUID.randomUUID().toString.take(8))
+    val tmp = new java.io.File(s"${intentDir(p, txn)}.tmp-${Cas.writerTag}")
+    org.apache.commons.io.FileUtils.deleteDirectory(tmp)
     tmp.getParentFile.mkdirs()
     VersionedLayout.readAsOf(s, p.docs, docsHead)
       .where(docPred).select(col("doc_id"))
@@ -457,28 +455,12 @@ object PipelineTxn {
     VersionedLayout.readAsOf(s, p.emb, embHead)
       .where(vecPred).select(col("vec_id"))
       .coalesce(1).write.mode("overwrite").parquet(s"$tmp/vecids")
-    try java.nio.file.Files.move(tmp.toPath, dst.toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    catch {
-      case e @ (_: java.nio.file.FileAlreadyExistsException
-           | _: java.nio.file.DirectoryNotEmptyException
-           | _: java.nio.file.AccessDeniedException
-           | _: java.nio.file.NoSuchFileException) =>
-        // Only a LOST PUBLISH RACE is benign (the winner's record is
-        // equally valid — evaluated under the same txn). The same
-        // exceptions also cover genuine filesystem failures, where no
-        // record exists — swallowing those would let the erase proceed
-        // with empty placeholder keys and stamp a zero-row delete, an
-        // unrecoverable silent no-op. Verify the winner, else fail.
-        // NoSuchFileException is the loser whose tmp a concurrent
-        // [[vacuumIntents]] already swept AFTER the winner published —
-        // same benign case, same verification.
-        if (dst.isDirectory) {
-          if (tmp.isDirectory)
-            org.apache.commons.io.FileUtils.deleteDirectory(tmp)
-        } else throw new IllegalStateException(
-          s"intent publish of ${dst.getPath} failed with no winning record", e)
-    }
+    // Only a LOST PUBLISH RACE is benign (the winner's record is equally
+    // valid — evaluated under the same txn); a failure with no record
+    // must not let the erase stamp a zero-row delete. A tmp that a
+    // concurrent [[vacuumIntents]] swept after the winner published is
+    // the same benign case.
+    Cas.publishDir(tmp, dst)(_.isDirectory)
   }
 
   /** A step wrapper that throws [[InjectedCrash]] once `failAfter`
@@ -551,10 +533,9 @@ object PipelineTxn {
     * the record exists to prevent. Also sweeps abandoned writer tmps
     * (`txn<id>.tmp-*` left by a crash inside the intent write): a tmp
     * whose record published (or whose txn is fully applied) is garbage
-    * now; otherwise it ages out past an mtime lease, the
-    * [[GenChain.vacuumGenerations]] discipline — a resumed writer
-    * always builds a FRESH tmp, so old tmps are never live. Returns the
-    * number of intent records reclaimed (tmps not counted).
+    * now; otherwise it goes once its [[Cas.reclaimExpired]] lease runs
+    * out. Returns the number of intent records reclaimed (tmps not
+    * counted).
     */
   def vacuumIntents(p: PipelineStores, keepFromTxn: Long,
       orphanLeaseMs: Long = 30 * 60 * 1000L): Int = {
@@ -578,12 +559,11 @@ object PipelineTxn {
     }
     def txnOf(name: String): Option[Long] =
       "^txn(\\d+)".r.findFirstMatchIn(name).flatMap(_.group(1).toLongOption)
-    val cutoff = System.currentTimeMillis() - orphanLeaseMs
     entries.filter(_.getName.contains(".tmp-")).foreach { f =>
-      val published = txnOf(f.getName)
-        .exists(t => new java.io.File(intentDir(p, t)).isDirectory || applied(t))
-      if (published || f.lastModified() <= cutoff)
+      if (txnOf(f.getName)
+          .exists(t => new java.io.File(intentDir(p, t)).isDirectory || applied(t)))
         org.apache.commons.io.FileUtils.deleteDirectory(f)
+      else Cas.reclaimExpired(f, orphanLeaseMs)
     }
     entries
       .filterNot(_.getName.contains(".tmp-"))

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 import java.nio.charset.StandardCharsets
 
 /** Versioned range layout with TIME TRAVEL — the commit-log layer the
@@ -70,13 +70,12 @@ import java.nio.charset.StandardCharsets
   * actually rewrote (not table copies), and vacuum reclaims exactly
   * those.
   *
-  * Concurrency: ONE protocol for every mutation. Artifacts land in
-  * WRITER-TAGGED directories (the tag rides the committed entry, so
-  * readers only ever resolve the winner's artifacts), the atomic
-  * hard-link publish of the numbered log entry is the compare-and-swap,
-  * and [[Cas.withRetry]] rebases a lost race by re-running the action
-  * against the new head (deterministic from the as-of state, so the
-  * rebase IS the mutation serialized after the winner). Appends are
+  * Concurrency: ONE protocol for every mutation, the commit-file rules
+  * of [[Cas]]. Artifacts land in directories tagged with
+  * [[Cas.writerTag]] (the tag rides the committed entry, so readers
+  * only ever resolve the winner's artifacts), the log entry's
+  * [[Cas.publishFile]] is the compare-and-swap, and [[Cas.withRetry]]
+  * rebases a lost race (see [[commit]]). Appends are
   * retried by their callers; [[appendCompact]], [[majorCompact]],
   * [[repartitionScheme]] and [[vacuum]] retry themselves. Readers are
   * safe at every COMMITTED state (commit-last protocol), and a reader
@@ -492,32 +491,15 @@ object VersionedLayout {
     statsOf(dir, df)
   }
 
-  /** Per-pid (min, max) of the stats column over `df` — the one extra
-    * bounded aggregation a stats-tracking write pays (a real format
-    * collects the same bounds from task-level file stats for free; one
-    * map-side-combined pass over bytes already in hand is the honest
-    * local equivalent). Empty when the layout tracks no stats column or
-    * `df` does not carry it (e.g. a pre-evolution segment). Pids whose
-    * values are all NULL emit no triple (unknown — never skipped on).
-    */
-  private def computeStats(df: DataFrame, statsCol: Option[String]): Seq[(Int, Long, Long)] =
-    statsCol.toSeq.flatMap { c =>
-      if (!df.columns.contains(c)) Nil
-      else df.groupBy(col("pid").cast("int").as("p"))
-        .agg(min(col(c).cast("long")).as("mn"), max(col(c).cast("long")).as("mx"))
-        .collect().toSeq
-        .filterNot(r => r.isNullAt(1) || r.isNullAt(2))
-        .map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
-    }
-
-  /** Multi-column [[computeStats]] (round 14): per-pid [min,max] for
-    * EVERY given physical column `df` carries at a numeric type, in
-    * ONE map-side-combined pass (the per-column bounds ride the same
-    * aggregation — a stats set of k columns does not cost k scans).
-    * Keys are the PHYSICAL column names in the bytes — exactly what a
-    * parquet footer records — and read-time identity resolution maps
-    * a query column back to each source's physical spelling, which is
-    * what lets skipping survive a rename.
+  /** Per-pid [min,max] for EVERY given physical column `df` carries at
+    * a numeric type, in ONE map-side-combined pass — the one extra
+    * bounded aggregation a stats-tracking write pays; a stats set of k
+    * columns does not cost k scans. Pids whose values are all NULL emit
+    * no triple (unknown — never skipped on). Keys are the PHYSICAL
+    * column names in the bytes — exactly what a parquet footer records —
+    * and read-time identity resolution maps a query column back to each
+    * source's physical spelling, which is what lets skipping survive a
+    * rename.
     */
   private def computeStatsM(
       df: DataFrame, physCols: Seq[String]): Map[String, Seq[(Int, Long, Long)]] = {
@@ -807,14 +789,6 @@ object VersionedLayout {
       // [[tombDirOf]]).
       tpids: Seq[Int] = Nil)
 
-  /** Artifact-directory suffix unique to this writer (process+thread):
-    * concurrent writers preparing the SAME version number write disjoint
-    * paths, so the commit CAS loser's artifacts are unreferenced garbage
-    * rather than a silent overwrite of the winner's.
-    */
-  private def writerTag(): String =
-    s"p${graft.JvmId.token}t${Thread.currentThread().getId}"
-
   private def entryFile(dir: String, ver: Int) = new java.io.File(logDir(dir), f"v$ver%05d.json")
   private def ckptFile(dir: String, ver: Int) = new java.io.File(logDir(dir), f"ckpt-v$ver%05d.json")
 
@@ -900,15 +874,10 @@ object VersionedLayout {
       .maxOption.getOrElse(-1)
   }
 
-  /** Append entry `ver` — the COMMIT of its action. Write-then-link so a
-    * reader never parses a torn entry AND a lost writer race fails
-    * LOUDLY: `rename(2)` silently replaces an existing target on POSIX,
-    * so an atomic-move publish would let the loser of a version race
-    * overwrite the winner's committed entry. Hard-link creation is the
-    * atomic primitive that refuses an existing target
-    * (`FileAlreadyExistsException`), which is exactly the
-    * compare-and-swap a table-format commit service performs. A lost
-    * race throws [[Cas.LostException]], which [[Cas.withRetry]] rebases.
+  /** Append entry `ver` — the COMMIT of its action, published by
+    * [[Cas.publishFile]] so a reader never parses a torn entry and a
+    * lost writer race fails loudly: [[Cas.LostException]], which
+    * [[Cas.withRetry]] rebases.
     */
   private[graft] def commit(dir: String, e: LogEntry): Unit = {
     logDir(dir).mkdirs()
@@ -927,20 +896,11 @@ object VersionedLayout {
     // reads it.
     val stamped = if (e.ts == 0L) e.copy(ts = System.currentTimeMillis()) else e
     val body = renderEntry(stamped)
-    // Writer-unique tmp: a shared name would let racing writer B rewrite
-    // the tmp between A's write and createLink, publishing B's bytes
-    // under A's successful CAS — the silent corruption the hard-link
-    // protocol exists to exclude.
-    val tmp = new java.io.File(logDir(dir),
-      s".v${e.version}.tmp-p${graft.JvmId.token}-t${Thread.currentThread().getId}")
-    Files.write(tmp.toPath, body.getBytes(StandardCharsets.UTF_8))
-    try Files.createLink(entryFile(dir, e.version).toPath, tmp.toPath)
-    catch {
-      case ex: java.nio.file.FileAlreadyExistsException =>
-        throw new Cas.LostException(
-          s"version ${e.version} of $dir was committed by another writer — " +
-            "this mutation lost the race and published nothing", ex)
-    } finally Files.deleteIfExists(tmp.toPath)
+    if (!Cas.publishFile(entryFile(dir, e.version), body.getBytes(StandardCharsets.UTF_8)))
+      throw new Cas.LostException(
+        s"version ${e.version} of $dir was committed by another writer — " +
+          "this mutation lost the race and published nothing",
+        new java.nio.file.FileAlreadyExistsException(entryFile(dir, e.version).toString))
     // TOCTOU re-check: if a competitor committed this version AND a
     // checkpoint absorbed+truncated it between the guard above and the
     // link, the link "succeeds" on the truncated name but the entry is
@@ -1002,30 +962,17 @@ object VersionedLayout {
     val d = logDir(dir)
     if (!d.isDirectory) return Nil
     // A concurrent checkpoint's truncation can delete a file between our
-    // listing and its read; the re-list sees the superseding checkpoint
-    // (strictly newer state), so one retry normally converges. The retry
-    // is BOUNDED: each truncation is one checkpoint landing, so needing
-    // more than a handful means the filesystem is lying — fail loudly
-    // rather than recurse without a depth cap.
-    var lastMiss: Throwable = null
-    (1 to 8).foreach { _ =>
-      try {
-        val files = Option(d.listFiles()).getOrElse(Array.empty[java.io.File])
-        val head: Seq[LogEntry] = files
-          .filter(_.getName.matches("ckpt-v\\d+\\.json")).sortBy(_.getName).lastOption
-          .map(parseCkpt).getOrElse(Nil)
-        val ckptV = head.lastOption.map(_.version).getOrElse(-1)
-        return head ++ files.filter(_.getName.matches("v\\d+\\.json")).sortBy(_.getName)
-          .map(f => parseEntry(new String(Files.readAllBytes(f.toPath), StandardCharsets.UTF_8)))
-          .filter(_.version > ckptV)
-      } catch {
-        case e @ (_: java.nio.file.NoSuchFileException | _: java.io.FileNotFoundException) =>
-          lastMiss = e
-      }
+    // listing and its read: [[Cas.reread]] re-lists.
+    Cas.reread(s"log files of $dir") {
+      val files = Option(d.listFiles()).getOrElse(Array.empty[java.io.File])
+      val head: Seq[LogEntry] = files
+        .filter(_.getName.matches("ckpt-v\\d+\\.json")).sortBy(_.getName).lastOption
+        .map(parseCkpt).getOrElse(Nil)
+      val ckptV = head.lastOption.map(_.version).getOrElse(-1)
+      Some(head ++ files.filter(_.getName.matches("v\\d+\\.json")).sortBy(_.getName)
+        .map(f => parseEntry(new String(Files.readAllBytes(f.toPath), StandardCharsets.UTF_8)))
+        .filter(_.version > ckptV))
     }
-    throw new IllegalStateException(
-      s"log files of $dir kept vanishing mid-read across 8 attempts — " +
-        "more than concurrent checkpoint truncation can explain", lastMiss)
   }
 
   /** CHECKPOINT the log at the current head: write ONE consolidated
@@ -1035,9 +982,9 @@ object VersionedLayout {
     * table-format log-checkpoint mechanism: without it a long-lived
     * table's every read lists and parses O(total versions) files; with
     * it, O(1) checkpoint + O(commits since). Protocol: the checkpoint
-    * itself publishes by the same write-then-hard-link CAS as a commit
-    * (a lost same-version race is benign — both writers render the
-    * identical deterministic content); truncation runs strictly AFTER
+    * itself publishes by [[Cas.publishFile]] like a commit (a lost
+    * same-version race is benign — both writers render the identical
+    * deterministic content); truncation runs strictly AFTER
     * the publish, so a crash anywhere leaves either the old state, or
     * checkpoint+files overlapping (readers dedupe), never a gap. The
     * commit CAS keeps stale-version failures loud via
@@ -1049,15 +996,8 @@ object VersionedLayout {
     require(entries.nonEmpty, s"no committed log at $dir to checkpoint")
     val v = entries.last.version
     val f = ckptFile(dir, v)
-    if (!f.isFile) {
-      val tmp = new java.io.File(logDir(dir),
-        s".ckpt-v$v.tmp-p${graft.JvmId.token}-t${Thread.currentThread().getId}")
-      Files.write(tmp.toPath,
-        entries.map(renderEntry).mkString("\n").getBytes(StandardCharsets.UTF_8))
-      try Files.createLink(f.toPath, tmp.toPath)
-      catch { case _: java.nio.file.FileAlreadyExistsException => () }
-      finally Files.deleteIfExists(tmp.toPath)
-    }
+    if (!f.isFile)
+      Cas.publishFile(f, entries.map(renderEntry).mkString("\n").getBytes(StandardCharsets.UTF_8))
     // Fold live Blooms into ONE consolidated sidecar (round 15 — the
     // same consolidation the entry files get): deterministic content
     // (ascending versions, sorted columns/pids, sourced from the same
@@ -1073,14 +1013,8 @@ object VersionedLayout {
       }
     }.mkString("\n")
     val bf = ckptBloomFile(dir, v)
-    if (bloomBody.nonEmpty && !bf.isFile) {
-      val tmp = new java.io.File(logDir(dir),
-        s".ckpt-bloom-v$v.tmp-p${graft.JvmId.token}-t${Thread.currentThread().getId}")
-      Files.write(tmp.toPath, bloomBody.getBytes(StandardCharsets.UTF_8))
-      try Files.createLink(bf.toPath, tmp.toPath)
-      catch { case _: java.nio.file.FileAlreadyExistsException => () }
-      finally Files.deleteIfExists(tmp.toPath)
-    }
+    if (bloomBody.nonEmpty && !bf.isFile)
+      Cas.publishFile(bf, bloomBody.getBytes(StandardCharsets.UTF_8))
     if (bf.isFile || bloomBody.isEmpty) {
       entries.foreach(e =>
         Files.deleteIfExists(bloomFile(dir, e.version, e.tag).toPath))
@@ -1391,7 +1325,7 @@ object VersionedLayout {
   def appendDelete(s: SparkSession, dir: String, cond: org.apache.spark.sql.Column,
       txn: Long = -1L): Int = {
     val ver = currentVersion(dir) + 1
-    val tag = writerTag()
+    val tag = Cas.writerTag
     val (n, tpids) = writeTombs(dir, ver, tag, readAsOf(s, dir, ver - 1).where(cond))
     commit(dir, LogEntry(ver, "delete", Nil, 0, txn, tag,
       rowsW = 0L, rowsD = n, tpids = tpids))
@@ -1410,7 +1344,7 @@ object VersionedLayout {
   def appendDeleteKeys(s: SparkSession, dir: String, keys: DataFrame,
       txn: Long = -1L): Int = {
     val ver = currentVersion(dir) + 1
-    val tag = writerTag()
+    val tag = Cas.writerTag
     val keyCols = keyColsOf(dir)
     val (n, tpids) = writeTombs(dir, ver, tag, readAsOf(s, dir, ver - 1)
       .join(keys.select(keyCols.map(col): _*), keyCols, "left_semi"))
@@ -1448,7 +1382,7 @@ object VersionedLayout {
     */
   def appendInsert(s: SparkSession, dir: String, rows: DataFrame, txn: Long = -1L): Int = {
     val ver = currentVersion(dir) + 1
-    val tag = writerTag()
+    val tag = Cas.writerTag
     requireInDomain(dir, rows)
     rows.write.mode("overwrite").parquet(insertDir(dir, ver, tag))
     val seg = s.read.parquet(insertDir(dir, ver, tag))
@@ -1914,7 +1848,7 @@ object VersionedLayout {
       }
     }
     val ver = currentVersion(dir) + 1
-    val tag = writerTag()
+    val tag = Cas.writerTag
     val (n, tpids) = writeTombs(dir, ver, tag, readAsOf(s, dir, ver - 1), single = false)
     val newRows = rows.localCheckpoint()
     requireInDomain(dir, newRows)
@@ -1939,7 +1873,7 @@ object VersionedLayout {
   def appendUpsert(s: SparkSession, dir: String,
       cond: org.apache.spark.sql.Column, transform: DataFrame => DataFrame): Int = {
     val ver = currentVersion(dir) + 1
-    val tag = writerTag()
+    val tag = Cas.writerTag
     val matched = readAsOf(s, dir, ver - 1).where(cond).localCheckpoint()
     val (n, tpids) = writeTombs(dir, ver, tag, matched)
     val replacements = transform(matched).localCheckpoint()
@@ -2023,7 +1957,7 @@ object VersionedLayout {
     require(bySourceUpdateCond.isEmpty || bySourceUpdateSet.nonEmpty,
       "a NOT MATCHED BY SOURCE update arm needs assignments (bySourceUpdateSet)")
     val ver = currentVersion(dir) + 1
-    val tag = writerTag()
+    val tag = Cas.writerTag
     val target = readAsOf(s, dir, ver - 1)
     val headCols = target.columns.toSeq
     require(updateSet.keySet.subsetOf(headCols.toSet),
@@ -2227,7 +2161,7 @@ object VersionedLayout {
     val restoreFlips = feedFlipVersions(entries, baseTypesOf(dir),
       keyColsOf(dir).toSet + "pid", toVersion, head)
     val ver = head + 1
-    val tag = writerTag()
+    val tag = Cas.writerTag
     val key = keyColsOf(dir)
     val feed = (if (restoreFlips.nonEmpty) changeFeedTagged(s, dir, toVersion, head)
                 else changeFeed(s, dir, toVersion, head)).localCheckpoint()
@@ -2358,7 +2292,7 @@ object VersionedLayout {
     Cas.withRetry() {
       val entries = log(dir)
       val ver = entries.last.version + 1
-      val tag = writerTag()
+      val tag = Cas.writerTag
       // Only tombstones since the last major fold: older ones were
       // applied physically by the fold, and re-applying one could kill a
       // folded same-key replacement.
@@ -2472,7 +2406,7 @@ object VersionedLayout {
     // serves the new set from this version on. `pids` is the pre-fold
     // pid set.
     val out = LogEntry(ver, "majorcompact", baseSources(dir, entries, ver - 1).keys.toSeq.sorted, 0,
-      tag = writerTag(),
+      tag = Cas.writerTag,
       colName = if (newPid.isDefined) "repartition" else "",
       colType = if (newPid.isDefined) newDomain.mkString(",") else "")
     val root = rootOf(dir, out)
@@ -2556,7 +2490,7 @@ object VersionedLayout {
       orphanLeaseMs: Long = 15 * 60 * 1000L): Unit = Cas.withRetry() {
     val entries = log(dir)
     val ver = entries.last.version + 1
-    val tag = writerTag()
+    val tag = Cas.writerTag
     val compactsInScope = entries.filter(e => isCompaction(e) && e.version <= keepFrom)
     val segVersions = segmentsAt(entries, keepFrom).map(_.version)
     val gced = entries
@@ -2764,25 +2698,22 @@ object VersionedLayout {
     * loser's writer-tagged tombstones, segment or compaction output
     * (never referenced by any reader, see [[Cas.withRetry]]), a crashed
     * attempt a different writer re-ran under its own tag, or a lost
-    * vacuum's tombstone GC copy. Two guards against sweeping an
-    * IN-FLIGHT writer (one whose chosen version other commits have
-    * already passed, but whose artifact write is still running):
-    * versions above the head are spared outright, and at-or-below it a
-    * dir must be older than `leaseMs` — a slow writer's directory has
-    * a recent mtime (parquet tasks keep writing into it), so only
-    * abandoned garbage ages past the lease.
+    * vacuum's tombstone GC copy — and the publish tmps a writer killed
+    * inside [[Cas.publishFile]] left in `_log`. Two guards against
+    * sweeping an IN-FLIGHT writer (one whose chosen version other
+    * commits have already passed, but whose artifact write is still
+    * running): versions above the head are spared outright, and
+    * at-or-below it a candidate must pass [[Cas.reclaimExpired]].
     */
   private def sweepOrphans(dir: String, entries: Seq[LogEntry], leaseMs: Long): Unit = {
     val head = entries.last.version
-    val cutoff = System.currentTimeMillis() - leaseMs
     def sweep(root: String, prefix: String, resolve: Int => Option[String]): Unit =
       Option(new java.io.File(dir, root).listFiles()).getOrElse(Array.empty)
         .filter(f => f.isDirectory && f.getName.matches(s"$prefix\\d+(-[^.]+)?"))
         .foreach { f =>
           val ver = f.getName.drop(prefix.length).takeWhile(_.isDigit).toInt
-          if (ver <= head && f.lastModified() <= cutoff
-              && !resolve(ver).exists(new java.io.File(_).getName == f.getName))
-            org.apache.commons.io.FileUtils.deleteDirectory(f)
+          if (ver <= head && !resolve(ver).exists(new java.io.File(_).getName == f.getName))
+            Cas.reclaimExpired(f, leaseMs)
         }
     sweep("_tombs", "v", v => Some(tombDirOf(dir, entries, v)))
     sweep("_inserts", "v", v => Some(insertDirOf(dir, entries, v)))
@@ -2790,17 +2721,16 @@ object VersionedLayout {
     // Lost-race writer-tagged Bloom sidecars (round 15): a CAS loser's
     // `bloom-vN-<tag>.txt` is never read (readers resolve through the
     // committed entry's tag) — reclaim it under the same lease once the
-    // committed file at that version provably has a different name.
-    Option(logDir(dir).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isFile && f.getName.matches("bloom-v\\d+(-[^.]+)?\\.txt"))
-      .foreach { f =>
+    // committed file at that version provably has a different name. A
+    // publish tmp never carries a committed name.
+    Option(logDir(dir).listFiles()).getOrElse(Array.empty).foreach { f =>
+      if (f.isFile && f.getName.matches("bloom-v\\d+(-[^.]+)?\\.txt")) {
         val ver = f.getName.stripPrefix("bloom-v").takeWhile(_.isDigit).toInt
         val expected = entries.find(_.version == ver)
           .map(e => bloomFile(dir, ver, e.tag).getName)
-        if (ver <= head && f.lastModified() <= cutoff
-            && expected.exists(_ != f.getName))
-          Files.deleteIfExists(f.toPath)
-      }
+        if (ver <= head && expected.exists(_ != f.getName)) Cas.reclaimExpired(f, leaseMs)
+      } else if (Cas.isPublishTmp(f)) Cas.reclaimExpired(f, leaseMs)
+    }
   }
 
   /** The tombstone set one version committed (spec observability). */
@@ -3045,9 +2975,9 @@ object VersionedLayout {
     * difference between seconds and a day. Hard links require one
     * filesystem (true for a local table root); on an object store the
     * same protocol is manifest-reference copying. Built under a
-    * `.clone-tmp` and atomically renamed, so `dst` is never observable
-    * half-built; a crashed attempt leaves only a tmp the next attempt
-    * overwrites.
+    * writer-tagged `.clone-tmp-` and published by [[Cas.publishDir]],
+    * so `dst` is never observable half-built, and cloners racing to one
+    * `dst` never share a tmp.
     *
     * The source's vacuum HORIZON travels with the clone: if the vacuum
     * entry that raised it sits above `v`, a metadata-only vacuum entry
@@ -3063,7 +2993,7 @@ object VersionedLayout {
     require(v >= srcHorizon,
       s"version $v is below the vacuum horizon $srcHorizon — its files are gone")
     if (new java.io.File(dst).exists()) return // already published (idempotent re-entry)
-    val tmp = s"$dst.clone-tmp-p${graft.JvmId.token}"
+    val tmp = s"$dst.clone-tmp-${Cas.writerTag}"
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
     def linkTree(src: java.io.File, to: java.nio.file.Path): Unit = {
       require(src.isDirectory, s"$src of $dir is missing though a version above the " +
@@ -3107,15 +3037,9 @@ object VersionedLayout {
         renderEntry(LogEntry(v + 1, "vacuum", Nil, srcHorizon))
           .getBytes(StandardCharsets.UTF_8))
     Files.createDirectories(Paths.get(dst).getParent)
-    try Files.move(Paths.get(tmp), Paths.get(dst), StandardCopyOption.ATOMIC_MOVE)
-    catch {
-      case _: java.nio.file.FileSystemException =>
-        // Another cloner published first; its copy links the same
-        // immutable files.
-        if (!new java.io.File(dst).isDirectory) throw new IllegalStateException(
-          s"clone rename to $dst failed and no complete clone exists")
-        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
-    }
+    // A cloner that lost the publish race leaves the winner's copy,
+    // which links the same immutable files.
+    Cas.publishDir(new java.io.File(tmp), new java.io.File(dst))(_.isDirectory)
   }
 
   /** One column identity of a layout: its birth version (0 for

@@ -1,7 +1,7 @@
 package graft.plans
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, StandardCopyOption}
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException, TableAlreadyExistsException}
@@ -13,7 +13,7 @@ import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.operators.VersionedLayout
+import graft.operators.{Cas, VersionedLayout}
 import graft.streaming.GraftLayoutTable
 
 /** DSv2 TABLE CATALOG for the versioned layout (round 16) — NAMED
@@ -64,6 +64,9 @@ import graft.streaming.GraftLayoutTable
   * registration CAS is the single atomic step that makes the table
   * visible — a crash mid-CTAS can never leave a registered empty
   * table ([[StagedGraftTable]]).
+  *
+  * Registry files follow the commit-file rules of
+  * [[graft.operators.Cas]]: a create is a [[graft.operators.Cas.publishFile]].
   *
   * At 100 TB the catalog is PURE metadata: every operation is a
   * registry-file touch plus commit-log reads; no data pass anywhere.
@@ -444,15 +447,14 @@ object GraftCatalog {
     else p
 
   // --- Registry storage (round 17): ONE FILE PER TABLE under
-  // `<warehouse>/tables/<name>.json`, published by the commit log's
-  // hard-link CAS. The previous whole-file `catalog.json` was a
-  // JVM-locked read-modify-write: two JVMs sharing a durable warehouse
-  // that registered tables concurrently raced last-writer-wins, and
-  // the loser's registration silently vanished (round-16 judge #1).
-  // Per-table files make every create naturally conflict-free —
-  // `Files.createLink` refuses an existing target atomically, so
-  // CREATE racing CREATE yields exactly one winner and the loser an
-  // error naming the existing table, across processes, with no lock.
+  // `<warehouse>/tables/<name>.json`, published by [[Cas.publishFile]]
+  // like a layout log entry. The previous whole-file `catalog.json` was
+  // a JVM-locked read-modify-write: two JVMs sharing a durable
+  // warehouse that registered tables concurrently raced
+  // last-writer-wins, and the loser's registration silently vanished.
+  // Per-table files make every create naturally conflict-free: CREATE
+  // racing CREATE yields exactly one winner and the loser an error
+  // naming the existing table, across processes, with no lock.
   // A legacy `catalog.json` (written by rounds <17) is still READ as a
   // fallback layer; it is never written again.
 
@@ -529,12 +531,10 @@ object GraftCatalog {
     all.collect { case (n, e) if !renamedAway(all, n) => n -> e.dir }
   }
 
-  /** Publish `name` by hard-link CAS — the atomic primitive that
-    * refuses an existing target (`rename(2)` silently replaces on
-    * POSIX, so an atomic-move publish would let a create race lose
-    * silently). Throws [[TableAlreadyExistsException]] when the name
-    * is live; a file left by a crashed rename (renamed-away) is
-    * repaired (deleted) and the create retried once.
+  /** Publish `name` by [[Cas.publishFile]]. Throws
+    * [[TableAlreadyExistsException]] when the name is live; a file left
+    * by a crashed rename (renamed-away) is repaired (deleted) and the
+    * create retried once.
     */
   private[plans] def casCreate(warehouse: String, name: String, e: RegEntry): Unit = {
     requireShaped(name, e.dir)
@@ -543,22 +543,14 @@ object GraftCatalog {
       s"table '$name' is registered in this warehouse's legacy catalog.json — " +
         "drop it there first (legacy entries are read-only)")
     tablesDir(warehouse).mkdirs()
-    val tmp = new java.io.File(tablesDir(warehouse),
-      s".$name.tmp-p${graft.JvmId.token}-t${Thread.currentThread().getId}")
-    Files.write(tmp.toPath, renderEntry(e).getBytes(StandardCharsets.UTF_8))
-    try {
-      try Files.createLink(entryFile(warehouse, name).toPath, tmp.toPath)
-      catch {
-        case ex: java.nio.file.FileAlreadyExistsException =>
-          val all = readEntries(warehouse)
-          if (renamedAway(all, name)) {
-            // Stale loser of a crashed rename: repair and retry ONCE.
-            Files.deleteIfExists(entryFile(warehouse, name).toPath)
-            Files.createLink(entryFile(warehouse, name).toPath, tmp.toPath)
-          } else throw new TableAlreadyExistsException(
-            Identifier.of(Array.empty, name))
-      }
-    } finally Files.deleteIfExists(tmp.toPath)
+    val f = entryFile(warehouse, name)
+    val body = renderEntry(e).getBytes(StandardCharsets.UTF_8)
+    val won = Cas.publishFile(f, body) || (renamedAway(readEntries(warehouse), name) && {
+      // Stale loser of a crashed rename: repair and retry ONCE.
+      Files.deleteIfExists(f.toPath)
+      Cas.publishFile(f, body)
+    })
+    if (!won) throw new TableAlreadyExistsException(Identifier.of(Array.empty, name))
   }
 
   /** Atomically REPLACE an existing entry's content (SetProperty
@@ -571,8 +563,7 @@ object GraftCatalog {
       s"table '$name' has no per-table registry file (legacy catalog.json " +
         "entries are read-only — re-CREATE the name to migrate it)")
     tablesDir(warehouse).mkdirs()
-    val tmp = new java.io.File(tablesDir(warehouse),
-      s".$name.tmp-p${graft.JvmId.token}-t${Thread.currentThread().getId}")
+    val tmp = Cas.tmpFor(entryFile(warehouse, name))
     Files.write(tmp.toPath, renderEntry(e).getBytes(StandardCharsets.UTF_8))
     Files.move(tmp.toPath, entryFile(warehouse, name).toPath,
       StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
@@ -592,8 +583,7 @@ object GraftCatalog {
       entries.contains(name) && {
         val next = (entries - name).toSeq.sortBy(_._1)
           .map { case (k, v) => s""""$k":"$v"""" }.mkString("{", ",", "}")
-        val tmp = new java.io.File(f.getParentFile,
-          s".catalog.tmp-p${graft.JvmId.token}-t${Thread.currentThread().getId}")
+        val tmp = Cas.tmpFor(f)
         Files.write(tmp.toPath, next.getBytes(StandardCharsets.UTF_8))
         Files.move(tmp.toPath, f.toPath,
           StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.operators.{AsOfJoin, Dedup, RuntimeFilter, Salted, Scored, TopKAggregator}
+import graft.operators.{AsOfJoin, RuntimeFilter, Salted, Scored, TopKAggregator}
 
 /** Operators whose point is the 100 TB shuffle shape: salted (two-phase)
   * aggregation for hot keys, sketch-based distinct counting, and the
@@ -1042,7 +1042,7 @@ object ScalePatterns {
       if (rangeLayoutWritten.contains(dir)) return dir
       if (readDiskManifest(dir).isEmpty) {
         val uppers = rangeUppers(s, d)
-        val tmp = dir + s".tmp-p${graft.JvmId.token}"
+        val tmp = dir + s".tmp-${graft.operators.Cas.writerTag}"
         val upLit = array(uppers.map(lit).toSeq: _*)
         Tables.lineitem(s, d)
           .select(expr("CAST(round(l_extendedprice * 100) AS BIGINT)").as("v"),
@@ -1054,18 +1054,9 @@ object ScalePatterns {
           rangeManifestFile(tmp).toPath,
           uppers.mkString("[", ",", "]")
             .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        try java.nio.file.Files.move(
-          java.nio.file.Paths.get(tmp), java.nio.file.Paths.get(dir),
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        catch {
-          case _: java.nio.file.FileAlreadyExistsException
-               | _: java.nio.file.DirectoryNotEmptyException
-               | _: java.nio.file.FileSystemException =>
-            // Another JVM published first; its copy is byte-equivalent.
-            if (readDiskManifest(dir).isEmpty) throw new IllegalStateException(
-              s"range layout rename to $dir failed and no complete layout exists")
-            org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
-        }
+        // A JVM that published first wrote a byte-equivalent copy.
+        graft.operators.Cas.publishDir(new java.io.File(tmp), new java.io.File(dir))(
+          t => readDiskManifest(t.getPath).nonEmpty)
       }
       rangeLayoutWritten.add(dir)
       dir

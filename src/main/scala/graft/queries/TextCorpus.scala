@@ -135,20 +135,12 @@ object TextCorpus {
     val store = new java.io.File(
       sys.props("java.io.tmpdir"), s"graft_index_store_${sfx}_n$nonce").getAbsolutePath
     if (!new java.io.File(store).isDirectory) {
-      val tmp = new java.io.File(
-        s"$store.tmp-p${graft.JvmId.token}t${Thread.currentThread().getId}")
+      val tmp = new java.io.File(s"$store.tmp-${graft.operators.Cas.writerTag}")
       org.apache.commons.io.FileUtils.deleteDirectory(tmp)
       buildRetrievalChain(s, d, tmp.getPath)
       graft.operators.IndexStore.compact(s, tmp.getPath)
-      try java.nio.file.Files.move(tmp.toPath, java.nio.file.Paths.get(store),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      catch {
-        case _: java.nio.file.FileSystemException =>
-          // Another session published first; the chain is deterministic.
-          if (!new java.io.File(store).isDirectory) throw new IllegalStateException(
-            s"index store rename to $store failed and no complete store exists")
-          org.apache.commons.io.FileUtils.deleteDirectory(tmp)
-      }
+      // A session that published first built the same deterministic chain.
+      graft.operators.Cas.publishDir(tmp, new java.io.File(store))(_.isDirectory)
     }
     store
   }

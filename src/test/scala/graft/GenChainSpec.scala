@@ -77,6 +77,20 @@ class GenChainSpec extends SparkSpec {
     assert(IvfIndexStore.admitOnce(spark, dir, asgRow(2000L), txn = 999L) == g)
   }
 
+  test("vacuumGenerations reclaims a killed checkpoint publish's tmp past the lease and keeps a fresh one") {
+    val dir = freshStore("ckpttmp")
+    assert(IvfIndexStore.admitOnce(spark, dir, asgRow(200L), txn = 1L) == 1)
+    val old = new java.io.File(dir, "._txn-ckpt-v1.tmp-pdeadt9")
+    val fresh = new java.io.File(dir, "._txn-ckpt-v1.tmp-pcafet9")
+    java.nio.file.Files.write(old.toPath, "1,1".getBytes)
+    java.nio.file.Files.write(fresh.toPath, "1,1".getBytes)
+    old.setLastModified(System.currentTimeMillis() - 120000L)
+    GenChain.vacuumGenerations(dir, keepFrom = 0, orphanLeaseMs = 60000L)
+    assert(!old.exists(), "aged txn-checkpoint publish tmp was not reclaimed")
+    assert(fresh.exists(), "fresh txn-checkpoint publish tmp must survive the lease")
+    assert(GenChain.checkpointCoverage(dir) == 1 && GenChain.committedGen(dir, 1L).contains(1))
+  }
+
   test("IVF centroid epochs: retrain flips the epoch in place; history, retract, and compact all work across the flip; the policy arm fires on the audit flag") {
     val dir = freshStore("epoch")
     val s0 = spark

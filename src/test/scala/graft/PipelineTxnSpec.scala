@@ -509,6 +509,28 @@ class PipelineTxnSpec extends SparkSpec {
     assert(!intentExists(2L))
   }
 
+  test("intent tmp lease reads the newest mtime in the tree: an aged root over a fresh docids/ part is in flight") {
+    val p = freshPipeline("tmplease")
+    val intents = new java.io.File(s"${p.meta}/_intents")
+    val aged = System.currentTimeMillis() - 120000L
+    // A writer still inside its intent write: the predicate output just
+    // landed under docids/, which leaves the tmp root's mtime as it was.
+    val inFlight = new java.io.File(intents, "txn99.tmp-pdeadt9")
+    val part = new java.io.File(inFlight, "docids/part-00000.parquet")
+    java.nio.file.Files.createDirectories(part.toPath.getParent)
+    java.nio.file.Files.write(part.toPath, "bytes".getBytes)
+    inFlight.setLastModified(aged)
+    // An abandoned one: every file in its tree is past the lease.
+    val abandoned = new java.io.File(intents, "txn98.tmp-pbeeft9")
+    val oldPart = new java.io.File(abandoned, "docids/part-00000.parquet")
+    java.nio.file.Files.createDirectories(oldPart.toPath.getParent)
+    java.nio.file.Files.write(oldPart.toPath, "bytes".getBytes)
+    Seq(oldPart, oldPart.getParentFile, abandoned).foreach(_.setLastModified(aged))
+    assert(PipelineTxn.vacuumIntents(p, keepFromTxn = 10L, orphanLeaseMs = 60000L) == 0)
+    assert(part.isFile, "intent vacuum swept an in-flight tmp on its root mtime alone")
+    assert(!abandoned.exists(), "an all-aged intent tmp survived the lease")
+  }
+
   test("pipeline restore: every crash window resumes to the pre-incident state, replay moves nothing, a no-op restore skips the index arms", SlowTest) {
     // Pre-incident reference: base + ingest(9..12) + erase(3,4,9,10)
     // -> heads docs v2 / lsh g2 / emb v2 / ivf g2.

@@ -2959,6 +2959,98 @@ class StorageSpec extends SparkSpec {
     Files.deleteIfExists(fresh.toPath)
   }
 
+  test("vacuum's orphan lease reads the newest mtime in the tree: an aged root over a fresh part file is in flight") {
+    import graft.operators.VersionedLayout
+    val spark0 = spark
+    import spark0.implicits._
+    val dir = tempDir("graft-lease-tree").toString + "/t"
+    def shaped(ids: Seq[Long]) = ids.map(i => (i, i * 3)).toDF("row_id", "n")
+      .select(pmod(col("row_id"), lit(4)).cast("int").as("pid"), col("row_id"), col("n"))
+    VersionedLayout.writeBaseTable(spark, shaped(1L to 40L), dir, Seq("row_id"))
+    VersionedLayout.appendInsert(spark, dir, shaped(Seq(901L)))         // v1
+    val aged = System.currentTimeMillis() - 120000L
+    // An uncommitted writer's insert dir at v1: its task just wrote a
+    // part file, which leaves the dir root's mtime where it was.
+    val inFlight = new java.io.File(dir, "_inserts/v1-pdeadt9")
+    val part = new java.io.File(inFlight, "part-00000.parquet")
+    Files.createDirectories(inFlight.toPath)
+    Files.write(part.toPath, "bytes".getBytes)
+    inFlight.setLastModified(aged)
+    // An abandoned one: every file in its tree is past the lease.
+    val abandoned = new java.io.File(dir, "_inserts/v1-pbeeft9")
+    val oldPart = new java.io.File(abandoned, "part-00000.parquet")
+    Files.createDirectories(abandoned.toPath)
+    Files.write(oldPart.toPath, "bytes".getBytes)
+    oldPart.setLastModified(aged)
+    abandoned.setLastModified(aged)
+    VersionedLayout.vacuum(spark, dir, keepFrom = 0, orphanLeaseMs = 60000L)
+    assert(part.isFile, "vacuum swept an in-flight writer's tree on its root mtime alone")
+    assert(!abandoned.exists(), "an all-aged uncommitted tree survived the lease")
+    assert(VersionedLayout.readAsOf(spark, dir, 1).count() == 41L)
+  }
+
+  test("vacuum reclaims crash-left log publish tmps past the lease, and keeps fresh ones") {
+    import graft.operators.VersionedLayout
+    val spark0 = spark
+    import spark0.implicits._
+    val dir = tempDir("graft-lease-logtmp").toString + "/t"
+    def shaped(ids: Seq[Long]) = ids.map(i => (i, i * 3)).toDF("row_id", "n")
+      .select(pmod(col("row_id"), lit(4)).cast("int").as("pid"), col("row_id"), col("n"))
+    VersionedLayout.writeBaseTable(spark, shaped(1L to 40L), dir, Seq("row_id"))
+    VersionedLayout.appendInsert(spark, dir, shaped(Seq(901L)))         // v1
+    val logDir = new java.io.File(dir, "_log")
+    // A JVM killed between writing a publish tmp and deleting it leaves
+    // one of these; no committed name ever matches them.
+    val planted = Seq(".v00002.tmp-", ".ckpt-v00001.tmp-", ".ckpt-bloom-v00001.tmp-")
+      .map { stem =>
+        val old = new java.io.File(logDir, stem + "pdeadt9")
+        val fresh = new java.io.File(logDir, stem + "pcafet9")
+        Files.write(old.toPath, "{}".getBytes)
+        Files.write(fresh.toPath, "{}".getBytes)
+        old.setLastModified(System.currentTimeMillis() - 120000L)
+        (old, fresh)
+      }
+    VersionedLayout.vacuum(spark, dir, keepFrom = 0, orphanLeaseMs = 60000L)
+    planted.foreach { case (old, fresh) =>
+      assert(!old.exists(), s"aged publish tmp ${old.getName} was not reclaimed")
+      assert(fresh.exists(), s"fresh publish tmp ${fresh.getName} must survive the lease")
+    }
+    assert(VersionedLayout.currentVersion(dir) == 2)
+    assert(VersionedLayout.readAsOf(spark, dir, 2).count() == 41L)
+  }
+
+  test("two threads cloning one (src, v) to one dst: the clone equals the serial clone and no clone tmp remains") {
+    import graft.operators.VersionedLayout
+    val spark0 = spark
+    import spark0.implicits._
+    val root = tempDir("graft-clone-race").toString
+    val src = s"$root/src"
+    def shaped(ids: Seq[Long]) = ids.map(i => (i, i * 3)).toDF("row_id", "n")
+      .select(pmod(col("row_id"), lit(4)).cast("int").as("pid"), col("row_id"), col("n"))
+    VersionedLayout.writeBaseTable(spark, shaped(1L to 40L), src, Seq("row_id"))
+    VersionedLayout.appendInsert(spark, src, shaped(Seq(901L, 902L)))   // v1
+    VersionedLayout.appendDelete(spark, src, col("row_id") === 7L)      // v2
+    VersionedLayout.appendInsert(spark, src, shaped(Seq(903L)))         // v3
+    def rows(d: String, v: Int) =
+      VersionedLayout.readAsOf(spark, d, v).collect().map(_.toSeq).toSet
+    VersionedLayout.cloneAsOf(spark, src, s"$root/serial", 3)
+    val dst = s"$root/dst"
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      val fs = (1 to 2).map(_ => pool.submit(new java.util.concurrent.Callable[Unit] {
+        def call(): Unit = { start.await(); VersionedLayout.cloneAsOf(spark, src, dst, 3) }
+      }))
+      start.countDown()
+      fs.foreach(_.get(5, java.util.concurrent.TimeUnit.MINUTES))
+    } finally pool.shutdownNow()
+    (0 to 3).foreach { v =>
+      assert(rows(dst, v) == rows(s"$root/serial", v), s"racing clone diverged at AS-OF $v")
+    }
+    val left = new java.io.File(root).listFiles().map(_.getName).filter(_.contains(".clone-tmp"))
+    assert(left.isEmpty, s"clone tmps left behind: ${left.mkString(", ")}")
+  }
+
   test("field-keyed Bloom sidecars (round 16/17): point probes on struct FIELDS prune sources, stay exact, and SURVIVE field evolution era-resolved") {
     import graft.operators.VersionedLayout
     val spark0 = spark
