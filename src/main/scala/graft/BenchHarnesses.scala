@@ -168,9 +168,7 @@ object ScaleSlope {
     spark.sparkContext.setLogLevel("WARN")
     import org.apache.spark.sql.functions._
 
-    val scaledDir = new java.io.File(
-      sys.props("java.io.tmpdir"),
-      s"graft_scale${copies}x_p${graft.JvmId.token}").getAbsolutePath
+    val scaledDir = ScratchRoot.jvm(s"scale${copies}x")
     val docs = spark.read.parquet(s"$baseDir/documents.parquet")
     val maxId = docs.agg(max(col("doc_id"))).first().getLong(0) + 1
     val alpha = "abcdefghijklmnopqrstuvwxyz"

@@ -6,7 +6,7 @@ package graft
   * WHY NOT THE PID: every per-JVM scratch root used to be keyed by
   * `ProcessHandle.current().pid()`. PID uniqueness only holds inside
   * one PID namespace — two containers sharing a host `/tmp` (or a
-  * bind-mounted `java.io.tmpdir`) can each hold the same PID while
+  * bind-mounted temp directory) can each hold the same PID while
   * both are LIVE. Under that collision the "an existing directory can
   * only be a dead process's leftover" reasoning inverts: a
   * purge-on-first-claim deletes a live peer's mid-build state, and the
@@ -26,11 +26,12 @@ object JvmId {
   val token: String =
     java.util.UUID.randomUUID().toString.replace("-", "")
 
-  /** Delete this JVM's scenario roots: entries directly under `tmpDir`
+  /** Delete this JVM's scratch roots: entries directly under `tmpDir`
     * whose name starts with `graft_` and contains [[token]]. No other JVM
     * can compute such a name, so none can adopt the root; other JVMs'
-    * roots and the code-nonce-named cross-JVM roots ([[classNonce]]) are
-    * never touched. Failures are swallowed — cleanup must not fail an exit.
+    * roots and the code-nonce-named shared roots ([[ScratchRoot.stable]])
+    * are never touched. [[ScratchRoot]] runs it at exit. Failures are
+    * swallowed — cleanup must not fail an exit.
     */
   private[graft] def sweepOwnRoots(tmpDir: java.io.File): Unit =
     Option(tmpDir.listFiles()).getOrElse(Array.empty[java.io.File])
@@ -38,30 +39,6 @@ object JvmId {
       .foreach { f =>
         try org.apache.commons.io.FileUtils.forceDelete(f) catch { case _: Throwable => () }
       }
-
-  try Runtime.getRuntime.addShutdownHook(new Thread(
-    () => sweepOwnRoots(new java.io.File(sys.props("java.io.tmpdir")))))
-  catch { case _: IllegalStateException => () } // already shutting down
-
-  /** CRC of the given classes' bytecode — the CODE-STATE nonce baked
-    * into the name of every STABLE (cross-JVM, cross-round) scenario
-    * root. The q186 lesson generalized: a scratch root that outlives
-    * its JVM gets adopted by later JVMs, and adoption of state built by
-    * a DIFFERENT code spelling is the one mechanism that yields
-    * rows-match/hash-mismatch gate rows no single-process re-run can
-    * reproduce. With the nonce in the NAME, cross-code state lands
-    * under a different root and is never seen — no purge, so no risk of
-    * deleting a live peer's mid-build state either.
-    */
-  def classNonce(classes: Class[_]*): String = {
-    val crc = new java.util.zip.CRC32()
-    classes.foreach { c =>
-      val res = c.getResourceAsStream("/" + c.getName.replace('.', '/') + ".class")
-      if (res != null)
-        try crc.update(res.readAllBytes()) finally res.close()
-    }
-    java.lang.Long.toHexString(crc.getValue)
-  }
 
   private val diagLock = new Object
 

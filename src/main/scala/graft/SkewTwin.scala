@@ -89,9 +89,7 @@ object SkewTwin {
     spark.sparkContext.setLogLevel("WARN")
     import org.apache.spark.sql.functions._
 
-    val root = new java.io.File(
-      sys.props("java.io.tmpdir"),
-      s"graft_skewtwin_p${graft.JvmId.token}").getAbsolutePath
+    val root = ScratchRoot.jvm("skewtwin")
     val (uniDir, skwDir) = (s"$root/uniform", s"$root/skewed")
 
     // --- documents: equal token mass, different key concentration ---

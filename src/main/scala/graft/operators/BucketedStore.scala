@@ -26,11 +26,12 @@ object BucketedStore {
 
   /** Physical (catalog) name for a logical table name: unqualified only
     * (the orphan cleanup below derives a warehouse path, which is only
-    * valid in the default database), suffixed with this JVM's PID so two
-    * concurrent sessions sharing a warehouse directory can never delete
-    * or overwrite each other's live table directories (the in-memory
-    * catalog is per-JVM but the warehouse dir is not). PID reuse implies
-    * the previous owner is dead, so reclaiming its directory is safe.
+    * valid in the default database), suffixed with this JVM's token
+    * ([[graft.JvmId.token]]) so two concurrent sessions sharing a
+    * warehouse directory can never delete or overwrite each other's live
+    * table directories (the in-memory catalog is per-JVM but the
+    * warehouse dir is not). No other JVM can name the table, so a
+    * directory under this name can only be this JVM's own leftover.
     */
   private def physicalName(table: String): String = {
     require(!table.contains("."),
@@ -46,10 +47,10 @@ object BucketedStore {
     val s = df.sparkSession
     val phys = physicalName(table)
     // The in-memory catalog is per-JVM but the warehouse directory is
-    // not: a location left by a previous (dead, same-PID) session makes
-    // CREATE fail with LOCATION_ALREADY_EXISTS even in overwrite mode
-    // (the new catalog does not know the table). Clear the orphan before
-    // writing — the PID suffix guarantees no LIVE session owns this dir.
+    // not: a location the catalog does not know (an earlier write that
+    // failed before registering the table) makes CREATE fail with
+    // LOCATION_ALREADY_EXISTS even in overwrite mode. Clear the orphan
+    // before writing — the token suffix means no other session owns it.
     if (!s.catalog.tableExists(phys)) {
       val wh = s.conf.get("spark.sql.warehouse.dir")
       val path = new org.apache.hadoop.fs.Path(wh, phys.toLowerCase)

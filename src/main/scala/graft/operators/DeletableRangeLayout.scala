@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import java.nio.file.{Files, StandardCopyOption}
 
 /** Range layout with DELETE support — since round 9 a FACADE over
   * [[VersionedLayout]]'s commit log, not a protocol of its own.
@@ -53,71 +52,22 @@ object DeletableRangeLayout {
     StructField("l_linenumber", IntegerType),
     StructField("v", LongType)))
 
-  /** Layouts this JVM has verified complete (fast path over the
-    * committed log). Added only AFTER a publish succeeds.
+  /** Serializes this JVM's delete and compact commits, so two sessions
+    * replaying the same scenario never race the commit log.
     */
-  private val written = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
   private val lock = new Object
 
-  /** Build the versioned base (v0 commit) if absent, atomically: the
-    * whole layout (data + log) is built under a tmp dir and published
-    * with one rename, so a concurrent/crashed builder can never leave a
-    * half-built dir another JVM would read. A legacy sidecar-format dir
-    * (round-8 `_graft_manifest.json`, no `_log`) is rebuilt in the
-    * unified format — its content is deterministic from the source.
+  /** Build the versioned base (v0 commit) once per JVM, published
+    * whole ([[graft.ScratchRoot.publishOnce]]): the layout (data + log)
+    * is built under a writer tmp and renamed into place, so a concurrent
+    * or crashed builder never leaves a half-built dir another JVM would
+    * read. A JVM that published first wrote a byte-equivalent copy (the
+    * boundary array is deterministic).
     */
-  def ensure(s: SparkSession, d: String, dir: String, uppers: Array[Long]): String = {
-    if (written.contains(dir)) return dir
-    lock.synchronized {
-      if (written.contains(dir)) return dir
-      if (VersionedLayout.currentVersion(dir) < 0) {
-        val f = new java.io.File(dir)
-        if (f.exists()) {
-          // Legacy (round-8 sidecar) dir: retire it. NOT an in-place
-          // delete — between the currentVersion check above and here, a
-          // concurrent JVM may have atomically published a NEW-format
-          // layout at this path (and even committed mutations to it),
-          // which a blind delete would destroy. Move the dir aside
-          // atomically, INSPECT what was actually moved, and restore it
-          // if it turns out to be a just-published new-format layout.
-          val trash = new java.io.File(dir + s".legacy-trash-p${graft.JvmId.token}")
-          org.apache.commons.io.FileUtils.deleteDirectory(trash)
-          Files.move(f.toPath, trash.toPath, StandardCopyOption.ATOMIC_MOVE)
-          if (VersionedLayout.currentVersion(trash.getPath) >= 0) {
-            try Files.move(trash.toPath, f.toPath, StandardCopyOption.ATOMIC_MOVE)
-            catch {
-              case _: java.nio.file.FileSystemException =>
-                // Yet another publisher landed meanwhile. A fresh v0
-                // layout is deterministic from the source — droppable;
-                // one carrying committed MUTATIONS is durable state we
-                // must not discard, so leave it on disk for recovery —
-                // and SAY so: parked durable state only discoverable by
-                // a directory listing is state nobody recovers.
-                if (VersionedLayout.currentVersion(trash.getPath) == 0)
-                  org.apache.commons.io.FileUtils.deleteDirectory(trash)
-                else System.err.println(
-                  s"[graft] WARN: layout at $dir lost a triple publish race; " +
-                    s"a copy carrying committed mutations (version " +
-                    s"${VersionedLayout.currentVersion(trash.getPath)}) is parked at " +
-                    s"${trash.getPath} for manual recovery")
-            }
-            written.add(dir)
-            return dir
-          }
-          org.apache.commons.io.FileUtils.deleteDirectory(trash)
-        }
-        val tmp = dir + s".tmp-${Cas.writerTag}"
-        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
-        VersionedLayout.writeBase(s, d, tmp, uppers)
-        // A JVM that published first wrote a byte-equivalent copy (the
-        // boundary array is deterministic).
-        Cas.publishDir(new java.io.File(tmp), f)(
-          t => VersionedLayout.currentVersion(t.getPath) >= 0)
-      }
-      written.add(dir)
-      dir
+  def ensure(s: SparkSession, d: String, dir: String, uppers: Array[Long]): String =
+    graft.ScratchRoot.publishOnce(dir)(t => VersionedLayout.currentVersion(t.getPath) >= 0) {
+      tmp => VersionedLayout.writeBase(s, d, tmp.getPath, uppers)
     }
-  }
 
   /** The raw layout base at the head (pid as the partition column) —
     * the UNMASKED read, correct only when no tombstones are outstanding;

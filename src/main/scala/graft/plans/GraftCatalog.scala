@@ -435,8 +435,7 @@ object GraftCatalog {
     * (fresh registry per JVM); deployments pin a durable one with
     * `spark.sql.catalog.graft.warehouse`.
     */
-  def defaultWarehouse: String = new java.io.File(
-    sys.props("java.io.tmpdir"), s"graft_warehouse_p${graft.JvmId.token}").getAbsolutePath
+  def defaultWarehouse: String = graft.ScratchRoot.jvm("warehouse")
 
   /** Strip a `file:` URI qualification down to the local path the
     * engine's File-based log machinery expects; plain paths pass

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{ScratchRoot, Tables}
 import graft.operators.{AsOfJoin, RuntimeFilter, Salted, Scored, TopKAggregator}
 
 /** Operators whose point is the 100 TB shuffle shape: salted (two-phase)
@@ -335,7 +335,7 @@ object ScalePatterns {
     * so a crash between the rewrites leaves stale tombstones that
     * anti-join nothing. Both phases (masked, compacted) are reported against ONE
     * DELETE-semantics oracle, q151's discipline. Idempotent within and
-    * across sessions: bucketed tables are session-scoped (PID-suffixed),
+    * across sessions: bucketed tables are session-scoped (JVM-token-suffixed),
     * so each session replays build -> delete -> compact from the
     * immutable source parquet and lands on the same answer; a repeat
     * call in one session finds the keys already gone and no-ops.
@@ -384,32 +384,16 @@ object ScalePatterns {
     * the other partitions' files; `PartitionFilters` plan-asserted in
     * QueryPlanSpec). The oracle is the plain filtered aggregate over the
     * original table, so the correctness gate covers the whole
-    * write -> partition-discovery -> pruned-scan path.
+    * write -> partition-discovery -> pruned-scan path. The copy is
+    * written once per JVM under a per-JVM root, so two concurrent runs
+    * (bench and verify) never overwrite each other's files mid-read.
     */
-  /** Partitioned copies this JVM has already written (q76's write-once /
-    * read-many amortization, mirroring `BucketedStore.ensureBucketed`).
-    */
-  private val partitionedWritten = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** Serializes the write-once layout builds below: the once-set alone
-    * would let a concurrent suite read a dir still being written.
-    */
-  private val layoutBuildLock = new Object
-
   private def q76(s: SparkSession, d: String): DataFrame = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_")
-    // PID-suffixed path: two concurrent runs on the same scale factor
-    // (e.g. bench and verify) must not overwrite each other's files
-    // mid-read. Written once per session; later calls read steady-state.
-    val dir = new java.io.File(
-      sys.props("java.io.tmpdir"),
-      s"graft_events_bytype_${sfx}_p${graft.JvmId.token}").getAbsolutePath
-    layoutBuildLock.synchronized {
-      if (partitionedWritten.add(dir)) {
-        Tables.events(s, d)
-          .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-          .write.mode("overwrite").partitionBy("event_type").parquet(dir)
-      }
+    val dir = ScratchRoot.jvm("events_bytype", d)
+    ScratchRoot.once(dir) {
+      Tables.events(s, d)
+        .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
+        .write.mode("overwrite").partitionBy("event_type").parquet(dir)
     }
     s.read.parquet(dir)
       .where(col("event_type") === "click")
@@ -417,11 +401,6 @@ object ScalePatterns {
       .agg(count(lit(1)).as("n_clicks"), round(sum(col("value")), 2).as("click_value"))
       .orderBy(col("user_id"))
   }
-
-  /** Format dirs this JVM has already written (q95's write-once
-    * amortization, mirroring q76/`BucketedStore.ensureBucketed`).
-    */
-  private val formatWritten = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   /** Source-format round trip: customer is written once per session as
     * JSON Lines and nation as headered CSV, read back through the json/
@@ -431,20 +410,15 @@ object ScalePatterns {
     * is the plain parquet-side aggregate, so the gate certifies the
     * whole write -> read -> plan path for both text formats: quoting
     * (nation comments carry commas), double round-tripping (acctbal),
-    * and the broadcast of the re-read dim. PID-suffixed path, same
+    * and the broadcast of the re-read dim. Per-JVM root, same
     * concurrency rationale as q76.
     */
   private def q95(s: SparkSession, d: String): DataFrame = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_")
-    val base = new java.io.File(
-      sys.props("java.io.tmpdir"),
-      s"graft_formats_${sfx}_p${graft.JvmId.token}").getAbsolutePath
-    layoutBuildLock.synchronized {
-      if (formatWritten.add(base)) {
-        Tables.customer(s, d).write.mode("overwrite").json(s"$base/customer_json")
-        Tables.nation(s, d).write.mode("overwrite")
-          .option("header", "true").csv(s"$base/nation_csv")
-      }
+    val base = ScratchRoot.jvm("formats", d)
+    ScratchRoot.once(base) {
+      Tables.customer(s, d).write.mode("overwrite").json(s"$base/customer_json")
+      Tables.nation(s, d).write.mode("overwrite")
+        .option("header", "true").csv(s"$base/nation_csv")
     }
     val cust = s.read.schema(Tables.customer(s, d).schema).json(s"$base/customer_json")
     val nat = s.read.schema(Tables.nation(s, d).schema)
@@ -454,8 +428,6 @@ object ScalePatterns {
       .agg(count(lit(1)).as("n_customers"), round(sum(col("c_acctbal")), 2).as("total_acctbal"))
       .orderBy(col("n_name"))
   }
-
-  private val orcWritten = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   /** ORC ROUND TRIP — the third columnar/source format beside parquet
     * (layouts, every table) and q95's JSON/CSV text formats: orders
@@ -469,13 +441,9 @@ object ScalePatterns {
     * already holds, the engine scans it with pruning intact".
     */
   private def q196(s: SparkSession, d: String): DataFrame = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_")
-    val base = new java.io.File(
-      sys.props("java.io.tmpdir"),
-      s"graft_orc_${sfx}_p${graft.JvmId.token}").getAbsolutePath
-    layoutBuildLock.synchronized {
-      if (orcWritten.add(base))
-        Tables.orders(s, d).write.mode("overwrite").orc(s"$base/orders_orc")
+    val base = ScratchRoot.jvm("orc", d)
+    ScratchRoot.once(base) {
+      Tables.orders(s, d).write.mode("overwrite").orc(s"$base/orders_orc")
     }
     ordersOrc(s, d, base)
       .where(col("o_orderstatus") === "F")
@@ -500,9 +468,6 @@ object ScalePatterns {
         .bitwiseOR(shiftleft(shiftright(b, k).bitwiseAND(lit(1L)), 2 * k))
     }.reduce(_.bitwiseOR(_))
 
-  /** Z-order dirs this JVM has already written (q96). */
-  private val zorderWritten = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   /** Z-ordered (multi-dimensional-clustered) layout round trip: events
     * are quantized to an 8-bit rank per dimension (user_id, event time —
     * range bounds from one tiny min/max agg, the same prepass any
@@ -514,15 +479,12 @@ object ScalePatterns {
     * skips most files on parquet min/max stats for BOTH columns
     * (clustering measured in StorageSpec; the z-key is layout-internal,
     * so the gate checks the box aggregate itself against the plain
-    * parquet oracle). PID-suffixed path, q76's concurrency rationale.
+    * parquet oracle). Per-JVM root, q76's concurrency rationale.
     */
   private def q96(s: SparkSession, d: String): DataFrame = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_")
-    val dir = new java.io.File(
-      sys.props("java.io.tmpdir"),
-      s"graft_events_zorder_${sfx}_p${graft.JvmId.token}").getAbsolutePath
+    val dir = ScratchRoot.jvm("events_zorder", d)
     val fiveDaysNs = 5L * 86400L * 1000000000L
-    layoutBuildLock.synchronized { if (zorderWritten.add(dir)) {
+    ScratchRoot.once(dir) {
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("user_id"), col("event_type"), col("value"), col("ts"))
       val b = ev.agg(
@@ -535,7 +497,7 @@ object ScalePatterns {
         .sortWithinPartitions(col("zkey"))
         .drop("zkey")
         .write.mode("overwrite").parquet(dir)
-    } }
+    }
     val minTs = s.read.parquet(dir).agg(min(col("ts"))).first().getLong(0)
     s.read.parquet(dir)
       .where(col("user_id").between(10, 99) && col("ts") < minTs + fiveDaysNs)
@@ -546,9 +508,6 @@ object ScalePatterns {
       .orderBy(col("event_type"))
   }
 
-  /** Schema-evolution dirs this JVM has already written (q127). */
-  private val evoWritten = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   /** Schema evolution round trip: two ingest batches of the customer
     * table written with DIFFERENT projections (v1 carries c_name, v2
     * carries c_mktsegment — the columns-added-over-time shape every
@@ -556,25 +515,20 @@ object ScalePatterns {
     * mergeSchema into one unioned view where each batch's missing
     * columns surface as NULLs, then audited: row count, per-column
     * presence counts, exact centi balance total. Written once per
-    * session under a PID-suffixed dir (the q95 discipline); the merged
+    * session under a per-JVM root (the q95 discipline); the merged
     * read needs no user-supplied schema — the footer union IS the
     * contract being exercised.
     */
   private def q127(s: SparkSession, d: String): DataFrame = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_")
-    val base = new java.io.File(
-      sys.props("java.io.tmpdir"),
-      s"graft_schema_evo_${sfx}_p${graft.JvmId.token}").getAbsolutePath
-    layoutBuildLock.synchronized {
-      if (evoWritten.add(base)) {
-        val c = Tables.customer(s, d)
-        c.where(col("c_custkey") % 2 === 0)
-          .select(col("c_custkey"), col("c_name"), col("c_acctbal"))
-          .write.mode("overwrite").parquet(s"$base/v1")
-        c.where(col("c_custkey") % 2 === 1)
-          .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
-          .write.mode("overwrite").parquet(s"$base/v2")
-      }
+    val base = ScratchRoot.jvm("schema_evo", d)
+    ScratchRoot.once(base) {
+      val c = Tables.customer(s, d)
+      c.where(col("c_custkey") % 2 === 0)
+        .select(col("c_custkey"), col("c_name"), col("c_acctbal"))
+        .write.mode("overwrite").parquet(s"$base/v1")
+      c.where(col("c_custkey") % 2 === 1)
+        .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
+        .write.mode("overwrite").parquet(s"$base/v2")
     }
     s.read.option("mergeSchema", "true").parquet(s"$base/v1", s"$base/v2")
       .agg(
@@ -743,17 +697,6 @@ object ScalePatterns {
     */
   val erasureMod = 37L
 
-  /** GDPR-style erasure audit: for each table carrying a user key, the
-    * row counts before, removed, and after applying the deletion list,
-    * plus the count of listed keys still present AFTER the purge — which
-    * must be zero and is PROVEN by semi-joining the purged relation
-    * against the deletion list materialized as its own broadcast
-    * relation (the compliance evidence, not an assumption — an inline
-    * re-check of the purge predicate would be its literal negation and
-    * could never surface a broken purge). The purge itself is a pushed
-    * scan filter per table; each table contributes bounded aggregation
-    * passes and the audit rows union at table-count size.
-    */
   /** One table's erasure-audit row. The leak count is a MEMBERSHIP test
     * of the purged relation against the deletion list materialized as
     * its own (broadcast) relation — not a re-evaluation of the purge
@@ -781,6 +724,17 @@ object ScalePatterns {
         col("n_after"), col("n_leaked"))
   }
 
+  /** GDPR-style erasure audit: for each table carrying a user key, the
+    * row counts before, removed, and after applying the deletion list,
+    * plus the count of listed keys still present AFTER the purge — which
+    * must be zero and is PROVEN by semi-joining the purged relation
+    * against the deletion list materialized as its own broadcast
+    * relation (the compliance evidence, not an assumption — an inline
+    * re-check of the purge predicate would be its literal negation and
+    * could never surface a broken purge). The purge itself is a pushed
+    * scan filter per table; each table contributes bounded aggregation
+    * passes and the audit rows union at table-count size.
+    */
   private def q140(s: SparkSession, d: String): DataFrame =
     erasureAudit("customer", Tables.customer(s, d), "c_custkey")
       .unionByName(erasureAudit("events", Tables.events(s, d), "user_id"))
@@ -875,19 +829,6 @@ object ScalePatterns {
   /** Target partition count for q147's range-boundary plan. */
   val rangePlanParts = 32
 
-  /** Exact range-partition boundary planner: the EXACT version of what
-    * Spark's RangePartitioner estimates by sampling — for a target of
-    * [[rangePlanParts]] equal-weight partitions over the price column,
-    * the upper bound of each partition (smallest value whose cumulative
-    * count reaches ceil(p·N/P)) and the exact row count each partition
-    * would receive. The pre-sort audit that shows WHERE ties/skew make
-    * balanced range partitioning impossible (a heavy repeated value
-    * cannot be split, and this plan shows the resulting imbalance as
-    * data, before the shuffle is paid). Shape: one map-side-combinable
-    * collapse to the value-grain histogram, cumulative counts via the
-    * [[graft.operators.PrefixSum]] banded decomposition, a P-row argmin
-    * per boundary, and a lag() over the P-row plan table.
-    */
   /** The q147 boundary plan as a reusable relation (pid,
     * upper_bound_centi, n_rows) — consumed by q147 itself and by q150's
     * actual range-partitioned WRITE, so the planner and the layout can
@@ -916,6 +857,19 @@ object ScalePatterns {
       .select(col("pid"), col("upper_bound_centi"), col("n_rows"))
   }
 
+  /** Exact range-partition boundary planner: the EXACT version of what
+    * Spark's RangePartitioner estimates by sampling — for a target of
+    * [[rangePlanParts]] equal-weight partitions over the price column,
+    * the upper bound of each partition (smallest value whose cumulative
+    * count reaches ceil(p·N/P)) and the exact row count each partition
+    * would receive. The pre-sort audit that shows WHERE ties/skew make
+    * balanced range partitioning impossible (a heavy repeated value
+    * cannot be split, and this plan shows the resulting imbalance as
+    * data, before the shuffle is paid). Shape: one map-side-combinable
+    * collapse to the value-grain histogram, cumulative counts via the
+    * [[graft.operators.PrefixSum]] banded decomposition, a P-row argmin
+    * per boundary, and a lag() over the P-row plan table.
+    */
   private def q147(s: SparkSession, d: String): DataFrame =
     rangePlan(s, d).orderBy(col("pid"))
 
@@ -925,26 +879,23 @@ object ScalePatterns {
   val rangeBandLoCenti = 100000L
   val rangeBandHiCenti = 200000L
 
-  /** Range layouts this JVM has VERIFIED complete (in-memory fast path
-    * over the on-disk completeness marker). A dir is added only AFTER
-    * its write + manifest publish succeed — a failed first write leaves
-    * the set untouched so the next caller retries instead of reading a
-    * missing directory (round-6 advice).
-    */
-  private val rangeLayoutWritten = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private val rangeLayoutLock = new Object
-
-  /** STABLE per-source-dir location (no JVM pid in the path): the whole
+  /** STABLE per-source-dir location (no JVM token in the path): the whole
     * point of persisting the manifest is that a FRESH session finds the
     * layout + boundaries a previous session paid for. Cross-JVM write
     * races are settled by the tmp-dir + atomic-rename publish protocol
-    * in [[ensureRangeLayout]], not by pid-segregated copies.
+    * in [[ensureRangeLayout]], not by per-JVM copies.
     */
-  private[graft] def rangeLayoutDir(d: String): String = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_")
-    new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_lineitem_range_${sfx}_n$scenarioNonce").getAbsolutePath
-  }
+  private[graft] def rangeLayoutDir(d: String): String = scenarioRoot("lineitem_range", d)
+
+  /** The shared root `name` of a stable scenario ([[ScratchRoot.stable]]):
+    * these roots outlive their JVM by design, so a fresh session reuses
+    * the layouts an earlier one paid for, and the nonce over these
+    * classes confines that reuse to state the current code built.
+    */
+  private def scenarioRoot(name: String, d: String): String = ScratchRoot.stable(name, d,
+    ScalePatterns.getClass, graft.operators.VersionedLayout.getClass,
+    graft.operators.DeletableRangeLayout.getClass,
+    graft.operators.BucketedStore.getClass, Tables.getClass)
 
   /** The persisted boundary manifest: a `_`-prefixed file INSIDE the
     * layout directory (Spark's parquet reader ignores `_`/`.` files), so
@@ -990,7 +941,7 @@ object ScalePatterns {
     */
   private[graft] def forgetRangeSessionState(d: String): Unit = {
     rangeManifest.remove(d)
-    rangeLayoutWritten.remove(rangeLayoutDir(d))
+    ScratchRoot.forget(rangeLayoutDir(d))
   }
 
   private[graft] def rangeUppers(s: SparkSession, d: String): Array[Long] =
@@ -1010,68 +961,27 @@ object ScalePatterns {
       case i => i + 1
     }
 
-  /** q147's planner WIRED INTO AN ACTUAL LAYOUT: lineitem is written
-    * once per session range-partitioned by the plan's EXACT boundaries —
-    * each row's pid is `1 + |{uppers < v}|` over the broadcast 32-value
-    * boundary array (what Spark's RangePartitioner estimates by
-    * sampling, q147 computed exactly) — one parquet directory per pid.
-    * The reader then answers a fixed price-band aggregate by mapping the
-    * band to pid bounds through the same manifest (two bounded scalars)
-    * and scanning ONLY those directories: `PartitionFilters` on pid
-    * prune at the directory level before any file is opened, and the
-    * residual v-filter pushes into the surviving scans. Oracle = the
-    * plain filtered aggregate over the original table, so the gate
-    * certifies plan -> write -> manifest-prune -> read end to end;
-    * StorageSpec additionally proves each pid directory's row count
-    * equals the plan's n_rows column and measures rows-scanned vs an
-    * ingest-ordered copy of the same data.
+  /** Publish q150's layout whole ([[ScratchRoot.publishOnce]]): data
+    * and manifest are written into a writer tmp, the manifest last, so
+    * its presence marks a complete layout and no reader sees half of
+    * one.
     */
-  /** Idempotent layout publish: write data + manifest into a pid-private
-    * tmp dir, then atomically rename into the stable location. The
-    * manifest is written last and its presence is the completeness
-    * marker, so readers can never observe a half-written layout; a
-    * concurrent JVM losing the rename race just discards its tmp copy
-    * (the planner is deterministic — both copies are identical). The
-    * in-memory written-set is updated only after the publish succeeds,
-    * so a thrown write leaves the next caller free to retry.
-    */
-  private[graft] def ensureRangeLayout(s: SparkSession, d: String): String = {
-    val dir = rangeLayoutDir(d)
-    if (rangeLayoutWritten.contains(dir)) return dir
-    rangeLayoutLock.synchronized {
-      if (rangeLayoutWritten.contains(dir)) return dir
-      if (readDiskManifest(dir).isEmpty) {
-        val uppers = rangeUppers(s, d)
-        val tmp = dir + s".tmp-${graft.operators.Cas.writerTag}"
-        val upLit = array(uppers.map(lit).toSeq: _*)
-        Tables.lineitem(s, d)
-          .select(expr("CAST(round(l_extendedprice * 100) AS BIGINT)").as("v"),
-            col("l_orderkey"), col("l_quantity"))
-          .withColumn("pid", size(filter(upLit, u => u < col("v"))) + 1)
-          .repartition(col("pid"))
-          .write.mode("overwrite").partitionBy("pid").parquet(tmp)
-        java.nio.file.Files.write(
-          rangeManifestFile(tmp).toPath,
-          uppers.mkString("[", ",", "]")
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        // A JVM that published first wrote a byte-equivalent copy.
-        graft.operators.Cas.publishDir(new java.io.File(tmp), new java.io.File(dir))(
-          t => readDiskManifest(t.getPath).nonEmpty)
-      }
-      rangeLayoutWritten.add(dir)
-      dir
+  private[graft] def ensureRangeLayout(s: SparkSession, d: String): String =
+    ScratchRoot.publishOnce(rangeLayoutDir(d))(t => readDiskManifest(t.getPath).nonEmpty) { tmp =>
+      val uppers = rangeUppers(s, d)
+      val upLit = array(uppers.map(lit).toSeq: _*)
+      Tables.lineitem(s, d)
+        .select(expr("CAST(round(l_extendedprice * 100) AS BIGINT)").as("v"),
+          col("l_orderkey"), col("l_quantity"))
+        .withColumn("pid", size(filter(upLit, u => u < col("v"))) + 1)
+        .repartition(col("pid"))
+        .write.mode("overwrite").partitionBy("pid").parquet(tmp.getPath)
+      java.nio.file.Files.write(
+        rangeManifestFile(tmp.getPath).toPath,
+        uppers.mkString("[", ",", "]")
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     }
-  }
 
-  /** Stable location of q151's MUTABLE copy of the range layout —
-    * separate from q150's read-only layout: q151 tombstones and compacts
-    * its copy, and must never change q150's answer.
-    */
-  private[graft] def deletableLayoutDir(d: String): String = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_")
-    new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_lineitem_deletable_${sfx}_n$scenarioNonce").getAbsolutePath
-  }
 
   /** The price band q151 erases, in centi ($3000.00–$4000.00): ~1% of
     * rows, landing in the one-or-two range partitions that own that
@@ -1110,7 +1020,9 @@ object ScalePatterns {
   private def q151(s: SparkSession, d: String): DataFrame = {
     import graft.operators.DeletableRangeLayout
     val uppers = rangeUppers(s, d)
-    val dir = DeletableRangeLayout.ensure(s, d, deletableLayoutDir(d), uppers)
+    // q151's own copy of the range layout: it tombstones and compacts
+    // it, which must never change q150's answer.
+    val dir = DeletableRangeLayout.ensure(s, d, scenarioRoot("lineitem_deletable", d), uppers)
     val pidLo = rangePid(uppers, deleteBandLoCenti)
     val pidHi = rangePid(uppers, deleteBandHiCenti)
     DeletableRangeLayout.applyDelete(s, dir,
@@ -1126,15 +1038,6 @@ object ScalePatterns {
     masked.unionByName(phaseAgg("compacted")).orderBy(col("phase"))
   }
 
-  /** Stable location of q159's VERSIONED layout (commit log + archives),
-    * separate from both q150's read-only and q151's deletable copies.
-    */
-  private[graft] def versionedLayoutDir(d: String): String = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_")
-    new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_lineitem_versioned_${sfx}_n$scenarioNonce").getAbsolutePath
-  }
-  private val versionedLock = new Object
 
   /** The SECOND price band q159 erases (version 2), in centi
     * ($5000.00–$5500.00) — disjoint from [[deleteBandLoCenti]]'s band so
@@ -1153,8 +1056,8 @@ object ScalePatterns {
     */
   private def ensureVersionedScenario(s: SparkSession, d: String): String = {
     import graft.operators.VersionedLayout
-    val dir = versionedLayoutDir(d)
-    versionedLock.synchronized {
+    val dir = scenarioRoot("lineitem_versioned", d)
+    ScratchRoot.once(dir) {
       VersionedLayout.writeBase(s, d, dir, rangeUppers(s, d))
       if (VersionedLayout.currentVersion(dir) < 1)
         VersionedLayout.appendDelete(s, dir,
@@ -1165,22 +1068,8 @@ object ScalePatterns {
       if (VersionedLayout.currentVersion(dir) < 3)
         VersionedLayout.appendCompact(s, dir, deleteCompactThreshold)
     }
-    dir
   }
 
-  /** TIME TRAVEL over the versioned layout — the commit-log story the
-    * mutable layouts (q151, q157) imply but don't keep: the same
-    * aggregate read AS OF every version of a write -> delete -> delete
-    * -> compact history, against ONE oracle that derives each version's
-    * answer from the immutable source. Version 1 and 2 reads run AFTER
-    * version 3's compaction physically rewrote the band pids — they are
-    * served from the compaction's archived files (per-pid, rename-cost,
-    * not table copies), proving the layout can reproduce the exact
-    * corpus any past consumer saw. Version 3 == version 2 row-for-row
-    * is the compaction-preserves-answers invariant as data. AS-OF
-    * planning is pure log metadata (bounded); vacuum/horizon and
-    * archive-routing invariants are proven in StorageSpec.
-    */
   /** TIME TRAVEL BY TIMESTAMP — q159's four-version read resolved
     * through WALL-CLOCK commit times instead of version numbers: each
     * version's effective (monotonicized) commit time is read from the
@@ -1209,16 +1098,6 @@ object ScalePatterns {
     }.reduce(_ unionByName _).orderBy(col("version"))
   }
 
-  /** Stable location of q201's TIME-RETAINED layout — separate from
-    * q159's shared history (whose below-horizon versions other queries
-    * still read; a retention vacuum here must never break them).
-    */
-  private[graft] def timeRetainLayoutDir(d: String): String = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_")
-    new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_lineitem_timeretain_${sfx}_n$scenarioNonce").getAbsolutePath
-  }
-  private val timeRetainLock = new Object
 
   /** How long q201's RETAIN window is (any value works — the injected
     * `nowMs` pins the cutoff to v3's own effective commit time).
@@ -1239,8 +1118,10 @@ object ScalePatterns {
     */
   private def ensureTimeRetainScenario(s: SparkSession, d: String): String = {
     import graft.operators.VersionedLayout
-    val dir = timeRetainLayoutDir(d)
-    timeRetainLock.synchronized {
+    // Not q159's shared history: other queries still read its
+    // below-horizon versions, which this retention vacuum drops.
+    val dir = scenarioRoot("lineitem_timeretain", d)
+    ScratchRoot.once(dir) {
       VersionedLayout.writeBase(s, d, dir, rangeUppers(s, d))
       if (VersionedLayout.currentVersion(dir) < 1)
         VersionedLayout.appendDelete(s, dir,
@@ -1257,7 +1138,6 @@ object ScalePatterns {
         require(fired, s"time-based retention vacuum did not fire on $dir")
       }
     }
-    dir
   }
 
   /** TIME-BASED RETENTION on the commit log — `VACUUM ... RETAIN
@@ -1370,13 +1250,6 @@ object ScalePatterns {
   val statsCopyHiCenti = 260000L
   val statsInsertKeyOffset = 60000000L
 
-  /** Stable location of q206's stats-rename layout. */
-  private[graft] def statsRenameLayoutDir(d: String): String = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_")
-    new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_lineitem_statsrename_${sfx}_n$scenarioNonce").getAbsolutePath
-  }
-  private val statsRenameLock = new Object
 
   /** Build (or fast-forward) q206's five-version history on a TWO-
     * column stats declaration: v0 base (range-pid on `v`, key = the
@@ -1392,8 +1265,8 @@ object ScalePatterns {
     */
   private def ensureStatsRenameScenario(s: SparkSession, d: String): String = {
     import graft.operators.VersionedLayout
-    val dir = statsRenameLayoutDir(d)
-    statsRenameLock.synchronized {
+    val dir = scenarioRoot("lineitem_statsrename", d)
+    ScratchRoot.once(dir) {
       if (VersionedLayout.currentVersion(dir) < 0) {
         val uppers = rangeUppers(s, d)
         val upLit = array(uppers.map(lit).toSeq: _*)
@@ -1423,7 +1296,6 @@ object ScalePatterns {
       if (VersionedLayout.currentVersion(dir) < 4)
         VersionedLayout.appendCompact(s, dir, deleteCompactThreshold)
     }
-    dir
   }
 
   /** IDENTITY-KEYED, MULTI-COLUMN DATA SKIPPING (q206) — q203's move
@@ -1562,6 +1434,19 @@ object ScalePatterns {
        |          AND s.v BETWEEN $ttBandLoCenti AND $ttBandHiCenti)
        |GROUP BY 1 ORDER BY 1""".stripMargin
 
+  /** TIME TRAVEL over the versioned layout — the commit-log story the
+    * mutable layouts (q151, q157) imply but don't keep: the same
+    * aggregate read AS OF every version of a write -> delete -> delete
+    * -> compact history, against ONE oracle that derives each version's
+    * answer from the immutable source. Version 1 and 2 reads run AFTER
+    * version 3's compaction physically rewrote the band pids — they are
+    * served from the compaction's archived files (per-pid, rename-cost,
+    * not table copies), proving the layout can reproduce the exact
+    * corpus any past consumer saw. Version 3 == version 2 row-for-row
+    * is the compaction-preserves-answers invariant as data. AS-OF
+    * planning is pure log metadata (bounded); vacuum/horizon and
+    * archive-routing invariants are proven in StorageSpec.
+    */
   private def q159(s: SparkSession, d: String): DataFrame = {
     import graft.operators.VersionedLayout
     val dir = ensureVersionedScenario(s, d)
@@ -1574,13 +1459,6 @@ object ScalePatterns {
     }.reduce(_ unionByName _).orderBy(col("version"))
   }
 
-  /** Stable location of q160's CRUD-history layout. */
-  private[graft] def crudLayoutDir(d: String): String = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_")
-    new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_lineitem_crud_${sfx}_n$scenarioNonce").getAbsolutePath
-  }
-  private val crudLock = new Object
 
   /** q160's INSERT source band ($7000.00–$7200.00) and UPSERT target
     * band ($8000.00–$8200.00), in centi — disjoint from each other and
@@ -1600,33 +1478,10 @@ object ScalePatterns {
     * deterministic from the immutable source, so the scenario resumes
     * idempotently from wherever a previous session's log ends.
     */
-  /** Streaming STATE width for the bounded-key stateful subscribers
-    * (round 18, guide §2): a streaming aggregate's state-store count is
-    * pinned to `spark.sql.shuffle.partitions` at stream start, and AQE
-    * cannot coalesce it (disabled in stateful workloads) — so q210's
-    * ~50-key maintained view was committing 32 HDFS-backed state stores
-    * (open + delta file + fsync EACH) per micro-batch. State width
-    * should track key cardinality and ingest throughput, not the
-    * machine's core count: default 8 here (measured: addBatch
-    * 1230→~700 ms, identical results — the aggregate's VALUES never
-    * depend on partition count), `SPARK_GRAFT_STREAM_STATE_PARTITIONS`
-    * overrides for deployments with wide state. Setting the conf around
-    * `.start()` is safe: the stream CLONES the session at start, so the
-    * restore cannot race the running query, and batch queries on the
-    * outer session never see the narrowed value.
-    */
-  private def withStreamStatePartitions[T](s: SparkSession)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key,
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8"))
-    try body finally s.conf.set(key, prev)
-  }
-
   private def ensureCrudScenario(s: SparkSession, d: String): String = {
     import graft.operators.VersionedLayout
-    val dir = crudLayoutDir(d)
-    crudLock.synchronized {
+    val dir = scenarioRoot("lineitem_crud", d)
+    ScratchRoot.once(dir) {
       val uppers = rangeUppers(s, d)
       VersionedLayout.writeBase(s, d, dir, uppers)
       if (VersionedLayout.currentVersion(dir) < 1) {
@@ -1649,7 +1504,6 @@ object ScalePatterns {
       if (VersionedLayout.currentVersion(dir) < 4)
         VersionedLayout.appendCompact(s, dir, deleteCompactThreshold)
     }
-    dir
   }
 
   /** Full CRUD history with time travel — q159 proves delete+compact
@@ -1752,8 +1606,7 @@ object ScalePatterns {
         }
       ()
     }
-    val chk = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_q208_chk_${graft.JvmId.token}_${buf.hashCode()}").getAbsolutePath
+    val chk = ScratchRoot.fresh("q208_chk")
     val q = s.readStream.format("graft-layout").option("path", dir).load()
       .writeStream.foreachBatch(sink)
       .option("checkpointLocation", chk).start()
@@ -1801,12 +1654,32 @@ object ScalePatterns {
     * batch-replay spelling of the same algebra; this is the standing-
     * subscription spelling.)
     */
+  /** Streaming state width of q210's subscriber. A streaming aggregate
+    * keeps one state store per shuffle partition, pinned to
+    * `spark.sql.shuffle.partitions` at stream start, and AQE cannot
+    * coalesce it (it is off in stateful workloads); every store commits
+    * a delta file per micro-batch. Sizing rule: state width follows the
+    * state's key cardinality and ingest rate, not the machine's core
+    * count. q210 folds ~50 quantity buckets: at the session's 32
+    * partitions addBatch took ~1230 ms, at 8 ~700 ms, with identical
+    * results (the aggregate's values never depend on the partition
+    * count). Widen it when the keys or a batch's state updates outgrow
+    * a few tasks.
+    */
+  val streamStatePartitions = 8
+
   private def q210(s: SparkSession, d: String): DataFrame = {
     import graft.operators.VersionedLayout
     val dir = ensureCrudScenario(s, d)
     val viewName = s"q210_ivm_${graft.JvmId.token.take(8)}_${System.nanoTime()}"
     val qk = expr("CAST(round(l_quantity) AS BIGINT)").as("qk")
-    val q = withStreamStatePartitions(s) {
+    // The stream clones the session at start, so restoring the conf
+    // right after cannot race the running query, and batch queries on
+    // the outer session never see the narrowed value.
+    val widthKey = "spark.sql.shuffle.partitions"
+    val prevWidth = s.conf.get(widthKey)
+    s.conf.set(widthKey, streamStatePartitions.toLong)
+    val q = try
       s.readStream.format("graft-layout").option("path", dir).load()
         .withColumn("op", when(col("change_type") === "insert", 1L).otherwise(-1L))
         .groupBy(qk)
@@ -1814,7 +1687,7 @@ object ScalePatterns {
           sum(col("op") * col("v")).as("net_centi"))
         .writeStream.outputMode("complete").format("memory")
         .queryName(viewName).start()
-    }
+    finally s.conf.set(widthKey, prevWidth)
     try q.processAllAvailable() finally q.stop()
     // Bounded: one row per quantity bucket (~50).
     val net = try s.table(viewName).collect()
@@ -1882,13 +1755,6 @@ object ScalePatterns {
        |  CAST(sum(v) AS BIGINT) AS total_centi
        |FROM head GROUP BY 1 ORDER BY 1""".stripMargin
 
-  /** Stable location of q209's versioned embedding layout. */
-  private[graft] def embLayoutDir(d: String): String = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_")
-    new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_embeddings_versioned_${sfx}_n$scenarioNonce").getAbsolutePath
-  }
-  private val embLayoutLock = new Object
 
   /** Fresh-key offset for q209's inserted vector copies — divisible by
     * 8 AND 10, so copies keep both their pid (hash residue) and their
@@ -1905,8 +1771,8 @@ object ScalePatterns {
     */
   private def ensureEmbeddingScenario(s: SparkSession, d: String): String = {
     import graft.operators.VersionedLayout
-    val dir = embLayoutDir(d)
-    embLayoutLock.synchronized {
+    val dir = scenarioRoot("embeddings_versioned", d)
+    ScratchRoot.once(dir) {
       VersionedLayout.writeBaseTable(s,
         Tables.embeddings(s, d).select(
           pmod(col("vec_id"), lit(8)).cast("int").as("pid"),
@@ -1925,7 +1791,6 @@ object ScalePatterns {
       if (VersionedLayout.currentVersion(dir) < 3)
         VersionedLayout.appendCompact(s, dir, deleteCompactThreshold)
     }
-    dir
   }
 
   /** ARRAY-TYPED COLUMNS IN THE VERSIONED LAYOUT (q209) — the
@@ -1982,13 +1847,6 @@ object ScalePatterns {
        |  CAST(sum(label) AS BIGINT) AS label_sum
        |FROM live GROUP BY 1 ORDER BY 1""".stripMargin
 
-  /** Stable location of q212's merge layout. */
-  private[graft] def mergeLayoutDir(d: String): String = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_")
-    new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_lineitem_merge_${sfx}_n$scenarioNonce").getAbsolutePath
-  }
-  private val mergeLock = new Object
 
   /** q212's MATCHED-BUT-UNTOUCHED band ($5000.00–$5200.00) — source
     * rows that match target keys but satisfy neither merge arm, and the
@@ -2014,8 +1872,8 @@ object ScalePatterns {
     */
   private def ensureMergeScenario(s: SparkSession, d: String): String = {
     import graft.operators.VersionedLayout
-    val dir = mergeLayoutDir(d)
-    mergeLock.synchronized {
+    val dir = scenarioRoot("lineitem_merge", d)
+    ScratchRoot.once(dir) {
       val uppers = rangeUppers(s, d)
       VersionedLayout.writeBase(s, d, dir, uppers)
       if (VersionedLayout.currentVersion(dir) < 1) {
@@ -2047,7 +1905,6 @@ object ScalePatterns {
           s"appendMergeOnce replay committed a second version ($v1 vs $replay)")
       }
     }
-    dir
   }
 
   /** MERGE INTO (q212) — the full three-arm Delta-shaped merge as ONE
@@ -2121,13 +1978,6 @@ object ScalePatterns {
        |  CAST(sum(v) AS BIGINT), CAST(sum(qc) AS BIGINT) FROM fins
        |ORDER BY 1, 2""".stripMargin
 
-  /** Stable location of q219's SQL-DML layout. */
-  private[graft] def sqlDmlLayoutDir(d: String): String = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_")
-    new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_lineitem_sqldml_${sfx}_n$scenarioNonce").getAbsolutePath
-  }
-  private val sqlDmlLock = new Object
 
   /** q219's bands — internal to its own layout, mutually disjoint, and
     * chosen so the merge-inserted copies (`v + 5`, fresh keys) can
@@ -2166,8 +2016,8 @@ object ScalePatterns {
     */
   private def ensureSqlDmlScenario(s: SparkSession, d: String): String = {
     import graft.operators.VersionedLayout
-    val dir = sqlDmlLayoutDir(d)
-    sqlDmlLock.synchronized {
+    val dir = scenarioRoot("lineitem_sqldml", d)
+    ScratchRoot.once(dir) {
       val uppers = rangeUppers(s, d)
       VersionedLayout.writeBase(s, d, dir, uppers)
       def checkDml(res: Array[org.apache.spark.sql.Row], ver: Int): Unit = {
@@ -2242,7 +2092,6 @@ object ScalePatterns {
           .collect(), 4)
       }
     }
-    dir
   }
 
   /** SQL DML (q219) — MERGE INTO / DELETE / UPDATE issued as SQL TEXT
@@ -2356,12 +2205,6 @@ object ScalePatterns {
        |    + (SELECT count(*) FROM v3 WHERE v BETWEEN $sqlBySrcUpdLo AND $sqlBySrcUpdHi), 4
        |ORDER BY 1, 2""".stripMargin
 
-  private[graft] def writePathLayoutDir(d: String): String = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_")
-    new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_lineitem_wpath_${sfx}_n$scenarioNonce").getAbsolutePath
-  }
-  private val writePathLock = new Object
 
   /** q223's bands — disjoint slices of the centi-price axis, one per
     * write front door.
@@ -2387,8 +2230,8 @@ object ScalePatterns {
     */
   private def ensureWritePathScenario(s: SparkSession, d: String): String = {
     import graft.operators.VersionedLayout
-    val dir = writePathLayoutDir(d)
-    writePathLock.synchronized {
+    val dir = scenarioRoot("lineitem_wpath", d)
+    ScratchRoot.once(dir) {
       // HASH placement, not the boundary scheme: the base is one v-BAND
       // slice, so band-derived pids would leave later bands outside the
       // v0 domain — hash-of-key spreads every slice over the same
@@ -2428,8 +2271,7 @@ object ScalePatterns {
           VersionedLayout.appendInsert(s, feeder, shaped(wpStream1Lo, wpStream1Hi))
         if (VersionedLayout.currentVersion(feeder) < 2)
           VersionedLayout.appendInsert(s, feeder, shaped(wpStream2Lo, wpStream2Hi))
-        val chk = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_q223_chk_${graft.JvmId.token}_${System.nanoTime()}").getAbsolutePath
+        val chk = ScratchRoot.fresh("q223_chk")
         val q = s.readStream.format("graft-layout")
           .option("path", feeder).option("maxVersionsPerTrigger", 1).load()
           .select(col("v"), col("l_orderkey"), col("l_linenumber"),
@@ -2452,7 +2294,6 @@ object ScalePatterns {
           .write.format("graft-layout")
           .option("path", dir).mode("overwrite").save()
     }
-    dir
   }
 
   /** WRITE FRONT DOORS (q223, round 16) — the mirror of q219: a layout
@@ -2522,14 +2363,15 @@ object ScalePatterns {
        |  (SELECT count(*) FROM v4), 5
        |ORDER BY 1""".stripMargin
 
-  private[graft] def catalogDdlLayoutDir(d: String): String = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_")
-    new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_lineitem_catddl_${sfx}_n$scenarioNonce").getAbsolutePath
-  }
-  private val catalogDdlLock = new Object
   val catDdlIns1Hi = 200000L                              // v1 INSERT INTO
   val catDdlIns2Lo = 200000L; val catDdlIns2Hi = 300000L  // v6 evolved INSERT
+
+  /** q224's catalog name is SF-SCOPED: one JVM may build the scenario
+    * for several testdata dirs, and a shared name would pin the first
+    * dir for every later caller.
+    */
+  private[graft] def catalogDdlTableName(d: String): String =
+    s"graft_q224${d.replaceAll("[^A-Za-z0-9]", "_").toLowerCase}"
 
   /** Build (or fast-forward) q224's history — the NAMED-table + SQL DDL
     * surface: `CREATE TABLE graft.<name> ... USING graft-layout
@@ -2540,18 +2382,11 @@ object ScalePatterns {
     * evolved INSERT (v6), and DROP COLUMN (v7). SHOW TABLES / DESCRIBE
     * are asserted at build time (catalog surface must answer).
     */
-  /** q224's catalog name is SF-SCOPED: one JVM may build the scenario
-    * for several testdata dirs, and a shared name would pin the first
-    * dir for every later caller.
-    */
-  private[graft] def catalogDdlTableName(d: String): String =
-    s"graft_q224${d.replaceAll("[^A-Za-z0-9]", "_").toLowerCase}"
-
   private def ensureCatalogDdlScenario(s: SparkSession, d: String): String = {
     import graft.operators.VersionedLayout
-    val dir = catalogDdlLayoutDir(d)
+    val dir = scenarioRoot("lineitem_catddl", d)
     val name = catalogDdlTableName(d)
-    catalogDdlLock.synchronized {
+    ScratchRoot.once(dir) {
       val registered = s.sql("SHOW TABLES IN graft").collect()
         .exists(_.getString(1) == name)
       if (!registered)
@@ -2598,7 +2433,6 @@ object ScalePatterns {
       }
       if (ver < 7) s.sql(s"ALTER TABLE graft.$name DROP COLUMN tag")
     }
-    dir
   }
 
   /** NAMED CATALOG + SQL DDL (q224, round 16) — the `graft` DSv2
@@ -2654,12 +2488,6 @@ object ScalePatterns {
        |  ON (ver.k >= 1 AND t.tag IS NULL) OR (ver.k >= 6 AND t.tag = 'x')
        |GROUP BY ver.k ORDER BY 1""".stripMargin
 
-  private[graft] def repartitionLayoutDir(d: String): String = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_")
-    new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_lineitem_repart_${sfx}_n$scenarioNonce").getAbsolutePath
-  }
-  private val repartitionLock = new Object
   val repDelALo = 300000L; val repDelAHi = 320000L  // v1 delete (old scheme)
   val repInsLo = 400000L; val repInsHi = 410000L    // v3 insert (new scheme)
   val repDelBLo = 500000L; val repDelBHi = 520000L  // v4 delete (new scheme)
@@ -2677,8 +2505,8 @@ object ScalePatterns {
     */
   private def ensureRepartitionScenario(s: SparkSession, d: String): String = {
     import graft.operators.VersionedLayout
-    val dir = repartitionLayoutDir(d)
-    repartitionLock.synchronized {
+    val dir = scenarioRoot("lineitem_repart", d)
+    ScratchRoot.once(dir) {
       VersionedLayout.writeBase(s, d, dir, rangeUppers(s, d))
       def ver = VersionedLayout.currentVersion(dir)
       if (ver < 1)
@@ -2701,7 +2529,6 @@ object ScalePatterns {
       if (ver < 4)
         VersionedLayout.appendDelete(s, dir, col("v").between(repDelBLo, repDelBHi))
     }
-    dir
   }
 
   /** PARTITION-SCHEME EVOLUTION (q225, round 16) — the carried r14/r15
@@ -2765,12 +2592,6 @@ object ScalePatterns {
        |FROM v4 WHERE v BETWEEN $repRangeLo AND $repRangeHi
        |ORDER BY 1""".stripMargin
 
-  private[graft] def sqlMaintLayoutDir(d: String): String = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_")
-    new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_lineitem_sqlmaint_${sfx}_n$scenarioNonce").getAbsolutePath
-  }
-  private val sqlMaintLock = new Object
   val smDelALo = 300000L; val smDelAHi = 320000L  // v1 SQL DELETE (pre-fold)
   val smInsLo = 400000L; val smInsHi = 410000L    // v2 SQL INSERT (fresh keys)
   val smDelBLo = 500000L; val smDelBHi = 520000L  // v4 SQL DELETE (undone by CALL restore)
@@ -2793,9 +2614,9 @@ object ScalePatterns {
     */
   private def ensureSqlMaintScenario(s: SparkSession, d: String): String = {
     import graft.operators.VersionedLayout
-    val dir = sqlMaintLayoutDir(d)
+    val dir = scenarioRoot("lineitem_sqlmaint", d)
     val name = sqlMaintTableName(d)
-    sqlMaintLock.synchronized {
+    ScratchRoot.once(dir) {
       VersionedLayout.writeBase(s, d, dir, rangeUppers(s, d))
       val registered = s.sql("SHOW TABLES IN graft").collect()
         .exists(_.getString(1) == name)
@@ -2845,7 +2666,6 @@ object ScalePatterns {
           s"CALL graft.vacuum returned ${r.mkString(",")}, expected fired at horizon 3")
       }
     }
-    dir
   }
 
   /** SQL MAINTENANCE VERBS (q226, round 17) — the engine's maintenance
@@ -2916,12 +2736,6 @@ object ScalePatterns {
        |UNION ALL SELECT 'meta', 3, 5, 0
        |ORDER BY 1""".stripMargin
 
-  private[graft] def streamUpsertLayoutDir(d: String): String = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_")
-    new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_lineitem_supsert_${sfx}_n$scenarioNonce").getAbsolutePath
-  }
-  private val streamUpsertLock = new Object
   val suBandLo = 100000L; val suBandHi = 140000L   // batch 0: inserts
   val suOverLo = 120000L; val suOverHi = 140000L   // batch 1: SAME keys, qty+1
 
@@ -2935,8 +2749,8 @@ object ScalePatterns {
     */
   private def ensureStreamUpsertScenario(s: SparkSession, d: String): String = {
     import graft.operators.VersionedLayout
-    val dir = streamUpsertLayoutDir(d)
-    streamUpsertLock.synchronized {
+    val dir = scenarioRoot("lineitem_supsert", d)
+    ScratchRoot.once(dir) {
       if (VersionedLayout.currentVersion(dir) < 2) {
         def shaped(lo: Long, hi: Long) =
           Tables.lineitem(s, d)
@@ -2956,8 +2770,7 @@ object ScalePatterns {
           VersionedLayout.appendInsert(s, feeder,
             shaped(suOverLo, suOverHi)
               .withColumn("l_quantity", col("l_quantity") + 1.0))
-        val chk = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_q227_chk_${graft.JvmId.token}_${System.nanoTime()}").getAbsolutePath
+        val chk = ScratchRoot.fresh("q227_chk")
         val q = s.readStream.format("graft-layout")
           .option("path", feeder).option("maxVersionsPerTrigger", 1).load()
           .select(col("v"), col("l_orderkey"), col("l_linenumber"),
@@ -2974,7 +2787,6 @@ object ScalePatterns {
           s"upsert stream landed head ${VersionedLayout.currentVersion(dir)}, expected 2")
       }
     }
-    dir
   }
 
   /** STREAMED UPSERT SINK (q227, round 17) — `writeStream
@@ -3129,8 +2941,7 @@ object ScalePatterns {
         }
       ()
     }
-    val chk = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_q213_chk_${graft.JvmId.token}_${buf.hashCode()}").getAbsolutePath
+    val chk = ScratchRoot.fresh("q213_chk")
     val q = s.readStream.format("graft-layout").option("path", dir)
       .option("maxVersionsPerTrigger", "1").load()
       .writeStream.foreachBatch(sink)
@@ -3166,13 +2977,6 @@ object ScalePatterns {
       .orderBy(col("version"), col("change_type"))
   }
 
-  /** Stable location of q214's bloom layout. */
-  private[graft] def bloomLayoutDir(d: String): String = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_")
-    new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_lineitem_bloom_${sfx}_n$scenarioNonce").getAbsolutePath
-  }
-  private val bloomLock = new Object
 
   /** Fresh-part-key offset for q214's inserted copies, and a probe key
     * that exists in no version (the all-sources-pruned case).
@@ -3190,8 +2994,8 @@ object ScalePatterns {
     */
   private def ensureBloomScenario(s: SparkSession, d: String): String = {
     import graft.operators.VersionedLayout
-    val dir = bloomLayoutDir(d)
-    bloomLock.synchronized {
+    val dir = scenarioRoot("lineitem_bloom", d)
+    ScratchRoot.once(dir) {
       if (VersionedLayout.currentVersion(dir) < 0) {
         val uppers = rangeUppers(s, d)
         val upLit = array(uppers.map(lit).toSeq: _*)
@@ -3218,7 +3022,6 @@ object ScalePatterns {
       if (VersionedLayout.currentVersion(dir) < 3)
         VersionedLayout.appendCompact(s, dir, deleteCompactThreshold)
     }
-    dir
   }
 
   /** BLOOM POINT-LOOKUP SKIPPING (q214) — the probe zone maps cannot
@@ -3317,11 +3120,11 @@ object ScalePatterns {
     * fleet-wide catalog sweep must never cost a data pass per table.
     */
   private def q215(s: SparkSession, d: String): DataFrame = {
-    ensureCrudScenario(s, d)
+    val dir = ensureCrudScenario(s, d)
     s.sql(s"""SELECT head_version, vacuum_horizon, checkpointed_version,
       |  n_commits, key_cols, stats_cols, bloom_cols, n_live_segments,
       |  n_compactions, rows_written_total, rows_deleted_total
-      |FROM graft_layout_detail('${crudLayoutDir(d)}')""".stripMargin)
+      |FROM graft_layout_detail('$dir')""".stripMargin)
   }
 
   private lazy val q215OracleSql: String =
@@ -3348,13 +3151,6 @@ object ScalePatterns {
        |  CAST(n_d + n_u AS BIGINT) AS rows_deleted_total
        |FROM c""".stripMargin
 
-  /** Stable location of q216's struct-payload document layout. */
-  private[graft] def structLayoutDir(d: String): String = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_")
-    new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_documents_struct_${sfx}_n$scenarioNonce").getAbsolutePath
-  }
-  private val structLock = new Object
 
   /** Fresh-key offset for q216's inserted document copies (divisible
     * by 8 and 10, preserving pid residue and delete-band residue).
@@ -3371,8 +3167,8 @@ object ScalePatterns {
     */
   private def ensureStructScenario(s: SparkSession, d: String): String = {
     import graft.operators.VersionedLayout
-    val dir = structLayoutDir(d)
-    structLock.synchronized {
+    val dir = scenarioRoot("documents_struct", d)
+    ScratchRoot.once(dir) {
       VersionedLayout.writeBaseTable(s,
         graft.Tables.documents(s, d).select(
           pmod(col("doc_id"), lit(8)).cast("int").as("pid"),
@@ -3392,7 +3188,6 @@ object ScalePatterns {
       if (VersionedLayout.currentVersion(dir) < 3)
         VersionedLayout.appendCompact(s, dir, deleteCompactThreshold)
     }
-    dir
   }
 
   /** STRUCT-TYPED COLUMNS IN THE VERSIONED LAYOUT (q216) — typed
@@ -3495,13 +3290,6 @@ object ScalePatterns {
        |  CAST(sum(qc) AS BIGINT) AS qty_centi
        |FROM ev GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
 
-  /** Stable location of q218's string-keyed bloom layout. */
-  private[graft] def strBloomLayoutDir(d: String): String = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_")
-    new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_documents_strbloom_${sfx}_n$scenarioNonce").getAbsolutePath
-  }
-  private val strBloomLock = new Object
 
   /** Build (or fast-forward) q218's history: the documents table keyed
     * by a STRING content key (`ck = 'doc-' || doc_id` — the
@@ -3511,8 +3299,8 @@ object ScalePatterns {
     */
   private def ensureStrBloomScenario(s: SparkSession, d: String): String = {
     import graft.operators.VersionedLayout
-    val dir = strBloomLayoutDir(d)
-    strBloomLock.synchronized {
+    val dir = scenarioRoot("documents_strbloom", d)
+    ScratchRoot.once(dir) {
       VersionedLayout.writeBaseTable(s,
         graft.Tables.documents(s, d).select(
           pmod(col("doc_id"), lit(8)).cast("int").as("pid"),
@@ -3534,7 +3322,6 @@ object ScalePatterns {
       if (VersionedLayout.currentVersion(dir) < 3)
         VersionedLayout.appendCompact(s, dir, deleteCompactThreshold)
     }
-    dir
   }
 
   /** STRING-KEYED BLOOM PROBES (q218) — q214's point-lookup skip on
@@ -3604,13 +3391,6 @@ object ScalePatterns {
        |LEFT JOIN live ON live.version = ver.version AND live.doc_id = probes.k
        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
 
-  /** Stable location of q165's major-compaction layout. */
-  private[graft] def majorLayoutDir(d: String): String = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_")
-    new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_lineitem_major_${sfx}_n$scenarioNonce").getAbsolutePath
-  }
-  private val majorLock = new Object
 
   /** Build (or fast-forward) q165's history: v0 base, v1 insert, v2
     * same-key upsert, v3 delete, v4 MAJOR COMPACT (segments + tombstones
@@ -3619,8 +3399,8 @@ object ScalePatterns {
     */
   private def ensureMajorScenario(s: SparkSession, d: String): String = {
     import graft.operators.VersionedLayout
-    val dir = majorLayoutDir(d)
-    majorLock.synchronized {
+    val dir = scenarioRoot("lineitem_major", d)
+    ScratchRoot.once(dir) {
       val uppers = rangeUppers(s, d)
       VersionedLayout.writeBase(s, d, dir, uppers)
       if (VersionedLayout.currentVersion(dir) < 1) {
@@ -3643,7 +3423,6 @@ object ScalePatterns {
       if (VersionedLayout.currentVersion(dir) < 4)
         VersionedLayout.majorCompact(s, dir)
     }
-    dir
   }
 
   /** MAJOR compaction with time travel — the maintenance step that
@@ -3675,13 +3454,6 @@ object ScalePatterns {
       .orderBy(col("version"))
   }
 
-  /** Stable location of q170's checkpointed-log layout. */
-  private[graft] def ckptLayoutDir(d: String): String = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_")
-    new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_lineitem_ckpt_${sfx}_n$scenarioNonce").getAbsolutePath
-  }
-  private val ckptLock = new Object
 
   /** Build (or fast-forward) q170's history — q160's CRUD scenario on a
     * private dir with log CHECKPOINTS interleaved: v0 base, v1 insert,
@@ -3693,8 +3465,8 @@ object ScalePatterns {
     */
   private def ensureCkptScenario(s: SparkSession, d: String): String = {
     import graft.operators.VersionedLayout
-    val dir = ckptLayoutDir(d)
-    ckptLock.synchronized {
+    val dir = scenarioRoot("lineitem_ckpt", d)
+    ScratchRoot.once(dir) {
       val uppers = rangeUppers(s, d)
       VersionedLayout.writeBase(s, d, dir, uppers)
       if (VersionedLayout.currentVersion(dir) < 1) {
@@ -3724,7 +3496,6 @@ object ScalePatterns {
       if (VersionedLayout.currentVersion(dir) < 4)
         VersionedLayout.appendCompact(s, dir, deleteCompactThreshold)
     }
-    dir
   }
 
   /** LOG CHECKPOINTING under time travel — the metadata-scale mechanism
@@ -3763,34 +3534,10 @@ object ScalePatterns {
       .orderBy(col("version"))
   }
 
-  /** Stable location of q176's EVENTS versioned layout. The `_v2`
-    * scenario suffix versions the HISTORY SHAPE itself: a dir built by
-    * an earlier shape (no upsert step) cannot fast-forward into this
-    * one, so the shape change gets a fresh path.
-    */
-  private[graft] def eventsVersionedDir(d: String): String = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_")
-    new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_events_versioned_v2_${sfx}_n$scenarioNonce").getAbsolutePath
-  }
-  private val eventsVersionedLock = new Object
 
   /** Key offset for q176's inserted event copies (fresh event_ids). */
   val evInsertKeyOffset = 900000000L
 
-  /** Code-state nonce in every STABLE scenario-dir name (see
-    * [[graft.JvmId.classNonce]]): these roots outlive their JVM by
-    * design (a fresh session reuses the layouts a previous one paid
-    * for), so adoption is the norm — the nonce confines it to state the
-    * CURRENT code spelling built. A builder change re-lands every
-    * scenario under a fresh root (one layout_write-bucket rebuild);
-    * other-nonce leftovers are never touched (purging could hit a live
-    * other-code peer mid-build — the original q186 bug).
-    */
-  private lazy val scenarioNonce: String = graft.JvmId.classNonce(
-    ScalePatterns.getClass, graft.operators.VersionedLayout.getClass,
-    graft.operators.DeletableRangeLayout.getClass,
-    graft.operators.BucketedStore.getClass, Tables.getClass)
 
   /** Build (or fast-forward) q176's history — the commit log driven by
     * a SECOND table: the events stream, hash-partitioned on user
@@ -3803,8 +3550,8 @@ object ScalePatterns {
     */
   private def ensureEventsVersionedScenario(s: SparkSession, d: String): String = {
     import graft.operators.VersionedLayout
-    val dir = eventsVersionedDir(d)
-    eventsVersionedLock.synchronized {
+    val dir = scenarioRoot("events_versioned", d)
+    ScratchRoot.once(dir) {
       VersionedLayout.writeBaseTable(s,
         Tables.events(s, d).select(
           pmod(col("user_id"), lit(16)).cast("int").as("pid"),
@@ -3827,7 +3574,6 @@ object ScalePatterns {
       if (VersionedLayout.currentVersion(dir) < 4)
         VersionedLayout.appendCompact(s, dir, deleteCompactThreshold)
     }
-    dir
   }
 
   /** The commit log is TABLE-GENERIC — proven by driving it with a
@@ -3855,13 +3601,6 @@ object ScalePatterns {
       .orderBy(col("version"))
   }
 
-  /** Stable location of q180's schema-evolved events layout. */
-  private[graft] def eventsEvolvedDir(d: String): String = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_")
-    new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_events_evolved_${sfx}_n$scenarioNonce").getAbsolutePath
-  }
-  private val eventsEvolvedLock = new Object
 
   /** Build (or fast-forward) q180's history: v0 base (events, pid =
     * user_id mod 16, key = event_id), v1 DELETE (errors), v2 ADD COLUMN
@@ -3874,8 +3613,8 @@ object ScalePatterns {
     */
   private def ensureEvolvedScenario(s: SparkSession, d: String): String = {
     import graft.operators.VersionedLayout
-    val dir = eventsEvolvedDir(d)
-    eventsEvolvedLock.synchronized {
+    val dir = scenarioRoot("events_evolved", d)
+    ScratchRoot.once(dir) {
       VersionedLayout.writeBaseTable(s,
         Tables.events(s, d).select(
           pmod(col("user_id"), lit(16)).cast("int").as("pid"),
@@ -3898,7 +3637,6 @@ object ScalePatterns {
       if (VersionedLayout.currentVersion(dir) < 4)
         VersionedLayout.majorCompact(s, dir)
     }
-    dir
   }
 
   /** SCHEMA EVOLUTION through the commit log — the layer real table
@@ -3955,13 +3693,6 @@ object ScalePatterns {
     VersionedLayout.retentionAudit(s, dir, keepLast = 0).orderBy(col("version"))
   }
 
-  /** Stable location of q188's drop-column events layout. */
-  private[graft] def eventsDropcolDir(d: String): String = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_")
-    new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_events_dropcol_${sfx}_n$scenarioNonce").getAbsolutePath
-  }
-  private val eventsDropcolLock = new Object
 
   /** Build (or fast-forward) q188's history: v0 base (events, pid =
     * user_id mod 16, key = event_id), v1 ADD COLUMN `bonus_centi`, v2
@@ -3976,8 +3707,8 @@ object ScalePatterns {
     */
   private def ensureDropcolScenario(s: SparkSession, d: String): String = {
     import graft.operators.VersionedLayout
-    val dir = eventsDropcolDir(d)
-    eventsDropcolLock.synchronized {
+    val dir = scenarioRoot("events_dropcol", d)
+    ScratchRoot.once(dir) {
       VersionedLayout.writeBaseTable(s,
         Tables.events(s, d).select(
           pmod(col("user_id"), lit(16)).cast("int").as("pid"),
@@ -4021,7 +3752,6 @@ object ScalePatterns {
       if (VersionedLayout.currentVersion(dir) < 7)
         VersionedLayout.majorCompact(s, dir)
     }
-    dir
   }
 
   /** DROP COLUMN through the commit log — the subtractive half of q180,
@@ -4055,13 +3785,6 @@ object ScalePatterns {
       .orderBy(col("version"))
   }
 
-  /** Stable location of q204's typed-re-add events layout. */
-  private[graft] def eventsTypedReaddDir(d: String): String = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_")
-    new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_events_typedreadd_${sfx}_n$scenarioNonce").getAbsolutePath
-  }
-  private val eventsTypedReaddLock = new Object
 
   /** Build (or fast-forward) q204's history — q188's drop/re-add replay
     * with the round-13 lift: the re-add FLIPS THE TYPE. v0 base, v1 ADD
@@ -4074,8 +3797,8 @@ object ScalePatterns {
     */
   private def ensureTypedReaddScenario(s: SparkSession, d: String): String = {
     import graft.operators.VersionedLayout
-    val dir = eventsTypedReaddDir(d)
-    eventsTypedReaddLock.synchronized {
+    val dir = scenarioRoot("events_typedreadd", d)
+    ScratchRoot.once(dir) {
       VersionedLayout.writeBaseTable(s,
         Tables.events(s, d).select(
           pmod(col("user_id"), lit(16)).cast("int").as("pid"),
@@ -4120,7 +3843,6 @@ object ScalePatterns {
       if (VersionedLayout.currentVersion(dir) < 7)
         VersionedLayout.majorCompact(s, dir)
     }
-    dir
   }
 
   /** TYPED RE-ADD through the commit log — the round-13 lift of the
@@ -4159,13 +3881,6 @@ object ScalePatterns {
       .orderBy(col("version"))
   }
 
-  /** Stable location of q221's restore-across-flip events layout. */
-  private[graft] def eventsRestoreFlipDir(d: String): String = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_")
-    new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_events_restoreflip_${sfx}_n$scenarioNonce").getAbsolutePath
-  }
-  private val eventsRestoreFlipLock = new Object
 
   /** Build (or fast-forward) q221's history — a typed re-add UNDER a
     * later restore: v0 base, v1 ADD `bonus_tag BIGINT`, v2 INSERT
@@ -4177,8 +3892,8 @@ object ScalePatterns {
     */
   private def ensureRestoreFlipScenario(s: SparkSession, d: String): String = {
     import graft.operators.VersionedLayout
-    val dir = eventsRestoreFlipDir(d)
-    eventsRestoreFlipLock.synchronized {
+    val dir = scenarioRoot("events_restoreflip", d)
+    ScratchRoot.once(dir) {
       VersionedLayout.writeBaseTable(s,
         Tables.events(s, d).select(
           pmod(col("user_id"), lit(16)).cast("int").as("pid"),
@@ -4218,7 +3933,6 @@ object ScalePatterns {
         require(rv == 7, s"restore committed v$rv, expected v7")
       }
     }
-    dir
   }
 
   /** RESTORE ACROSS A TYPE FLIP (q221) — the last restore refusal
@@ -4278,13 +3992,6 @@ object ScalePatterns {
        |UNION ALL SELECT 7, base.n + pp.n, base.t + pp.t, 0 FROM base, pp
        |ORDER BY 1""".stripMargin
 
-  /** Stable location of q222's field-evolution documents layout. */
-  private[graft] def docsFieldEvoDir(d: String): String = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_")
-    new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_documents_fieldevo_${sfx}_n$scenarioNonce").getAbsolutePath
-  }
-  private val docsFieldEvoLock = new Object
   val fieldEvoIns1Offset = 4000000L
   val fieldEvoIns2Offset = 8000000L
 
@@ -4299,8 +4006,8 @@ object ScalePatterns {
     */
   private def ensureFieldEvoScenario(s: SparkSession, d: String): String = {
     import graft.operators.VersionedLayout
-    val dir = docsFieldEvoDir(d)
-    docsFieldEvoLock.synchronized {
+    val dir = scenarioRoot("documents_fieldevo", d)
+    ScratchRoot.once(dir) {
       VersionedLayout.writeBaseTable(s,
         Tables.documents(s, d).select(
           pmod(col("doc_id"), lit(8)).cast("int").as("pid"),
@@ -4334,7 +4041,6 @@ object ScalePatterns {
       if (VersionedLayout.currentVersion(dir) < 7)
         VersionedLayout.majorCompact(s, dir)
     }
-    dir
   }
 
   /** NESTED FIELD EVOLUTION (q222) — add / rename / widen / drop of
@@ -4488,13 +4194,6 @@ object ScalePatterns {
        |UNION ALL SELECT 4, 7, n_v, 0, s_v, 0, n_v, tc_v FROM a
        |ORDER BY win_from, win_to""".stripMargin
 
-  /** Stable location of q189's rename-column events layout. */
-  private[graft] def eventsRenamecolDir(d: String): String = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_")
-    new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_events_renamecol_${sfx}_n$scenarioNonce").getAbsolutePath
-  }
-  private val eventsRenamecolLock = new Object
 
   /** Build (or fast-forward) q189's history: v0 base (events, pid =
     * user_id mod 16, key = event_id), v1 ADD COLUMN `score_centi`, v2
@@ -4509,8 +4208,8 @@ object ScalePatterns {
     */
   private def ensureRenamecolScenario(s: SparkSession, d: String): String = {
     import graft.operators.VersionedLayout
-    val dir = eventsRenamecolDir(d)
-    eventsRenamecolLock.synchronized {
+    val dir = scenarioRoot("events_renamecol", d)
+    ScratchRoot.once(dir) {
       VersionedLayout.writeBaseTable(s,
         Tables.events(s, d).select(
           pmod(col("user_id"), lit(16)).cast("int").as("pid"),
@@ -4555,7 +4254,6 @@ object ScalePatterns {
       if (VersionedLayout.currentVersion(dir) < 7)
         VersionedLayout.majorCompact(s, dir)
     }
-    dir
   }
 
   /** RENAME COLUMN through the commit log — the third leg of q180/q188's
@@ -4599,13 +4297,6 @@ object ScalePatterns {
       .orderBy(col("version"))
   }
 
-  /** Stable location of q190's restore events layout. */
-  private[graft] def eventsRestoreDir(d: String): String = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_")
-    new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_events_restore_${sfx}_n$scenarioNonce").getAbsolutePath
-  }
-  private val eventsRestoreLock = new Object
 
   /** Build (or fast-forward) q190's history: v0 base (events, pid =
     * user_id mod 16, key = event_id), v1 INSERT purchase copies, v2
@@ -4618,8 +4309,8 @@ object ScalePatterns {
     */
   private def ensureRestoreScenario(s: SparkSession, d: String): String = {
     import graft.operators.VersionedLayout
-    val dir = eventsRestoreDir(d)
-    eventsRestoreLock.synchronized {
+    val dir = scenarioRoot("events_restore", d)
+    ScratchRoot.once(dir) {
       VersionedLayout.writeBaseTable(s,
         Tables.events(s, d).select(
           pmod(col("user_id"), lit(16)).cast("int").as("pid"),
@@ -4653,7 +4344,6 @@ object ScalePatterns {
       if (VersionedLayout.currentVersion(dir) < 6)
         VersionedLayout.majorCompact(s, dir)
     }
-    dir
   }
 
   /** RESTORE TO VERSION through the commit log — the table-format
@@ -4760,13 +4450,6 @@ object ScalePatterns {
       .orderBy(col("version"))
   }
 
-  /** Stable location of q192's widen-column events layout. */
-  private[graft] def eventsWidencolDir(d: String): String = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_")
-    new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_events_widencol_${sfx}_n$scenarioNonce").getAbsolutePath
-  }
-  private val eventsWidencolLock = new Object
 
   /** Build (or fast-forward) q192's history: v0 base (events, pid =
     * user_id mod 16, key = event_id, `value_centi` committed as INT),
@@ -4778,8 +4461,8 @@ object ScalePatterns {
     */
   private def ensureWidencolScenario(s: SparkSession, d: String): String = {
     import graft.operators.VersionedLayout
-    val dir = eventsWidencolDir(d)
-    eventsWidencolLock.synchronized {
+    val dir = scenarioRoot("events_widencol", d)
+    ScratchRoot.once(dir) {
       VersionedLayout.writeBaseTable(s,
         Tables.events(s, d).select(
           pmod(col("user_id"), lit(16)).cast("int").as("pid"),
@@ -4808,7 +4491,6 @@ object ScalePatterns {
       if (VersionedLayout.currentVersion(dir) < 4)
         VersionedLayout.majorCompact(s, dir)
     }
-    dir
   }
 
   /** WIDEN COLUMN TYPE through the commit log — the fourth evolution
@@ -4838,13 +4520,6 @@ object ScalePatterns {
       .orderBy(col("version"))
   }
 
-  /** Stable location of q197's rename-then-re-add events layout. */
-  private[graft] def eventsReaddDir(d: String): String = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_")
-    new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_events_readd_${sfx}_n$scenarioNonce").getAbsolutePath
-  }
-  private val eventsReaddLock = new Object
 
   /** Build (or fast-forward) q197's history: v0 base (events, pid =
     * user_id mod 16, key = event_id), v1 ADD `score_centi`, v2 INSERT
@@ -4857,8 +4532,8 @@ object ScalePatterns {
     */
   private def ensureReaddScenario(s: SparkSession, d: String): String = {
     import graft.operators.VersionedLayout
-    val dir = eventsReaddDir(d)
-    eventsReaddLock.synchronized {
+    val dir = scenarioRoot("events_readd", d)
+    ScratchRoot.once(dir) {
       VersionedLayout.writeBaseTable(s,
         Tables.events(s, d).select(
           pmod(col("user_id"), lit(16)).cast("int").as("pid"),
@@ -4904,7 +4579,6 @@ object ScalePatterns {
       if (VersionedLayout.currentVersion(dir) < 7)
         VersionedLayout.majorCompact(s, dir)
     }
-    dir
   }
 
   /** RENAME THEN RE-ADD THE OLD NAME — column mapping by source
@@ -4959,13 +4633,6 @@ object ScalePatterns {
       .orderBy(col("version"))
   }
 
-  /** Stable location of q198's restore-across-evolution events layout. */
-  private[graft] def eventsRestoreEvoDir(d: String): String = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_")
-    new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_events_restore_evo_${sfx}_n$scenarioNonce").getAbsolutePath
-  }
-  private val eventsRestoreEvoLock = new Object
 
   /** Build (or fast-forward) q198's history: v0 base, v1 INSERT
     * purchase copies, v2 ADD `score_centi`, v3 INSERT click copies
@@ -4977,8 +4644,8 @@ object ScalePatterns {
     */
   private def ensureRestoreEvoScenario(s: SparkSession, d: String): String = {
     import graft.operators.VersionedLayout
-    val dir = eventsRestoreEvoDir(d)
-    eventsRestoreEvoLock.synchronized {
+    val dir = scenarioRoot("events_restore_evo", d)
+    ScratchRoot.once(dir) {
       VersionedLayout.writeBaseTable(s,
         Tables.events(s, d).select(
           pmod(col("user_id"), lit(16)).cast("int").as("pid"),
@@ -5025,7 +4692,6 @@ object ScalePatterns {
       if (VersionedLayout.currentVersion(dir) < 8)
         VersionedLayout.majorCompact(s, dir)
     }
-    dir
   }
 
   /** RESTORE ACROSS SCHEMA EVOLUTION — the q190 move with an ADD and a
@@ -5067,14 +4733,6 @@ object ScalePatterns {
       .orderBy(col("version"))
   }
 
-  /** Stable location of q199's rename-revival events layout. */
-  private[graft] def eventsReviveDir(d: String): String = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_")
-    new java.io.File(
-      sys.props("java.io.tmpdir"),
-      s"graft_events_revive_${sfx}_n$scenarioNonce").getAbsolutePath
-  }
-  private val eventsReviveLock = new Object
 
   /** Build (or fast-forward) q199's history: v0 base (events, pid =
     * user_id mod 16, key = event_id), v1 ADD `score_centi`, v2 INSERT
@@ -5086,8 +4744,8 @@ object ScalePatterns {
     */
   private def ensureReviveScenario(s: SparkSession, d: String): String = {
     import graft.operators.VersionedLayout
-    val dir = eventsReviveDir(d)
-    eventsReviveLock.synchronized {
+    val dir = scenarioRoot("events_revive", d)
+    ScratchRoot.once(dir) {
       VersionedLayout.writeBaseTable(s,
         Tables.events(s, d).select(
           pmod(col("user_id"), lit(16)).cast("int").as("pid"),
@@ -5121,7 +4779,6 @@ object ScalePatterns {
       if (VersionedLayout.currentVersion(dir) < 6)
         VersionedLayout.majorCompact(s, dir)
     }
-    dir
   }
 
   /** NAME REVIVAL VIA RENAME — the final evolution restriction, lifted:
@@ -5164,13 +4821,6 @@ object ScalePatterns {
       .orderBy(col("version"))
   }
 
-  /** Stable location of q182's z-clustered fold layout. */
-  private[graft] def eventsZfoldDir(d: String): String = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_")
-    new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_events_zfold_${sfx}_n$scenarioNonce").getAbsolutePath
-  }
-  private val eventsZfoldLock = new Object
 
   /** Build (or fast-forward) q182's history: v0 base (events with their
     * timestamps, pid = user_id mod 16), v1 DELETE (errors), v2
@@ -5182,8 +4832,8 @@ object ScalePatterns {
     */
   private def ensureZfoldScenario(s: SparkSession, d: String): String = {
     import graft.operators.VersionedLayout
-    val dir = eventsZfoldDir(d)
-    eventsZfoldLock.synchronized {
+    val dir = scenarioRoot("events_zfold", d)
+    ScratchRoot.once(dir) {
       VersionedLayout.writeBaseTable(s,
         Tables.events(s, d).select(
           pmod(col("user_id"), lit(16)).cast("int").as("pid"),
@@ -5202,7 +4852,6 @@ object ScalePatterns {
           expr(s"((ts - $t0) * 255) div ${math.max(t1 - t0, 1L)}"), bits = 8)))
       }
     }
-    dir
   }
 
   /** CLUSTERED (Z-order) MAJOR FOLD — re-clustering as maintenance: a
@@ -5235,12 +4884,6 @@ object ScalePatterns {
       .orderBy(col("version"))
   }
 
-  /** Stable location of q166's clone of the q160 CRUD layout. */
-  private[graft] def cloneLayoutDir(d: String): String = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_")
-    new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_lineitem_clone_${sfx}_n$scenarioNonce").getAbsolutePath
-  }
 
   /** ZERO-COPY CLONE of the versioned layout — the snapshot-export /
     * dev-copy feature of a table format: q160's five-version CRUD
@@ -5261,8 +4904,8 @@ object ScalePatterns {
   private def q166(s: SparkSession, d: String): DataFrame = {
     import graft.operators.VersionedLayout
     val src = ensureCrudScenario(s, d)
-    val dir = cloneLayoutDir(d)
-    crudLock.synchronized {
+    val dir = scenarioRoot("lineitem_clone", d)
+    ScratchRoot.once(dir) {
       VersionedLayout.cloneAsOf(s, src, dir, VersionedLayout.currentVersion(src))
     }
     (0 to 4).map { ver =>
@@ -5347,6 +4990,22 @@ object ScalePatterns {
       .orderBy(col("threshold_milli"))
   }
 
+  /** q147's planner WIRED INTO AN ACTUAL LAYOUT: lineitem is written
+    * once per session range-partitioned by the plan's EXACT boundaries —
+    * each row's pid is `1 + |{uppers < v}|` over the broadcast 32-value
+    * boundary array (what Spark's RangePartitioner estimates by
+    * sampling, q147 computed exactly) — one parquet directory per pid.
+    * The reader then answers a fixed price-band aggregate by mapping the
+    * band to pid bounds through the same manifest (two bounded scalars)
+    * and scanning ONLY those directories: `PartitionFilters` on pid
+    * prune at the directory level before any file is opened, and the
+    * residual v-filter pushes into the surviving scans. Oracle = the
+    * plain filtered aggregate over the original table, so the gate
+    * certifies plan -> write -> manifest-prune -> read end to end;
+    * StorageSpec additionally proves each pid directory's row count
+    * equals the plan's n_rows column and measures rows-scanned vs an
+    * ingest-ordered copy of the same data.
+    */
   private def q150(s: SparkSession, d: String): DataFrame = {
     val dir = ensureRangeLayout(s, d)
     val uppers = rangeUppers(s, d)

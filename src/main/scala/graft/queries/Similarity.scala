@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{ScratchRoot, Tables}
 import graft.functions.vectors
 
 /** Similarity search over `embeddings` (ArrayType(FloatType), 64-dim):
@@ -218,29 +218,22 @@ object Similarity {
     */
   private def q71(s: SparkSession, d: String): DataFrame = ivfProbe(s, d, nprobe = 2)
 
-  /** IVF index dirs this JVM has already built (the write-once /
-    * probe-many amortization a production ANN index lives by).
-    */
-  private val ivfWritten = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private val ivfBuildLock = new Object
-
   /** Build the persisted IVF index once per session: train (one Lloyd
     * step over the seed centroids — q42's construction) and materialize
     * BOTH index tables as parquet: `centroids` (16 rows) and
     * `assignments` (corpus-sized (vec_id, cid) — the inverted file).
-    * Returns (centroidsDir, assignmentsDir). PID-suffixed path, so
+    * Returns (centroidsDir, assignmentsDir). Per-JVM root, so
     * concurrent sessions (bench + verify) never clobber each other's
     * live index files; later calls in the same session are no-ops and
-    * probes serve purely from the persisted tables.
+    * probes serve purely from the persisted tables (the write-once /
+    * probe-many amortization a production ANN index lives by).
     */
   private[graft] def ensureIvfIndex(s: SparkSession, d: String): (String, String) = {
     import org.apache.spark.sql.graftbridge.DatasetBridge
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_")
-    val base = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_ivf_${sfx}_p${graft.JvmId.token}")
-    val centDir = new java.io.File(base, "centroids").getAbsolutePath
-    val asgDir = new java.io.File(base, "assignments").getAbsolutePath
-    ivfBuildLock.synchronized { if (ivfWritten.add(base.getAbsolutePath)) {
+    val base = ScratchRoot.jvm("ivf", d)
+    val centDir = s"$base/centroids"
+    val asgDir = s"$base/assignments"
+    ScratchRoot.once(base) {
       val e = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding"), vectors.norm(col("embedding")).as("nrm"))
         .localCheckpoint() // feeds both assignment passes + the centroid train
@@ -253,7 +246,7 @@ object Similarity {
         .write.mode("overwrite").parquet(asgDir)
       DatasetBridge.unpersistCheckpoint(cent)
       DatasetBridge.unpersistCheckpoint(e)
-    } }
+    }
     (centDir, asgDir)
   }
 
@@ -731,14 +724,6 @@ object Similarity {
     */
   val ivfDriftMicro = 20000L
 
-  /** IVF index-store dirs this JVM has already built (pid-suffixed, so
-    * concurrent sessions never clobber each other's live store files).
-    * The lock serializes the BUILD itself: the once-set alone would let
-    * a second thread probe a store the first is still writing.
-    */
-  private val ivfStoreBuilt = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private val ivfStoreLock = new Object
-
   private def corpusProj(s: SparkSession, d: String): DataFrame =
     Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding"), vectors.norm(col("embedding")).as("nrm"))
@@ -776,13 +761,8 @@ object Similarity {
   }
 
   private[graft] def ensureIvfStore(s: SparkSession, d: String): String = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_")
-    val dir = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_ivfstore_${sfx}_p${graft.JvmId.token}").getAbsolutePath
-    ivfStoreLock.synchronized {
-      if (ivfStoreBuilt.add(dir)) buildIvfChain(s, d, dir)
-    }
-    dir
+    val dir = ScratchRoot.jvm("ivfstore", d)
+    ScratchRoot.once(dir)(buildIvfChain(s, d, dir))
   }
 
   /** q172's store: the q171 chain continued with a RETRACT (the base
@@ -791,18 +771,13 @@ object Similarity {
     */
   private[graft] def ensureIvfCrudStore(s: SparkSession, d: String): String = {
     import graft.operators.IvfIndexStore
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_")
-    val dir = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_ivfcrud_${sfx}_p${graft.JvmId.token}").getAbsolutePath
-    ivfStoreLock.synchronized {
-      if (ivfStoreBuilt.add(dir)) {
-        buildIvfChain(s, d, dir)
-        IvfIndexStore.retract(s, dir,
-          corpusProj(s, d).where(col("vec_id") % 16 === 1).select(col("vec_id")))
-        IvfIndexStore.compact(s, dir)
-      }
+    val dir = ScratchRoot.jvm("ivfcrud", d)
+    ScratchRoot.once(dir) {
+      buildIvfChain(s, d, dir)
+      IvfIndexStore.retract(s, dir,
+        corpusProj(s, d).where(col("vec_id") % 16 === 1).select(col("vec_id")))
+      IvfIndexStore.compact(s, dir)
     }
-    dir
   }
 
   /** q177-q179's store: the q171 chain continued with a RETRAIN —
@@ -821,23 +796,18 @@ object Similarity {
   private[graft] def ensureIvfRetrainStore(s: SparkSession, d: String): String = {
     import graft.operators.IvfIndexStore
     import org.apache.spark.sql.graftbridge.DatasetBridge
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_")
-    val dir = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_ivfretrain_${sfx}_p${graft.JvmId.token}").getAbsolutePath
-    ivfStoreLock.synchronized {
-      if (ivfStoreBuilt.add(dir)) {
-        buildIvfChain(s, d, dir)
-        val e = corpusProj(s, d).localCheckpoint()
-        val live = IvfIndexStore.assignmentsOf(
-          s, dir, IvfIndexStore.currentGeneration(dir))
-        val cent2 = centroids(e, live).localCheckpoint()
-        IvfIndexStore.retrain(s, dir, cent2,
-          nearest(e, cent2, "vec_id", "embedding", "nrm"))
-        DatasetBridge.unpersistCheckpoint(cent2)
-        DatasetBridge.unpersistCheckpoint(e)
-      }
+    val dir = ScratchRoot.jvm("ivfretrain", d)
+    ScratchRoot.once(dir) {
+      buildIvfChain(s, d, dir)
+      val e = corpusProj(s, d).localCheckpoint()
+      val live = IvfIndexStore.assignmentsOf(
+        s, dir, IvfIndexStore.currentGeneration(dir))
+      val cent2 = centroids(e, live).localCheckpoint()
+      IvfIndexStore.retrain(s, dir, cent2,
+        nearest(e, cent2, "vec_id", "embedding", "nrm"))
+      DatasetBridge.unpersistCheckpoint(cent2)
+      DatasetBridge.unpersistCheckpoint(e)
     }
-    dir
   }
 
   /** The probed cluster ids for the 5 standard queries, collected

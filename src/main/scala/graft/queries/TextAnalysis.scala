@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{ScratchRoot, Tables}
 import graft.functions.{text, textstats}
 
 /** Text-analysis pipeline queries over `documents`: language ID, quality
@@ -338,9 +338,6 @@ object TextAnalysis {
     * decimal/HUGEINT before the x1000 so corpus-scale counts cannot
     * wrap.
     */
-  private val bigramsBuilt = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private val bigramsBuildLock = new Object
-
   /** The corpus doc-level bigram table ((doc_id, w1, w2), one row per
     * adjacent token pair), MATERIALIZED once per (JVM, sf): q109's
     * plan read its pairs subtree THREE times (the n2/n1 count branches
@@ -351,19 +348,15 @@ object TextAnalysis {
     * table by construction cannot carry).
     */
   private[graft] def docBigramsTable(s: SparkSession, d: String): DataFrame = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_")
-    val path = new java.io.File(
-      sys.props("java.io.tmpdir"),
-      s"graft_bigrams_${sfx}_p${graft.JvmId.token}").getAbsolutePath
-    bigramsBuildLock.synchronized {
-      if (bigramsBuilt.add(path))
-        Tables.documents(s, d)
-          .select(col("doc_id"), text.normalizedTokens(col("text")).as("toks"))
-          .where(size(col("toks")) >= 2)
-          .select(col("doc_id"), explode(expr(
-            "transform(sequence(0, size(toks)-2), i -> struct(toks[i] AS w1, toks[i+1] AS w2))")).as("p"))
-          .select(col("doc_id"), col("p.w1").as("w1"), col("p.w2").as("w2"))
-          .write.mode("overwrite").parquet(path)
+    val path = ScratchRoot.jvm("bigrams", d)
+    ScratchRoot.once(path) {
+      Tables.documents(s, d)
+        .select(col("doc_id"), text.normalizedTokens(col("text")).as("toks"))
+        .where(size(col("toks")) >= 2)
+        .select(col("doc_id"), explode(expr(
+          "transform(sequence(0, size(toks)-2), i -> struct(toks[i] AS w1, toks[i+1] AS w2))")).as("p"))
+        .select(col("doc_id"), col("p.w1").as("w1"), col("p.w2").as("w2"))
+        .write.mode("overwrite").parquet(path)
     }
     s.read.parquet(path)
   }

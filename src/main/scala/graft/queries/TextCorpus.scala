@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{ScratchRoot, Tables}
 import graft.functions.{text, textstats}
 import graft.operators.InvertedIndex
 
@@ -120,30 +120,20 @@ object TextCorpus {
   }
 
   /** q152/q161's shared store: the retrieval chain, compacted, at a
-    * stable location — code-nonce-suffixed like every cross-JVM scenario
-    * root (see [[graft.JvmId.classNonce]]), so a builder change never
+    * stable root ([[ScratchRoot.stable]]), so a builder change never
     * adopts a previous spelling's on-disk state. The chain is built AND
     * compacted in a writer-private tmp, then published with one atomic
-    * rename: no session ever mutates the published store, and a killed
-    * first session can never leave a partial chain for later ones.
+    * rename ([[ScratchRoot.publishOnce]]): no session ever mutates the
+    * published store, and a killed first session can never leave a
+    * partial chain for later ones.
     */
-  private def compactedIndexStore(s: SparkSession, d: String): String = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_")
-    val nonce = graft.JvmId.classNonce(TextCorpus.getClass,
+  private def compactedIndexStore(s: SparkSession, d: String): String =
+    ScratchRoot.publishOnce(ScratchRoot.stable("index_store", d, TextCorpus.getClass,
       graft.operators.IndexStore.getClass, graft.operators.GenChain.getClass,
-      InvertedIndex.getClass, graft.functions.text.getClass)
-    val store = new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_index_store_${sfx}_n$nonce").getAbsolutePath
-    if (!new java.io.File(store).isDirectory) {
-      val tmp = new java.io.File(s"$store.tmp-${graft.operators.Cas.writerTag}")
-      org.apache.commons.io.FileUtils.deleteDirectory(tmp)
+      InvertedIndex.getClass, graft.functions.text.getClass))(_.isDirectory) { tmp =>
       buildRetrievalChain(s, d, tmp.getPath)
       graft.operators.IndexStore.compact(s, tmp.getPath)
-      // A session that published first built the same deterministic chain.
-      graft.operators.Cas.publishDir(tmp, new java.io.File(store))(_.isDirectory)
     }
-    store
-  }
 
   /** Index-chain COMPACTION — the maintenance step q146 (merge) and
     * q149 (retract) imply but never materialize: the corpus lands as
@@ -283,26 +273,19 @@ object TextCorpus {
       .select(col("word"), col("doc_id"), col("w_milli"))
   }
 
-  private val postingsBuilt = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private val postingsBuildLock = new Object
-
   /** The corpus's weighted sparse postings ([[weightedPostings]] at
     * [[dfCapPct]]), MATERIALIZED once per (JVM, sf) as parquet — the
     * corpus-scale tokenize + tf + df work behind q60 and q106's sparse
     * tower, paid once instead of per retrieval query (the
     * verifiedPairs discipline applied to retrieval; in a deployment
     * this table IS the maintained inverted index, q146/q152).
-    * PID-unique path so bench and verify JVMs cannot clobber.
+    * Per-JVM root so bench and verify JVMs cannot clobber.
     */
   private[graft] def postingsTable(s: SparkSession, d: String): DataFrame = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_")
-    val path = new java.io.File(
-      sys.props("java.io.tmpdir"),
-      s"graft_postings_${sfx}_p${graft.JvmId.token}").getAbsolutePath
-    postingsBuildLock.synchronized {
-      if (postingsBuilt.add(path))
-        weightedPostings(graft.Tables.documents(s, d), dfCapPct)
-          .write.mode("overwrite").parquet(path)
+    val path = ScratchRoot.jvm("postings", d)
+    ScratchRoot.once(path) {
+      weightedPostings(graft.Tables.documents(s, d), dfCapPct)
+        .write.mode("overwrite").parquet(path)
     }
     s.read.parquet(path)
   }
@@ -386,9 +369,6 @@ object TextCorpus {
     * per-doc length dl joins back on doc_id — one co-partitioned
     * shuffle, no window.
     */
-  private val tfBuilt = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private val tfBuildLock = new Object
-
   /** The corpus term-frequency table ((doc_id, word, tf) — the
     * tokenize + count pass every retrieval weighting starts from),
     * MATERIALIZED once per (JVM, sf) as parquet for q115's BM25 tower;
@@ -397,16 +377,12 @@ object TextCorpus {
     * [[postingsTable]].
     */
   private[graft] def tfTable(s: SparkSession, d: String): DataFrame = {
-    val sfx = d.replaceAll("[^A-Za-z0-9]", "_")
-    val path = new java.io.File(
-      sys.props("java.io.tmpdir"),
-      s"graft_tf_${sfx}_p${graft.JvmId.token}").getAbsolutePath
-    tfBuildLock.synchronized {
-      if (tfBuilt.add(path))
-        InvertedIndex.words(graft.Tables.documents(s, d), "doc_id", "text")
-          .groupBy(col("file_id").as("doc_id"), col("word"))
-          .agg(count(lit(1)).as("tf"))
-          .write.mode("overwrite").parquet(path)
+    val path = ScratchRoot.jvm("tf", d)
+    ScratchRoot.once(path) {
+      InvertedIndex.words(graft.Tables.documents(s, d), "doc_id", "text")
+        .groupBy(col("file_id").as("doc_id"), col("word"))
+        .agg(count(lit(1)).as("tf"))
+        .write.mode("overwrite").parquet(path)
     }
     s.read.parquet(path)
   }
