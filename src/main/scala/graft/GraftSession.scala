@@ -66,6 +66,11 @@ object GraftSession {
       // path-backquote spelling (graft.`/dir`) resolves through the
       // same catalog as the escape hatch. See graft.plans.GraftCatalog.
       .config("spark.sql.catalog.graft", "graft.plans.GraftCatalog")
+      // Managed tables (BucketedStore's bucketed saves) land in a
+      // per-JVM scratch root that the exit sweep deletes, not in
+      // `./spark-warehouse` under the working directory. A caller's own
+      // `.config` of the setting overrides it.
+      .config("spark.sql.warehouse.dir", ScratchRoot.jvm("spark_warehouse"))
       // Older driver testdata stored events.ts as timestamp[ns]; this
       // flag maps INT64(TIMESTAMP_NANOS) to LongType instead of failing.
       // Newer data ships timestamp[us], normalized to the same

@@ -14,8 +14,8 @@ import org.apache.spark.sql.functions._
   * are [[Cas]]'s), so readers only ever see complete generations, a
   * crashed mutation leaves a tmp that [[vacuumGenerations]] sweeps, and
   * a lost race fails loudly instead of clobbering committed state.
-  * Manifests carry a `txn` stamp for exactly-once streaming ingest
-  * (the [[VersionedLayout.appendInsertOnce]] contract).
+  * Manifests ([[MetaJson]]) carry a `txn` stamp for exactly-once
+  * streaming ingest (the [[VersionedLayout.appendInsertOnce]] contract).
   */
 private[graft] object GenChain {
 
@@ -40,11 +40,9 @@ private[graft] object GenChain {
     (gen to 0 by -1).find(g => new java.io.File(genDir(dir, g), snapshotSubdir).isDirectory)
       .getOrElse(throw new IllegalStateException(s"$dir has no full-snapshot generation <= $gen"))
 
-  def txnOf(dir: String, gen: Int): Long = {
-    val body = new String(
-      Files.readAllBytes(manifest(dir, gen).toPath), StandardCharsets.UTF_8)
-    body.split("\"txn\":")(1).split("[,}]")(0).trim.toLong
-  }
+  def txnOf(dir: String, gen: Int): Long =
+    MetaJson.parseManifest(new String(
+      Files.readAllBytes(manifest(dir, gen).toPath), StandardCharsets.UTF_8))._2
 
   /** The generation whose manifest records `txn`, skipping vacuumed
     * (manifest-less) generations — the exactly-once replay check.
@@ -147,7 +145,7 @@ private[graft] object GenChain {
     */
   def publish(dir: String, gen: Int, txn: Long, tmp: String): Unit = {
     Files.write(new java.io.File(tmp, "_graft_manifest.json").toPath,
-      s"""{"generation":$gen,"txn":$txn}""".getBytes(StandardCharsets.UTF_8))
+      MetaJson.renderManifest(gen, txn).getBytes(StandardCharsets.UTF_8))
     Files.createDirectories(Paths.get(dir))
     if (!Cas.publishDir(new java.io.File(tmp), new java.io.File(genDir(dir, gen)))(
         new java.io.File(_, "_graft_manifest.json").isFile))

@@ -47,11 +47,13 @@ import java.nio.charset.StandardCharsets
   *    of every entry <= N; the per-version files it covers are
   *    truncated, so a long-lived table's log read parses O(1)
   *    checkpoint + the tail instead of O(total versions) files.
-  *  - `_log/meta.json` — the table's row-identity KEY COLUMNS,
-  *    recorded at base-write time: the log is TABLE-GENERIC (tombstone
-  *    keying, upsert matching, the version-stamped mask, and the
-  *    change feed all follow this meta; layouts written before it
-  *    default to the lineitem triple).
+  *  - `_log/meta.json` — the table's [[Meta]], recorded at base-write
+  *    time: its row-identity KEY COLUMNS make the log TABLE-GENERIC
+  *    (tombstone keying, upsert matching, the version-stamped mask, and
+  *    the change feed all follow them), beside the declared stats and
+  *    Bloom columns and the base column types.
+  *  - Every JSON file here (entries, checkpoints, meta) is rendered and
+  *    parsed by [[MetaJson]].
   *  - `addcolumn` / `dropcolumn` / `renamecolumn` / `widencolumn` log
   *    entries — SCHEMA EVOLUTION commits (see [[addColumn]] /
   *    [[dropColumn]] / [[renameColumn]] / [[widenColumn]]):
@@ -89,11 +91,6 @@ import java.nio.charset.StandardCharsets
   * (reproducing the exact corpus any past training run saw).
   */
 object VersionedLayout {
-
-  /** Key columns of layouts written before the layout became
-    * table-generic (no `_log/meta.json`): the lineitem triple.
-    */
-  private val legacyKeyCols = Seq("l_orderkey", "l_linenumber", "v")
 
   // ------------------------------------------------------------------
   // SNAPSHOT-METADATA CACHES (round 17, optimization guide §5/§6).
@@ -150,109 +147,42 @@ object VersionedLayout {
 
   private def metaFile(dir: String) = new java.io.File(logDir(dir), "meta.json")
 
-  /** The ROW-IDENTITY columns of this layout's table — recorded at base
-    * write time in `_log/meta.json`, which is what makes the commit log
-    * TABLE-GENERIC: tombstones, upsert matching, change feeds, and the
-    * version-stamped mask all key on these columns, whatever the table.
+  /** A layout's table metadata, recorded once at base-write time
+    * ([[writeBaseTable]]) in `_log/meta.json`:
+    *  - `keyCols`: the ROW-IDENTITY columns that make the commit log
+    *    TABLE-GENERIC — tombstones, upsert matching, change feeds and
+    *    the version-stamped mask all key on them, whatever the table;
+    *  - `statsCols`: the declared stats columns, the first one primary.
+    *    Per-artifact (pid, min, max) of each ride every data-writing
+    *    log entry ([[LogEntry.statsM]]) and drive [[readAsOfRange]]'s
+    *    plan-time data skipping. Names are the columns' ORIGINAL
+    *    (base-write) spellings; a later rename moves the SERVED name,
+    *    not the declaration — reads resolve through the column-identity
+    *    scan ([[statsIdentityAt]]), which is what lets skipping survive
+    *    a rename;
+    *  - `bloomCols`: declared BLOOM columns (original spellings, struct
+    *    field paths allowed) — per-pid Bloom filters recorded per data
+    *    commit, the POINT-LOOKUP skip zone maps cannot give: on a key
+    *    hashed or scattered across the range axis, every source's
+    *    [min,max] covers every probe, but a Bloom answers "definitely
+    *    absent" per (source, pid) from log-side metadata alone;
+    *  - `types`: the base write's column types (name -> Spark
+    *    simpleString) in declaration order, for identifier-shaped names
+    *    — what makes the TYPED-RE-ADD conflict analysis pure log
+    *    metadata (a base-origin identity's physical type is known
+    *    without reading a footer), and what an empty base's schema is
+    *    rebuilt from.
     */
-  private[graft] def keyColsOf(dir: String): Seq[String] = {
-    val f = metaFile(dir)
-    if (!f.isFile) return legacyKeyCols
-    new String(Files.readAllBytes(f.toPath), StandardCharsets.UTF_8)
-      .split("""\[""")(1).split("]")(0)
-      .split(",").map(_.trim.stripPrefix("\"").stripSuffix("\"")).toSeq
+  private[graft] final case class Meta(keyCols: Seq[String], statsCols: Seq[String],
+      bloomCols: Seq[String], types: Seq[(String, String)]) {
+    def typeOf: Map[String, String] = types.toMap
   }
 
-  /** The base write's column types (name -> Spark simpleString),
-    * recorded in `_log/meta.json` since round 13 — what makes the
-    * TYPED-RE-ADD conflict analysis pure log metadata: a base-origin
-    * identity's physical type is known without reading a footer.
-    * Empty for layouts written before the field existed (their
-    * base-origin columns read as an opaque "base" type token —
-    * conservatively treated as conflicting with any declared type).
-    */
-  private[graft] def baseTypesOf(dir: String): Map[String, String] = {
+  /** This layout's [[Meta]], read from disk on each call. */
+  private[graft] def metaOf(dir: String): Meta = {
     val f = metaFile(dir)
-    if (!f.isFile) Map.empty
-    else {
-      val body = new String(Files.readAllBytes(f.toPath), StandardCharsets.UTF_8)
-      if (!body.contains("\"types\":{")) Map.empty
-      else """"([A-Za-z_][A-Za-z0-9_]*)":"([^"]+)"""".r
-        .findAllMatchIn(body.split(""""types":\{""")(1).split("}")(0))
-        .map(m => m.group(1) -> m.group(2)).toMap
-    }
-  }
-
-  /** [[baseTypesOf]] in DECLARATION ORDER — what an empty-base layout's
-    * schema recovery needs (a Map loses the column order the base write
-    * recorded; the regex scan returns matches in file order, which IS
-    * the declared field order).
-    */
-  private[graft] def baseTypeSeqOf(dir: String): Seq[(String, String)] = {
-    val f = metaFile(dir)
-    if (!f.isFile) Nil
-    else {
-      val body = new String(Files.readAllBytes(f.toPath), StandardCharsets.UTF_8)
-      if (!body.contains("\"types\":{")) Nil
-      else """"([A-Za-z_][A-Za-z0-9_]*)":"([^"]+)"""".r
-        .findAllMatchIn(body.split(""""types":\{""")(1).split("}")(0))
-        .map(m => m.group(1) -> m.group(2)).toSeq
-    }
-  }
-
-  /** The layout's STATS COLUMN — the single numeric column whose
-    * per-artifact min/max ride every data-writing log entry
-    * ([[LogEntry.stats]]) and drive [[readAsOfRange]]'s plan-time data
-    * skipping. Opt-in at base-write time ([[writeBaseTable]]); None for
-    * layouts written without one (every read still works, nothing
-    * skips).
-    */
-  private[graft] def statsColOf(dir: String): Option[String] = {
-    val f = metaFile(dir)
-    if (!f.isFile) None
-    else """"statsCol":"([^"]*)"""".r
-      .findFirstMatchIn(
-        new String(Files.readAllBytes(f.toPath), StandardCharsets.UTF_8))
-      .map(_.group(1))
-  }
-
-  /** ALL declared stats columns (round 14: real zone maps cover a
-    * small SET of columns, not one) — the `statsCols` meta list when
-    * present, else the legacy single `statsCol`. Names are the
-    * columns' ORIGINAL (base-write) spellings; a later rename moves
-    * the SERVED name, not the declaration — reads resolve through the
-    * column-identity scan ([[statsIdentityAt]]), which is what lets
-    * skipping survive a rename.
-    */
-  private[graft] def statsColsOf(dir: String): Seq[String] = {
-    val f = metaFile(dir)
-    if (!f.isFile) Nil
-    else {
-      val body = new String(Files.readAllBytes(f.toPath), StandardCharsets.UTF_8)
-      """"statsCols":\[([^\]]*)\]""".r.findFirstMatchIn(body)
-        .map(_.group(1).split(",").map(_.trim.stripPrefix("\"").stripSuffix("\""))
-          .filter(_.nonEmpty).toSeq)
-        .getOrElse(statsColOf(dir).toSeq)
-    }
-  }
-
-  /** Declared BLOOM columns (original base-write spellings) — per-pid
-    * Bloom filters recorded per data commit, the POINT-LOOKUP skip zone
-    * maps cannot give: on a key hashed or scattered across the range
-    * axis, every source's [min,max] covers every probe, but a Bloom
-    * answers "definitely absent" per (source, pid) from log-side
-    * metadata alone. Integral columns only (the probe and the write
-    * path hash the value cast to BIGINT).
-    */
-  private[graft] def bloomColsOf(dir: String): Seq[String] = {
-    val f = metaFile(dir)
-    if (!f.isFile) Nil
-    else """"bloomCols":\[([^\]]*)\]""".r
-      .findFirstMatchIn(
-        new String(Files.readAllBytes(f.toPath), StandardCharsets.UTF_8))
-      .map(_.group(1).split(",").map(_.trim.stripPrefix("\"").stripSuffix("\""))
-        .filter(_.nonEmpty).toSeq)
-      .getOrElse(Nil)
+    require(f.isFile, s"no layout meta at $f")
+    MetaJson.parseMeta(new String(Files.readAllBytes(f.toPath), StandardCharsets.UTF_8))
   }
 
   private def integralType(t: org.apache.spark.sql.types.DataType): Boolean =
@@ -478,8 +408,9 @@ object VersionedLayout {
     * data-writing action calls before its commit.
     */
   private def recordStats(dir: String, ver: Int, tag: String,
-      df: DataFrame): (Seq[(Int, Long, Long)], Map[String, Seq[(Int, Long, Long)]]) = {
-    val declared = bloomColsOf(dir)
+      df: DataFrame): Map[String, Seq[(Int, Long, Long)]] = {
+    val meta = metaOf(dir)
+    val declared = meta.bloomCols
     if (declared.nonEmpty) {
       val entries = log(dir)
       val head = entries.lastOption.map(_.version).getOrElse(0)
@@ -488,7 +419,7 @@ object VersionedLayout {
       }.distinct
       writeBlooms(dir, ver, tag, computeBlooms(df, phys))
     }
-    statsOf(dir, df)
+    statsOf(dir, meta.statsCols, df)
   }
 
   /** Per-pid [min,max] for EVERY given physical column `df` carries at
@@ -519,24 +450,22 @@ object VersionedLayout {
     }.toMap.filter(_._2.nonEmpty)
   }
 
-  /** Stats to record for a commit whose landed bytes are `df`:
-    * (legacy primary-column triples, full physical-name-keyed map).
-    * The physical names worth scanning are every era spelling of every
-    * DECLARED stats identity — a segment written after a rename
-    * carries the new spelling, a minor compact's raw bytes the old —
-    * and [[computeStatsM]] keeps whichever ones `df` actually has.
+  /** Stats to record for a commit whose landed bytes are `df`, keyed
+    * by physical column name. The physical names worth scanning are
+    * every era spelling of every DECLARED stats identity — a segment
+    * written after a rename carries the new spelling, a minor compact's
+    * raw bytes the old — and [[computeStatsM]] keeps whichever ones
+    * `df` actually has.
     */
-  private def statsOf(dir: String,
-      df: DataFrame): (Seq[(Int, Long, Long)], Map[String, Seq[(Int, Long, Long)]]) = {
-    val declared = statsColsOf(dir)
-    if (declared.isEmpty) return (Nil, Map.empty)
+  private def statsOf(dir: String, declared: Seq[String],
+      df: DataFrame): Map[String, Seq[(Int, Long, Long)]] = {
+    if (declared.isEmpty) return Map.empty
     val entries = log(dir)
     val head = entries.lastOption.map(_.version).getOrElse(0)
     val phys = declared.flatMap { dc =>
       skipIdentityAt(dir, entries, dc, head).map(_.eras.map(_._1)).getOrElse(Seq(dc))
     }.distinct
-    val m = computeStatsM(df, phys)
-    (statsColOf(dir).flatMap(m.get).getOrElse(Nil), m)
+    computeStatsM(df, phys)
   }
 
   /** The live column identity a DECLARED stats column (its ORIGINAL
@@ -637,17 +566,6 @@ object VersionedLayout {
     if (named.isEmpty || w < it.birth) None else Some(named.last._1)
   }
 
-  /** Entry `e`'s recorded triples for physical column `phys` — the
-    * round-14 map when present, falling back to the legacy single
-    * `stats` field for entries written when only the meta's primary
-    * column was tracked (sound: legacy triples were always recorded
-    * under the primary's original spelling).
-    */
-  private def statsTriples(e: LogEntry, phys: String,
-      legacyPrimary: Option[String]): Seq[(Int, Long, Long)] =
-    e.statsM.getOrElse(phys,
-      if (legacyPrimary.contains(phys)) e.stats else Nil)
-
   private def logDir(dir: String) = new java.io.File(dir, "_log")
   private def tagged(path: String, tag: String) = path + (if (tag.isEmpty) "" else s"-$tag")
   private def tombDir(dir: String, ver: Int, tag: String) = tagged(s"$dir/_tombs/v$ver", tag)
@@ -740,130 +658,53 @@ object VersionedLayout {
     * compact version); `txn` is an idempotence stamp for streaming
     * ingest (-1 when the commit is not transactional); `tag` is the
     * WRITER-UNIQUE suffix of this version's artifact directories (see
-    * [[Cas.withRetry]] — empty for commits that write no artifact and
-    * layouts written before tagging); `colName`/`colType` carry a schema
-    * evolution commit — [[addColumn]] (name/type), [[dropColumn]]
-    * (name), or [[renameColumn]] (old name / NEW NAME — `colType` is
-    * overloaded as the rename target, not a type); empty otherwise.
-    * `stats` (round 13) is the FILE-LEVEL DATA-SKIPPING metadata real
-    * table formats record per data file: (pid, min, max) of the
-    * layout's stats column ([[statsColOf]]) over the bytes this commit
+    * [[Cas.withRetry]] — empty for commits that write no artifact);
+    * `colName`/`colType` carry a schema evolution commit —
+    * [[addColumn]] (name/type), [[dropColumn]] (name), or
+    * [[renameColumn]] (old name / NEW NAME — `colType` is overloaded as
+    * the rename target, not a type); empty otherwise. `ts` is the
+    * commit's wall-clock stamp (0 = none of its own: [[commitTimes]]
+    * assigns the previous effective time plus one).
+    * `statsM` is the FILE-LEVEL DATA-SKIPPING metadata real table
+    * formats record per data file: (pid, min, max) of each declared
+    * stats column ([[Meta.statsCols]]) over the bytes this commit
     * wrote — per landed pid dir for write/compact/majorcompact, per
-    * segment pid for insert/upsert. Recorded at write time (the bytes
-    * are in hand anyway), consumed by [[readAsOfRange]] to drop whole
-    * sources at PLAN time from log metadata alone — no footer reads,
-    * which at 100 TB is the difference between "prune before listing"
-    * and "open every surviving file at v". Bounds stay sound forever:
-    * rows only ever LEAVE a written artifact (tombstone masking), so a
-    * write-time [min,max] is a superset bound for all later reads.
-    * `rowsW`/`rowsD` (round 14) are the LOGICAL row masses of a data
-    * commit — rows the commit's segment wrote / its tombstones killed
-    * — recorded at write time from counts the write path already has
-    * in hand (the numRecords bookkeeping real table formats keep as
-    * commit metadata); -1 on entries written before the field existed.
-    * `restoreOf` (round 14) is UNAMBIGUOUS restore provenance: the
-    * target version a restore-shaped upsert rewound to, -1 otherwise —
-    * the pre-r14 inference (`action == "upsert" && horizon > 0`) could
-    * not represent a legal restore to version 0.
-    * `statsM` (round 14) extends `stats` to a SET of columns, keyed by
-    * the PHYSICAL column spelling in the committed bytes (what a
-    * parquet footer would key on); read-time identity resolution maps
-    * a queried column to each source's spelling, so skipping survives
-    * renames. `stats` stays the meta primary column's triples for
-    * back-compat with pre-r14 entries.
+    * segment pid for insert/upsert — keyed by the PHYSICAL column
+    * spelling in the committed bytes (what a parquet footer would key
+    * on); read-time identity resolution maps a queried column to each
+    * source's spelling, so skipping survives renames. Recorded at write
+    * time (the bytes are in hand anyway), consumed by [[readAsOfRange]]
+    * to drop whole sources at PLAN time from log metadata alone — no
+    * footer reads, which at 100 TB is the difference between "prune
+    * before listing" and "open every surviving file at v". Bounds stay
+    * sound forever: rows only ever LEAVE a written artifact (tombstone
+    * masking), so a write-time [min,max] is a superset bound for all
+    * later reads.
+    * `rowsW`/`rowsD` are the LOGICAL row masses of a data commit — rows
+    * the commit's segment wrote / its tombstones killed — recorded at
+    * write time from counts the write path already has in hand (the
+    * numRecords bookkeeping real table formats keep as commit
+    * metadata); -1 where the commit does not record them.
+    * `restoreOf` is restore provenance: the target version a
+    * restore-shaped upsert rewound to, -1 otherwise.
+    * `tpids` are the pids the commit's TOMBSTONE set touches
+    * (delete/upsert only), so the change feed's delete-preimage arm
+    * prunes its as-of read to the touched partitions instead of
+    * scanning the whole table per delete version. A separate field, NOT
+    * `pids`: `pids` sizes are a query OUTPUT (describeHistory n_pids)
+    * pinned by the oracle. Nil = unpruned, always sound. On a vacuum
+    * entry: the tombstone versions its GC republished (see
+    * [[tombDirOf]]).
     */
   final case class LogEntry(
       version: Int, action: String, pids: Seq[Int], horizon: Int,
       txn: Long = -1L, tag: String = "", colName: String = "", colType: String = "",
-      ts: Long = 0L, stats: Seq[(Int, Long, Long)] = Nil,
-      rowsW: Long = -1L, rowsD: Long = -1L, restoreOf: Int = -1,
+      ts: Long = 0L, rowsW: Long = -1L, rowsD: Long = -1L, restoreOf: Int = -1,
       statsM: Map[String, Seq[(Int, Long, Long)]] = Map.empty,
-      // Round 18 (optimization guide §2.3/§6): the pids the commit's
-      // TOMBSTONE set touches (delete/upsert only) — recorded so the
-      // change feed's delete-preimage arm prunes its as-of read to the
-      // touched partitions instead of scanning the whole table per
-      // delete version. A separate field, NOT `pids`: `pids` sizes are
-      // a query OUTPUT (describeHistory n_pids) pinned by the oracle.
-      // Nil = unknown (pre-r18 entry) = unpruned, always sound. On a
-      // vacuum entry: the tombstone versions its GC republished (see
-      // [[tombDirOf]]).
       tpids: Seq[Int] = Nil)
 
   private def entryFile(dir: String, ver: Int) = new java.io.File(logDir(dir), f"v$ver%05d.json")
   private def ckptFile(dir: String, ver: Int) = new java.io.File(logDir(dir), f"ckpt-v$ver%05d.json")
-
-  private def renderEntry(e: LogEntry): String =
-    s"""{"version":${e.version},"action":"${e.action}",""" +
-      s""""pids":[${e.pids.mkString(",")}],"tpids":[${e.tpids.mkString(",")}],""" +
-      s""""horizon":${e.horizon},""" +
-      s""""tag":"${e.tag}","txn":${e.txn},""" +
-      s""""colName":"${e.colName}","colType":"${e.colType}","ts":${e.ts},""" +
-      s""""rowsW":${e.rowsW},"rowsD":${e.rowsD},"restoreOf":${e.restoreOf}""" +
-      // statsm then stats LAST (nested structures — the scalar field
-      // parser splits on the first bracket/comma and must never see
-      // these first; the legacy `stats` triple scan runs to the END of
-      // the body, so `stats` must stay the final field). Keys sorted
-      // for deterministic bytes.
-      s""","statsm":{${e.statsM.toSeq.sortBy(_._1).map { case (n, ts) =>
-          s""""$n":[${ts.map(t => s"[${t._1},${t._2},${t._3}]").mkString(",")}]"""
-        }.mkString(",")}}""" +
-      s""","stats":[${e.stats.map(t => s"[${t._1},${t._2},${t._3}]").mkString(",")}]}"""
-
-  private def parseEntry(body: String): LogEntry = {
-    def field(k: String) = body.split(s""""$k":""")(1).split("[,}\\]]")(0).trim
-    // String fields parse as QUOTED tokens, not comma-splits, so a
-    // comma inside a value — `decimal(10,2)` riding colType — cannot
-    // tear the entry. Values never contain quotes or escapes (the
-    // commit-side identifier/type guards enforce it), so [^"]* is
-    // exact.
-    def strField(k: String) =
-      s""""$k":"([^"]*)"""".r.findFirstMatchIn(body).map(_.group(1)).getOrElse("")
-    val pids = body.split(""""pids":\[""")(1).split("]")(0).trim
-    // Optional (round 18): tombstone-touched pids. The `"pids":[` split
-    // above cannot tear on this field (`"tpids":[` has a `t`, not a
-    // quote, before the `pids` letters).
-    val tpids =
-      if (!body.contains("\"tpids\":[")) ""
-      else body.split(""""tpids":\[""")(1).split("]")(0).trim
-    // Optional (entries written before round 13 lack it): the stats
-    // array holds only integer triples, so the triple regex over the
-    // remainder after `"stats":[` is exact.
-    val stats =
-      if (!body.contains("\"stats\":[")) Nil
-      else """\[(-?\d+),(-?\d+),(-?\d+)\]""".r
-        .findAllMatchIn(body.split(""""stats":\[""")(1))
-        .map(m => (m.group(1).toInt, m.group(2).toLong, m.group(3).toLong))
-        .toSeq
-    LogEntry(field("version").toInt, strField("action"),
-      if (pids.isEmpty) Nil else pids.split(",").map(_.trim.toInt).toSeq,
-      field("horizon").toInt,
-      if (body.contains("\"txn\":")) field("txn").toLong else -1L,
-      strField("tag"), strField("colName"), strField("colType"),
-      // Optional (entries written before round 12 lack it): 0 reads as
-      // "no own stamp" and the monotonicized view assigns the previous
-      // commit's effective time plus one.
-      if (body.contains("\"ts\":")) field("ts").toLong else 0L,
-      stats,
-      // Optional (round 14): -1 = unknown / not a restore.
-      if (body.contains("\"rowsW\":")) field("rowsW").toLong else -1L,
-      if (body.contains("\"rowsD\":")) field("rowsD").toLong else -1L,
-      if (body.contains("\"restoreOf\":")) field("restoreOf").toInt else -1,
-      // Optional multi-column stats map (round 14): identifier-shaped
-      // keys, integer-triple values, no nested braces — the brace
-      // split is exact.
-      if (!body.contains("\"statsm\":{")) Map.empty
-      else {
-        val seg = body.split(""""statsm":\{""")(1).split("}")(0)
-        """"([A-Za-z_][A-Za-z0-9_]*)":\[((?:\[-?\d+,-?\d+,-?\d+\],?)*)\]""".r
-          .findAllMatchIn(seg).map { m =>
-            m.group(1) -> """\[(-?\d+),(-?\d+),(-?\d+)\]""".r
-              .findAllMatchIn(m.group(2))
-              .map(x => (x.group(1).toInt, x.group(2).toLong, x.group(3).toLong))
-              .toSeq
-          }.toMap
-      },
-      if (tpids.isEmpty) Nil else tpids.split(",").map(_.trim.toInt).toSeq)
-  }
 
   /** The version covered by the newest checkpoint (-1 when none). */
   def checkpointedVersion(dir: String): Int = {
@@ -895,7 +736,7 @@ object VersionedLayout {
     // AS-OF-TIMESTAMP resolution only; nothing data-deterministic
     // reads it.
     val stamped = if (e.ts == 0L) e.copy(ts = System.currentTimeMillis()) else e
-    val body = renderEntry(stamped)
+    val body = MetaJson.renderEntry(stamped)
     if (!Cas.publishFile(entryFile(dir, e.version), body.getBytes(StandardCharsets.UTF_8)))
       throw new Cas.LostException(
         s"version ${e.version} of $dir was committed by another writer — " +
@@ -910,7 +751,7 @@ object VersionedLayout {
     // loudly like any other lost CAS.
     val ckptAfter = checkpointedVersion(dir)
     if (e.version <= ckptAfter &&
-        !log(dir).find(_.version == e.version).exists(se => renderEntry(se) == body)) {
+        !log(dir).find(_.version == e.version).exists(se => MetaJson.renderEntry(se) == body)) {
       Files.deleteIfExists(entryFile(dir, e.version).toPath)
       throw new Cas.LostException(
         s"version ${e.version} of $dir was committed by another writer and " +
@@ -943,7 +784,7 @@ object VersionedLayout {
       // Read BEFORE inserting: a vanished file (concurrent truncation)
       // throws here and caches nothing.
       val parsed = new String(Files.readAllBytes(f.toPath), StandardCharsets.UTF_8)
-        .linesIterator.filter(_.nonEmpty).map(parseEntry).toVector
+        .linesIterator.filter(_.nonEmpty).map(MetaJson.parseEntry).toVector
       if (ckptCache.size() > 256) ckptCache.clear()
       ckptCache.put(key, parsed)
       parsed
@@ -955,8 +796,8 @@ object VersionedLayout {
     * plus the per-version entry files committed after it. Entries the
     * checkpoint covers that still have a per-version file (the window
     * between a checkpoint landing and its truncation finishing) are
-    * deduplicated by the `> ckptV` filter. Without checkpoints this
-    * degrades to the plain one-file-per-version scan.
+    * skipped by file name, unparsed. Without checkpoints this degrades
+    * to the plain one-file-per-version scan.
     */
   def log(dir: String): Seq[LogEntry] = {
     val d = logDir(dir)
@@ -969,9 +810,11 @@ object VersionedLayout {
         .filter(_.getName.matches("ckpt-v\\d+\\.json")).sortBy(_.getName).lastOption
         .map(parseCkpt).getOrElse(Nil)
       val ckptV = head.lastOption.map(_.version).getOrElse(-1)
-      Some(head ++ files.filter(_.getName.matches("v\\d+\\.json")).sortBy(_.getName)
-        .map(f => parseEntry(new String(Files.readAllBytes(f.toPath), StandardCharsets.UTF_8)))
-        .filter(_.version > ckptV))
+      Some(head ++ files.filter(_.getName.matches("v\\d+\\.json"))
+        .map(f => f.getName.stripPrefix("v").stripSuffix(".json").toInt -> f)
+        .filter(_._1 > ckptV).sortBy(_._1)
+        .map(vf => MetaJson.parseEntry(
+          new String(Files.readAllBytes(vf._2.toPath), StandardCharsets.UTF_8))))
     }
   }
 
@@ -997,7 +840,8 @@ object VersionedLayout {
     val v = entries.last.version
     val f = ckptFile(dir, v)
     if (!f.isFile)
-      Cas.publishFile(f, entries.map(renderEntry).mkString("\n").getBytes(StandardCharsets.UTF_8))
+      Cas.publishFile(f,
+        entries.map(MetaJson.renderEntry).mkString("\n").getBytes(StandardCharsets.UTF_8))
     // Fold live Blooms into ONE consolidated sidecar (round 15 — the
     // same consolidation the entry files get): deterministic content
     // (ascending versions, sorted columns/pids, sourced from the same
@@ -1035,13 +879,14 @@ object VersionedLayout {
   /** Effective (STRICTLY MONOTONICIZED) commit time of each version —
     * `eff = max(prevEff + 1, ts)`, the DESCRIBE HISTORY timestamp
     * column. Wall clocks can step backwards between commits (NTP),
-    * two commits can land inside one millisecond, and pre-round-12
-    * entries carry no stamp at all (0); forcing each version onto its
-    * OWN effective millisecond (the same forced-monotonicity rule
-    * table formats apply to commit timestamps) means a timestamp
-    * never aliases two versions — so version → time → version
-    * round-trips exactly, which is what makes [[versionAtTimestamp]]
-    * resolution deterministic even for same-millisecond commit pairs.
+    * two commits can land inside one millisecond, and a clone's
+    * synthesized vacuum entry carries no stamp at all (0); forcing
+    * each version onto its OWN effective millisecond (the same
+    * forced-monotonicity rule table formats apply to commit
+    * timestamps) means a timestamp never aliases two versions — so
+    * version → time → version round-trips exactly, which is what makes
+    * [[versionAtTimestamp]] resolution deterministic even for
+    * same-millisecond commit pairs.
     */
   def commitTimes(dir: String): Seq[(Int, Long)] = {
     var eff = -1L
@@ -1077,16 +922,17 @@ object VersionedLayout {
     * of last midnight" as a zero-copy snapshot; resolution is the same
     * pure-log-metadata [[versionAtTimestamp]] the reads use.
     */
-  def cloneAsOfTimestamp(s: SparkSession, dir: String, dst: String, tsMs: Long): Unit =
-    cloneAsOf(s, dir, dst, versionAtTimestamp(dir, tsMs))
+  def cloneAsOfTimestamp(dir: String, dst: String, tsMs: Long): Unit =
+    cloneAsOf(dir, dst, versionAtTimestamp(dir, tsMs))
 
   /** DESCRIBE HISTORY, METADATA-ONLY: one row per committed version —
     * action, effective commit time (strictly monotone axis), restore
     * provenance (the target version a restore-shaped upsert carries),
-    * vacuum horizon, touched-pid count, txn stamp, and whether skip
-    * stats rode the entry. Pure log: building this frame runs ZERO
-    * Spark jobs, which is what makes it safe to expose as a SQL table
-    * function (`graft_layout_history`) a dashboard polls. The
+    * vacuum horizon, touched-pid count, txn stamp, and whether the
+    * primary stats column's bounds rode the entry. Pure log: building
+    * this frame runs ZERO Spark jobs, which is what makes it safe to
+    * expose as a SQL table function (`graft_layout_history`) a
+    * dashboard polls. The
     * data-anchored deep audit (feed mass, live counts) is q193's
     * separate, costed shape.
     */
@@ -1094,20 +940,17 @@ object VersionedLayout {
     val times = commitTimes(dir).toMap
     val s0 = s
     import s0.implicits._
+    lazy val primary = metaOf(dir).statsCols.headOption
     // Maintenance and evolution commits change zero LOGICAL rows by
     // definition; data commits report the recorded masses (-1 =
-    // written before the field existed — unknown, never guessed).
+    // not recorded — unknown, never guessed).
     val zeroRowActions = Set("compact", "majorcompact", "vacuum",
       "addcolumn", "dropcolumn", "renamecolumn", "widencolumn",
       "addfield", "dropfield", "renamefield", "widenfield")
     log(dir).map { e =>
-      (e.version.toLong, e.action, times(e.version),
-        if (e.restoreOf >= 0) e.restoreOf.toLong
-        // Legacy inference for pre-r14 entries (blind to v0 restores).
-        else if (e.action == "upsert" && e.horizon > 0) e.horizon.toLong
-        else -1L,
+      (e.version.toLong, e.action, times(e.version), e.restoreOf.toLong,
         if (e.action == "vacuum") e.horizon.toLong else -1L,
-        e.pids.size.toLong, e.txn, e.stats.nonEmpty,
+        e.pids.size.toLong, e.txn, primary.exists(e.statsM.contains),
         if (zeroRowActions(e.action)) 0L else e.rowsW,
         if (zeroRowActions(e.action)) 0L else e.rowsD)
     }.toDF("version", "action", "eff_commit_ts", "restored_from",
@@ -1131,6 +974,7 @@ object VersionedLayout {
     val s0 = s
     import s0.implicits._
     val head = entries.last.version
+    val meta = metaOf(dir)
     val zeroRowActions = Set("compact", "majorcompact", "vacuum",
       "addcolumn", "dropcolumn", "renamecolumn", "widencolumn",
       "addfield", "dropfield", "renamefield", "widenfield")
@@ -1138,9 +982,9 @@ object VersionedLayout {
     Seq((
       head.toLong, horizon(dir).toLong, checkpointedVersion(dir).toLong,
       entries.size.toLong,
-      keyColsOf(dir).mkString(","),
-      statsColsOf(dir).mkString(","),
-      bloomColsOf(dir).mkString(","),
+      meta.keyCols.mkString(","),
+      meta.statsCols.mkString(","),
+      meta.bloomCols.mkString(","),
       baseSources(dir, entries, head).size.toLong,
       segmentsAt(entries, head).size.toLong,
       entries.count(isCompaction).toLong,
@@ -1169,33 +1013,33 @@ object VersionedLayout {
       // `v` is both the range-partitioning measure and the stats
       // column: per-pid bounds are tight bands, so a selective AS-OF
       // range read prunes most sources from log metadata alone.
-      dir, legacyKeyCols, statsCol = Some("v"))
+      dir, Seq("l_orderkey", "l_linenumber", "v"), statsCol = Some("v"))
   }
 
   /** Version 0 for ANY table: `df` must carry an integer `pid`
     * partition column plus the row-identity `keyCols` (recorded in the
-    * layout's meta, see [[keyColsOf]]); everything else is payload.
+    * layout's [[Meta]]); everything else is payload.
     * No-op if v0 is already committed.
     */
   def writeBaseTable(s: SparkSession, df: DataFrame, dir: String,
       keyCols: Seq[String], statsCol: Option[String] = None,
       statsCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil): Unit = {
-    // The meta file is parsed with a plain splitter — identifier-shaped
-    // names only, and at least one (an empty key set would make every
-    // row identical for tombstone purposes).
+    // Identifier-shaped key and stats names only, and at least one key
+    // (an empty key set would make every row identical for tombstone
+    // purposes).
     require(keyCols.nonEmpty, "a layout needs at least one row-identity column")
     val allStats = (statsCol.toSeq ++ statsCols).distinct
     (keyCols ++ allStats).foreach(k => require(k.matches("[A-Za-z_][A-Za-z0-9_]*"),
-      s"column '$k' is not identifier-shaped — the layout meta cannot carry it"))
+      s"column '$k' is not identifier-shaped"))
     // Bloom columns may be struct FIELD paths of ANY depth (round 16
     // added one level — `meta.quality`; round 17 recurses — `meta.a.b`,
     // the judge's #6). The sidecar format ('|'-separated) and the meta
-    // list (quoted strings) carry dots verbatim.
+    // list carry dots verbatim.
     bloomCols.foreach(k => require(
       k.matches("[A-Za-z_][A-Za-z0-9_]*(\\.[A-Za-z_][A-Za-z0-9_]*)*"),
       s"Bloom column '$k' is not a column name or a dotted field path"))
-    // The log-entry parser locates the legacy triple array by its
-    // field name — a stats COLUMN spelled like the field would tear it.
+    // Reserved log-entry field names, kept so the set of accepted
+    // layouts stays what it was.
     allStats.foreach(k => require(k != "stats" && k != "statsm",
       s"'$k' cannot be a stats column (reserved log-entry field name)"))
     bloomCols.foreach(k => require(resolveTypeOf(df, k).exists(bloomableType),
@@ -1205,24 +1049,14 @@ object VersionedLayout {
     df.repartition(col("pid"))
       .write.mode("overwrite").partitionBy("pid").parquet(dir)
     logDir(dir).mkdirs()
-    // The base TYPES ride the meta (identifier-shaped names only, and
-    // simpleString emits a quote-free charset) — the typed-re-add
-    // conflict analysis needs base-origin physical types without a
-    // footer read.
-    val types = df.schema.fields
+    // The base TYPES ride the meta for identifier-shaped names — the
+    // only names the evolution verbs can add or rename to, so the only
+    // ones the typed-re-add conflict analysis can meet twice.
+    val types = df.schema.fields.toSeq
       .filter(_.name.matches("[A-Za-z_][A-Za-z0-9_]*"))
-      .map(f => s""""${f.name}":"${f.dataType.simpleString}"""").mkString(",")
-    Files.write(metaFile(dir).toPath,
-      (keyCols.mkString("{\"keyCols\":[\"", "\",\"", "\"]")
-        + allStats.headOption.map(c => s""","statsCol":"$c"""").getOrElse("")
-        + (if (allStats.size > 1)
-             allStats.mkString(""","statsCols":["""", "\",\"", "\"]")
-           else "")
-        + (if (bloomCols.nonEmpty)
-             bloomCols.distinct.mkString(""","bloomCols":["""", "\",\"", "\"]")
-           else "")
-        + s""","types":{$types}""" + "}")
-        .getBytes(StandardCharsets.UTF_8))
+      .map(f => f.name -> f.dataType.simpleString)
+    Files.write(metaFile(dir).toPath, MetaJson.renderMeta(
+      Meta(keyCols, allStats, bloomCols.distinct, types)).getBytes(StandardCharsets.UTF_8))
     // The v0 writer lists the pid dirs it just wrote: the one moment a
     // root listing is the committed state. Stats come from reading BACK
     // the written bytes (a pruned scan — cheaper than recomputing or
@@ -1230,9 +1064,9 @@ object VersionedLayout {
     // what landed.
     val pids = pidDirsUnder(dir)
     lazy val written = s.read.option("basePath", dir).parquet(pids.map(p => s"$dir/pid=$p"): _*)
-    val (stats, statsM) =
+    val statsM =
       if ((allStats.isEmpty && bloomCols.isEmpty) || pids.isEmpty)
-        (Nil, Map.empty[String, Seq[(Int, Long, Long)]])
+        Map.empty[String, Seq[(Int, Long, Long)]]
       else recordStats(dir, 0, "", written)
     // Commit-metadata row count (parquet footer metadata, no column
     // bytes read) — what DESCRIBE HISTORY serves without a data pass.
@@ -1240,12 +1074,12 @@ object VersionedLayout {
     // The v0 entry records the base pid DOMAIN — the closed set of
     // partitions every later segment must stay inside (see
     // [[requireInDomain]]) — and the pid dirs AS-OF reads resolve.
-    commit(dir, LogEntry(0, "write", pids, 0, stats = stats,
+    commit(dir, LogEntry(0, "write", pids, 0,
       rowsW = nBase, rowsD = 0L, statsM = statsM))
   }
 
-  /** The closed pid domain committed at v0 (empty set = legacy layout
-    * written before the domain was recorded; validation is skipped).
+  /** The closed pid domain committed at v0 (empty set = an empty base
+    * wrote no pid dir; validation is skipped).
     */
   private def pidDomain(entries: Seq[LogEntry]): Set[Int] =
     // The CURRENT scheme's closed pid set: the last scheme-changing
@@ -1309,7 +1143,7 @@ object VersionedLayout {
   private def writeTombs(dir: String, ver: Int, tag: String, rows: DataFrame,
       single: Boolean = true): (Long, Seq[Int]) = {
     val obs = org.apache.spark.sql.Observation()
-    val t = rows.select(col("pid").cast("int").as("pid") +: keyColsOf(dir).map(col): _*)
+    val t = rows.select(col("pid").cast("int").as("pid") +: metaOf(dir).keyCols.map(col): _*)
       .observe(obs, count(lit(1)).as("n"), collect_set(col("pid")).as("pids"))
     (if (single) t.coalesce(1) else t).write.mode("overwrite").parquet(tombDir(dir, ver, tag))
     val m = obs.get
@@ -1345,7 +1179,7 @@ object VersionedLayout {
       txn: Long = -1L): Int = {
     val ver = currentVersion(dir) + 1
     val tag = Cas.writerTag
-    val keyCols = keyColsOf(dir)
+    val keyCols = metaOf(dir).keyCols
     val (n, tpids) = writeTombs(dir, ver, tag, readAsOf(s, dir, ver - 1)
       .join(keys.select(keyCols.map(col): _*), keyCols, "left_semi"))
     commit(dir, LogEntry(ver, "delete", Nil, 0, txn, tag,
@@ -1386,9 +1220,9 @@ object VersionedLayout {
     requireInDomain(dir, rows)
     rows.write.mode("overwrite").parquet(insertDir(dir, ver, tag))
     val seg = s.read.parquet(insertDir(dir, ver, tag))
-    val (st, stM) = recordStats(dir, ver, tag, seg)
+    val stM = recordStats(dir, ver, tag, seg)
     commit(dir, LogEntry(ver, "insert", Nil, 0, txn, tag,
-      stats = st, statsM = stM,
+      statsM = stM,
       rowsW = seg.count(), rowsD = 0L))
     ver
   }
@@ -1452,7 +1286,7 @@ object VersionedLayout {
   def dropColumn(s: SparkSession, dir: String, name: String): Int = {
     val entries = log(dir)
     require(entries.nonEmpty, s"no committed layout at $dir")
-    require(name != "pid" && !keyColsOf(dir).contains(name),
+    require(name != "pid" && !metaOf(dir).keyCols.contains(name),
       s"column '$name' is a row-identity/partition column of $dir — cannot drop")
     require(fieldEventsOf(entries, name).isEmpty,
       s"column '$name' of $dir carries field-evolution history — top-level " +
@@ -1495,7 +1329,7 @@ object VersionedLayout {
     val target = DataType.fromDDL(toType)
     val entries = log(dir)
     require(entries.nonEmpty, s"no committed layout at $dir")
-    require(name != "pid" && !keyColsOf(dir).contains(name),
+    require(name != "pid" && !metaOf(dir).keyCols.contains(name),
       s"column '$name' is a row-identity/partition column of $dir — cannot widen")
     val head = readAsOf(s, dir, entries.last.version)
     require(head.columns.contains(name),
@@ -1542,7 +1376,7 @@ object VersionedLayout {
       s"column name '$to' is not identifier-shaped")
     val entries = log(dir)
     require(entries.nonEmpty, s"no committed layout at $dir")
-    require(from != "pid" && !keyColsOf(dir).contains(from),
+    require(from != "pid" && !metaOf(dir).keyCols.contains(from),
       s"column '$from' is a row-identity/partition column of $dir — cannot rename")
     require(fieldEventsOf(entries, from).isEmpty,
       s"column '$from' of $dir carries field-evolution history — renaming a " +
@@ -1601,12 +1435,12 @@ object VersionedLayout {
     * baseline every field-evolution replay starts from. Field
     * evolution requires it (base-origin struct columns only; an
     * addColumn'd struct cannot exist — the add-type charset is
-    * scalar-only — and pre-round-13 layouts record no base types).
+    * scalar-only).
     */
   private def originalFieldsOf(dir: String, parent: String): StructType = {
-    val ddl = baseTypesOf(dir).getOrElse(parent, throw new IllegalArgumentException(
-      s"'$parent' of $dir has no recorded base type — field evolution needs a " +
-        "round-13+ layout (writeBaseTable records base types)"))
+    val ddl = metaOf(dir).typeOf.getOrElse(parent, throw new IllegalArgumentException(
+      s"'$parent' of $dir has no recorded base type — field evolution applies " +
+        "to identifier-named base columns"))
     DataType.fromDDL(ddl) match {
       case st: StructType => st
       case other => throw new IllegalArgumentException(
@@ -1670,7 +1504,7 @@ object VersionedLayout {
     */
   private def requireFieldEvolvable(dir: String, entries: Seq[LogEntry],
       parent: String): Unit = {
-    require(parent != "pid" && !keyColsOf(dir).contains(parent),
+    require(parent != "pid" && !metaOf(dir).keyCols.contains(parent),
       s"'$parent' is a row-identity/partition column of $dir")
     val touched = entries.exists(e =>
       Set("addcolumn", "dropcolumn", "renamecolumn", "widencolumn")(e.action)
@@ -1691,7 +1525,7 @@ object VersionedLayout {
     * FRESH across the struct's whole field history (no reuse — see
     * the section comment).
     */
-  def addField(s: SparkSession, dir: String, path: String, sqlType: String): Int = {
+  def addField(dir: String, path: String, sqlType: String): Int = {
     val (parent, f) = fieldPathParts(path)
     require(f.matches("[A-Za-z_][A-Za-z0-9_]*"),
       s"field name '$f' is not identifier-shaped")
@@ -1714,7 +1548,7 @@ object VersionedLayout {
     * at-or-above mask the field, reads below still serve it, the next
     * fold materializes the drop. The name never returns.
     */
-  def dropField(s: SparkSession, dir: String, path: String): Int = {
+  def dropField(dir: String, path: String): Int = {
     val (parent, f) = fieldPathParts(path)
     val entries = log(dir)
     require(entries.nonEmpty, s"no committed layout at $dir")
@@ -1736,7 +1570,7 @@ object VersionedLayout {
     * history, so a plain coalesce is exact). `colType` carries the NEW
     * NAME, like [[renameColumn]]'s entry.
     */
-  def renameField(s: SparkSession, dir: String, path: String, to: String): Int = {
+  def renameField(dir: String, path: String, to: String): Int = {
     val (parent, f) = fieldPathParts(path)
     require(to.matches("[A-Za-z_][A-Za-z0-9_]*"),
       s"field name '$to' is not identifier-shaped")
@@ -1759,7 +1593,7 @@ object VersionedLayout {
     * same lossless-only [[widenChain]] as the top-level leg; old bytes
     * coerce at plan time, the next fold materializes the wide type.
     */
-  def widenField(s: SparkSession, dir: String, path: String, toType: String): Int = {
+  def widenField(dir: String, path: String, toType: String): Int = {
     val (parent, f) = fieldPathParts(path)
     require(toType.matches("[A-Za-z0-9_(), ]*"),
       s"field type '$toType' cannot ride the log entry (odd character)")
@@ -1853,9 +1687,9 @@ object VersionedLayout {
     val newRows = rows.localCheckpoint()
     requireInDomain(dir, newRows)
     newRows.write.mode("overwrite").parquet(insertDir(dir, ver, tag))
-    val (st, stM) = recordStats(dir, ver, tag, newRows)
+    val stM = recordStats(dir, ver, tag, newRows)
     commit(dir, LogEntry(ver, "upsert", Nil, 0, txn, tag,
-      stats = st, statsM = stM,
+      statsM = stM,
       rowsW = newRows.count(), rowsD = n, tpids = tpids))
     ver
   }
@@ -1879,9 +1713,9 @@ object VersionedLayout {
     val replacements = transform(matched).localCheckpoint()
     requireInDomain(dir, replacements)
     replacements.write.mode("overwrite").parquet(insertDir(dir, ver, tag))
-    val (st, stM) = recordStats(dir, ver, tag, replacements)
+    val stM = recordStats(dir, ver, tag, replacements)
     commit(dir, LogEntry(ver, "upsert", Nil, 0, tag = tag,
-      stats = st, statsM = stM,
+      statsM = stM,
       rowsW = replacements.count(), rowsD = n, tpids = tpids))
     ver
   }
@@ -1939,7 +1773,7 @@ object VersionedLayout {
       bySourceDeleteCond: Option[org.apache.spark.sql.Column] = None,
       bySourceUpdateCond: Option[org.apache.spark.sql.Column] = None,
       bySourceUpdateSet: Map[String, org.apache.spark.sql.Column] = Map.empty): Int = {
-    val keyCols = keyColsOf(dir)
+    val keyCols = metaOf(dir).keyCols
     val banned = updateSet.keySet.intersect((keyCols :+ "pid").toSet)
     require(banned.isEmpty,
       s"updateSet may not assign key/placement column(s) ${banned.mkString(",")} — " +
@@ -2059,9 +1893,9 @@ object VersionedLayout {
       .reduce(_ unionByName _).localCheckpoint()
     requireInDomain(dir, newRows)
     newRows.write.mode("overwrite").parquet(insertDir(dir, ver, tag))
-    val (st, stM) = recordStats(dir, ver, tag, newRows)
+    val stM = recordStats(dir, ver, tag, newRows)
     commit(dir, LogEntry(ver, "upsert", Nil, 0, txn, tag,
-      stats = st, statsM = stM,
+      statsM = stM,
       rowsW = newRows.count(), rowsD = nDel, tpids = tpids))
     ver
   }
@@ -2158,11 +1992,12 @@ object VersionedLayout {
     // birth gate), so they are dropped after pre-image selection. No
     // cast between incarnations ever happens — the refusal this
     // replaces guarded a cast the projection never needed.
-    val restoreFlips = feedFlipVersions(entries, baseTypesOf(dir),
-      keyColsOf(dir).toSet + "pid", toVersion, head)
+    val meta = metaOf(dir)
+    val restoreFlips = feedFlipVersions(entries, meta.typeOf,
+      meta.keyCols.toSet + "pid", toVersion, head)
     val ver = head + 1
     val tag = Cas.writerTag
-    val key = keyColsOf(dir)
+    val key = meta.keyCols
     val feed = (if (restoreFlips.nonEmpty) changeFeedTagged(s, dir, toVersion, head)
                 else changeFeed(s, dir, toVersion, head)).localCheckpoint()
     // The tombstone key set is bounded by CHANGED keys, not the table:
@@ -2267,9 +2102,9 @@ object VersionedLayout {
     }: _*)
     projected.write.mode("overwrite").parquet(insertDir(dir, ver, tag))
     val seg = s.read.parquet(insertDir(dir, ver, tag))
-    val (rSt, rStM) = recordStats(dir, ver, tag, seg)
+    val rStM = recordStats(dir, ver, tag, seg)
     commit(dir, LogEntry(ver, "upsert", Nil, horizon = toVersion, txn = txn, tag = tag,
-      stats = rSt, statsM = rStM, tpids = tpids,
+      statsM = rStM, tpids = tpids,
       rowsW = seg.count(), rowsD = nDel,
       // Unambiguous provenance: horizon = 0 made a legal restore TO
       // VERSION 0 indistinguishable from a plain upsert (round-13
@@ -2304,7 +2139,7 @@ object VersionedLayout {
       // matches nothing, so an already-compacted pid never re-crosses the
       // threshold (compaction is idempotent across replayed sessions;
       // counting keys would re-rewrite such pids forever).
-      val keys = keyColsOf(dir)
+      val keys = metaOf(dir).keyCols
       val pids = tombsOpt match {
         case Some(tombs) if sources.nonEmpty =>
           baseFrames(s, dir, entries, sources)
@@ -2455,11 +2290,9 @@ object VersionedLayout {
     */
   private def withOutputStats(s: SparkSession, dir: String, out: LogEntry): LogEntry = {
     val root = rootOf(dir, out)
-    if ((statsColsOf(dir).isEmpty && bloomColsOf(dir).isEmpty) || pidDirsUnder(root).isEmpty) out
-    else {
-      val (st, stM) = recordStats(dir, out.version, out.tag, s.read.parquet(root))
-      out.copy(stats = st, statsM = stM)
-    }
+    val meta = metaOf(dir)
+    if ((meta.statsCols.isEmpty && meta.bloomCols.isEmpty) || pidDirsUnder(root).isEmpty) out
+    else out.copy(statsM = recordStats(dir, out.version, out.tag, s.read.parquet(root)))
   }
 
   /** Drop the data dirs that only versions BELOW `keepFrom` read, GC the
@@ -2763,8 +2596,9 @@ object VersionedLayout {
     * FLIPS non-coercibly (a typed re-add) — the cut points a feed
     * consumer must split at. Tokens the union can still COERCE are not
     * a flip: the numeric family widens losslessly under unionByName,
-    * and an opaque legacy "base" token stays lenient (a truly mixed
-    * legacy union fails loudly on its own). Pure log metadata.
+    * and an opaque "base" token (an untyped base column, see
+    * [[tokensOf]]) stays lenient (a truly mixed union fails loudly on
+    * its own). Pure log metadata.
     */
   private def feedFlipVersions(entries: Seq[LogEntry], baseTypes: Map[String, String],
       protectedCols: Set[String], fromV: Int, toV: Int): Seq[Int] = {
@@ -2802,10 +2636,11 @@ object VersionedLayout {
     * pre-r14 refusal. One window (the whole range) when no flip is
     * crossed. Pure log metadata — no data pass, no Spark job.
     */
-  def changeFeedWindows(s: SparkSession, dir: String, fromV: Int, toV: Int): Seq[(Int, Int)] = {
+  def changeFeedWindows(dir: String, fromV: Int, toV: Int): Seq[(Int, Int)] = {
     val entries = log(dir)
-    val flips = feedFlipVersions(entries, baseTypesOf(dir),
-      keyColsOf(dir).toSet + "pid", fromV, toV)
+    val meta = metaOf(dir)
+    val flips = feedFlipVersions(entries, meta.typeOf,
+      meta.keyCols.toSet + "pid", fromV, toV)
     val cuts = (fromV +: flips.map(_ - 1).filter(c => c > fromV && c < toV))
       .distinct.sorted :+ toV
     cuts.sliding(2).collect { case Seq(a, b) => (a, b) }.toSeq
@@ -2850,7 +2685,8 @@ object VersionedLayout {
 
   private def buildChangeFeed(s: SparkSession, dir: String, fromV: Int, toV: Int,
       forceTag: Boolean): DataFrame = {
-    val key = "pid" +: keyColsOf(dir)
+    val meta = metaOf(dir)
+    val key = "pid" +: meta.keyCols
     val entries = log(dir)
     // A feed whose range crosses a TYPE FLIP of a physical name (typed
     // re-add) cannot union its parts under the plain name — one name
@@ -2862,12 +2698,12 @@ object VersionedLayout {
     // consumers who want plain-named, type-uniform frames split the
     // subscription at [[changeFeedWindows]]'s boundaries instead,
     // which is what a type change forces on them anyway.
-    val baseTypes = baseTypesOf(dir)
+    val baseTypes = meta.typeOf
     val conflicts = typeConflictedNames(
       identitiesAt(entries, entries.last.version)._1, baseTypes,
-      keyColsOf(dir).toSet + "pid")
+      meta.keyCols.toSet + "pid")
     val flips = feedFlipVersions(entries, baseTypes,
-      keyColsOf(dir).toSet + "pid", fromV, toV)
+      meta.keyCols.toSet + "pid", fromV, toV)
     // Within a type-uniform range the plain name is kept (zero schema
     // change vs pre-r14); across a flip — or when the caller forces it
     // (streaming subscriptions with a pinned schema) — each part's
@@ -2898,7 +2734,7 @@ object VersionedLayout {
           // those partitions (pid is the base read's partition column:
           // untouched pid dirs are never listed or scanned, instead of
           // one full-table scan per delete version in the window).
-          // Nil = pre-r18 entry = unknown = unpruned.
+          // Nil = nothing recorded = unpruned.
           val pre0 = readAsOf(s, dir, e.version - 1)
           val pre = if (e.tpids.isEmpty) pre0
             else pre0.where(col("pid").isin(e.tpids.map(Int.box): _*))
@@ -2986,7 +2822,7 @@ object VersionedLayout {
     * are gone); a dir missing above the horizon fails the clone loudly
     * rather than linking a silent gap.
     */
-  def cloneAsOf(s: SparkSession, dir: String, dst: String, v: Int): Unit = {
+  def cloneAsOf(dir: String, dst: String, v: Int): Unit = {
     val entries = log(dir)
     val srcHorizon = horizon(dir)
     require(v >= 0 && v <= entries.last.version, s"version $v outside log 0..${entries.last.version}")
@@ -3017,14 +2853,12 @@ object VersionedLayout {
     // The clone's log ships as ONE checkpoint rendered from the parsed
     // entries (not per-file links): the source may have checkpointed and
     // truncated its own per-version files, and the clone starts life
-    // with the bounded-metadata read path anyway. The table meta (key
-    // columns) travels too — without it a generic clone would fall back
-    // to the legacy key set.
+    // with the bounded-metadata read path anyway. The table meta
+    // travels too.
     Files.createDirectories(Paths.get(tmp, "_log"))
-    if (metaFile(dir).isFile)
-      Files.copy(metaFile(dir).toPath, Paths.get(tmp, "_log", "meta.json"))
+    Files.copy(metaFile(dir).toPath, Paths.get(tmp, "_log", "meta.json"))
     Files.write(Paths.get(tmp, "_log", f"ckpt-v$v%05d.json"),
-      kept.map(renderEntry).mkString("\n").getBytes(StandardCharsets.UTF_8))
+      kept.map(MetaJson.renderEntry).mkString("\n").getBytes(StandardCharsets.UTF_8))
     // Carry the source's vacuum horizon: when the only vacuum that raised
     // it sits ABOVE v, dropping it would reset the clone's horizon to 0 —
     // advertising AS-OF history whose files the source already deleted
@@ -3034,7 +2868,7 @@ object VersionedLayout {
       .maxOption.getOrElse(0)
     if (srcHorizon > carriedHorizon)
       Files.write(Paths.get(tmp, "_log", f"v${v + 1}%05d.json"),
-        renderEntry(LogEntry(v + 1, "vacuum", Nil, srcHorizon))
+        MetaJson.renderEntry(LogEntry(v + 1, "vacuum", Nil, srcHorizon))
           .getBytes(StandardCharsets.UTF_8))
     Files.createDirectories(Paths.get(dst).getParent)
     // A cloner that lost the publish race leaves the winner's copy,
@@ -3102,8 +2936,9 @@ object VersionedLayout {
 
   /** The type TOKENS identity `it` can carry across its lifetime: its
     * declared add type — or, for a base-origin column, the base type
-    * recorded in the layout meta (opaque "base" for pre-round-13
-    * layouts without one) — plus every widen target. Two identities
+    * recorded in the layout meta (opaque "base" for a base column whose
+    * name is not identifier-shaped, which the meta does not type) —
+    * plus every widen target. Two identities
     * sharing a physical name whose token seqs differ make that name
     * TYPE-CONFLICTED: its sources must be aliased apart before the
     * plan-time union (see [[readAsOfImpl]]).
@@ -3149,14 +2984,12 @@ object VersionedLayout {
       // a base-origin column untouched through w is invisible to it yet
       // alive — its token is the recorded base type. A name some event
       // at-or-below w DID mention but the scan does not serve is dead at
-      // w (None — the caller drops those bytes). A name absent from a
-      // recorded base-type map is a ghost (None likewise); only layouts
-      // without the map (pre-round-13) fall through to the opaque token.
+      // w (None — the caller drops those bytes). A name absent from the
+      // recorded base-type map is a ghost (None likewise).
       val mentioned = entries.exists(e => e.version <= w
         && (e.colName == n || (e.action == "renamecolumn" && e.colType == n)))
       if (mentioned) None
-      else if (baseTypes.nonEmpty) baseTypes.get(n).map(normType)
-      else Some("base")
+      else baseTypes.get(n).map(normType)
     }
 
   /** The version whose committed schema the CURRENT bytes of a base
@@ -3185,7 +3018,7 @@ object VersionedLayout {
   /** The table AS OF `v` restricted to `statsCol BETWEEN lo AND hi`,
     * with PLAN-TIME DATA SKIPPING: whole sources (base pid dirs and
     * insert segments) whose commit-time [min,max]
-    * bounds ([[LogEntry.stats]]) miss the range are dropped from the
+    * bounds ([[LogEntry.statsM]]) miss the range are dropped from the
     * plan before any file is listed or opened — log metadata only, the
     * zone-map move (q129) on a MUTABLE table's whole history.
     * Exactness never depends on the pruning (the range predicate
@@ -3199,7 +3032,7 @@ object VersionedLayout {
     * serving an un-pruned or wrong-identity band would be worse.
     */
   def readAsOfRange(s: SparkSession, dir: String, v: Int, lo: Long, hi: Long): DataFrame = {
-    val primary = statsColsOf(dir).headOption.getOrElse(throw new IllegalArgumentException(
+    val primary = metaOf(dir).statsCols.headOption.getOrElse(throw new IllegalArgumentException(
       s"$dir records no stats column — readAsOfRange needs one (writeBaseTable's statsCol)"))
     readAsOfRangeResolved(s, dir, v, primary, lo, hi)
   }
@@ -3219,7 +3052,7 @@ object VersionedLayout {
   def readAsOfRangeOn(s: SparkSession, dir: String, v: Int,
       column: String, lo: Long, hi: Long): DataFrame = {
     val entries = log(dir)
-    val declared = statsColsOf(dir)
+    val declared = metaOf(dir).statsCols
     val original = declared.find(dc =>
       statsIdentityAt(entries, dc, v).exists(_.eras.last._1 == column))
       .getOrElse(throw new IllegalArgumentException(
@@ -3232,7 +3065,7 @@ object VersionedLayout {
     * cannot serve: on a key that is hashed or scattered across the
     * range axis every source's [min,max] covers every value, but the
     * per-(source, pid) Bloom filters recorded at write time
-    * ([[bloomColsOf]]) answer "definitely absent" from log-side
+    * ([[Meta.bloomCols]]) answer "definitely absent" from log-side
     * metadata alone, so whole sources (base pid dirs, insert segments)
     * leave the plan before a single data file is
     * listed. Same contracts as [[readAsOfRangeOn]]: `column` is
@@ -3260,21 +3093,24 @@ object VersionedLayout {
       bloomMightContain(_, _, value), c => c === value)
 
   /** The declared type token identity `it` carries at `v` — the last
-    * at-or-below-v widen target, else the add/base type ("base" only
-    * for pre-round-13 layouts without a recorded types map).
+    * at-or-below-v widen target, else the add/base type; "base" when
+    * the meta records none. A Bloom field path reaches that when its
+    * parent struct has a field whose name is not identifier-shaped:
+    * the struct's recorded `simpleString` does not parse as DDL.
     */
   private def declaredTokenOf(dir: String, it: ColIdentity): String =
     it.widens.lastOption.map(w => normType(w._2)).getOrElse {
       if (it.birth == 0 && it.addType.isEmpty) {
         val name = it.eras.head._1
+        val baseTypes = metaOf(dir).typeOf
         // A FIELD-path identity (round 16: field-keyed Blooms; round
         // 17: any depth) declares its type through the parent's
         // recorded base struct DDL, walked step by step.
         val fromBase =
-          if (!name.contains(".")) baseTypesOf(dir).get(name)
+          if (!name.contains(".")) baseTypes.get(name)
           else {
             val parts = name.split("\\.")
-            val top = baseTypesOf(dir).get(parts(0)).flatMap(ddl =>
+            val top = baseTypes.get(parts(0)).flatMap(ddl =>
               scala.util.Try(DataType.fromDDL(ddl)).toOption)
             parts.drop(1).foldLeft(top) { (cur, step) =>
               cur.flatMap {
@@ -3299,13 +3135,9 @@ object VersionedLayout {
   private def requireProbeType(dir: String, it: ColIdentity, v: Int,
       column: String, integralProbe: Boolean): Unit = {
     val token = declaredTokenOf(dir, it)
-    // "base" = a pre-round-13 layout with no recorded base-types map:
-    // the declared type is UNKNOWN, so neither overload can be proven
-    // wrong — permit the probe (preserving pre-round-15 behavior; the
-    // caller picked the overload matching how they wrote the column).
-    // Refusing both overloads would make point probes on older layouts
-    // unusable, with each error recommending the other dead end
-    // (round-16 advisor).
+    // "base": the declared type is UNKNOWN, so neither overload can be
+    // proven wrong — permit the probe (the caller picked the overload
+    // matching how they wrote the column).
     if (token == "base") return
     val ok = if (integralProbe) integralTokens(token) else token == "string"
     require(ok,
@@ -3320,7 +3152,7 @@ object VersionedLayout {
       might: (Int, Array[Byte]) => Boolean,
       pred: org.apache.spark.sql.Column => org.apache.spark.sql.Column): DataFrame = {
     val entries = log(dir)
-    val declared = bloomColsOf(dir)
+    val declared = metaOf(dir).bloomCols
     val original = declared.find(dc =>
       skipIdentityAt(dir, entries, dc, v).exists(_.eras.last._1 == column))
       .getOrElse(throw new IllegalArgumentException(
@@ -3345,7 +3177,7 @@ object VersionedLayout {
       column: String, values: Seq[Long]): DataFrame = {
     require(values.nonEmpty, "readAsOfPoints needs at least one probe value")
     val entries = log(dir)
-    val declared = bloomColsOf(dir)
+    val declared = metaOf(dir).bloomCols
     val original = declared.find(dc =>
       skipIdentityAt(dir, entries, dc, v).exists(_.eras.last._1 == column))
       .getOrElse(throw new IllegalArgumentException(
@@ -3367,9 +3199,8 @@ object VersionedLayout {
       throw new IllegalArgumentException(
         s"stats column '$original' of $dir does not exist at v$v (dropped) — " +
           "stats-pruned reads need a live stats identity; use readAsOf(...).where(...)"))
-    val legacyPrimary = statsColOf(dir)
     val spec = PruneSpec(it, (e, phys) =>
-      statsTriples(e, phys, legacyPrimary)
+      e.statsM.getOrElse(phys, Nil)
         .map(t => t._1 -> (t._3 >= lo && t._2 <= hi)).toMap)
     readAsOfImpl(s, dir, v, Some(spec))
       .where(col(it.eras.last._1).between(lo, hi))
@@ -3451,10 +3282,11 @@ object VersionedLayout {
     // plan-time union holds one column per (name, type) and each
     // identity's era arms read only its own type chain. Zero cost (and
     // zero plan change) while no name is conflicted.
-    val baseTypes = baseTypesOf(dir)
+    val meta = metaOf(dir)
+    val baseTypes = meta.typeOf
     val conflicts = typeConflictedNames(
       identitiesAt(entries, entries.last.version)._1, baseTypes,
-      protectedCols = keyColsOf(dir).toSet + "pid")
+      protectedCols = meta.keyCols.toSet + "pid")
     def aliasConflicted(df: DataFrame, sigVersion: Int): DataFrame =
       if (conflicts.isEmpty) df
       else conflicts.foldLeft(df) { (d, n) =>
@@ -3503,7 +3335,7 @@ object VersionedLayout {
         // sink's empty v0): no bytes exist anywhere, so the schema comes
         // from the base types the meta RECORDED at creation, in
         // declaration order. Zero rows is the answer.
-        val typed = baseTypeSeqOf(dir)
+        val typed = meta.types
         if (typed.isEmpty) throw new IllegalStateException(
           s"$dir has no base data files to derive a schema from")
         s.createDataFrame(
@@ -3535,7 +3367,7 @@ object VersionedLayout {
       case None => data // no mask in range: plain scan
       case Some(t) =>
         val tombs = t.alias("tb")
-        val joinKey = ("pid" +: keyColsOf(dir))
+        val joinKey = ("pid" +: meta.keyCols)
           .map(k => col(s"dt.$k") === col(s"tb.$k"))
           .reduce(_ && _)
         data.join(tombs, joinKey && col("tb._tomb_ver") > col("dt._src_ver"), "left_anti")

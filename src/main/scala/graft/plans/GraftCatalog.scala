@@ -13,7 +13,7 @@ import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.operators.{Cas, VersionedLayout}
+import graft.operators.{Cas, MetaJson, VersionedLayout}
 import graft.streaming.GraftLayoutTable
 
 /** DSv2 TABLE CATALOG for the versioned layout (round 16) — NAMED
@@ -208,23 +208,23 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
         if (names.length == 1)
           VersionedLayout.addColumn(spark, dir, names.head, a.dataType().simpleString)
         else
-          VersionedLayout.addField(spark, dir, names.mkString("."), a.dataType().simpleString)
+          VersionedLayout.addField(dir, names.mkString("."), a.dataType().simpleString)
       case r: TableChange.RenameColumn =>
         val names = r.fieldNames()
         if (names.length == 1)
           VersionedLayout.renameColumn(spark, dir, names.head, r.newName())
         else
-          VersionedLayout.renameField(spark, dir, names.mkString("."), r.newName())
+          VersionedLayout.renameField(dir, names.mkString("."), r.newName())
       case d: TableChange.DeleteColumn =>
         val names = d.fieldNames()
         if (names.length == 1) VersionedLayout.dropColumn(spark, dir, names.head)
-        else VersionedLayout.dropField(spark, dir, names.mkString("."))
+        else VersionedLayout.dropField(dir, names.mkString("."))
       case t: TableChange.UpdateColumnType =>
         val names = t.fieldNames()
         if (names.length == 1)
           VersionedLayout.widenColumn(spark, dir, names.head, t.newDataType().simpleString)
         else
-          VersionedLayout.widenField(spark, dir, names.mkString("."), t.newDataType().simpleString)
+          VersionedLayout.widenField(dir, names.mkString("."), t.newDataType().simpleString)
       case p: TableChange.SetProperty if p.property() == "location" =>
         GraftCatalog.casReplace(warehouse, requireFlat(ident).toLowerCase,
           GraftCatalog.RegEntry(GraftCatalog.plainPath(p.value())))
@@ -445,22 +445,17 @@ object GraftCatalog {
     if (p.startsWith("file:")) new java.io.File(java.net.URI.create(p).getPath).getPath
     else p
 
-  // --- Registry storage (round 17): ONE FILE PER TABLE under
-  // `<warehouse>/tables/<name>.json`, published by [[Cas.publishFile]]
-  // like a layout log entry. The previous whole-file `catalog.json` was
-  // a JVM-locked read-modify-write: two JVMs sharing a durable
-  // warehouse that registered tables concurrently raced
-  // last-writer-wins, and the loser's registration silently vanished.
-  // Per-table files make every create naturally conflict-free: CREATE
-  // racing CREATE yields exactly one winner and the loser an error
-  // naming the existing table, across processes, with no lock.
-  // A legacy `catalog.json` (written by rounds <17) is still READ as a
-  // fallback layer; it is never written again.
+  // --- Registry storage: ONE FILE PER TABLE under
+  // `<warehouse>/tables/<name>.json` (a [[RegEntry]], rendered by
+  // [[graft.operators.MetaJson]]), published by [[Cas.publishFile]]
+  // like a layout log entry. Per-table files make every create
+  // naturally conflict-free: CREATE racing CREATE yields exactly one
+  // winner and the loser an error naming the existing table, across
+  // processes, with no lock.
 
   private def tablesDir(warehouse: String) = new java.io.File(warehouse, "tables")
   private def entryFile(warehouse: String, name: String) =
     new java.io.File(tablesDir(warehouse), s"$name.json")
-  private def legacyFile(warehouse: String) = new java.io.File(warehouse, "catalog.json")
 
   private def requireShaped(k: String, v: String): Unit = {
     require(!v.contains("\"") && !v.contains("\\"),
@@ -473,42 +468,19 @@ object GraftCatalog {
     * from), `renamingTo` on the OLD entry (the intent, stamped before
     * the new name is created). Both are inert outside a rename window.
     */
-  private[plans] final case class RegEntry(dir: String,
+  private[graft] final case class RegEntry(dir: String,
       renamedFrom: Option[String] = None, renamingTo: Option[String] = None)
 
-  private def renderEntry(e: RegEntry): String =
-    s"""{"dir":"${e.dir}"""" +
-      e.renamedFrom.map(o => s""","renamedFrom":"$o"""").getOrElse("") +
-      e.renamingTo.map(o => s""","renamingTo":"$o"""").getOrElse("") + "}"
-
-  private def parseEntry(body: String): Option[RegEntry] =
-    """"dir":"([^"]*)"""".r.findFirstMatchIn(body).map { m =>
-      RegEntry(m.group(1),
-        """"renamedFrom":"([a-z_][a-z0-9_]*)"""".r.findFirstMatchIn(body).map(_.group(1)),
-        """"renamingTo":"([a-z_][a-z0-9_]*)"""".r.findFirstMatchIn(body).map(_.group(1)))
-    }
-
-  private def readEntries(warehouse: String): Map[String, RegEntry] = {
-    val perTable = Option(tablesDir(warehouse).listFiles())
+  private def readEntries(warehouse: String): Map[String, RegEntry] =
+    Option(tablesDir(warehouse).listFiles())
       .getOrElse(Array.empty[java.io.File])
       .filter(f => f.isFile && f.getName.endsWith(".json"))
       .flatMap { f =>
         val n = f.getName.stripSuffix(".json")
         if (!n.matches("[a-z_][a-z0-9_]*")) None
-        else parseEntry(new String(Files.readAllBytes(f.toPath),
-          StandardCharsets.UTF_8)).map(n -> _)
+        else Some(n -> MetaJson.parseReg(new String(Files.readAllBytes(f.toPath),
+          StandardCharsets.UTF_8)))
       }.toMap
-    val legacy = {
-      val f = legacyFile(warehouse)
-      if (!f.isFile) Map.empty[String, RegEntry]
-      else {
-        val body = new String(Files.readAllBytes(f.toPath), StandardCharsets.UTF_8)
-        """"([A-Za-z_][A-Za-z0-9_]*)":"([^"]*)"""".r.findAllMatchIn(body)
-          .map(m => m.group(1) -> RegEntry(m.group(2), None)).toMap
-      }
-    }
-    legacy ++ perTable
-  }
 
   /** A name is RENAMED-AWAY (logically absent) when its own entry
     * carries a `renamingTo` intent AND the intent's target exists
@@ -537,13 +509,9 @@ object GraftCatalog {
     */
   private[plans] def casCreate(warehouse: String, name: String, e: RegEntry): Unit = {
     requireShaped(name, e.dir)
-    require(!legacyFile(warehouse).isFile || !registry(warehouse).contains(name) ||
-        entryFile(warehouse, name).isFile,
-      s"table '$name' is registered in this warehouse's legacy catalog.json — " +
-        "drop it there first (legacy entries are read-only)")
     tablesDir(warehouse).mkdirs()
     val f = entryFile(warehouse, name)
-    val body = renderEntry(e).getBytes(StandardCharsets.UTF_8)
+    val body = MetaJson.renderReg(e).getBytes(StandardCharsets.UTF_8)
     val won = Cas.publishFile(f, body) || (renamedAway(readEntries(warehouse), name) && {
       // Stale loser of a crashed rename: repair and retry ONCE.
       Files.deleteIfExists(f.toPath)
@@ -558,39 +526,16 @@ object GraftCatalog {
     */
   private[plans] def casReplace(warehouse: String, name: String, e: RegEntry): Unit = {
     requireShaped(name, e.dir)
-    require(entryFile(warehouse, name).isFile,
-      s"table '$name' has no per-table registry file (legacy catalog.json " +
-        "entries are read-only — re-CREATE the name to migrate it)")
+    require(entryFile(warehouse, name).isFile, s"table '$name' has no registry entry")
     tablesDir(warehouse).mkdirs()
     val tmp = Cas.tmpFor(entryFile(warehouse, name))
-    Files.write(tmp.toPath, renderEntry(e).getBytes(StandardCharsets.UTF_8))
+    Files.write(tmp.toPath, MetaJson.renderReg(e).getBytes(StandardCharsets.UTF_8))
     Files.move(tmp.toPath, entryFile(warehouse, name).toPath,
       StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
   }
 
-  private[plans] def casDrop(warehouse: String, name: String): Boolean = {
-    val dropped = Files.deleteIfExists(entryFile(warehouse, name).toPath)
-    // Legacy catalog.json entries (rounds <17) drop by whole-file
-    // rewrite under the JVM lock — the cross-process CAS guarantee is
-    // scoped to per-table files; the legacy layer only exists to keep
-    // old pinned warehouses readable.
-    val f = legacyFile(warehouse)
-    val legacyDropped = f.isFile && synchronized {
-      val body = new String(Files.readAllBytes(f.toPath), StandardCharsets.UTF_8)
-      val entries = """"([A-Za-z_][A-Za-z0-9_]*)":"([^"]*)"""".r.findAllMatchIn(body)
-        .map(m => m.group(1) -> m.group(2)).toMap
-      entries.contains(name) && {
-        val next = (entries - name).toSeq.sortBy(_._1)
-          .map { case (k, v) => s""""$k":"$v"""" }.mkString("{", ",", "}")
-        val tmp = Cas.tmpFor(f)
-        Files.write(tmp.toPath, next.getBytes(StandardCharsets.UTF_8))
-        Files.move(tmp.toPath, f.toPath,
-          StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
-        true
-      }
-    }
-    dropped || legacyDropped
-  }
+  private[plans] def casDrop(warehouse: String, name: String): Boolean =
+    Files.deleteIfExists(entryFile(warehouse, name).toPath)
 
   /** Three-step RENAME: (1) stamp the OLD entry with a `renamingTo`
     * intent (atomic replace — the old name still serves reads); (2)

@@ -331,7 +331,7 @@ final case class GraftUpdateCommand(dir: String, alias: Option[String],
     })
     val head = VersionedLayout.currentVersion(dir)
     val headCols = VersionedLayout.readAsOf(spark, dir, head).columns.toSeq
-    val keyish = (VersionedLayout.keyColsOf(dir) :+ "pid").map(_.toLowerCase).toSet
+    val keyish = (VersionedLayout.metaOf(dir).keyCols :+ "pid").map(_.toLowerCase).toSet
     val set: Map[String, Column] = assignments.map { asg =>
       val name = GraftDml.canonical(
         GraftDml.bareName(asg.key, quals, "UPDATE"), headCols, "UPDATE")
@@ -373,7 +373,7 @@ final case class GraftMergeCommand(dir: String, tAlias: Option[String],
     val headCols = target.columns.toSeq
     val tgtCols = headCols.map(_.toLowerCase).toSet
     val tQuals = tAlias.map(_.toLowerCase).toSet
-    val keyCols = VersionedLayout.keyColsOf(dir)
+    val keyCols = VersionedLayout.metaOf(dir).keyCols
 
     // ON contract: a conjunction of `target.key = source.key`
     // equalities covering exactly the layout's key columns — the join

@@ -894,7 +894,7 @@ object ScalePatterns {
     */
   private def scenarioRoot(name: String, d: String): String = ScratchRoot.stable(name, d,
     ScalePatterns.getClass, graft.operators.VersionedLayout.getClass,
-    graft.operators.DeletableRangeLayout.getClass,
+    graft.operators.MetaJson.getClass, graft.operators.DeletableRangeLayout.getClass,
     graft.operators.BucketedStore.getClass, Tables.getClass)
 
   /** The persisted boundary manifest: a `_`-prefixed file INSIDE the
@@ -4016,7 +4016,7 @@ object ScalePatterns {
             col("n_chars").cast("int").as("n_chars")).as("meta")),
         dir, Seq("doc_id"))
       if (VersionedLayout.currentVersion(dir) < 1)
-        VersionedLayout.addField(s, dir, "meta.quality", "bigint")
+        VersionedLayout.addField(dir, "meta.quality", "bigint")
       if (VersionedLayout.currentVersion(dir) < 2)
         VersionedLayout.appendInsert(s, dir,
           Tables.documents(s, d).where(col("source") === "src7")
@@ -4026,11 +4026,11 @@ object ScalePatterns {
                 col("n_chars").cast("int").as("n_chars"),
                 (col("n_chars") % 100).as("quality")).as("meta")))
       if (VersionedLayout.currentVersion(dir) < 3)
-        VersionedLayout.renameField(s, dir, "meta.lang", "language")
+        VersionedLayout.renameField(dir, "meta.lang", "language")
       if (VersionedLayout.currentVersion(dir) < 4)
-        VersionedLayout.widenField(s, dir, "meta.n_chars", "bigint")
+        VersionedLayout.widenField(dir, "meta.n_chars", "bigint")
       if (VersionedLayout.currentVersion(dir) < 5)
-        VersionedLayout.dropField(s, dir, "meta.source")
+        VersionedLayout.dropField(dir, "meta.source")
       if (VersionedLayout.currentVersion(dir) < 6)
         VersionedLayout.appendInsert(s, dir,
           Tables.documents(s, d).where(col("doc_id") % 7 === 3)
@@ -4127,7 +4127,7 @@ object ScalePatterns {
   private def q207(s: SparkSession, d: String): DataFrame = {
     import graft.operators.VersionedLayout
     val dir = ensureTypedReaddScenario(s, d)
-    val wins = VersionedLayout.changeFeedWindows(s, dir, 0, 7)
+    val wins = VersionedLayout.changeFeedWindows(dir, 0, 7)
     require(wins == Seq((0, 4), (4, 7)),
       s"unexpected type-uniform feed windows of $dir: $wins")
     val perWin = wins.map { case (a, b) =>
@@ -4906,7 +4906,7 @@ object ScalePatterns {
     val src = ensureCrudScenario(s, d)
     val dir = scenarioRoot("lineitem_clone", d)
     ScratchRoot.once(dir) {
-      VersionedLayout.cloneAsOf(s, src, dir, VersionedLayout.currentVersion(src))
+      VersionedLayout.cloneAsOf(src, dir, VersionedLayout.currentVersion(src))
     }
     (0 to 4).map { ver =>
       VersionedLayout.readAsOf(s, dir, ver)

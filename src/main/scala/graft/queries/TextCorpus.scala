@@ -130,7 +130,8 @@ object TextCorpus {
   private def compactedIndexStore(s: SparkSession, d: String): String =
     ScratchRoot.publishOnce(ScratchRoot.stable("index_store", d, TextCorpus.getClass,
       graft.operators.IndexStore.getClass, graft.operators.GenChain.getClass,
-      InvertedIndex.getClass, graft.functions.text.getClass))(_.isDirectory) { tmp =>
+      graft.operators.MetaJson.getClass, InvertedIndex.getClass,
+      graft.functions.text.getClass))(_.isDirectory) { tmp =>
       buildRetrievalChain(s, d, tmp.getPath)
       graft.operators.IndexStore.compact(s, tmp.getPath)
     }

@@ -77,7 +77,7 @@ final class LayoutChangeSource(
   private val head0 = VersionedLayout.currentVersion(dir)
   require(head0 >= 0, s"no committed layout at $dir")
   private val tagged = head0 > startExclusive &&
-    VersionedLayout.changeFeedWindows(spark, dir, startExclusive, head0).size > 1
+    VersionedLayout.changeFeedWindows(dir, startExclusive, head0).size > 1
   private def feedOf(fromV: Int, toV: Int): DataFrame =
     if (tagged) VersionedLayout.changeFeedTagged(spark, dir, fromV, toV)
     else VersionedLayout.changeFeed(spark, dir, fromV, toV)
@@ -383,7 +383,7 @@ final class LayoutCommitSink(dir: String, parameters: Map[String, String],
               s"column(s) ${missing.mkString(", ")} — an upsert rewrites whole rows")
           val shaped = batch.select(headCols.map(f =>
             col(byLower(f.name.toLowerCase)).cast(f.dataType).as(f.name)): _*)
-          val keyCols = VersionedLayout.keyColsOf(dir).toSet + "pid"
+          val keyCols = VersionedLayout.metaOf(dir).keyCols.toSet + "pid"
           val updateSet = headCols.map(_.name).filterNot(keyCols)
             .map(n => n -> col(s"s_$n")).toMap
           VersionedLayout.appendMergeOnce(spark, dir, shaped,

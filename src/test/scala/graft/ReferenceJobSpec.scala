@@ -334,12 +334,16 @@ class ReferenceJobSpec extends SparkSpec {
   /** Spark's work for `body`: its jobs, the stages they ran, their tasks
     * and the task count of each job's last stage. A marker job run after
     * `body` bounds the count: the listener bus delivers events in order, so
-    * once the marker starts, every event of `body` has been seen.
+    * once the marker starts, every event of `body` has been seen. Only the
+    * stages of the jobs started inside `body` and their tasks count: a task
+    * killed in an earlier test's failed job can report its end after the
+    * listener is added.
     */
   private def jobShape(body: => Unit): (Int, Int, Int, Seq[Int]) = {
     val marker = "reference-job-spec-marker"
     val jobs, stages, tasks = new java.util.concurrent.atomic.AtomicInteger
     val lastStageTasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val ours = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val done = new java.util.concurrent.CountDownLatch(1)
     val listener = new SparkListener {
       @volatile private var counting = true
@@ -349,10 +353,13 @@ class ReferenceJobSpec extends SparkSpec {
           done.countDown()
         } else if (counting) {
           jobs.incrementAndGet()
+          e.stageInfos.foreach(st => ours.add(st.stageId))
           lastStageTasks.add(e.stageInfos.maxBy(_.stageId).numTasks)
         }
-      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = if (counting) stages.incrementAndGet()
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = if (counting) tasks.incrementAndGet()
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (ours.contains(e.stageInfo.stageId)) stages.incrementAndGet()
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (ours.contains(e.stageId)) tasks.incrementAndGet()
     }
     spark.sparkContext.addSparkListener(listener)
     try {

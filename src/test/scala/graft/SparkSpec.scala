@@ -12,12 +12,12 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-test-warehouse")
+    val tmp = java.nio.file.Files.createTempDirectory("graft-test-derby")
     Runtime.getRuntime.addShutdownHook(new Thread(() => FileUtils.deleteQuietly(tmp.toFile)))
     System.setProperty("derby.system.home", tmp.toString)
+    // The warehouse is GraftSession's default, a per-JVM scratch root.
     val s = GraftSession
       .builder(appName = "graft-test", master = Some("local[4]"), shufflePartitions = 4)
-      .config("spark.sql.warehouse.dir", tmp.resolve("warehouse").toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -194,24 +192,19 @@ class SqlDmlSpec extends SparkSpec {
       || ex.getMessage.contains("resolve"), ex.getMessage)
   }
 
-  test("point probes on a pre-round-13 layout (no recorded base types) stay usable (advisor)") {
-    val dir = freshDir("legacytypes")
+  test("point probes on a Bloom field with no recorded base type stay usable") {
+    val dir = freshDir("untyped")
+    // `a b` is not identifier-shaped, so the meta's recorded DDL for `m`
+    // does not parse and neither Bloom field has a declared type.
     val df = spark.range(0, 50).select(col("id").as("k"),
-      concat(lit("doc-"), col("id")).as("ck"), col("id").as("n"),
+      struct(concat(lit("doc-"), col("id")).as("ck"), col("id").as("n"),
+        lit(1).as("a b")).as("m"),
       (col("id") % 2).cast("int").as("pid"))
     VersionedLayout.writeBaseTable(spark, df, dir, Seq("k"),
-      bloomCols = Seq("ck", "n"))
-    // Simulate the pre-round-13 meta: strip the recorded types map.
-    val meta = new java.io.File(dir, "_log/meta.json")
-    val body = new String(Files.readAllBytes(meta.toPath))
-    assert(body.contains("\"types\":{"), "fixture assumes a typed meta")
-    Files.write(meta.toPath,
-      body.replaceAll(""","types":\{[^}]*\}""", "").getBytes)
-    // Declared type is unknown ("base") — neither overload can be
-    // proven wrong, so BOTH must serve (the pre-fix refusal made every
-    // probe on an older layout a dead end).
-    assert(VersionedLayout.readAsOfPoint(spark, dir, 0, "ck", "doc-7").count() == 1)
-    assert(VersionedLayout.readAsOfPoint(spark, dir, 0, "n", 7L).count() == 1)
+      bloomCols = Seq("m.ck", "m.n"))
+    // Neither overload can be proven wrong, so BOTH must serve.
+    assert(VersionedLayout.readAsOfPoint(spark, dir, 0, "m.ck", "doc-7").count() == 1)
+    assert(VersionedLayout.readAsOfPoint(spark, dir, 0, "m.n", 7L).count() == 1)
   }
 
   test("SQL DML contracts refuse loudly") {

@@ -643,7 +643,7 @@ class StorageSpec extends SparkSpec {
 
     // Clone at head: every version answers identically from the clone.
     val dst = s"$root/dst"
-    VersionedLayout.cloneAsOf(spark, src, dst, 3)
+    VersionedLayout.cloneAsOf(src, dst, 3)
     (0 to 3).foreach { v =>
       assert(VersionedLayout.readAsOf(spark, dst, v).count() == srcCounts(v),
         s"clone diverged from source at AS-OF $v")
@@ -677,7 +677,7 @@ class StorageSpec extends SparkSpec {
     assert(VersionedLayout.readAsOf(spark, dst, 0).count() == srcCounts(0),
       "source vacuum destroyed the clone's history")
     // And a repeat clone call is an idempotent no-op on the existing dst.
-    VersionedLayout.cloneAsOf(spark, src, dst, 2)
+    VersionedLayout.cloneAsOf(src, dst, 2)
     assert(VersionedLayout.currentVersion(dst) == 4)
 
     // Clone BELOW a later vacuum entry: the source's horizon (raised at
@@ -687,7 +687,7 @@ class StorageSpec extends SparkSpec {
     // carries it; reads below fail with the same loud horizon error.
     assert(VersionedLayout.horizon(src) == 2)
     val dst2 = s"$root/dst2"
-    VersionedLayout.cloneAsOf(spark, src, dst2, 4) // vacuum entry is src v5 > 4
+    VersionedLayout.cloneAsOf(src, dst2, 4) // vacuum entry is src v5 > 4
     assert(VersionedLayout.horizon(dst2) == 2,
       "source vacuum horizon did not travel with the clone")
     val below = intercept[IllegalArgumentException](
@@ -761,7 +761,7 @@ class StorageSpec extends SparkSpec {
 
     // Clone from a fully truncated log still carries complete history.
     val dst = s"$root/clone"
-    VersionedLayout.cloneAsOf(spark, dir, dst, 2)
+    VersionedLayout.cloneAsOf(dir, dst, 2)
     (0 to 2).foreach { v =>
       assert(VersionedLayout.readAsOf(spark, dst, v).count() == preCounts(v),
         s"clone from checkpointed source diverged at AS-OF $v")
@@ -890,7 +890,7 @@ class StorageSpec extends SparkSpec {
     assert(VersionedLayout.checkpoint(dir) == 3)
     VersionedLayout.appendCompact(spark, dir, 0.05)                                // v4
     val dst = s"$root/clone"
-    VersionedLayout.cloneAsOf(spark, dir, dst, 3)
+    VersionedLayout.cloneAsOf(dir, dst, 3)
     VersionedLayout.majorCompact(spark, dir)                                       // v5
     val expect = Seq(c0, c1, c1, c3, c3, c3)
     (0 to 5).foreach { v =>
@@ -1324,7 +1324,7 @@ class StorageSpec extends SparkSpec {
     // names the type-uniform splits, each window serves the plain name
     // at its incarnation's type, and the CROSSING feed serves each
     // incarnation as its own per-type column.
-    val wins = VersionedLayout.changeFeedWindows(spark, dir, 0, 6)
+    val wins = VersionedLayout.changeFeedWindows(dir, 0, 6)
     assert(wins == Seq((0, 3), (3, 6)), s"windows: $wins")
     val w1 = VersionedLayout.changeFeed(spark, dir, 0, 3)
     assert(w1.schema("tag").dataType == org.apache.spark.sql.types.LongType)
@@ -2092,6 +2092,19 @@ class StorageSpec extends SparkSpec {
     assert(segments() == segmentsBefore, "replayed compact wrote a segment")
   }
 
+  test("a bucketed save lands in the session's default warehouse, a per-JVM scratch root under java.io.tmpdir") {
+    import graft.operators.BucketedStore
+    BucketedStore.saveBucketed(spark.range(0, 20).toDF("k"), "spec_wh_home", 2, "k")
+    val loc = new java.io.File(spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(s"spec_wh_home_p${graft.JvmId.token}"))
+      .location).getCanonicalPath
+    val tmp = new java.io.File(sys.props("java.io.tmpdir")).getCanonicalPath
+    val root = new java.io.File(ScratchRoot.jvm("spark_warehouse")).getCanonicalPath
+    assert(root.startsWith(tmp + "/") && loc.startsWith(root + "/"),
+      s"bucketed table at $loc, not under the scratch warehouse $root")
+    assert(BucketedStore.table(spark, "spec_wh_home").count() == 20)
+  }
+
   test("bucketed delete (q157): tombstone mask keeps the fact-x-fact join exchange-free; compaction rewrites once; stale tombstones harmless") {
     import graft.operators.BucketedStore
     val o = Tables.orders(spark, sf0001)
@@ -2333,7 +2346,7 @@ class StorageSpec extends SparkSpec {
     // Clone by timestamp: the v1-era snapshot exports zero-copy and
     // reads back standalone.
     val dst = tempDir("graft-ts-clone").toString + "/c"
-    VersionedLayout.cloneAsOfTimestamp(spark, dir, dst, eff2(1))
+    VersionedLayout.cloneAsOfTimestamp(dir, dst, eff2(1))
     assert(VersionedLayout.readAsOf(spark, dst,
       VersionedLayout.currentVersion(dst)).count() == 5)
   }
@@ -2650,32 +2663,32 @@ class StorageSpec extends SparkSpec {
             val name = s"f$fFresh"
             fidents += FIdent({ fNextId += 1; fNextId - 1 }, name, "bigint")
             oplog += s"v$ver fadd sm.$name(fid ${fNextId - 1})"
-            assert(VersionedLayout.addField(spark, dir, s"sm.$name", "bigint") == ver)
+            assert(VersionedLayout.addField(dir, s"sm.$name", "bigint") == ver)
           } else if (fr == 1 && fidents.size > 1) { // drop a field
             val i = rnd.nextInt(fidents.size)
             val f = fidents.remove(i)
             sRows = sRows.map { case (k, m) => k -> (m - f.fid) }
             oplog += s"v$ver fdrop sm.${f.name}(fid ${f.fid})"
-            assert(VersionedLayout.dropField(spark, dir, s"sm.${f.name}") == ver)
+            assert(VersionedLayout.dropField(dir, s"sm.${f.name}") == ver)
           } else if (fr == 2) { // rename a field to a fresh name
             val f = fidents(rnd.nextInt(fidents.size))
             fFresh += 1
             val to = s"g$fFresh"
             oplog += s"v$ver fren sm.${f.name}->$to(fid ${f.fid})"
-            assert(VersionedLayout.renameField(spark, dir, s"sm.${f.name}", to) == ver)
+            assert(VersionedLayout.renameField(dir, s"sm.${f.name}", to) == ver)
             f.name = to
           } else if (fidents.exists(_.tpe == "int")) { // widen int->bigint
             val cands = fidents.filter(_.tpe == "int")
             val f = cands(rnd.nextInt(cands.size))
             f.tpe = "bigint"
             oplog += s"v$ver fwiden sm.${f.name}(fid ${f.fid})"
-            assert(VersionedLayout.widenField(spark, dir, s"sm.${f.name}", "bigint") == ver)
+            assert(VersionedLayout.widenField(dir, s"sm.${f.name}", "bigint") == ver)
           } else { // nothing applicable at this roll: burn the version on an add
             fFresh += 1
             val name = s"f$fFresh"
             fidents += FIdent({ fNextId += 1; fNextId - 1 }, name, "bigint")
             oplog += s"v$ver fadd sm.$name(fid ${fNextId - 1})"
-            assert(VersionedLayout.addField(spark, dir, s"sm.$name", "bigint") == ver)
+            assert(VersionedLayout.addField(dir, s"sm.$name", "bigint") == ver)
           }
           snap()
         } else if (ver >= 1) { // RESTORE to a random past version
@@ -2828,18 +2841,18 @@ class StorageSpec extends SparkSpec {
         col("doc_id"), struct(col("lang"), col("n")).as("meta"))
     VersionedLayout.writeBaseTable(spark, shapedBase(1L to 8L), dir, Seq("doc_id"))
     VersionedLayout.appendInsert(spark, dir, shapedBase(Seq(101L, 102L)))      // v1
-    assert(VersionedLayout.addField(spark, dir, "meta.quality", "bigint") == 2) // v2
+    assert(VersionedLayout.addField(dir, "meta.quality", "bigint") == 2)        // v2
     VersionedLayout.appendInsert(spark, dir,                                    // v3
       Seq((201L, "l201", 201, 77L)).toDF("doc_id", "lang", "n", "quality")
         .select(pmod(col("doc_id"), lit(4)).cast("int").as("pid"), col("doc_id"),
           struct(col("lang"), col("n"), col("quality")).as("meta")))
-    assert(VersionedLayout.renameField(spark, dir, "meta.lang", "language") == 4)
+    assert(VersionedLayout.renameField(dir, "meta.lang", "language") == 4)
     VersionedLayout.appendInsert(spark, dir,                                    // v5
       Seq((301L, "l301", 301, 88L)).toDF("doc_id", "language", "n", "quality")
         .select(pmod(col("doc_id"), lit(4)).cast("int").as("pid"), col("doc_id"),
           struct(col("language"), col("n"), col("quality")).as("meta")))
-    assert(VersionedLayout.widenField(spark, dir, "meta.n", "bigint") == 6)
-    assert(VersionedLayout.dropField(spark, dir, "meta.quality") == 7)
+    assert(VersionedLayout.widenField(dir, "meta.n", "bigint") == 6)
+    assert(VersionedLayout.dropField(dir, "meta.quality") == 7)
     VersionedLayout.majorCompact(spark, dir)                                    // v8
 
     def fieldsAt(v: Int): Seq[(String, org.apache.spark.sql.types.DataType)] =
@@ -2880,21 +2893,21 @@ class StorageSpec extends SparkSpec {
     // no deep paths, widen is lossless-only, parent must be a struct.
     def msg(body: => Any): String =
       intercept[IllegalArgumentException](body).getMessage
-    assert(msg(VersionedLayout.addField(spark, dir, "meta.quality", "bigint"))
+    assert(msg(VersionedLayout.addField(dir, "meta.quality", "bigint"))
       .contains("never return"))
-    assert(msg(VersionedLayout.addField(spark, dir, "meta.lang", "bigint"))
+    assert(msg(VersionedLayout.addField(dir, "meta.lang", "bigint"))
       .contains("never return"))
-    assert(msg(VersionedLayout.renameField(spark, dir, "meta.language", "lang"))
+    assert(msg(VersionedLayout.renameField(dir, "meta.language", "lang"))
       .contains("never return"))
     assert(msg(VersionedLayout.renameColumn(spark, dir, "meta", "meta2"))
       .contains("field-evolution history"))
     assert(msg(VersionedLayout.dropColumn(spark, dir, "meta"))
       .contains("field-evolution history"))
-    assert(msg(VersionedLayout.addField(spark, dir, "meta.a.b", "bigint"))
+    assert(msg(VersionedLayout.addField(dir, "meta.a.b", "bigint"))
       .contains("one nesting level"))
-    assert(msg(VersionedLayout.widenField(spark, dir, "meta.n", "int"))
+    assert(msg(VersionedLayout.widenField(dir, "meta.n", "int"))
       .contains("lossless"))
-    assert(msg(VersionedLayout.addField(spark, dir, "doc_id.x", "bigint"))
+    assert(msg(VersionedLayout.addField(dir, "doc_id.x", "bigint"))
       .contains("row-identity"))
   }
 
@@ -3033,13 +3046,13 @@ class StorageSpec extends SparkSpec {
     VersionedLayout.appendInsert(spark, src, shaped(Seq(903L)))         // v3
     def rows(d: String, v: Int) =
       VersionedLayout.readAsOf(spark, d, v).collect().map(_.toSeq).toSet
-    VersionedLayout.cloneAsOf(spark, src, s"$root/serial", 3)
+    VersionedLayout.cloneAsOf(src, s"$root/serial", 3)
     val dst = s"$root/dst"
     val start = new java.util.concurrent.CountDownLatch(1)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
     try {
       val fs = (1 to 2).map(_ => pool.submit(new java.util.concurrent.Callable[Unit] {
-        def call(): Unit = { start.await(); VersionedLayout.cloneAsOf(spark, src, dst, 3) }
+        def call(): Unit = { start.await(); VersionedLayout.cloneAsOf(src, dst, 3) }
       }))
       start.countDown()
       fs.foreach(_.get(5, java.util.concurrent.TimeUnit.MINUTES))
@@ -3089,7 +3102,7 @@ class StorageSpec extends SparkSpec {
     // keep pruning on BOTH sides of the evolution instead of refusing
     // forever (the r16 judge's #5, solved stronger than asked: no
     // compact needed to resume).
-    VersionedLayout.renameField(spark, dir, "meta.ref", "refx")        // v3
+    VersionedLayout.renameField(dir, "meta.ref", "refx")                // v3
     // Address by the name the field carries AT v — the old spelling at
     // v3 refuses (same contract as top-level renames)...
     val e2 = intercept[IllegalArgumentException](
@@ -3123,7 +3136,7 @@ class StorageSpec extends SparkSpec {
       "k-%07d".format(11))) == Set(11L))
     // A DROPPED bloomed field refuses (identity dead — nothing sound to
     // probe).
-    VersionedLayout.dropField(spark, dir, "meta.refx")                  // v6
+    VersionedLayout.dropField(dir, "meta.refx")                         // v6
     val e3 = intercept[IllegalArgumentException](
       VersionedLayout.readAsOfPoint(spark, dir, 6, "meta.refx", 33L))
     assert(e3.getMessage.contains("readAsOf"), e3.getMessage)

@@ -288,9 +288,9 @@ class StreamingSpec extends SparkSpec {
     // range read outside them drops the segments at PLAN time — the
     // continuous-ingest story and the zone-map story compose.
     val segEntries = VersionedLayout.log(dir).filter(_.action == "insert")
-    assert(segEntries.size == 2 && segEntries.forall(_.stats.nonEmpty),
+    assert(segEntries.size == 2 && segEntries.forall(_.statsM.contains("v")),
       "streamed micro-batch commits recorded no skip stats")
-    val segMax = segEntries.flatMap(_.stats.map(_._3)).max
+    val segMax = segEntries.flatMap(_.statsM("v").map(_._3)).max
     val pruned = VersionedLayout.readAsOfRange(spark, dir, 2, segMax + 1, segMax + 1000)
     assert(!pruned.inputFiles.exists(_.contains("_inserts")),
       "a band outside the streamed segments' bounds still scanned them")
